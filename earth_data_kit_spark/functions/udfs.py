@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from earth_data_kit_spark.grid import cells, geom
+from earth_data_kit_spark.grid import cells, geom, s2
 from earth_data_kit_spark.text import analysis
 from earth_data_kit_spark.text.extract import extract_text, text_sha256
 from earth_data_kit_spark.text.geocode import geocode
@@ -37,29 +37,54 @@ def geocode_udf(url: pd.Series, text: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(out, columns=["lat", "lon", "method"])
 
 
-@F.pandas_udf(
-    T.StructType(
-        [
-            T.StructField("text", T.StringType()),
-            T.StructField("lat", T.DoubleType()),
-            T.StructField("lon", T.DoubleType()),
-            T.StructField("method", T.StringType()),
-        ]
-    )
-)
-def extract_geocode_udf(html: pd.Series, url: pd.Series) -> pd.DataFrame:
-    """Fused hot path: html→text + geocode in ONE Arrow round trip
-    (two chained UDFs pay serde for the intermediate text column —
-    ~2× the transfer on the flagship pipeline)."""
-    texts, lats, lons, methods = [], [], [], []
+def s2_leaf_series(lat: np.ndarray, lon: np.ndarray) -> pd.Series:
+    """S2 level-30 leaf ids of float64 (lat, lon) arrays as nullable
+    int64 (bit reinterpretation of the uint64 id).  A NaN or ±Inf
+    coordinate gives NULL, never a garbage cell id."""
+    bad = ~np.isfinite(lat) | ~np.isfinite(lon)
+    if bad.any():
+        lat = np.where(bad, 0.0, lat)
+        lon = np.where(bad, 0.0, lon)
+    out = pd.Series(s2.to_spark_i64(s2.cell_from_latlng(lat, lon, s2.MAX_LEVEL)), dtype="Int64")
+    out[bad] = pd.NA
+    return out
+
+
+def _extract_geocode(html: pd.Series, url: pd.Series) -> pd.DataFrame:
+    """The geocode stage's one Python pass: html → text → geocode, plus
+    the S2 level-30 leaf of the hit.  Text extraction, geocoding and the
+    leaf share one Arrow round trip, so the html column crosses into
+    Python once per row.  The extracted text stays in the worker (no
+    caller reads it back).  The leaf is computed vectorized once per
+    batch by ``s2_leaf_series``, the rule ``s2_leaf_udf`` also uses: a
+    page without a geocode hit gets a NULL leaf.
+
+    Registered non-deterministic (``extract_geocode_udf``): a
+    deterministic Python projection lets the optimizer copy the UDF
+    into a pushed-down ``lat IS NOT NULL`` filter, which evaluates it
+    in a second Arrow node.  The flag pins it to one node; the results
+    themselves are deterministic."""
+    lats, lons, methods = [], [], []
     for b, u in zip(html, url):
-        t = extract_text(b) if b is not None else ""
-        la, lo, m = geocode(u or "", t)
-        texts.append(t)
+        la, lo, m = geocode(u or "", extract_text(b) if b is not None else "")
         lats.append(la)
         lons.append(lo)
         methods.append(m)
-    return pd.DataFrame({"text": texts, "lat": lats, "lon": lons, "method": methods})
+    leaf = s2_leaf_series(np.array(lats, dtype=np.float64), np.array(lons, dtype=np.float64))
+    return pd.DataFrame({"lat": lats, "lon": lons, "method": methods, "s2_leaf": leaf})
+
+
+extract_geocode_udf = F.pandas_udf(
+    _extract_geocode,
+    T.StructType(
+        [
+            T.StructField("lat", T.DoubleType()),
+            T.StructField("lon", T.DoubleType()),
+            T.StructField("method", T.StringType()),
+            T.StructField("s2_leaf", T.LongType()),
+        ]
+    ),
+).asNondeterministic()
 
 
 def cell_id_udf(res: int):

@@ -15,7 +15,8 @@ names; at 100 TB it buys two things the quadgrid can't:
 Execution shape (the 100 TB plan):
 
   1. ONE vectorized pandas-UDF pass computes the level-30 leaf id per
-     page (`s2_leaf_udf`) — the only Python in the pipeline;
+     page (`s2_leaf_udf`; jobs/pipeline.py stamps it inside the fused
+     geocode UDF instead) — the only Python in the pipeline;
   2. the join cell at any coarser ``level`` is derived from the leaf
      by pure JVM bit arithmetic (`s2_parent_col` — two's-complement
      AND/OR works on int64-reinterpreted ids), inside codegen;
@@ -39,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from earth_data_kit_spark.functions.udfs import s2_leaf_series
 from earth_data_kit_spark.grid import s2
 from earth_data_kit_spark.operators.spatial_join import Polygon, refine_predicate
 
@@ -49,16 +51,8 @@ def s2_leaf_udf():
 
     @pandas_udf("long")
     def _leaf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        la = lat.to_numpy(np.float64)
-        lo = lon.to_numpy(np.float64)
-        bad = ~np.isfinite(la) | ~np.isfinite(lo)  # NaN AND ±Inf
-        if bad.any():  # NULL in → NULL out (never a garbage cell id)
-            la = np.where(bad, 0.0, la)
-            lo = np.where(bad, 0.0, lo)
-        cid = s2.cell_from_latlng(la, lo, s2.MAX_LEVEL)
-        out = pd.Series(s2.to_spark_i64(cid), dtype="Int64")
-        out[bad] = pd.NA
-        return out
+        # NULL in → NULL out (pandas hands a NULL double over as NaN)
+        return s2_leaf_series(lat.to_numpy(np.float64), lon.to_numpy(np.float64))
 
     return _leaf
 

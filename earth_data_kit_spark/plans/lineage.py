@@ -15,7 +15,12 @@ Spark:
 * ``resume_filter`` anti-joins the completed part_keys from the
   lineage table so a restarted job processes only missing partitions
   (the existence-skip semantic, but transactional: a partition is
-  "done" only if its lineage row committed).
+  "done" only if its lineage row committed);
+* ``checkpoint_stage`` is a job stage's whole checkpoint step:
+  resume-filter, commit, re-read the stage directory.  There is no
+  emptiness probe before the write (it would run the stage's plan,
+  Python UDFs included, a second time): a fully committed stage
+  still runs its write once, observes no keys, and appends nothing.
 
 Iceberg would give this via snapshot atomicity; the sandbox has no
 Iceberg jar, so the same semantics run on parquet + a lineage parquet
@@ -27,6 +32,7 @@ from __future__ import annotations
 
 import os
 import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,8 +48,11 @@ def partition_lineage(df: DataFrame, part_key: str, cols: list[str] | None = Non
     xor of per-row xxhash64 over ``cols`` (order-insensitive, computed
     map-side)."""
     hash_cols = cols or df.columns
-    h = F.xxhash64(*[F.col(c) for c in hash_cols])
-    return df.groupBy(F.col(part_key).alias("part_key")).agg(
+    # part_key is bigint in LINEAGE_SCHEMA whatever the key column's
+    # type: lineage files of int- and bigint-keyed stages share one
+    # directory, and a reader that infers the schema from an int file
+    # fails on the bigint ones
+    return df.groupBy(F.col(part_key).cast("bigint").alias("part_key")).agg(
         F.count("*").alias("row_count"),
         # xor-aggregate via sum of (h mod 2^32 halves) is not xor; use
         # bit_xor aggregate (Spark 3.x: bit_xor)
@@ -64,7 +73,10 @@ def commit_stage(
     Output layout: ``{base}/{stage}/data`` (partitioned by part_key)
     and ``{base}/lineage`` (append).  The data write completes before
     lineage commits — a crash between the two re-runs the partition,
-    never skips it.
+    never skips it.  ``df`` is executed exactly once, by the write.
+    If that write observed no keys (everything was already committed)
+    no partition changed, nothing is appended, and the returned
+    lineage df is empty.
     """
     from pyspark.sql import Observation
 
@@ -93,6 +105,9 @@ def commit_stage(
     )
     spark = df.sparkSession
     keys = sorted(obs.get["keys"])
+    if not keys:
+        print(f"[{job_id}] {stage}: all partitions committed, nothing written")
+        return spark.createDataFrame([], LINEAGE_SCHEMA)
     # lineage only for the partitions written THIS call — semi-join
     # the re-read of {out} against the observed keys.  The round-2
     # version derived "new" as disk-minus-already-in-lineage, which
@@ -139,3 +154,30 @@ def resume_filter(df: DataFrame, base_dir: str, job_id: str, stage: str, part_ke
     return df.join(
         F.broadcast(done.withColumnRenamed("part_key", part_key)), part_key, "left_anti"
     )
+
+
+def checkpoint_stage(
+    df: DataFrame,
+    base_dir: str,
+    job_id: str,
+    stage: str,
+    part_key: str,
+    lineage_cols: list[str] | None = None,
+    build: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """One resumable job stage: commit the partitions of ``df`` not yet
+    committed for (job_id, stage), then return the whole stage output
+    re-read from ``{base_dir}/{stage}/data`` (earlier commits included).
+
+    ``build``, if given, maps the not-yet-committed rows of ``df`` to
+    the stage output (keeping ``part_key``).  Filtering BEFORE it keeps
+    committed partitions out of a non-deterministic UDF, which the
+    optimizer will not push the anti-join below.
+
+    ``resume_filter`` and ``commit_stage`` are looked up at call time
+    and called positionally, so wrappers installed on this module (span
+    markers that read ``stage`` from the 4th argument) see every stage.
+    """
+    todo = resume_filter(df, base_dir, job_id, stage, part_key)
+    commit_stage(build(todo) if build else todo, base_dir, job_id, stage, part_key, lineage_cols)
+    return df.sparkSession.read.parquet(f"{base_dir}/{stage}/data")

@@ -69,14 +69,7 @@ def run(
     def _commit(df, stage: str):
         """Commit only not-yet-done partitions; return the full stage
         output re-read from disk (committed + pre-existing)."""
-        todo = lineage.resume_filter(df, work_dir, job_id, stage, "part")
-        if todo.isEmpty():
-            print(f"[{job_id}] {stage}: all partitions committed, skipping")
-        else:
-            lineage.commit_stage(
-                todo, work_dir, job_id, stage, "part", lineage_cols=["doc_id"]
-            )
-        return spark.read.parquet(f"{work_dir}/{stage}/data")
+        return lineage.checkpoint_stage(df, work_dir, job_id, stage, "part", lineage_cols=["doc_id"])
 
     # ---- stage 1: quality (shape + repetition) --------------------------
     q = cu.gopher_quality_cols(F.col("text"))

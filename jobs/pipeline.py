@@ -10,15 +10,22 @@ crash resumes from the last committed partition — north_rule
 
   1. ingest    — synthesize/load the pages table (url, warc_ts, html,
                  text, lang), partitioned by coarse cell prefix
-  2. geocode   — extract text from html (pinned UDF), geocode, assign
-                 quadgrid cell at CELL_RES; partition key = parent
-                 cell at res PART_RES (spatial locality for later
-                 joins and pruning)
+  2. geocode   — one fused UDF pass: extract text from html, geocode,
+                 stamp the S2 leaf; then the quadgrid cell at
+                 CELL_RES in the JVM; partition key = parent cell at
+                 res PART_RES (spatial locality for later joins and
+                 pruning)
   3. pip_join  — cell-prefilter broadcast PIP join vs country
                  polygons; per-country counts to the metrics table
   4. knn       — kNN for the configured query points
   5. metrics   — per-stage row counts / checksums / wall-ms appended
                  to {base}/lineage (queryable DataFrame)
+
+Every stage is one ``lineage.checkpoint_stage`` call: resume filter,
+then the stage's single write (which also collects the lineage keys),
+then a re-read of the stage directory for the next stage.  Each stage's
+plan executes once; a fully committed stage writes no rows and appends
+no lineage.
 
 On a real cluster the parquet writes become Iceberg `writeTo` calls —
 the seam is plans/lineage.py (SURVEY.md §7.4-6).
@@ -40,6 +47,36 @@ PART_RES = 2  # coarse parent cell → partition key (32 cols × 4 rows)
 CELL_RES = 7
 
 
+def geocode_pages(ingested):
+    """The geocode stage's output for ingested pages: one pass of the
+    fused extract+geocode UDF (one Arrow round trip per row, one
+    ArrowEvalPython node) gives lat/lon/method and the S2 leaf; pages
+    without a hit are dropped and the quadgrid cell is stamped in the
+    JVM.  Both hierarchical indexes are stamped ONCE here (north rule:
+    "H3 and S2 cell indexes"): the quadgrid cell for the SQL-mirrored
+    gates, the real-S2 leaf for prefix-range layouts, from which
+    downstream queries derive any S2 level by bit math, with no
+    further Python."""
+    from earth_data_kit_spark.functions.columns import cell_id_col
+    from earth_data_kit_spark.functions.udfs import extract_geocode_udf
+
+    return (
+        ingested.select(
+            "page_id", "url", "part",
+            extract_geocode_udf(F.col("html"), F.col("url")).alias("g"),
+        )
+        .select(
+            "page_id", "url", "part",
+            F.col("g.lat").alias("lat"),
+            F.col("g.lon").alias("lon"),
+            F.col("g.method").alias("method"),
+            cell_id_col(F.col("g.lon"), F.col("g.lat"), CELL_RES).alias("cell"),
+            F.col("g.s2_leaf").alias("s2_leaf"),
+        )
+        .where(F.col("lat").isNotNull())
+    )
+
+
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
@@ -51,10 +88,8 @@ def main(argv: list[str] | None = None) -> None:
     args = ap.parse_args(argv)
 
     from earth_data_kit_spark.functions.columns import cell_id_col
-    from earth_data_kit_spark.functions.udfs import extract_geocode_udf
     from earth_data_kit_spark.operators import spatial_join as sj
     from earth_data_kit_spark.operators.knn import knn_join
-    from earth_data_kit_spark.operators.spatial_join_s2 import s2_leaf_udf
     from earth_data_kit_spark.plans import lineage
     from earth_data_kit_spark.session import get_spark
     from earth_data_kit_spark.sources.pages import synth_pages_df
@@ -70,43 +105,20 @@ def main(argv: list[str] | None = None) -> None:
         spark, args.sf_dir, reps=args.reps,
         partitions=spark.sparkContext.defaultParallelism,
     ).withColumn("part", cell_id_col(F.col("lon"), F.col("lat"), PART_RES))
-    todo = lineage.resume_filter(pages, base, job, "ingest", "part")
-    if todo.isEmpty():
-        print(f"[{job}] ingest: all partitions committed, skipping")
-    else:
-        lineage.commit_stage(
-            todo, base, job, "ingest", "part", lineage_cols=["page_id", "url"]
-        )
-    ingested = spark.read.parquet(f"{base}/ingest/data")
+    ingested = lineage.checkpoint_stage(
+        pages, base, job, "ingest", "part", lineage_cols=["page_id", "url"]
+    )
     if args.fail_after_stage == "ingest":
         raise SystemExit("injected failure after ingest")
 
     # ---- stage 2: geocode ----------------------------------------------
-    geo = (
-        ingested.select(
-            "page_id", "url", "part",
-            extract_geocode_udf(F.col("html"), F.col("url")).alias("g"),
-        )
-        .select(
-            "page_id", "url", "part",
-            F.col("g.lat").alias("lat"),
-            F.col("g.lon").alias("lon"),
-            F.col("g.method").alias("method"),
-        )
-        .where(F.col("lat").isNotNull())
-        .withColumn("cell", cell_id_col(F.col("lon"), F.col("lat"), CELL_RES))
-        # both hierarchical indexes stamped ONCE at ingest (north rule:
-        # "H3 and S2 cell indexes"): quadgrid cell for the SQL-mirrored
-        # gates, real-S2 leaf for prefix-range layouts — downstream
-        # queries derive any S2 level by bit math, no Python ever again
-        .withColumn("s2_leaf", s2_leaf_udf()(F.col("lon"), F.col("lat")))
+    # the resume filter runs on the ingested pages, before the (non-
+    # deterministic, so never pushed past) geocode UDF: a resumed job
+    # sends only uncommitted partitions through Python
+    geocoded = lineage.checkpoint_stage(
+        ingested, base, job, "geocode", "part", lineage_cols=["page_id", "cell"],
+        build=geocode_pages,
     )
-    todo = lineage.resume_filter(geo, base, job, "geocode", "part")
-    if todo.isEmpty():
-        print(f"[{job}] geocode: all partitions committed, skipping")
-    else:
-        lineage.commit_stage(todo, base, job, "geocode", "part", lineage_cols=["page_id", "cell"])
-    geocoded = spark.read.parquet(f"{base}/geocode/data")
     if args.fail_after_stage == "geocode":
         raise SystemExit("injected failure after geocode")
 
@@ -118,32 +130,18 @@ def main(argv: list[str] | None = None) -> None:
     counts = joined.groupBy("code").agg(F.count("*").alias("n_pages")).withColumn(
         "part", F.lit(0)
     )
-    todo = lineage.resume_filter(counts, base, job, "pip_counts", "part")
-    if todo.isEmpty():
-        print(f"[{job}] pip_counts: all partitions committed, skipping")
-    else:
-        lineage.commit_stage(todo, base, job, "pip_counts", "part")
+    lineage.checkpoint_stage(counts, base, job, "pip_counts", "part")
     if args.fail_after_stage == "pip_counts":
         raise SystemExit("injected failure after pip_counts")
 
     # ---- stage 4: kNN ----------------------------------------------------
-    # persist the (|queries|×k row) RESULT: knn_join releases its cell
-    # index when the growth loop ends (caller owns the result's
-    # lifetime), and this stage runs two actions on it (isEmpty + the
-    # committed write) — uncached, each would re-scan the source and
-    # redo the ring join
+    # the (|queries|×k row) result is read once, by the committed write,
+    # so it is not cached (knn_join releases its own cell index)
     knn = knn_join(
         geocoded, em.KNN_QUERIES, k=5, res=5, ring=4, id_col="page_id",
         auto_grow=True, max_ring=64,
-    ).withColumn("part", F.col("query_id")).persist()
-    try:
-        todo = lineage.resume_filter(knn, base, job, "knn", "part")
-        if todo.isEmpty():
-            print(f"[{job}] knn: all partitions committed, skipping")
-        else:
-            lineage.commit_stage(todo, base, job, "knn", "part")
-    finally:
-        knn.unpersist()
+    ).withColumn("part", F.col("query_id"))
+    lineage.checkpoint_stage(knn, base, job, "knn", "part")
 
     # ---- stage 5: training-data pass (quality + dedup stats) -------------
     from earth_data_kit_spark.text.textcols import quality_score_col
@@ -159,11 +157,7 @@ def main(argv: list[str] | None = None) -> None:
             F.countDistinct("text_md5").alias("n_unique_texts"),
         )
     )
-    todo = lineage.resume_filter(quality, base, job, "quality", "part")
-    if todo.isEmpty():
-        print(f"[{job}] quality: all partitions committed, skipping")
-    else:
-        lineage.commit_stage(todo, base, job, "quality", "part")
+    lineage.checkpoint_stage(quality, base, job, "quality", "part")
 
     # ---- report ----------------------------------------------------------
     lin = spark.read.parquet(f"{base}/lineage").where(F.col("job_id") == job)

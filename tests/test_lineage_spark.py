@@ -98,3 +98,53 @@ def test_recommit_gets_fresh_lineage_row_and_foreign_jobs_ignored(spark, tmp_pat
     )
     assert len(j1rows) == 2  # fresh row appended, not silently absent
     assert j1rows[0].row_count == n_changed  # latest row reflects the new data
+
+
+def test_int_and_bigint_keyed_stages_share_lineage(spark, tmp_path):
+    """Stages keyed by an int column and by a bigint column append to
+    one lineage directory; every file stores part_key as bigint, so
+    schema inference from any file reads all of them.  A re-commit of
+    a fully committed stage writes nothing and appends no row."""
+    import pyarrow.parquet as pq
+
+    base = str(tmp_path / "ckpt")
+    pages = pages_meta_df(spark, SF)
+    int_keyed = pages.withColumn("part", (F.col("page_id") % 3).cast("int"))
+    big_keyed = pages.withColumn("part", (F.col("page_id") % 4).cast("bigint"))
+    lineage.commit_stage(int_keyed, base, "job1", "ints", "part")
+    lineage.commit_stage(big_keyed, base, "job1", "bigs", "part")
+
+    files = sorted((tmp_path / "ckpt" / "lineage").glob("*.parquet"))
+    assert files
+    for f in files:
+        assert str(pq.read_schema(f).field("part_key").type) == "int64", f
+    lin = spark.read.parquet(f"{base}/lineage")
+    assert dict(lin.groupBy("stage").count().collect()) == {"ints": 3, "bigs": 4}
+    assert lineage.resume_filter(int_keyed, base, "job1", "ints", "part").count() == 0
+    assert lineage.resume_filter(big_keyed, base, "job1", "bigs", "part").count() == 0
+
+    todo = lineage.resume_filter(int_keyed, base, "job1", "ints", "part")
+    assert lineage.commit_stage(todo, base, "job1", "ints", "part").count() == 0
+    assert spark.read.parquet(f"{base}/lineage").count() == 7
+    assert spark.read.parquet(f"{base}/ints/data").count() == pages.count()
+
+
+def test_checkpoint_stage_filters_before_build(spark, tmp_path):
+    """checkpoint_stage resume-filters its input before ``build`` and
+    returns the whole stage output, earlier commits included."""
+    base = str(tmp_path / "ckpt")
+    pages = pages_meta_df(spark, SF).withColumn("part", F.col("page_id") % 4)
+    total = pages.count()
+    lineage.commit_stage(pages.where(F.col("part") == 0), base, "job1", "s", "part")
+
+    seen = []
+
+    def build(todo):
+        seen.append(sorted(r.part for r in todo.select("part").distinct().collect()))
+        return todo
+
+    out = lineage.checkpoint_stage(pages, base, "job1", "s", "part", build=build)
+    assert seen == [[1, 2, 3]]
+    assert out.count() == total
+    lin = spark.read.parquet(f"{base}/lineage")
+    assert sorted(r.part_key for r in lin.collect()) == [0, 1, 2, 3]
