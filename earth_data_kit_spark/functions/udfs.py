@@ -31,12 +31,6 @@ def text_sha256_udf(text: pd.Series) -> pd.Series:
     return text.map(lambda t: text_sha256(t) if t is not None else None)
 
 
-@F.pandas_udf(T.StructType([T.StructField("lat", T.DoubleType()), T.StructField("lon", T.DoubleType()), T.StructField("method", T.StringType())]))
-def geocode_udf(url: pd.Series, text: pd.Series) -> pd.DataFrame:
-    out = [geocode(u or "", t or "") for u, t in zip(url, text)]
-    return pd.DataFrame(out, columns=["lat", "lon", "method"])
-
-
 def s2_leaf_series(lat: np.ndarray, lon: np.ndarray) -> pd.Series:
     """S2 level-30 leaf ids of float64 (lat, lon) arrays as nullable
     int64 (bit reinterpretation of the uint64 id).  A NaN or ±Inf
@@ -85,18 +79,6 @@ extract_geocode_udf = F.pandas_udf(
         ]
     ),
 ).asNondeterministic()
-
-
-def cell_id_udf(res: int):
-    """Factory: quadgrid cell id at a fixed resolution.  (The pure-
-    Column twin in columns.py is preferred in plans — this UDF exists
-    for pipelines already inside a pandas stage.)"""
-
-    @F.pandas_udf(T.LongType())
-    def _cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(cells.cell_id(lon.values, lat.values, res))
-
-    return _cell
 
 
 def zorder_id_udf(res: int):
@@ -198,11 +180,6 @@ def quality_score_udf(text: pd.Series) -> pd.Series:
 @F.pandas_udf(T.IntegerType())
 def token_count_udf(text: pd.Series) -> pd.Series:
     return text.map(lambda t: analysis.token_count(t or "")).astype("int32")
-
-
-@F.pandas_udf(T.LongType())
-def fingerprint64_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: analysis.fingerprint64(t or ""))
 
 
 @F.pandas_udf(T.LongType())

@@ -538,13 +538,3 @@ def k_ring(cid: int, k: int):
     return cover_cap(
         float(lat[0]), float(lon[0]), (k + 0.5) * min_cell_pitch_m(r), r
     )
-
-
-def cover_safe_radius_m(radius_m: float) -> float:
-    """The exactness radius of ``cover_cap(… radius_m …)``: every
-    point within this distance of the query is guaranteed to be in a
-    returned cell.  cover_cap is built as a superset for exactly
-    ``radius_m``, so this is the identity — kept as a named function
-    so kNN auto-grow reads as the same contract shape as
-    s2_ring_safe_radius_m."""
-    return radius_m

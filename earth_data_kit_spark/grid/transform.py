@@ -172,18 +172,6 @@ def inverse(crs: str, x, y):
         ) from None
 
 
-def transform_bbox_to_lonlat(crs: str, xmin, ymin, xmax, ymax):
-    """4-corner transform → lon/lat bbox (reference P1 semantics:
-    classes/tile.py:119-180 transforms the 4 corners and takes the
-    envelope — exact only for projections monotone over the tile,
-    which holds for the fixture tiles; the reference's warp fallback
-    for inf corners is out of scope)."""
-    cx = np.array([xmin, xmax, xmin, xmax], dtype=np.float64)
-    cy = np.array([ymin, ymin, ymax, ymax], dtype=np.float64)
-    lon, lat = inverse(crs, cx, cy)
-    return float(lon.min()), float(lat.min()), float(lon.max()), float(lat.max())
-
-
 def transform_bbox_from_lonlat(crs: str, xmin, ymin, xmax, ymax):
     """lon/lat bbox → 4-corner envelope in target CRS."""
     lon = np.array([xmin, xmax, xmin, xmax], dtype=np.float64)

@@ -11,9 +11,9 @@ side stays a DataFrame end-to-end, its covering is generated
 IN-PLAN, and the probe join is broadcast under a row threshold /
 shuffle-on-cell above it.
 
-Three building blocks, all pure Column plans (the ``knn.query_cells``
-pattern — two ``explode(sequence(...))`` nodes, zero Python in the
-covering):
+Three building blocks, all pure Column plans (the
+``knn.QuadScheme.query_cells`` pattern — two ``explode(sequence(...))``
+nodes, zero Python in the covering):
 
 * ``normalize_polygons_df`` — canonicalize any (code, wkt?, bbox?)
   polygon table to ``code, wkt, xmin, ymin, xmax, ymax``; the bbox of

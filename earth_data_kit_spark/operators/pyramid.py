@@ -34,17 +34,6 @@ def parent_cell_col(cell: Column) -> Column:
     return ((r - 1) * _RES_MULT + F.floor(x / 2) * _X_MULT + F.floor(y / 2)).cast("bigint")
 
 
-def parent_cell_sql(cell: str) -> str:
-    """DuckDB/Spark-SQL twin of parent_cell_col."""
-    r = f"CAST(floor(({cell}) / {_RES_MULT}.0) AS BIGINT)"
-    x = f"(CAST(floor(({cell}) / {_X_MULT}.0) AS BIGINT) % {_X_MULT})"
-    y = f"(({cell}) % {_X_MULT})"
-    return (
-        f"(({r} - 1) * {_RES_MULT} + CAST(floor({x} / 2.0) AS BIGINT) * {_X_MULT}"
-        f" + CAST(floor({y} / 2.0) AS BIGINT))"
-    )
-
-
 def pyramid_rollup(
     df: DataFrame,
     cell_col: str,

@@ -15,6 +15,10 @@ Spark-first restatement:
   4. exact refine: bbox test as a pure Column predicate (codegen),
      ray-cast pandas UDF only for non-rectangular polygons.
 
+Steps 2-4 are ``_pip``, written once over ``knn.CellScheme``: the S2
+(``pip_join_s2``) and H3 (``pip_join_h3``) joins run the same body
+with their own covering and point key.
+
 Scale notes: the join never shuffles the big side; skewed cells
 (dense urban) are irrelevant to a broadcast join (skew only matters
 for shuffles — the downstream groupBy(cell) aggregation uses partial
@@ -25,12 +29,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from earth_data_kit_spark.functions.columns import cell_id_col
 from earth_data_kit_spark.functions.udfs import pip_refine_udf
 from earth_data_kit_spark.grid import cells, geom
+from earth_data_kit_spark.operators.knn import CellScheme, QuadScheme
 
 
 @dataclass
@@ -46,25 +50,21 @@ class Polygon:
         shell, _ = geom.parse_wkt_polygon(self.wkt)
         return cells.covering_polygon([tuple(p) for p in shell], res)
 
+    def envelope(self) -> tuple[float, float, float, float]:
+        """(xmin, ymin, xmax, ymax): the bbox, or the WKT shell's
+        bounds.  xmin > xmax marks an antimeridian-crossing bbox."""
+        if self.bbox is not None:
+            return self.bbox
+        shell, _ = geom.parse_wkt_polygon(self.wkt)
+        return geom.polygon_bbox(shell)
 
-def bbox_polygons_from_dict(d: dict) -> list[Polygon]:
-    """Adapter for the reference's country_bboxes fixture shape
-    {code: (name, (xmin, ymin, xmax, ymax))}."""
-    return [Polygon(code=c, name=n, bbox=tuple(b)) for c, (n, b) in d.items()]
-
-
-def covering_df(spark: SparkSession, polygons: list[Polygon], res: int) -> DataFrame:
-    import pandas as pd
-
-    rows = [
-        (p.code, int(cell)) for p in polygons for cell in p.covering(res)
-    ]
-    # Arrow path (pandas → LocalTableScan) instead of a pickled-RDD
-    # scan: saves ~2 s of per-query driver work and keeps the
-    # broadcast side JVM-local
-    pdf = pd.DataFrame(rows, columns=["code", "cell"])
-    pdf["cell"] = pdf["cell"].astype("int64")
-    return spark.createDataFrame(pdf, "code string, cell bigint")
+    def boxes(self) -> list[tuple[float, float, float, float]]:
+        """The envelope as non-wrapping boxes: an antimeridian-crossing
+        one splits into its two halves at ±180."""
+        xmin, ymin, xmax, ymax = self.envelope()
+        if xmin <= xmax:
+            return [(xmin, ymin, xmax, ymax)]
+        return [(xmin, ymin, 180.0, ymax), (-180.0, ymin, xmax, ymax)]
 
 
 def pip_join(
@@ -78,7 +78,7 @@ def pip_join(
 ) -> DataFrame:
     """pages ⋈ polygons with exact PIP semantics.
 
-    Returns pages columns + ``cell`` + ``code`` (one output row per
+    Returns ``cell`` + pages columns + ``code`` (one output row per
     (page, polygon) containment; a page inside two polygons appears
     twice).
 
@@ -89,7 +89,10 @@ def pip_join(
     (``operators.polygons.covering_cells_df``, two explode(sequence)
     nodes, zero driver materialization) and refines against carried
     geometry columns; both paths produce identical rows
-    (tests/test_spatial_join_spark.py parity).
+    (tests/test_spatial_join_spark.py parity).  When
+    ``broadcast_covering`` is None the polygon table is counted (one
+    tiny aggregate job — a scalar, not a materialization) and
+    broadcast under ``polygons.BROADCAST_MAX_POLYGONS``.
 
     Join-strategy selection (SURVEY.md §4 "broadcast vs shuffle"):
     the covering broadcasts while it fits the broadcast threshold
@@ -100,54 +103,59 @@ def pip_join(
     ``covering`` lets callers reuse a precomputed/persisted covering
     table (the index-reuse path at scale).
     """
+    scheme = QuadScheme(res)
     if isinstance(polygons, DataFrame):
-        return _pip_join_df(
-            pages, polygons, res, lon_col, lat_col, broadcast_covering
+        from earth_data_kit_spark.operators import polygons as P
+
+        norm = P.normalize_polygons_df(polygons)
+        if broadcast_covering is None:
+            broadcast_covering = norm.count() < P.BROADCAST_MAX_POLYGONS
+        return _pip(
+            scheme, pages, P.covering_cells_df(norm, res),
+            P.refine_predicate_cols(lon_col, lat_col), lon_col, lat_col,
+            broadcast=broadcast_covering,
+            carried=("wkt", "xmin", "ymin", "xmax", "ymax"),
         )
-    spark = pages.sparkSession
-    cov = covering if covering is not None else covering_df(spark, polygons, res)
     if broadcast_covering is None:
         broadcast_covering = len(polygons) < 10_000
+    if covering is None:
+        covering = scheme.covering(pages.sparkSession, polygons)
+    return _pip(
+        scheme, pages, covering, refine_predicate(polygons, lon_col, lat_col),
+        lon_col, lat_col, broadcast=broadcast_covering,
+    )
 
-    with_cell = pages.withColumn("cell", cell_id_col(F.col(lon_col), F.col(lat_col), res))
-    cand = with_cell.join(F.broadcast(cov) if broadcast_covering else cov, "cell")
-    return cand.where(refine_predicate(polygons, lon_col, lat_col))
 
-
-def _pip_join_df(
+def _pip(
+    scheme: CellScheme,
     pages: DataFrame,
-    polygons: DataFrame,
-    res: int,
+    covering: DataFrame,
+    refine: "F.Column",
     lon_col: str,
     lat_col: str,
-    broadcast_covering: bool | None,
+    stored: str | None = None,
+    broadcast: bool = True,
+    carried: tuple[str, ...] = (),
 ) -> DataFrame:
-    """DataFrame-polygon-side pip_join: normalize → in-plan covering
-    → (broadcast | shuffle) equi-join on cell → carried-column refine.
-    When ``broadcast_covering`` is None the polygon table is counted
-    (one tiny aggregate job — a scalar, not a materialization) and
-    broadcast under ``polygons.BROADCAST_MAX_POLYGONS``."""
-    from earth_data_kit_spark.operators import polygons as P
-
-    norm = P.normalize_polygons_df(polygons)
-    if broadcast_covering is None:
-        broadcast_covering = norm.count() < P.BROADCAST_MAX_POLYGONS
-    cov = P.covering_cells_df(norm, res)
-    with_cell = pages.withColumn(
-        "cell", cell_id_col(F.col(lon_col), F.col(lat_col), res)
+    """The pip body every cell scheme shares: index the pages
+    (``scheme.index``), equi-join the ``(code, key)`` covering on the
+    scheme key — broadcast, so the pages side never shuffles — then
+    the exact refine.  Output ``cell, <pages columns>, code`` (plus any
+    non-geometry polygon columns; ``carried`` geometry is dropped)."""
+    cand = scheme.index(pages, lon_col, lat_col, stored).join(
+        F.broadcast(covering) if broadcast else covering, scheme.key
     )
-    cand = with_cell.join(F.broadcast(cov) if broadcast_covering else cov, "cell")
-    return cand.where(P.refine_predicate_cols(lon_col, lat_col)).drop(
-        "wkt", "xmin", "ymin", "xmax", "ymax"
-    )
+    rest = [c for c in cand.columns if c not in (scheme.key, "cell", *carried)]
+    return cand.where(refine).select(scheme.output_cell(), *rest)
 
 
 def refine_predicate(polygons: list[Polygon], lon_col: str, lat_col: str) -> "F.Column":
     """Exact PIP refine as a single predicate: rectangles become
     codegen'd comparisons (antimeridian-aware), true polygons go
     through the vectorized ray-cast UDF.  Shared by every covering
-    scheme (quadgrid `pip_join`, S2 `pip_join_s2`) — the covering only
-    has to be a superset, the refine is what defines the semantics."""
+    scheme (quadgrid `pip_join`, S2 `pip_join_s2`, H3 `pip_join_h3`) —
+    the covering only has to be a superset, the refine is what defines
+    the semantics."""
     rect = {p.code: p.bbox for p in polygons if p.bbox is not None}
     poly = {p.code: p.wkt for p in polygons if p.wkt is not None}
 

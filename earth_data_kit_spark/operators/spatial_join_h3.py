@@ -1,43 +1,47 @@
-"""kNN / radius joins over the REAL H3-class hex index (grid/h3.py).
+"""H3 cell scheme for the spatial joins over the REAL H3-class hex
+index (grid/h3.py).
 
-The north rule names "kNN queries (H3 k-ring expansion with distance
-re-rank)" — this is that sentence running on the genuine aperture-7
-icosahedral hex grid, with the same engine shapes as the quadgrid
-(operators/knn.py) and S2 (operators/spatial_join_s2.py) twins:
+``H3Scheme(res)`` supplies the ``knn.CellScheme`` members, and
+``pip_join_h3`` / ``knn_join_h3`` / ``radius_join_h3`` run the shared
+pip / kNN / radius bodies over it — the north rule's "kNN queries (H3
+k-ring expansion with distance re-rank)" on the genuine aperture-7
+icosahedral hex grid.  What the scheme supplies:
 
-* points side: ONE vectorized Arrow pass → ``_h3c`` cell id (or a
-  stored ``cell_col`` — zero Python at query time);
-* query side: per-row ``cover_cap`` inside an Arrow UDF + explode —
-  rings materialize wherever the QUERY rows live, so a million-row
-  query table distributes like any join side (table-to-table);
-* candidate join: broadcast under a bounded query batch,
-  shuffle-on-cell above it;
-* refine: codegen'd haversine; top-k via the shared bucketed
-  map-side-pruned ``knn._topk`` (skew-safe).
+* key ``_h3c`` — the res-``res`` cell id, which is also the output
+  ``cell``;
+* point key — one vectorized Arrow pass (``h3_cell_udf``), or a
+  stored ``cell_col`` (zero Python at query time);
+* polygon covering — each polygon's adaptive coarse cap covering
+  (``_covering_for_polygon``), uncompacted to ``res`` and clipped to
+  the circumradius-inflated envelope;
+* query rings — per-row ``cover_cap`` inside an Arrow UDF + explode,
+  so rings materialize wherever the QUERY rows live;
+* radius reach — the radius itself; auto-grow need — the k-th
+  distance once it fits the cover, else double the radius.
 
 Exactness contract: ``cover_cap`` is a guaranteed SUPERSET of the
 cells of all points within the cover radius (grid/h3.py — Lipschitz-
 bounded gnomonic enumeration, property-tested across icosahedron
 vertices/edges in tests/test_h3.py), so results are exact within the
-cover radius; ``auto_grow`` doubles the radius until each query's
-k-th distance is covered, reading ONE scalar per iteration (the
-knn.py join-back pattern — no per-query collect).
-
-Unlike the quadgrid/S2 twins (square cells, ring = integer levels)
-the H3 growth variable is the cover RADIUS itself — continuous, so
-auto-grow converges to the k-th distance directly instead of to the
-next power-of-two ring that covers it.
+cover radius.  Unlike the quadgrid and S2 schemes (square cells,
+ring = integer levels) the H3 reach is the cover RADIUS itself —
+continuous, so auto-grow converges to the k-th distance directly
+instead of to the next ring that covers it.
 """
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from earth_data_kit_spark.functions.columns import haversine_m_col
-from earth_data_kit_spark.grid import h3
+from earth_data_kit_spark.grid import geom, h3
+from earth_data_kit_spark.operators.knn import CellScheme, _knn, _radius
+from earth_data_kit_spark.operators.spatial_join import _pip, refine_predicate
 
 
 def h3_cell_udf(res: int):
@@ -60,47 +64,181 @@ def res_for_radius(radius_m: float, target_cells: int = 200) -> int:
     return 0
 
 
-def h3_query_cells(queries: DataFrame, res: int, radius_m) -> DataFrame:
-    """Explode each query row to its cover-cap cells — an Arrow UDF
-    over the QUERY table (no driver materialization).  ``radius_m``
-    is a float (all queries) or a Column (per-query radii)."""
-    rad = F.lit(float(radius_m)) if not isinstance(radius_m, F.Column) else radius_m
+def _poly_caps(poly) -> list[tuple[float, float, float]]:
+    """(clat, clon, radius_m) caps whose union encloses the polygon's
+    envelope.  Antimeridian boxes split into two halves; elongated
+    boxes chunk along their long axis into ~square tiles so the caps
+    hug the box instead of one half-diagonal cap blowing the area up
+    ~(aspect)× (a US-wide box is ~2.4:1)."""
+    caps = []
+    for bx in poly.boxes():
+        midlat = (bx[1] + bx[3]) / 2.0
+        w = (bx[2] - bx[0]) * max(0.05, math.cos(math.radians(midlat)))
+        hgt = bx[3] - bx[1]
+        nx = max(1, min(16, round(w / max(hgt, 1e-9)))) if hgt > 0 else min(16, int(w / 5) + 1)
+        ny = max(1, min(16, round(hgt / max(w, 1e-9)))) if w > 0 else min(16, int(hgt / 5) + 1)
+        if nx > 1:
+            ny = 1
+        step_x = (bx[2] - bx[0]) / nx
+        step_y = (bx[3] - bx[1]) / ny
+        for i in range(nx):
+            for j in range(ny):
+                sub = (
+                    bx[0] + i * step_x,
+                    bx[1] + j * step_y,
+                    bx[0] + (i + 1) * step_x,
+                    bx[1] + (j + 1) * step_y,
+                )
+                cx, cy = (sub[0] + sub[2]) / 2.0, (sub[1] + sub[3]) / 2.0
+                rad = max(
+                    geom.haversine_m(cy, cx, by, bxx)
+                    for by in (sub[1], sub[3])
+                    for bxx in (sub[0], sub[2])
+                )
+                caps.append((cy, cx, rad * 1.001 + 1.0))
+    return caps
+
+
+def _covering_for_polygon(
+    poly, res_max: int, max_cells: int = 8192
+) -> tuple[int, "object"]:
+    """(res, unique covering cells) at the FINEST res ≤ ``res_max``
+    whose actual unique covering stays ≤ ``max_cells``.  Walks fine →
+    coarse; a res whose pre-dedup enumeration bound
+    (``h3.cover_cap_count``) exceeds 50·max_cells is skipped without
+    materializing (that bound is loose — face overlap + the gnomonic
+    Lipschitz inflation — but 50× slack keeps the enumerate-and-dedup
+    cost trivial while letting the decision ride on the TRUE size).
+    A city polygon keeps ``res_max``; a continent drops to the res
+    where its covering is a few thousand broadcastable rows instead
+    of millions."""
+    caps = _poly_caps(poly)
+    best = None
+    for r in range(res_max, -1, -1):
+        bound = sum(h3.cover_cap_count(la, lo, rm, r) for la, lo, rm in caps)
+        if bound > 50 * max_cells:
+            continue
+        cells = np.unique(
+            np.concatenate([h3.cover_cap(la, lo, rm, r) for la, lo, rm in caps])
+        )
+        best = (r, cells)
+        if len(cells) <= max_cells:
+            return best
+    if best is not None:
+        return best  # coarsest materialized (res 0 worst case: ~10² cells)
+    # unreachable in practice: res-0 enumeration is always tiny
+    cells = np.unique(
+        np.concatenate([h3.cover_cap(la, lo, rm, 0) for la, lo, rm in caps])
+    )
+    return 0, cells
+
+
+def h3_cells_udf(res_list: list[int]):
+    """Arrow-vectorized (lon, lat) → array of H3-class cell ids, one
+    per res in ``res_list`` (one Python pass stamps every needed
+    resolution — the multi-res ingest indexer)."""
+    rs = list(res_list)
 
     @pandas_udf("array<long>")
-    def _cover(qlat: pd.Series, qlon: pd.Series, r: pd.Series) -> pd.Series:
-        lats, lons, rads = qlat.to_numpy(), qlon.to_numpy(), r.to_numpy()
-        return pd.Series(
-            [
-                h3.cover_cap(float(la), float(lo), float(rm), res).tolist()
-                for la, lo, rm in zip(lats, lons, rads)
-            ]
+    def _udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
+        la, lo = lat.to_numpy(), lon.to_numpy()
+        cols = np.stack([h3.latlng_to_cell(la, lo, r) for r in rs], axis=1)
+        return pd.Series(list(cols))
+
+    return _udf
+
+
+class H3Scheme(CellScheme):
+    """H3-class hex cells at ``res``; the reach is a cover radius."""
+
+    key = "_h3c"
+
+    def __init__(self, res: int, max_cover_cells: int = 8192):
+        self.res = res
+        self.max_cover_cells = max_cover_cells
+
+    def point_key(self, lon_col: str, lat_col: str, stored: str | None) -> F.Column:
+        if stored is None:
+            return h3_cell_udf(self.res)(F.col(lon_col), F.col(lat_col))
+        return F.col(stored.format(res=self.res) if "{res}" in stored else stored)
+
+    def output_cell(self) -> F.Column:
+        return F.col(self.key).alias("cell")
+
+    def covering(self, spark: SparkSession, polygons) -> DataFrame:
+        """(code, _h3c) rows: each polygon's adaptive coarse covering
+        (bounded driver work even for continents) UNCOMPACTED to
+        res-``res`` cells (``h3.uncompact`` — vectorized,
+        superset-proved), so the pages side joins one narrow key."""
+        # a page in the bbox has its res-cell center within one on-sphere
+        # cell circumradius of a bbox point, so clipping covering cells to
+        # the circumradius-inflated bbox preserves the superset while
+        # dropping the cap covering's π·r² vs 2rx·2ry slop (plus the
+        # uncompact rim) — the step that brings hex candidate volume down
+        # to the quadgrid covering's
+        rad_deg = math.degrees(h3.pitch(self.res) / h3.SQRT3 * 1.01) + 1e-6
+        rows = []
+        for poly in polygons:
+            _, coarse = _covering_for_polygon(poly, self.res, self.max_cover_cells)
+            cells = np.unique(h3.uncompact(coarse, self.res))
+            clat, clon = h3.cell_center(cells)
+            keep = np.zeros(len(cells), dtype=bool)
+            for bx in poly.boxes():
+                # longitude margin sized at the rad-inflated edge latitude
+                # with NO floor (ADVICE r6 high): the old max(0.05, cos(lat))
+                # floor under-covered above ~87° — a covering cell's center
+                # can sit far outside dlon while the cell still contains
+                # in-bbox points, silently breaking the superset contract.
+                # When the inflated band reaches the pole the longitude
+                # test is meaningless: keep every longitude.
+                lat_edge = min(89.99, max(abs(bx[1]), abs(bx[3])) + rad_deg)
+                coslat = math.cos(math.radians(lat_edge))
+                dlon = (
+                    360.0
+                    if math.sin(math.radians(rad_deg)) >= coslat
+                    else rad_deg / coslat
+                )
+                lat_ok = (clat >= bx[1] - rad_deg) & (clat <= bx[3] + rad_deg)
+                lon_ok = np.zeros(len(cells), dtype=bool)
+                for shift in (-360.0, 0.0, 360.0):  # centers wrapped across ±180
+                    lon_ok |= (clon + shift >= bx[0] - dlon) & (clon + shift <= bx[2] + dlon)
+                keep |= lat_ok & lon_ok
+            rows += [(poly.code, int(c)) for c in cells[keep]]
+        return spark.createDataFrame(rows, "code string, _h3c bigint")
+
+    def query_cells(self, queries: DataFrame, radius_m: float) -> DataFrame:
+        """Explode each query row to its cover-cap cells — an Arrow UDF
+        over the QUERY table (no driver materialization)."""
+        res = self.res
+
+        @pandas_udf("array<long>")
+        def _cover(qlat: pd.Series, qlon: pd.Series, r: pd.Series) -> pd.Series:
+            lats, lons, rads = qlat.to_numpy(), qlon.to_numpy(), r.to_numpy()
+            return pd.Series(
+                [
+                    h3.cover_cap(float(la), float(lo), float(rm), res).tolist()
+                    for la, lo, rm in zip(lats, lons, rads)
+                ]
+            )
+
+        return queries.select(
+            "query_id",
+            "qlat",
+            "qlon",
+            F.explode(_cover(F.col("qlat"), F.col("qlon"), F.lit(float(radius_m)))).alias("_h3c"),
         )
 
-    return queries.select(
-        "query_id",
-        "qlat",
-        "qlon",
-        F.explode(_cover(F.col("qlat"), F.col("qlon"), rad)).alias("_h3c"),
-    )
+    def radius_reach(self, radius_m: float) -> float:
+        return radius_m
 
-
-def _h3_indexed_points(
-    points: DataFrame,
-    id_col: str,
-    lon_col: str,
-    lat_col: str,
-    cell_col: str | None,
-    res: int,
-) -> DataFrame:
-    """Narrow (id, lon, lat, _h3c) projection BEFORE the join so the
-    candidate stream and top-k shuffle carry 3 columns, not the full
-    page row.  ``cell_col`` names a stored res-matched H3 column
-    (computed once at ingest — zero Python on the points side)."""
-    cols = [id_col, lon_col, lat_col] + ([cell_col] if cell_col else [])
-    pts = points.select(*cols)
-    if cell_col is None:
-        return pts.withColumn("_h3c", h3_cell_udf(res)(F.col(lon_col), F.col(lat_col)))
-    return pts.withColumnRenamed(cell_col, "_h3c")
+    def grow_need(self, radius_m: float, max_radius_m: float, k: int) -> F.Column:
+        """k candidates whose k-th distance fits the cover → that query
+        is done (its needed radius is dk); starved (dk null — fewer
+        than k candidates, incl. zero) → double."""
+        return F.when(
+            F.col("dk").isNotNull() & (F.col("dk") <= F.lit(radius_m)),
+            F.col("dk"),
+        ).otherwise(F.lit(radius_m * 2.0))
 
 
 def knn_join_h3(
@@ -126,192 +264,12 @@ def knn_join_h3(
     until every query's k-th candidate distance is inside the cover —
     then exactness is unconditional.  Output: (query_id, rank,
     <id_col>, dist_m)."""
-    from earth_data_kit_spark.operators.knn import _topk, queries_df
-
     if res is None:
         res = res_for_radius(radius_m)
-    spark = points.sparkSession
-    qdf = queries_df(spark, queries)
-    pts = _h3_indexed_points(points, id_col, lon_col, lat_col, cell_col, res)
-    if auto_grow:
-        pts = pts.persist()
-    dist = haversine_m_col(F.col("qlat"), F.col("qlon"), F.col(lat_col), F.col(lon_col))
-
-    def _cand(r_m: float) -> DataFrame:
-        cov = h3_query_cells(qdf, res, r_m)
-        return pts.join(F.broadcast(cov) if broadcast_queries else cov, "_h3c")
-
-    try:
-        while auto_grow and radius_m < max_radius_m:
-            scored0 = _cand(radius_m).withColumn("dist_m", dist)
-            n_df = scored0.groupBy("query_id").agg(F.count("*").alias("n"))
-            # skew-safe probe (knn.py pattern): hash-agg count + the
-            # map-side-pruned top-k for the k-th distance — never a
-            # bare per-query window over every candidate
-            dk_df = (
-                _topk(scored0.select("query_id", id_col, "dist_m"), k, id_col)
-                .where(F.col("rank") == k)
-                .select("query_id", F.col("dist_m").alias("dk"))
-            )
-            full = qdf.join(n_df, "query_id", "left").join(dk_df, "query_id", "left")
-            # k candidates whose k-th distance fits the cover → that
-            # query is done (its needed radius is dk); starved (dk
-            # null — fewer than k candidates, incl. zero) → double.
-            need = F.when(
-                F.col("dk").isNotNull() & (F.col("dk") <= F.lit(radius_m)),
-                F.col("dk"),
-            ).otherwise(F.lit(radius_m * 2.0))
-            mx = full.agg(F.max(need).alias("need")).first()["need"]
-            if mx is None or mx <= radius_m:
-                break
-            radius_m = min(max_radius_m, float(mx))
-        cand = _cand(radius_m)
-    finally:
-        if auto_grow:
-            # cache lifetime = the growth loop (knn.py contract): the
-            # final lazy pass re-scans the source once
-            pts.unpersist()
-
-    scored = cand.withColumn("dist_m", dist).select("query_id", id_col, "dist_m")
-    return _topk(scored, k, id_col)
-
-
-def _hav_m(lat1, lon1, lat2, lon2) -> float:
-    import math as m
-
-    p = m.pi / 180.0
-    a = (
-        m.sin((lat2 - lat1) * p / 2) ** 2
-        + m.cos(lat1 * p) * m.cos(lat2 * p) * m.sin((lon2 - lon1) * p / 2) ** 2
+    return _knn(
+        H3Scheme(res), points, queries, k, radius_m, max_radius_m, id_col,
+        lon_col, lat_col, cell_col, auto_grow, broadcast_queries,
     )
-    return 2 * h3.EARTH_R_M * m.asin(min(1.0, m.sqrt(a)))
-
-
-def _poly_caps(poly) -> list[tuple[float, float, float]]:
-    """(clat, clon, radius_m) caps whose union encloses the polygon's
-    bbox.  Antimeridian boxes (xmin > xmax) split into two halves;
-    elongated boxes chunk along their long axis into ~square tiles so
-    the caps hug the box instead of one half-diagonal cap blowing the
-    area up ~(aspect)× (a US-wide box is ~2.4:1)."""
-    from earth_data_kit_spark.grid import geom
-
-    if poly.bbox is not None:
-        xmin, ymin, xmax, ymax = poly.bbox
-    else:
-        shell, _ = geom.parse_wkt_polygon(poly.wkt)
-        xs = [q[0] for q in shell]
-        ys = [q[1] for q in shell]
-        xmin, ymin, xmax, ymax = min(xs), min(ys), max(xs), max(ys)
-    boxes = (
-        [(xmin, ymin, xmax, ymax)]
-        if xmin <= xmax
-        else [(xmin, ymin, 180.0, ymax), (-180.0, ymin, xmax, ymax)]
-    )
-    import math as m
-
-    caps = []
-    for bx in boxes:
-        midlat = (bx[1] + bx[3]) / 2.0
-        w = (bx[2] - bx[0]) * max(0.05, m.cos(m.radians(midlat)))
-        hgt = bx[3] - bx[1]
-        nx = max(1, min(16, round(w / max(hgt, 1e-9)))) if hgt > 0 else min(16, int(w / 5) + 1)
-        ny = max(1, min(16, round(hgt / max(w, 1e-9)))) if w > 0 else min(16, int(hgt / 5) + 1)
-        if nx > 1:
-            ny = 1
-        step_x = (bx[2] - bx[0]) / nx
-        step_y = (bx[3] - bx[1]) / ny
-        for i in range(nx):
-            for j in range(ny):
-                sub = (
-                    bx[0] + i * step_x,
-                    bx[1] + j * step_y,
-                    bx[0] + (i + 1) * step_x,
-                    bx[1] + (j + 1) * step_y,
-                )
-                cx, cy = (sub[0] + sub[2]) / 2.0, (sub[1] + sub[3]) / 2.0
-                rad = max(
-                    _hav_m(cy, cx, by, bxx)
-                    for by in (sub[1], sub[3])
-                    for bxx in (sub[0], sub[2])
-                )
-                caps.append((cy, cx, rad * 1.001 + 1.0))
-    return caps
-
-
-def _covering_for_polygon(
-    poly, res_max: int, max_cells: int = 8192
-) -> tuple[int, "object"]:
-    """(res, unique covering cells) at the FINEST res ≤ ``res_max``
-    whose actual unique covering stays ≤ ``max_cells``.  Walks fine →
-    coarse; a res whose pre-dedup enumeration bound
-    (``h3.cover_cap_count``) exceeds 50·max_cells is skipped without
-    materializing (that bound is loose — face overlap + the gnomonic
-    Lipschitz inflation — but 50× slack keeps the enumerate-and-dedup
-    cost trivial while letting the decision ride on the TRUE size).
-    A city polygon keeps ``res_max``; a continent drops to the res
-    where its covering is a few thousand broadcastable rows instead
-    of millions."""
-    import numpy as np
-
-    caps = _poly_caps(poly)
-    best = None
-    for r in range(res_max, -1, -1):
-        bound = sum(h3.cover_cap_count(la, lo, rm, r) for la, lo, rm in caps)
-        if bound > 50 * max_cells:
-            continue
-        cells = np.unique(
-            np.concatenate([h3.cover_cap(la, lo, rm, r) for la, lo, rm in caps])
-        )
-        best = (r, cells)
-        if len(cells) <= max_cells:
-            return best
-    if best is not None:
-        return best  # coarsest materialized (res 0 worst case: ~10² cells)
-    # unreachable in practice: res-0 enumeration is always tiny
-    cells = np.unique(
-        np.concatenate([h3.cover_cap(la, lo, rm, 0) for la, lo, rm in caps])
-    )
-    return 0, cells
-
-
-def res_for_polygon(poly, res_max: int, max_cells: int = 8192) -> int:
-    """Resolution ``_covering_for_polygon`` picks (see there)."""
-    return _covering_for_polygon(poly, res_max, max_cells)[0]
-
-
-def h3_covering_df(
-    spark: SparkSession, polygons, res: int, max_cells: int = 8192
-) -> DataFrame:
-    """(code, _h3r, _h3c) covering rows at each polygon's ADAPTIVE
-    resolution (``_covering_for_polygon``): every polygon's bbox is
-    enclosed by a union of ~square-chunk spherical caps and
-    ``cover_cap`` supersets each cap — so the covering is a superset
-    of every polygon point's cell at that polygon's ``_h3r``.  Total
-    size is O(|polygons| · max_cells): always broadcastable, never
-    the 10⁷-cell blow-up a fixed fine res gives a continent."""
-    rows = []
-    for poly in polygons:
-        r, cells = _covering_for_polygon(poly, res, max_cells)
-        for c in cells:
-            rows.append((poly.code, r, int(c)))
-    return spark.createDataFrame(rows, "code string, _h3r int, _h3c bigint")
-
-
-def h3_cells_udf(res_list: list[int]):
-    """Arrow-vectorized (lon, lat) → array of H3-class cell ids, one
-    per res in ``res_list`` (one Python pass stamps every needed
-    resolution — the multi-res ingest indexer)."""
-    rs = list(res_list)
-
-    @pandas_udf("array<long>")
-    def _udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        import numpy as np
-
-        la, lo = lat.to_numpy(), lon.to_numpy()
-        cols = np.stack([h3.latlng_to_cell(la, lo, r) for r in rs], axis=1)
-        return pd.Series(list(cols))
-
-    return _udf
 
 
 def pip_join_h3(
@@ -324,107 +282,28 @@ def pip_join_h3(
     max_cover_cells: int = 8192,
 ) -> DataFrame:
     """pages ⋈ polygons over the H3-class covering: same output
-    contract as ``spatial_join.pip_join`` (pages columns + ``cell`` +
+    contract as ``spatial_join.pip_join`` (``cell`` + pages columns +
     ``code``) and the same exact ray-cast refine — the flagship join
     on its third index (quadgrid / S2 / H3 — engine-parity pinned in
     tests/test_h3.py).
 
-    The covering is ADAPTIVE per polygon (``res_for_polygon``): big
-    polygons cover at a coarser res so the broadcast stays bounded
-    (the H3 analog of pip_join_s2's size-derived join level).  The
-    join is a single pass over pages: each page row explodes to its
-    cell at every resolution the covering actually uses (≤ res+1,
-    typically 1-3 values), then one broadcast equi-join on
-    (_h3r, _h3c).
+    The covering is ADAPTIVE per polygon (``_covering_for_polygon``):
+    big polygons cover at a coarser res so driver work stays bounded
+    (the H3 analog of pip_join_s2's size-derived join level), then
+    uncompact to ``res`` so the join is a single broadcast equi-join
+    on one narrow key — no pages-side explode, no multi-column scan
+    (the r6 first cut exploded pages × |res_used| and scanned three
+    ancestor columns: 2× slower at sf0.1).
 
     ``cell_col`` names the stored pages-side index (zero Python at
     query time): a plain column holding res-``res`` ids, or a format
     string like ``"h3_cell_r{res}"`` (the multi-res ingest layout
-    ``h3_cells_udf`` stamps — only the res-``res`` column is read).
-
-    The pages side joins ONE narrow key: each polygon's adaptive
-    coarse covering (bounded driver work even for continents) is
-    UNCOMPACTED to res-``res`` cells (``h3.uncompact`` — vectorized,
-    superset-proved) so the join is a single broadcast equi-join on
-    the stored column — no pages-side explode, no multi-column scan
-    (the r6 first cut exploded pages × |res_used| and scanned three
-    ancestor columns: 2× slower at sf0.1)."""
-    import math as m
-
-    import numpy as np
-
-    from earth_data_kit_spark.operators.spatial_join import refine_predicate
-    from earth_data_kit_spark.grid import geom
-
-    # a page in the bbox has its res-cell center within one on-sphere
-    # cell circumradius of a bbox point, so clipping covering cells to
-    # the circumradius-inflated bbox preserves the superset while
-    # dropping the cap covering's π·r² vs 2rx·2ry slop (plus the
-    # uncompact rim) — the step that brings hex candidate volume down
-    # to the quadgrid covering's
-    rad_deg = m.degrees(h3.pitch(res) / h3.SQRT3 * 1.01) + 1e-6
-
-    def _bbox_of(poly):
-        if poly.bbox is not None:
-            return poly.bbox
-        shell, _ = geom.parse_wkt_polygon(poly.wkt)
-        xs = [q[0] for q in shell]
-        ys = [q[1] for q in shell]
-        return min(xs), min(ys), max(xs), max(ys)
-
-    def _clip(cells, poly):
-        clat, clon = h3.cell_center(cells)
-        xmin, ymin, xmax, ymax = _bbox_of(poly)
-        boxes = (
-            [(xmin, ymin, xmax, ymax)]
-            if xmin <= xmax
-            else [(xmin, ymin, 180.0, ymax), (-180.0, ymin, xmax, ymax)]
-        )
-        keep = np.zeros(len(cells), dtype=bool)
-        for bx in boxes:
-            # longitude margin sized at the rad-inflated edge latitude
-            # with NO floor (ADVICE r6 high): the old max(0.05, cos(lat))
-            # floor under-covered above ~87° — a covering cell's center
-            # can sit far outside dlon while the cell still contains
-            # in-bbox points, silently breaking the superset contract.
-            # When the inflated band reaches the pole the longitude
-            # test is meaningless: keep every longitude.
-            lat_edge = min(89.99, max(abs(bx[1]), abs(bx[3])) + rad_deg)
-            coslat = m.cos(m.radians(lat_edge))
-            dlon = (
-                360.0
-                if m.sin(m.radians(rad_deg)) >= coslat
-                else rad_deg / coslat
-            )
-            lat_ok = (clat >= bx[1] - rad_deg) & (clat <= bx[3] + rad_deg)
-            lon_ok = np.zeros(len(cells), dtype=bool)
-            for shift in (-360.0, 0.0, 360.0):  # centers wrapped across ±180
-                lon_ok |= (clon + shift >= bx[0] - dlon) & (clon + shift <= bx[2] + dlon)
-            keep |= lat_ok & lon_ok
-        return cells[keep]
-
-    spark = pages.sparkSession
-    cov_rows = [
-        (poly.code, int(c))
-        for poly in polygons
-        for _, cells in [_covering_for_polygon(poly, res, max_cover_cells)]
-        for c in _clip(np.unique(h3.uncompact(cells, res)), poly)
-    ]
-    cov = spark.createDataFrame(cov_rows, "code string, _h3c bigint")
-
-    if cell_col is None:
-        pages = pages.withColumn(
-            "_h3c", h3_cell_udf(res)(F.col(lon_col), F.col(lat_col))
-        )
-    else:
-        name = cell_col.format(res=res) if "{res}" in cell_col else cell_col
-        pages = pages.withColumn("_h3c", F.col(name))
-    cand = (
-        pages.join(F.broadcast(cov), "_h3c")
-        .withColumn("cell", F.col("_h3c"))
-        .drop("_h3c")
+    ``h3_cells_udf`` stamps — only the res-``res`` column is read)."""
+    scheme = H3Scheme(res, max_cover_cells)
+    return _pip(
+        scheme, pages, scheme.covering(pages.sparkSession, polygons),
+        refine_predicate(polygons, lon_col, lat_col), lon_col, lat_col, cell_col,
     )
-    return cand.where(refine_predicate(polygons, lon_col, lat_col))
 
 
 def radius_join_h3(
@@ -441,17 +320,9 @@ def radius_join_h3(
     """All points within ``radius_m`` of each query — exact by the
     cover_cap superset contract + haversine refine.  Output
     (query_id, <id_col>, dist_m)."""
-    from earth_data_kit_spark.operators.knn import queries_df
-
     if res is None:
         res = res_for_radius(radius_m)
-    spark = points.sparkSession
-    cov = h3_query_cells(queries_df(spark, queries), res, radius_m)
-    pts = _h3_indexed_points(points, id_col, lon_col, lat_col, cell_col, res)
-    dist = haversine_m_col(F.col("qlat"), F.col("qlon"), F.col(lat_col), F.col(lon_col))
-    return (
-        pts.join(F.broadcast(cov) if broadcast_queries else cov, "_h3c")
-        .withColumn("dist_m", dist)
-        .where(F.col("dist_m") <= radius_m)
-        .select("query_id", id_col, "dist_m")
+    return _radius(
+        H3Scheme(res), points, queries, radius_m, id_col, lon_col, lat_col,
+        cell_col, broadcast_queries,
     )

@@ -1,10 +1,10 @@
-"""Point-in-polygon join over REAL S2 cells (grid/s2.py).
+"""S2 cell scheme for the spatial joins over REAL S2 cells (grid/s2.py).
 
-Same broadcast-covering + exact-refine shape as the quadgrid
-``pip_join`` (spatial_join.py — the driver-gated flagship), but the
-cell scheme is the genuine S2 cell id: Hilbert-curve position over
-the quadratic-ST cube projection.  This is the index the north rule
-names; at 100 TB it buys two things the quadgrid can't:
+``S2Scheme(level)`` supplies the ``knn.CellScheme`` members, and
+``pip_join_s2`` / ``knn_join_s2`` / ``radius_join_s2`` run the shared
+pip / kNN / radius bodies over it.  The cell id is the genuine S2 id:
+Hilbert-curve position over the quadratic-ST cube projection.  At
+100 TB it buys two things the quadgrid can't:
 
 * near-uniform cell area on the sphere (the quadgrid's lat/lon cells
   shrink toward the poles → skewed cells for polar data);
@@ -12,24 +12,22 @@ names; at 100 TB it buys two things the quadgrid can't:
   is range-prunable for ANY ancestor cell via parquet min/max stats,
   no re-bucketing per query level.
 
-Execution shape (the 100 TB plan):
+What the scheme supplies:
 
-  1. ONE vectorized pandas-UDF pass computes the level-30 leaf id per
-     page (`s2_leaf_udf`; jobs/pipeline.py stamps it inside the fused
-     geocode UDF instead) — the only Python in the pipeline;
-  2. the join cell at any coarser ``level`` is derived from the leaf
-     by pure JVM bit arithmetic (`s2_parent_col` — two's-complement
-     AND/OR works on int64-reinterpreted ids), inside codegen;
-  3. polygons → S2 covering (driver-side BFS, grid/s2.py) →
-     broadcast equi-join, big side never shuffles;
-  4. exact refine shared with the quadgrid path
-     (`spatial_join.refine_predicate`) — both engines implement the
-     same semantics over different coverings, which is exactly what
-     the parity test asserts (tests/test_s2.py).
+* key ``_s2k`` — the compact prefix form of the level cell id
+  (``s2_prefix_key_col``); output ``cell`` is the true S2 ancestor id,
+  rebuilt from the key by bit math;
+* point key — from a stored level-30 leaf column (``leaf_col``;
+  jobs/pipeline.py stamps it inside the fused geocode UDF) in pure
+  JVM bit arithmetic, or from one vectorized ``s2_leaf_udf`` pass;
+* polygon covering — driver-side BFS per envelope box (grid/s2.py);
+* query rings — BFS k-rings from an Arrow UDF over the query table;
+* radius reach — the first even ring whose ``s2_ring_safe_radius_m``
+  covers the radius; auto-grow need — the first even ring covering
+  the k-th distance, or double the ring while starved.
 
-Reference analog: the reference's nested ST_Intersects loop
-(/root/reference/earth_data_kit/stitching/classes/dataset.py:252-274)
-with the cell-prefilter the north rule prescribes.
+The exact refine is the quadgrid's (``spatial_join.refine_predicate``),
+so S2 and quadgrid joins return the same rows (tests/test_s2.py).
 """
 
 from __future__ import annotations
@@ -42,7 +40,8 @@ from pyspark.sql.functions import pandas_udf
 
 from earth_data_kit_spark.functions.udfs import s2_leaf_series
 from earth_data_kit_spark.grid import s2
-from earth_data_kit_spark.operators.spatial_join import Polygon, refine_predicate
+from earth_data_kit_spark.operators.knn import CellScheme, _knn, _radius
+from earth_data_kit_spark.operators.spatial_join import Polygon, _pip, refine_predicate
 
 
 def s2_leaf_udf():
@@ -84,31 +83,6 @@ def s2_prefix_key_col(cell_col: F.Column, level: int) -> F.Column:
     return F.shiftrightunsigned(cell_col, 61 - 2 * level)
 
 
-def s2_covering_df(spark: SparkSession, polygons: list[Polygon], level: int) -> DataFrame:
-    """(code, cell) covering rows at ``level``; antimeridian-crossing
-    boxes (xmin > xmax) are split into two non-wrapping halves before
-    the BFS covering (grid/s2.py covering_bbox is wrap-unaware)."""
-    rows = []
-    for p in polygons:
-        if p.bbox is not None:
-            boxes = [p.bbox]
-        else:
-            from earth_data_kit_spark.grid import geom
-
-            shell, _ = geom.parse_wkt_polygon(p.wkt)
-            xs = [q[0] for q in shell]
-            ys = [q[1] for q in shell]
-            boxes = [(min(xs), min(ys), max(xs), max(ys))]
-        for xmin, ymin, xmax, ymax in boxes:
-            spans = [(xmin, xmax)] if xmin <= xmax else [(xmin, 180.0), (-180.0, xmax)]
-            for lo, hi in spans:
-                for cell in s2.covering_bbox(ymin, ymax, lo, hi, level):
-                    rows.append((p.code, int(s2.to_spark_i64(np.array([cell], dtype=np.uint64))[0])))
-    pdf = pd.DataFrame(sorted(set(rows)), columns=["code", "cell"])
-    pdf["cell"] = pdf["cell"].astype("int64")
-    return spark.createDataFrame(pdf, "code string, cell bigint")
-
-
 def s2_ring_safe_radius_m(level: int, ring: int) -> float:
     """Conservative geodesic radius FULLY covered by an S2 BFS
     ``ring`` at ``level``: any point outside ``k_ring(cell, ring)``
@@ -126,49 +100,83 @@ def s2_ring_safe_radius_m(level: int, ring: int) -> float:
     return 0.5 * (ring // 2) * (2.0 ** -level) * 6371000.0
 
 
-def s2_query_cells(queries: DataFrame, level: int, ring: int) -> DataFrame:
-    """(query_id, qlat, qlon, _s2k) BFS k-ring rows per query — the
-    ring side of the S2 kNN/radius joins, generated by an
-    Arrow-batched pandas UDF over the QUERY DataFrame + ``explode``
-    (VERDICT r4 task 1: no driver-side ring loop — a million-row
-    query table expands wherever its rows live).  Keys are the
-    compact prefix form (s2_prefix_key_col)."""
-    shift = 61 - 2 * level
+class S2Scheme(CellScheme):
+    """S2 cells at ``level``, joined on the compact prefix key."""
 
-    @pandas_udf("array<long>")
-    def _rings(qlat: pd.Series, qlon: pd.Series) -> pd.Series:
-        cs = s2.cell_from_latlng(
-            qlat.to_numpy(np.float64), qlon.to_numpy(np.float64), level
+    key = "_s2k"
+
+    def __init__(self, level: int):
+        self.level = level
+
+    def point_key(self, lon_col: str, lat_col: str, stored: str | None) -> F.Column:
+        leaf = F.col(stored) if stored else s2_leaf_udf()(F.col(lon_col), F.col(lat_col))
+        return s2_prefix_key_col(leaf, self.level)
+
+    def output_cell(self) -> F.Column:
+        # the prefix shifted back into place is the cell's high bits;
+        # s2_parent_col then sets its sentinel bit
+        shifted = F.shiftleft(F.col(self.key), 61 - 2 * self.level)
+        return s2_parent_col(shifted, self.level).alias("cell")
+
+    def covering(self, spark: SparkSession, polygons: list[Polygon]) -> DataFrame:
+        """(code, _s2k) covering rows: BFS per envelope box — the
+        antimeridian split keeps grid/s2.py's wrap-unaware
+        covering_bbox on non-wrapping boxes."""
+        shift = 61 - 2 * self.level
+        rows = {
+            (p.code, int(cell) >> shift)
+            for p in polygons
+            for xmin, ymin, xmax, ymax in p.boxes()
+            for cell in s2.covering_bbox(ymin, ymax, xmin, xmax, self.level)
+        }
+        pdf = pd.DataFrame(sorted(rows), columns=["code", "_s2k"])
+        pdf["_s2k"] = pdf["_s2k"].astype("int64")
+        return spark.createDataFrame(pdf, "code string, _s2k bigint")
+
+    def query_cells(self, queries: DataFrame, ring: int) -> DataFrame:
+        """(query_id, qlat, qlon, _s2k) BFS k-ring rows per query,
+        generated by an Arrow-batched pandas UDF over the QUERY
+        DataFrame + ``explode`` (VERDICT r4 task 1: no driver-side
+        ring loop — a million-row query table expands wherever its
+        rows live)."""
+        level, shift = self.level, 61 - 2 * self.level
+
+        @pandas_udf("array<long>")
+        def _rings(qlat: pd.Series, qlon: pd.Series) -> pd.Series:
+            cs = s2.cell_from_latlng(
+                qlat.to_numpy(np.float64), qlon.to_numpy(np.float64), level
+            )
+            return pd.Series(
+                [[int(c2) >> shift for c2 in s2.k_ring(int(c), ring)] for c in cs]
+            )
+
+        return queries.select(
+            "query_id",
+            "qlat",
+            "qlon",
+            F.explode(_rings(F.col("qlat"), F.col("qlon"))).alias("_s2k"),
         )
-        return pd.Series(
-            [[int(c2) >> shift for c2 in s2.k_ring(int(c), ring)] for c in cs]
+
+    def radius_reach(self, radius_m: float) -> int:
+        ring = 2
+        while s2_ring_safe_radius_m(self.level, ring) < radius_m:
+            ring += 2
+            if ring > 512:
+                raise ValueError("radius too large for this level; use a coarser level")
+        return ring
+
+    def grow_need(self, ring: int, max_ring: int, k: int) -> F.Column:
+        """≥k candidates → first ring in (ring, ring+2, …, max_ring)
+        whose guaranteed radius covers dk; starved (dk null, incl.
+        zero-candidate queries) → double."""
+        # Column twin of s2_ring_safe_radius_m: 0.5·(r//2)·2^-level·R
+        per_layer = F.lit(0.5 * (2.0 ** -self.level) * 6371000.0)
+        sat = F.filter(
+            F.sequence(F.lit(ring), F.lit(max_ring), F.lit(2)),
+            lambda r: per_layer * F.floor(r / 2) >= F.col("dk"),
         )
-
-    return queries.select(
-        "query_id",
-        "qlat",
-        "qlon",
-        F.explode(_rings(F.col("qlat"), F.col("qlon"))).alias("_s2k"),
-    )
-
-
-def _s2_indexed_points(
-    points: DataFrame,
-    id_col: str,
-    lon_col: str,
-    lat_col: str,
-    leaf_col: str | None,
-    level: int,
-) -> DataFrame:
-    """(id, lon, lat, _s2k) projection — narrow BEFORE the join so
-    the candidate stream and top-k shuffle carry 3 columns, not the
-    full page row (matches knn.knn_join's projection)."""
-    cols = [id_col, lon_col, lat_col] + ([leaf_col] if leaf_col else [])
-    pts = points.select(*cols)
-    if leaf_col is None:
-        pts = pts.withColumn("s2_leaf", s2_leaf_udf()(F.col(lon_col), F.col(lat_col)))
-        leaf_col = "s2_leaf"
-    return pts.withColumn("_s2k", s2_prefix_key_col(F.col(leaf_col), level)).drop(leaf_col)
+        need_cov = F.coalesce(F.try_element_at(sat, F.lit(1)), F.lit(max_ring))
+        return F.when(F.col("dk").isNotNull(), need_cov).otherwise(F.lit(ring * 2))
 
 
 def knn_join_s2(
@@ -187,11 +195,10 @@ def knn_join_s2(
 ) -> DataFrame:
     """Top-K nearest points per query over the REAL S2 index — the
     north rule's "kNN via k-ring expansion with distance re-rank"
-    running on genuine S2 cells; map-side-pruned JVM top-k shared with the
-    quadgrid ``knn.knn_join``.  ``queries`` is a DataFrame
-    ``(query_id, qlat, qlon)`` (rings expand via an Arrow pandas UDF
-    wherever the query rows live — table-to-table join) or a python
-    list (converted).
+    running on genuine S2 cells, through the shared ``knn._knn`` body.
+    ``queries`` is a DataFrame ``(query_id, qlat, qlon)`` (rings expand
+    via an Arrow pandas UDF wherever the query rows live —
+    table-to-table join) or a python list (converted).
 
     Exactness contract: results are exact within
     ``s2_ring_safe_radius_m(level, ring)`` of each query.  With the
@@ -205,64 +212,10 @@ def knn_join_s2(
     stored-leaf tables (zero Python on the POINTS side at query
     time); engine-parity is pytest-pinned (tests/test_s2.py).
     """
-    from earth_data_kit_spark.functions.columns import haversine_m_col
-    from earth_data_kit_spark.operators.knn import _topk, queries_df
-
-    spark = points.sparkSession
-    qdf = queries_df(spark, queries)
-    pts = _s2_indexed_points(points, id_col, lon_col, lat_col, leaf_col, level)
-    if auto_grow:
-        pts = pts.persist()
-    dist = haversine_m_col(F.col("qlat"), F.col("qlon"), F.col(lat_col), F.col(lon_col))
-
-    def _cand(r: int) -> DataFrame:
-        rings = s2_query_cells(qdf, level, r)
-        return pts.join(F.broadcast(rings) if broadcast_queries else rings, "_s2k")
-
-    def _safe_m(r):
-        # Column twin of s2_ring_safe_radius_m: 0.5·(r//2)·2^-level·R
-        return F.lit(0.5 * (2.0 ** -level) * 6371000.0) * F.floor(r / 2)
-
-    try:
-        while auto_grow and ring < max_ring:
-            # skew-safe probe (mirrors knn.knn_join): hash-agg count +
-            # map-side-pruned top-k for the k-th distance — never a
-            # bare per-query window over every candidate
-            scored0 = _cand(ring).withColumn("dist_m", dist)
-            n_df = scored0.groupBy("query_id").agg(F.count("*").alias("n"))
-            dk_df = (
-                _topk(scored0.select("query_id", id_col, "dist_m"), k, id_col)
-                .where(F.col("rank") == k)
-                .select("query_id", F.col("dist_m").alias("dk"))
-            )
-            full = qdf.join(n_df, "query_id", "left").join(dk_df, "query_id", "left")
-            # ≥k candidates → first ring in (ring, ring+2, …, max_ring)
-            # whose guaranteed radius covers dk; starved (dk null,
-            # incl. zero-candidate queries) → double.
-            rs = F.sequence(F.lit(ring), F.lit(max_ring), F.lit(2))
-            sat = F.filter(rs, lambda r: _safe_m(r) >= F.col("dk"))
-            need_cov = F.coalesce(F.try_element_at(sat, F.lit(1)), F.lit(max_ring))
-            need = F.when(F.col("dk").isNotNull(), need_cov).otherwise(
-                F.lit(ring * 2)
-            )
-            mx = full.agg(F.max(need).alias("need")).first()["need"]
-            if mx is None or mx <= ring:
-                break
-            ring = min(max_ring, int(mx))
-        cand = _cand(ring)
-    except BaseException:
-        if auto_grow:
-            pts.unpersist()
-        raise
-    # deliberately NOT unpersisted on success: the returned DataFrame
-    # is lazy, so an eager unpersist here would force the final
-    # candidate join to recompute the leaf-id UDF pass the persist
-    # existed to avoid (advisor r3).  The cache is released by Spark's
-    # ContextCleaner once the result DataFrame is garbage-collected;
-    # callers holding the result long-term can `.unpersist()` the
-    # input themselves after materializing.
-    scored = cand.withColumn("dist_m", dist).select("query_id", id_col, "dist_m")
-    return _topk(scored, k, id_col)
+    return _knn(
+        S2Scheme(level), points, queries, k, ring, max_ring, id_col, lon_col,
+        lat_col, leaf_col, auto_grow, broadcast_queries,
+    )
 
 
 def radius_join_s2(
@@ -281,23 +234,9 @@ def radius_join_s2(
     haversine predicate refines.  ``queries`` is a DataFrame
     ``(query_id, qlat, qlon)`` or a list.  Output (query_id,
     <id_col>, dist_m)."""
-    from earth_data_kit_spark.functions.columns import haversine_m_col
-    from earth_data_kit_spark.operators.knn import queries_df
-
-    ring = 2
-    while s2_ring_safe_radius_m(level, ring) < radius_m:
-        ring += 2
-        if ring > 512:
-            raise ValueError("radius too large for this level; use a coarser level")
-    spark = points.sparkSession
-    rings = s2_query_cells(queries_df(spark, queries), level, ring)
-    pts = _s2_indexed_points(points, id_col, lon_col, lat_col, leaf_col, level)
-    dist = haversine_m_col(F.col("qlat"), F.col("qlon"), F.col(lat_col), F.col(lon_col))
-    return (
-        pts.join(F.broadcast(rings) if broadcast_queries else rings, "_s2k")
-        .withColumn("dist_m", dist)
-        .where(F.col("dist_m") <= radius_m)
-        .select("query_id", id_col, "dist_m")
+    return _radius(
+        S2Scheme(level), points, queries, radius_m, id_col, lon_col, lat_col,
+        leaf_col, broadcast_queries,
     )
 
 
@@ -310,23 +249,14 @@ def pip_join_s2(
     leaf_col: str | None = None,
 ) -> DataFrame:
     """pages ⋈ polygons, S2-covered: same output contract as
-    ``spatial_join.pip_join`` (pages columns + ``cell`` + ``code``).
+    ``spatial_join.pip_join`` (``cell`` + pages columns + ``code``).
 
     Pass ``leaf_col`` naming a precomputed leaf-id column (the stored
     table layout at scale: leaf computed once at ingest, every query
     derives its join level in codegen) to skip the UDF pass entirely.
     """
-    spark = pages.sparkSession
-    cov = s2_covering_df(spark, polygons, level).withColumn(
-        "_s2k", s2_prefix_key_col(F.col("cell"), level)
-    ).drop("cell")
-    if leaf_col is None:
-        pages = pages.withColumn("s2_leaf", s2_leaf_udf()(F.col(lon_col), F.col(lat_col)))
-        leaf_col = "s2_leaf"
-    # `cell` (the true S2 ancestor id) is the output contract; `_s2k`
-    # (its compact prefix form) is the join key — see s2_prefix_key_col
-    with_cell = pages.withColumn(
-        "cell", s2_parent_col(F.col(leaf_col), level)
-    ).withColumn("_s2k", s2_prefix_key_col(F.col(leaf_col), level))
-    cand = with_cell.join(F.broadcast(cov), "_s2k").drop("_s2k")
-    return cand.where(refine_predicate(polygons, lon_col, lat_col))
+    scheme = S2Scheme(level)
+    return _pip(
+        scheme, pages, scheme.covering(pages.sparkSession, polygons),
+        refine_predicate(polygons, lon_col, lat_col), lon_col, lat_col, leaf_col,
+    )

@@ -320,9 +320,12 @@ class TestKnnJoinH3:
             Polygon(code="FJ", name="fiji wrap", bbox=(177.0, -20.0, -178.0, -15.0)),
         ]
         cols = ["url", "code"]
-        a = pip_join(pages_df, polys, res=6).select(*cols)
-        b = pip_join_s2(pages_df, polys, level=8).select(*cols)
-        c = pip_join_h3(pages_df, polys, res=4).select(*cols)
+        a = pip_join(pages_df, polys, res=6)
+        b = pip_join_s2(pages_df, polys, level=8)
+        c = pip_join_h3(pages_df, polys, res=4)
+        # one output schema for every scheme: cell, <pages columns>, code
+        assert a.columns == b.columns == c.columns
+        a, b, c = (d.select(*cols) for d in (a, b, c))
         assert c.exceptAll(a).count() == 0 and a.exceptAll(c).count() == 0
         assert c.exceptAll(b).count() == 0 and b.exceptAll(c).count() == 0
         assert c.count() > 0

@@ -181,3 +181,29 @@ def test_radius_join_df_queries_parity_with_list(spark, pages):
         (r.query_id, r.page_id) for r in knn.radius_join(pages, qdf, 250_000.0, res=6).collect()
     )
     assert a == b and len(a) > 0
+
+
+@pytest.mark.parametrize(
+    "join, kwargs",
+    [
+        ("knn_join", {"res": 6, "ring": 1}),
+        ("knn_join_s2", {"level": 7, "ring": 2}),
+        ("knn_join_h3", {"res": 6, "radius_m": 1000.0}),
+    ],
+)
+def test_auto_grow_releases_points_cache(spark, join, kwargs):
+    """auto_grow persists the indexed points for its probe passes only:
+    once the result is collected, no cache is left behind (repeated
+    calls in one session must not pile up executor cache)."""
+    from earth_data_kit_spark.operators import spatial_join_h3, spatial_join_s2
+
+    fn = {
+        "knn_join": knn.knn_join,
+        "knn_join_s2": spatial_join_s2.knn_join_s2,
+        "knn_join_h3": spatial_join_h3.knn_join_h3,
+    }[join]
+    # start from an empty cache (this module's `pages` fixture is cached)
+    spark.catalog.clearCache()
+    out = fn(pages_meta_df(spark, SF), QUERIES, 3, auto_grow=True, **kwargs).collect()
+    assert len(out) == 3 * len(QUERIES)
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()

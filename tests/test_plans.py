@@ -56,26 +56,78 @@ def test_q1_partial_final_agg_and_codegen(spark):
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
-def test_knn_candidate_join_is_broadcast(spark):
-    from earth_data_kit_spark.operators.knn import knn_join
+@pytest.fixture(scope="module")
+def indexed_pages(spark, tmp_path_factory):
+    """Pages with every scheme's point index stored at ingest."""
+    from earth_data_kit_spark.functions.columns import cell_id_col
+    from earth_data_kit_spark.operators.spatial_join_h3 import h3_cell_udf
+    from earth_data_kit_spark.operators.spatial_join_s2 import s2_leaf_udf
     from earth_data_kit_spark.sources.pages import pages_meta_df
 
-    pages = pages_meta_df(spark, SF)
-    df = knn_join(pages, [(1, 41.33, 19.82)], k=3, res=6, ring=2)
-    plan = plan_of(df)
+    path = str(tmp_path_factory.mktemp("indexed") / "pages")
+    lon, lat = F.col("lon"), F.col("lat")
+    (
+        pages_meta_df(spark, SF)
+        .withColumn("qcell", cell_id_col(lon, lat, 6))
+        .withColumn("s2_leaf", s2_leaf_udf()(lon, lat))
+        .withColumn("h3_cell", h3_cell_udf(6)(lon, lat))
+        .write.parquet(path)
+    )
+    return spark.read.parquet(path)
+
+
+def _scheme_join(scheme, op, pages, stored):
+    from earth_data_kit_spark.operators import knn
+    from earth_data_kit_spark.operators import spatial_join_h3 as h3j
+    from earth_data_kit_spark.operators import spatial_join_s2 as s2j
+
+    q = [(1, 41.33, 19.82)]
+    if scheme == "quad":
+        if op == "knn":
+            return knn.knn_join(pages, q, 3, res=6, cell_col="qcell" if stored else None)
+        return knn.radius_join(pages, q, 100e3, res=6)
+    if scheme == "s2":
+        leaf = "s2_leaf" if stored else None
+        if op == "knn":
+            return s2j.knn_join_s2(pages, q, 3, level=7, leaf_col=leaf)
+        return s2j.radius_join_s2(pages, q, 100e3, level=7, leaf_col=leaf)
+    cell = "h3_cell" if stored else None
+    if op == "knn":
+        return h3j.knn_join_h3(pages, q, 3, res=6, radius_m=100e3, cell_col=cell)
+    return h3j.radius_join_h3(pages, q, 100e3, res=6, cell_col=cell)
+
+
+@pytest.mark.parametrize(
+    "scheme, op, stored",
+    [
+        (scheme, op, stored)
+        for scheme in ("quad", "s2", "h3")
+        for op in ("knn", "radius")
+        for stored in (False, True)
+        if not (scheme == "quad" and op == "radius" and stored)  # no cell_col
+    ],
+)
+def test_spatial_join_candidate_join_is_broadcast(spark, indexed_pages, scheme, op, stored):
+    """Every scheme's kNN / radius join: a broadcast equi-join on the
+    scheme key (never a sort-merge or nested-loop join), and no Python
+    on the points side when the key is stored or is quadgrid Column
+    math — the quadgrid pipeline (cell index, ring join, haversine,
+    top-k) is JVM-only; S2 and H3 expand the query rings in one Arrow
+    UDF over the query table.  kNN top-k is ONE window whose
+    row_number<=k filter plans a map-side WindowGroupLimit
+    (SPARK-37099): each scan partition keeps only its own top-k per
+    query BEFORE the exchange (the r2-era two-level bucketed prune
+    re-implemented this reduction and measured slower; see
+    OPTIMIZATION_r07.md)."""
+    plan = plan_of(_scheme_join(scheme, op, indexed_pages, stored))
     assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    # the whole kNN pipeline — cell index, ring join, haversine,
-    # top-k — is JVM-only (the old Arrow prune was the bench
-    # bottleneck on dense candidates)
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    # r7 top-k shape: ONE window whose row_number<=k filter plans a
-    # map-side WindowGroupLimit (SPARK-37099) — each scan partition
-    # keeps only its own top-k per query BEFORE the exchange (the
-    # r2-era two-level bucketed prune re-implemented this reduction
-    # and measured slower; see OPTIMIZATION_r07.md)
-    assert "WindowGroupLimit" in plan, plan
-    assert "Window" in plan
+    assert "SortMergeJoin" not in plan and "BroadcastNestedLoopJoin" not in plan
+    if op == "knn":
+        assert "WindowGroupLimit" in plan, plan
+    if stored or scheme == "quad":
+        # S2 / H3: the one Python node left is the query-side ring UDF
+        assert plan.count("ArrowEvalPython") == (0 if scheme == "quad" else 1), plan
+        assert "BatchEvalPython" not in plan
 
 
 def test_bucketed_join_is_colocated_no_exchange(spark, tmp_path):
