@@ -5,20 +5,22 @@ embedding-cosine near-dup.
 Scale design notes (100 TB posture):
 * exact: one hash-shuffle on a 16-byte digest — the canonical
   map-side-combinable groupBy; no skew (hashes are uniform).
-* minhash-LSH: signatures are computed in one Arrow-batched pandas
-  UDF pass; candidate generation explodes ``bands`` keys (constant
-  fan-out) and self-joins per band bucket.  Bucket sizes are bounded
-  in practice; a bucket-size cap guards against degenerate buckets
-  (all-empty docs), which is the real-world skew failure mode.
-* simhash: same shape with 4×16-bit band keys.
-* verification joins compare signatures (already shuffled with the
+* bucketed near-dup pairs (MinHash+LSH, SimHash, SRP embeddings):
+  each path computes its per-doc payload in one Arrow-batched UDF pass
+  and explodes a constant fan-out of bucket keys (16 LSH bands, 4×16-
+  bit simhash bands, L SRP tables); the candidate-pair body is shared
+  (``_bucket_pairs``): a bucket-size cap drops degenerate buckets
+  (all-empty docs, zero vectors — the real-world skew failure mode),
+  then a per-bucket self-join verifies candidates with the path's
+  score map-side and dedups the pairs.
+* verification compares payloads (already shuffled with the
   candidates) — full texts are only re-read for the final exact
   n-gram check when requested.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from earth_data_kit_spark.partitioning import ensure_parallelism
@@ -41,6 +43,48 @@ def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
+def _bucket_pairs(
+    keyed: DataFrame, score: Column, name: str, keep: Column, max_bucket: int
+) -> DataFrame:
+    """The candidate-pair body every bucketed near-dup path shares:
+    ``keyed`` rows ``(id, <payload>, key)`` (one row per bucket a doc
+    falls in) → pairs ``(id_a, id_b, <name>)`` with id_a < id_b that
+    share a key and satisfy ``keep``.  ``score`` reads the two sides as
+    ``a.<payload>`` / ``b.<payload>``.
+
+    * Skew guard: keys holding more than ``max_bucket`` rows are
+      dropped by a broadcast join against the surviving keys before
+      the self-join (a bucket of B rows yields B² candidates — an
+      empty-doc or zero-vector bucket is the real-world failure mode).
+    * The score and ``keep`` run MAP-SIDE in the self-join stage,
+      BEFORE the (id_a, id_b) dedup exchange: the score is
+      functionally dependent on the pair (the payload is a function of
+      id), so the exchange carries three narrow columns of surviving
+      pairs instead of both payloads (64-slot signatures, embedding
+      vectors) for every candidate, and the pair dedup plans as a
+      HashAggregate, not SortAggregate+Sort (guide §2.3, r7).
+    * Cache lifetime: call-scoped.  ``keyed`` (the UDF pass) is
+      persisted because it feeds the skew guard AND both join sides;
+      the pairs are materialized by an eager ``localCheckpoint`` and
+      the cache is released before returning, so repeated calls in
+      one JVM neither accumulate caches nor re-read a stale one."""
+    keyed = keyed.persist()
+    try:
+        sizes = keyed.groupBy("key").count().where(F.col("count") <= max_bucket)
+        kept = keyed.join(F.broadcast(sizes.select("key")), "key")
+        a = kept.alias("a")
+        b = kept.alias("b")
+        return (
+            a.join(b, (F.col("a.key") == F.col("b.key")) & (F.col("a.id") < F.col("b.id")))
+            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), score.alias(name))
+            .where(keep)
+            .dropDuplicates(["id_a", "id_b"])
+            .localCheckpoint()
+        )
+    finally:
+        keyed.unpersist()
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -55,53 +99,19 @@ def minhash_lsh_pairs(
     threshold.  Output: (id_a, id_b, est_jaccard), id_a < id_b.
 
     est_jaccard = fraction of equal minhash slots (the unbiased
-    MinHash estimator).  ``max_bucket`` drops degenerate LSH buckets
-    (skew guard — a bucket of B docs yields B² candidate pairs).
-
-    Cache lifetime: the signature pass is persisted and referenced by
-    BOTH sides of the returned (lazy) self-join — the CALLER owns the
-    cache and may ``spark.catalog.clearCache()`` (or unpersist via
-    ``df.sparkSession.catalog``) once the pairs are materialized;
-    unpersisting here would re-run the minhash UDF twice per consume.
-    """
+    MinHash estimator).  Keys are the ``bands`` LSH band hashes of the
+    signature; ``max_bucket`` drops degenerate band buckets.  The
+    signature cache is call-scoped (``_bucket_pairs``)."""
     sig_udf = minhash_sig_udf(num_perm, shingle_k)
     band_udf = minhash_bands_udf(bands)
-    df = ensure_parallelism(df)
-    sigs = df.select(
+    sigs = ensure_parallelism(df).select(
         F.col(id_col).alias("id"), sig_udf(F.col(text_col)).alias("sig")
-    ).withColumn("band_key", F.explode(band_udf(F.col("sig"))))
-    # cache: the signature UDF pass feeds the skew guard AND both join
-    # sides — without this the minhash UDF runs 3× (at 100 TB the
-    # signatures are a checkpointed stage, see plans/lineage.py)
-    sigs = sigs.persist()
-
-    # skew guard: drop degenerate buckets
-    sizes = sigs.groupBy("band_key").count().where(F.col("count") <= max_bucket)
-    sigs = sigs.join(F.broadcast(sizes.select("band_key")), "band_key")
-
-    a = sigs.alias("a")
-    b = sigs.alias("b")
-    # est_jaccard + threshold run MAP-SIDE in the band-join stage,
-    # BEFORE the (id_a, id_b) dedup exchange: est is functionally
-    # dependent on the pair (sig is a function of id), so filtering
-    # and projecting first changes nothing about the output while the
-    # dedup exchange shuffles 3 narrow columns for surviving pairs
-    # only — instead of both 64-slot signature arrays (~1 KB/row) for
-    # every candidate (guide §2.3, r7)
+    ).withColumn("key", F.explode(band_udf(F.col("sig"))))
     est = (
         F.size(F.filter(F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y), lambda v: v))
         / F.lit(float(num_perm))
     )
-    return (
-        a.join(b, (F.col("a.band_key") == F.col("b.band_key")) & (F.col("a.id") < F.col("b.id")))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            est.alias("est_jaccard"),
-        )
-        .where(F.col("est_jaccard") >= threshold)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return _bucket_pairs(sigs, est, "est_jaccard", F.col("est_jaccard") >= threshold, max_bucket)
 
 
 def simhash_pairs(
@@ -123,37 +133,18 @@ def simhash_pairs(
     the hamming ≤ 3 guarantee holds only among docs whose shared band
     bucket survives the cap; capped buckets are near-identical spam
     by construction, the pairs a dedup pass drops first anyway.
-    Cache lifetime: caller-owned, as in minhash_lsh_pairs.
-    """
-    df = ensure_parallelism(df)
-    sh = df.select(F.col(id_col).alias("id"), simhash64_udf(F.col(text_col)).alias("sh"))
+    The simhash cache is call-scoped (``_bucket_pairs``)."""
+    sh = ensure_parallelism(df).select(
+        F.col(id_col).alias("id"), simhash64_udf(F.col(text_col)).alias("sh")
+    )
     banded = sh.select(
         "id", "sh", F.explode(F.array(*[
             F.concat_ws(":", F.lit(i), F.shiftright("sh", 16 * i).bitwiseAND(F.lit(0xFFFF)).cast("string"))
             for i in range(4)
-        ])).alias("band_key"),
+        ])).alias("key"),
     )
-    # persist: the simhash UDF pass feeds the skew guard AND both
-    # join sides (same reasoning as the minhash signature cache)
-    banded = banded.persist()
-    sizes = banded.groupBy("band_key").count().where(F.col("count") <= max_bucket)
-    banded = banded.join(F.broadcast(sizes.select("band_key")), "band_key")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    xor = F.col("a.sh").bitwiseXOR(F.col("b.sh"))
-    return (
-        a.join(b, (F.col("a.band_key") == F.col("b.band_key")) & (F.col("a.id") < F.col("b.id")))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.bit_count(xor).alias("hamming"),
-        )
-        # hamming is functionally dependent on the pair, so the ≤ cap
-        # filters map-side BEFORE the dedup exchange (fewer rows
-        # shuffled; identical output — guide §2.3, r7)
-        .where(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    hamming = F.bit_count(F.col("a.sh").bitwiseXOR(F.col("b.sh")))
+    return _bucket_pairs(banded, hamming, "hamming", F.col("hamming") <= max_hamming, max_bucket)
 
 
 def ngram_jaccard_pairs(
@@ -314,52 +305,22 @@ def embedding_neardup_pairs(
     """Embedding-cosine near-dup: sign-random-projection LSH buckets →
     exact cosine within bucket.  Output (id_a, id_b, cosine).
 
-    ``n_tables`` > 1 uses L independent SRP tables (one fused matmul,
-    similarity.srp_multi_bucket_udf): pair recall at angle θ is
-    1-(1-p^P)^L with p = 1-θ/π — at cosine ≥ 0.9, P=8/L=12 gives
-    recall ≈ 1 while probing ~L buckets per vector, not the corpus.
-    ``max_bucket`` is the same degenerate-bucket B² guard as the text
-    dedup paths (a zero vector or constant embedding floods one
-    bucket per table).
-    Cache lifetime: caller-owned, as in minhash_lsh_pairs."""
-    from earth_data_kit_spark.operators.similarity import (
-        cosine_col,
-        srp_bucket_udf,
-        srp_multi_bucket_udf,
-    )
+    ``n_tables`` independent SRP tables (one fused matmul,
+    similarity.srp_multi_bucket_udf; one table is the L=1 case): pair
+    recall at angle θ is 1-(1-p^P)^L with p = 1-θ/π — at cosine ≥ 0.9,
+    P=8/L=12 gives recall ≈ 1 while probing ~L buckets per vector, not
+    the corpus.  ``max_bucket`` is the same degenerate-bucket B² guard
+    as the text dedup paths (a zero vector or constant embedding
+    floods one bucket per table).  The bucket cache is call-scoped
+    (``_bucket_pairs``)."""
+    from earth_data_kit_spark.operators.similarity import cosine_col, srp_multi_bucket_udf
 
-    emb = ensure_parallelism(emb)
-    if n_tables <= 1:
-        bucket = srp_bucket_udf(n_planes)(F.col(vec_col)).alias("bucket")
-        bucketed = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), bucket)
-    else:
-        buckets = srp_multi_bucket_udf(n_planes, dim, n_tables)(F.col(vec_col))
-        bucketed = emb.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-            F.explode(buckets).alias("bucket"),
-        )
-    bucketed = bucketed.persist()
-    sizes = bucketed.groupBy("bucket").count().where(F.col("count") <= max_bucket)
-    bucketed = bucketed.join(F.broadcast(sizes.select("bucket")), "bucket")
-    a = bucketed.alias("a")
-    b = bucketed.alias("b")
-    # cosine + threshold run MAP-SIDE in the bucket-join stage, BEFORE
-    # the (id_a, id_b) dedup exchange: cosine is functionally dependent
-    # on the pair (v is a function of id), so the dedup exchange moves
-    # 3 narrow columns of surviving pairs instead of both embedding
-    # vectors for every candidate — and the pair dedup plans as a
-    # HashAggregate instead of SortAggregate+Sort (guide §2.3, r7;
-    # same rework as minhash_lsh_pairs above)
-    return (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            cosine_col(F.col("a.v"), F.col("b.v")).alias("cosine"),
-        )
-        .where(F.col("cosine") >= sim_threshold)
-        .dropDuplicates(["id_a", "id_b"])
+    buckets = srp_multi_bucket_udf(n_planes, dim, n_tables)(F.col(vec_col))
+    bucketed = ensure_parallelism(emb).select(
+        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), F.explode(buckets).alias("key")
     )
+    cosine = cosine_col(F.col("a.v"), F.col("b.v"))
+    return _bucket_pairs(bucketed, cosine, "cosine", F.col("cosine") >= sim_threshold, max_bucket)
 
 
 def paragraph_dedup(

@@ -1,7 +1,7 @@
 """SemDeDup: semantic near-duplicate removal via k-means clusters.
 
 The embedding-space dedup the LSH family can't do: SRP-LSH
-(``dedup.embedding_near_dups``) finds pairs above a cosine threshold
+(``dedup.embedding_neardup_pairs``) finds pairs above a cosine threshold
 by random-hyperplane banding; SemDeDup (Abbas et al. 2023,
 arXiv:2303.09540 — public method) instead clusters the corpus with
 k-means and searches for near-duplicates ONLY within a cluster —
@@ -24,10 +24,10 @@ replays it bit-for-bit):
 Scale posture: each iteration is one shuffle (groupBy id) plus one
 map-side partial agg (groupBy cluster, pos); the only driver state
 is the k×d centroid matrix (same bounded-collect budget as the IVF
-centroid table, similarity.py:238).  The pair search shuffles on
-``cluster`` and is capped by ``max_cluster`` against degenerate
-skew (a cluster bigger than the cap is skipped and reported, never
-exploded into |c|² pairs).
+centroid table ``similarity.build_ivf_index`` writes).  The pair
+search shuffles on ``cluster`` and is capped by ``max_cluster``
+against degenerate skew (a cluster bigger than the cap is skipped
+and reported, never exploded into |c|² pairs).
 """
 
 from __future__ import annotations

@@ -14,8 +14,8 @@ the hot path, which is the difference between an ANN query reading
 Construction (all trained driver-side on the same deterministic
 hash-bucket sample the IVF quantizer uses — bounded, reproducible):
 
-1. coarse quantizer: spherical k-means centroids (reused from
-   similarity.kmeans_cosine);
+1. coarse quantizer: spherical k-means centroids (the IVF path's
+   similarity._train_coarse, which also returns the sample matrix);
 2. RESIDUAL product quantizer: normalized vectors minus their list
    centroid, split into M subspaces of dim/M dims; per-subspace
    k-means codebook with ksub codewords (FAISS IVFPQ's residual
@@ -46,9 +46,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from earth_data_kit_spark.operators.knn import _topk
 from earth_data_kit_spark.operators.similarity import (
-    ivf_train_sample,
-    kmeans_cosine,
+    _cosine_topk,
+    _probe_stored,
+    _train_coarse,
+    _write_centroids,
 )
 
 _PQ_SEED = 97
@@ -138,13 +141,8 @@ def build_ivfpq_index(
     * ``<out_dir>/codebooks`` — PQ codebooks (M·ksub·dim/M, tiny).
 
     Returns (centroid table, codebooks array)."""
-    train = ivf_train_sample(
-        emb, id_col, vec_col, train_size, sample_buckets,
-        min_rows=max(64, 39 * n_lists),
-    )
-    X = np.stack([np.asarray(v, dtype=np.float64) for v in train[vec_col]])
+    X, centroids = _train_coarse(emb, n_lists, id_col, vec_col, train_size, sample_buckets)
     Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-    centroids = kmeans_cosine(X, n_lists)
     resid = Xn - centroids[(Xn @ centroids.T).argmax(axis=1)]
     books = train_pq(resid, m_sub, ksub)
 
@@ -157,10 +155,7 @@ def build_ivfpq_index(
         id_col, vec_col, F.col("_e.list_id").alias("list_id")
     ).write.partitionBy("list_id").mode("overwrite").parquet(f"{out_dir}/vectors")
 
-    cent = pd.DataFrame(
-        {"list_id": range(n_lists), "centroid": [c.tolist() for c in centroids]}
-    )
-    cent.to_parquet(f"{out_dir}/centroids")
+    cent = _write_centroids(centroids, out_dir)
     pd.DataFrame(
         {
             "m": np.repeat(np.arange(m_sub), ksub),
@@ -236,30 +231,7 @@ def ivfpq_query_stored(
 
     With ``vectors=None`` returns the ADC ranking directly (column
     ``cosine`` is the ADC approximation)."""
-    from earth_data_kit_spark.operators.knn import _topk
-    from earth_data_kit_spark.operators.similarity import cosine_col
-
-    cent = centroids.sort_values("list_id")
-    Cm = np.stack([np.asarray(c, dtype=np.float64) for c in cent["centroid"]])
-    lids = cent["list_id"].to_numpy()
-    n_probe = min(n_probe, len(lids))
-
-    @F.pandas_udf("array<int>")
-    def _probes(qv: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in qv])
-        m = m / np.linalg.norm(m, axis=1, keepdims=True)
-        top = np.argsort(-(m @ Cm.T), axis=1)[:, :n_probe]
-        return pd.Series([lids[row].tolist() for row in top])
-
-    probe_df = queries.select(qid_col, qvec_col).withColumn(
-        "list_id", F.explode(_probes(F.col(qvec_col)))
-    )
-    probed = sorted(
-        r["list_id"] for r in probe_df.select("list_id").distinct().collect()
-    )
-    cand = codes.where(F.col("list_id").isin(probed)).join(
-        F.broadcast(probe_df), "list_id"
-    )
+    Cm, probed, cand = _probe_stored(codes, centroids, queries, n_probe, qid_col, qvec_col)
     adc = _adc_score_udf(Cm, codebooks)
     scored = cand.withColumn(
         "cosine",
@@ -281,9 +253,5 @@ def ivfpq_query_stored(
         vectors.where(F.col("list_id").isin(probed))
         .join(F.broadcast(shortlist), id_col)
         .join(F.broadcast(queries.select(qid_col, qvec_col)), qid_col)
-        .withColumn("cosine", cosine_col(F.col(vec_col), F.col(qvec_col)))
-        .select(qid_col, id_col, "cosine")
     )
-    return _topk(
-        exact, k, id_col, qid_col=qid_col, order_col="cosine", descending=True
-    )
+    return _cosine_topk(exact, k, id_col, vec_col, qid_col, qvec_col)

@@ -1,6 +1,8 @@
 """Dedup suite vs single-node oracles on the documents table (with
 planted duplicates)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -241,3 +243,93 @@ def test_paragraph_dedup_plan_is_maponly_jvm(spark):
         assert node not in plan, node
     # sanity: runs, row-preserving
     assert out.count() == docs.count()
+
+
+def test_embedding_neardup_honours_dim(spark):
+    """One table (the default) buckets through the same SRP bucketer as
+    L > 1 tables, so a non-64 ``dim`` is honoured: 32-dim vectors find
+    their planted twin instead of failing a 32×64 matmul."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(150).select(
+        "vec_id", F.slice("embedding", 1, 32).alias("embedding")
+    )
+    twin = emb.limit(1).select(
+        (F.col("vec_id") + 500000).alias("vec_id"),
+        F.transform("embedding", lambda v: v * F.lit(1.0001)).alias("embedding"),
+    )
+    pairs = dedup.embedding_neardup_pairs(
+        emb.unionByName(twin), sim_threshold=0.999, dim=32
+    ).collect()
+    assert any(r.id_b == r.id_a + 500000 and r.cosine > 0.9999 for r in pairs)
+
+
+# the three bucketed pair paths: call on (docs, embeddings), payload column
+PAIR_CALLS = {
+    "minhash_lsh_pairs": (lambda docs, emb: dedup.minhash_lsh_pairs(docs, threshold=0.5), "sig"),
+    "simhash_pairs": (lambda docs, emb: dedup.simhash_pairs(docs, max_hamming=3), "sh"),
+    "embedding_neardup_pairs": (
+        lambda docs, emb: dedup.embedding_neardup_pairs(
+            emb, sim_threshold=0.9, n_planes=8, n_tables=12
+        ),
+        "v",
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def pair_inputs(spark):
+    return (
+        spark.read.parquet(f"{SF}/documents.parquet").limit(300),
+        spark.read.parquet(f"{SF}/embeddings.parquet").limit(300),
+    )
+
+
+def _plan_nodes(plan: str) -> list[tuple[str, str]]:
+    """(operator, detail block) per node of a formatted physical plan."""
+    return [
+        (m.group(1), block)
+        for block in plan.split("\n\n")
+        if (m := re.match(r"\(\d+\) (\w+)", block.strip()))
+    ]
+
+
+@pytest.mark.parametrize("name", PAIR_CALLS)
+def test_pair_plan_shape(spark, pair_inputs, name):
+    """The pair body's plan, read from the SQL status store (the pairs
+    are computed by the call's eager localCheckpoint): the pair dedup
+    is a HashAggregate, the skew-guard join (the keyed join with no
+    condition) is broadcast, and the (id_a, id_b) exchange carries the
+    narrow scored pair — never the payload array."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_execution():
+        execs = store.executionsList()
+        return execs.apply(execs.size() - 1) if execs.size() else None
+
+    before = last_execution()
+    call, payload = PAIR_CALLS[name]
+    call(*pair_inputs)
+    last = last_execution()
+    # the call itself ran the pair job (eager), so the newest execution is its own
+    assert last is not None and (before is None or last.executionId() > before.executionId())
+    plan = last.physicalPlanDescription()
+    assert "HashAggregate" in plan and "SortAggregate" not in plan
+    nodes = _plan_nodes(plan)
+    guards = [op for op, block in nodes if "Left keys" in block and "Join condition: None" in block]
+    assert guards and all(op == "BroadcastHashJoin" for op in guards), guards
+    pair_exchanges = [
+        block for op, block in nodes
+        if op == "Exchange" and re.search(r"hashpartitioning\(id_a#\w+, id_b#", block)
+    ]
+    assert pair_exchanges
+    for block in pair_exchanges:
+        inputs = re.search(r"Input \[\d+\]: \[(.*)\]", block).group(1)
+        assert payload not in {c.split("#")[0] for c in inputs.split(", ")}, inputs
+
+
+@pytest.mark.parametrize("name", PAIR_CALLS)
+def test_pair_functions_leave_no_cache(spark, pair_inputs, name):
+    """Cache hygiene: the keyed-row cache is scoped to the call — after
+    the pairs are collected, the session's cache manager is empty."""
+    spark.catalog.clearCache()
+    PAIR_CALLS[name][0](*pair_inputs).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
