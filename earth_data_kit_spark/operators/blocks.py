@@ -98,6 +98,88 @@ def _decode(row) -> np.ndarray:
     return a.reshape(int(row["ysize"]), int(row["xsize"]))
 
 
+# --- halo exchange: the block-neighbourhood layer of focal and contour.
+# A block-grid destination (bx, by) needs the pixel window
+# [c0 - lo, c1 + hi) of its own block, clamped to the raster; the
+# strip cutter ships each source block's intersection with every
+# neighbouring destination's window, the window assembler rebuilds it.
+
+_STRIP_SCHEMA = (
+    "band string, dst_bx int, dst_by int, xoff int, yoff int, "
+    "xsize int, ysize int, payload binary, dtype string, "
+    "nodataval double, scale double, offset double"
+)
+
+
+def _halo_window(bx: int, by: int, block: int, raster_size: tuple[int, int],
+                 lo: int, hi: int) -> tuple[int, int, int, int]:
+    """(x0, y0, x1, y1) of block (bx, by)'s window widened by ``lo``
+    pixels left/up and ``hi`` right/down, clamped to the raster."""
+    w, h = raster_size
+    return (max(0, bx * block - lo), max(0, by * block - lo),
+            min(w, (bx + 1) * block + hi), min(h, (by + 1) * block + hi))
+
+
+def _halo_strips(blocks: DataFrame, raster_size: tuple[int, int], block: int,
+                 lo: int, hi: int) -> DataFrame:
+    """Strip cutter (map-only Arrow pass): for each source block and each
+    of its 3×3 grid neighbours (itself included) emit the block's
+    intersection with that destination's ``_halo_window`` — only the
+    pixels the destination needs travel (``lo``, ``hi`` ≤ block).
+    Requires a uniform block grid (``block_x = xoff // block``)."""
+    w, h = raster_size
+    n_bx, n_by = -(-w // block), -(-h // block)
+
+    def cut(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for _, row in pdf.iterrows():
+                arr = _decode(row)
+                bx, by = int(row["block_x"]), int(row["block_y"])
+                xo, yo = int(row["xoff"]), int(row["yoff"])
+                for dy in (-1, 0, 1):
+                    for dx in (-1, 0, 1):
+                        tbx, tby = bx + dx, by + dy
+                        if not (0 <= tbx < n_bx and 0 <= tby < n_by):
+                            continue
+                        hx0, hy0, hx1, hy1 = _halo_window(tbx, tby, block, raster_size, lo, hi)
+                        ix0, ix1 = max(xo, hx0), min(xo + arr.shape[1], hx1)
+                        iy0, iy1 = max(yo, hy0), min(yo + arr.shape[0], hy1)
+                        if ix0 >= ix1 or iy0 >= iy1:
+                            continue
+                        sub = arr[iy0 - yo: iy1 - yo, ix0 - xo: ix1 - xo]
+                        out.append((
+                            row["band"], tbx, tby, ix0, iy0, ix1 - ix0, iy1 - iy0,
+                            np.ascontiguousarray(sub).tobytes(), row["dtype"],
+                            row["nodataval"], row["scale"], row["offset"],
+                        ))
+            yield pd.DataFrame(out, columns=[f.split()[0] for f in _STRIP_SCHEMA.split(", ")])
+
+    return blocks.mapInPandas(cut, schema=_STRIP_SCHEMA)
+
+
+def _window(pdf: pd.DataFrame, x0: int, y0: int, x1: int, y1: int) -> np.ndarray:
+    """Window assembler: the float64 raster window [x0, x1) × [y0, y1)
+    from block or strip rows (parts outside it are clipped, uncovered
+    pixels stay NaN), nodata → NaN, then scale/offset — nodataval,
+    scale and offset read from the first row, as every caller's inputs
+    share them."""
+    win = np.full((y1 - y0, x1 - x0), np.nan, dtype=np.float64)
+    for _, row in pdf.iterrows():
+        xo, yo = int(row["xoff"]), int(row["yoff"])
+        ix0, ix1 = max(xo, x0), min(xo + int(row["xsize"]), x1)
+        iy0, iy1 = max(yo, y0), min(yo + int(row["ysize"]), y1)
+        if ix0 < ix1 and iy0 < iy1:
+            win[iy0 - y0: iy1 - y0, ix0 - x0: ix1 - x0] = _decode(row)[
+                iy0 - yo: iy1 - yo, ix0 - xo: ix1 - xo
+            ]
+    first = pdf.iloc[0]
+    nod = first["nodataval"]
+    if nod is not None and not np.isnan(nod):
+        win[win == nod] = np.nan
+    return win * float(first["scale"]) + float(first["offset"])
+
+
 def decode_block_window(row, xoff: int, yoff: int, xsize: int, ysize: int):
     """One block's contribution to a read window: clamped
     intersection, decode, nodata → NaN, scale/offset (the reference's
@@ -236,18 +318,7 @@ def regrid_bilinear(
     dw, dh = dst_size
 
     def per_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        full = np.full((sh, sw), np.nan, dtype=np.float64)
-        scale = pdf.iloc[0]["scale"]
-        offset = pdf.iloc[0]["offset"]
-        nod = pdf.iloc[0]["nodataval"]
-        for _, row in pdf.iterrows():
-            arr = _decode(row).astype(np.float64)
-            if nod is not None and not np.isnan(nod):
-                arr = np.where(arr == nod, np.nan, arr)
-            full[
-                int(row["yoff"]) : int(row["yoff"]) + int(row["ysize"]),
-                int(row["xoff"]) : int(row["xoff"]) + int(row["xsize"]),
-            ] = arr * scale + offset
+        full = _window(pdf, 0, 0, sw, sh)
         # sample at dst pixel centers mapped into src space
         ys, y0, _ = _interp_indices(dh, sh, method)
         xs, x0, _ = _interp_indices(dw, sw, method)
@@ -406,23 +477,8 @@ def regrid_bilinear_blocks(
             extra = 1
         sx_lo, sx_hi = int(xf.min()), int(xf.max()) + extra
         sy_lo, sy_hi = int(yf.min()), int(yf.max()) + extra
-        local = np.full((sy_hi - sy_lo + 1, sx_hi - sx_lo + 1), np.nan, dtype=np.float64)
-        scale = pdf.iloc[0]["scale"]
-        offset = pdf.iloc[0]["offset"]
-        nod = pdf.iloc[0]["nodataval"]
-        for _, row in pdf.iterrows():
-            bx0, by0 = int(row["xoff"]), int(row["yoff"])
-            bw, bh = int(row["xsize"]), int(row["ysize"])
-            ix0, ix1 = max(bx0, sx_lo), min(bx0 + bw, sx_hi + 1)
-            iy0, iy1 = max(by0, sy_lo), min(by0 + bh, sy_hi + 1)
-            if ix0 >= ix1 or iy0 >= iy1:
-                continue  # halo slack — block not actually needed
-            arr = _decode(row).astype(np.float64)
-            if nod is not None and not np.isnan(nod):
-                arr = np.where(arr == nod, np.nan, arr)
-            local[iy0 - sy_lo : iy1 - sy_lo, ix0 - sx_lo : ix1 - sx_lo] = (
-                arr[iy0 - by0 : iy1 - by0, ix0 - bx0 : ix1 - bx0] * scale + offset
-            )
+        # halo-slack blocks that miss the src window clip away here
+        local = _window(pdf, sx_lo, sy_lo, sx_hi + 1, sy_hi + 1)
         y0 = yf - sy_lo
         x0 = xf - sx_lo
         if method == "nearest":

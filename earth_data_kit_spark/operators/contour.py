@@ -9,14 +9,18 @@ average (GDAL's disambiguation).
 
 Distribution: a 2×2 marching cell anchored at pixel (x, y) needs
 (x+1, y+1) — blocks need a 1-pixel halo right/down.  Stage 1 is the
-same STRIP halo exchange as focal.py, but one-sided (only left/top
-edge strips travel, to the left/up neighbor); stage 2 groups per
-block, assembles the (bh+1, bw+1) window, and marches ONLY the cells
-anchored inside the block's own window — every cell is computed by
-exactly one task, so segments are globally unique with no stitching
-pass.  Output rows: (level, x1, y1, x2, y2) in PIXEL coordinates
-(continuous; pixel centers at integers); multiply through the
-geotransform for world coordinates.
+halo-exchange strip cutter shared with focal.py (``blocks.
+_halo_strips`` with ``lo=0, hi=1``: only left/top edge strips travel,
+to the left/up neighbor); stage 2 groups per block, assembles the
+(bh+1, bw+1) window with the shared ``blocks._window`` (nodata →
+NaN, scale/offset) and marches ONLY the cells anchored inside the
+block's own window — every cell is computed by exactly one task, so
+segments are globally unique with no stitching pass; a cell with a
+nodata corner yields no segment.  Output rows: (level, x1, y1, x2,
+y2) in PIXEL coordinates (continuous; pixel centers at integers);
+multiply through the geotransform for world coordinates.
+``contour_lines`` stitches segments into polylines with the engine's
+one connected-components routine, ``dedup.dup_clusters``.
 
 Scale posture: map-only + one grouped shuffle whose payload is the
 one-pixel strips (O(perimeter)); segment output is proportional to
@@ -25,12 +29,16 @@ contour length, never raster area.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from earth_data_kit_spark.operators.blocks import _halo_strips, _halo_window, _window
+from earth_data_kit_spark.operators.dedup import dup_clusters
+
+# the CC body under its historical name, for the convergence property test
+from earth_data_kit_spark.operators.dedup import _star_contraction as _cc_star_contraction  # noqa: F401
 
 SEG_SCHEMA = "level double, x1 double, y1 double, x2 double, y2 double"
 
@@ -91,72 +99,12 @@ def contour_segments(
     """Marching-squares contour segments for ``levels`` over a
     blocks raster → (level, x1, y1, x2, y2) in pixel-center
     coordinates."""
-    w, h = raster_size
-    n_bx, n_by = -(-w // block), -(-h // block)
     lvls = [float(v) for v in levels]
 
-    strip_schema = (
-        "dst_bx int, dst_by int, xoff int, yoff int, xsize int, ysize int, "
-        "payload binary, dtype string, scale double, offset double"
-    )
-
-    def strips(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from earth_data_kit_spark.operators.blocks import _decode
-
-        for pdf in batches:
-            out = []
-            for _, r in pdf.iterrows():
-                arr = _decode(r)
-                bx, by = int(r["block_x"]), int(r["block_y"])
-                xo, yo = int(r["xoff"]), int(r["yoff"])
-                bh, bw = arr.shape
-                # self (full block)
-                targets = [(bx, by, arr, xo, yo)]
-                # left/top/top-left edge strips to the neighbors that
-                # march the cells straddling this block's leading edge
-                if bx > 0:
-                    targets.append((bx - 1, by, arr[:, :1], xo, yo))
-                if by > 0:
-                    targets.append((bx, by - 1, arr[:1, :], xo, yo))
-                if bx > 0 and by > 0:
-                    targets.append((bx - 1, by - 1, arr[:1, :1], xo, yo))
-                for tbx, tby, sub, sxo, syo in targets:
-                    out.append(
-                        {"dst_bx": tbx, "dst_by": tby, "xoff": sxo, "yoff": syo,
-                         "xsize": sub.shape[1], "ysize": sub.shape[0],
-                         "payload": np.ascontiguousarray(sub).tobytes(),
-                         "dtype": r["dtype"], "scale": r["scale"],
-                         "offset": r["offset"]}
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=["dst_bx", "dst_by", "xoff", "yoff", "xsize", "ysize",
-                         "payload", "dtype", "scale", "offset"],
-            )
-
-    exploded = blocks.mapInPandas(strips, schema=strip_schema)
-
     def per_block(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        bx, by = key
-        cx0, cy0 = bx * block, by * block
-        cx1, cy1 = min(w, cx0 + block), min(h, cy0 + block)
-        # halo window: own block + one pixel right/down
-        hx1, hy1 = min(w, cx1 + 1), min(h, cy1 + 1)
-        z = np.full((hy1 - cy0, hx1 - cx0), np.nan, dtype=np.float64)
-        sc = float(pdf.iloc[0]["scale"])
-        off = float(pdf.iloc[0]["offset"])
-        for _, r in pdf.iterrows():
-            a = np.frombuffer(r["payload"], dtype=np.dtype(r["dtype"])).reshape(
-                int(r["ysize"]), int(r["xsize"])
-            ).astype(np.float64)
-            yy, xx = int(r["yoff"]) - cy0, int(r["xoff"]) - cx0
-            ey, ex = min(yy + a.shape[0], z.shape[0]), min(xx + a.shape[1], z.shape[1])
-            sy = max(0, -yy)
-            sx = max(0, -xx)
-            oy = max(0, yy)
-            ox = max(0, xx)
-            z[oy:ey, ox:ex] = a[sy: sy + ey - oy, sx: sx + ex - ox]
-        z = z * sc + off
+        # own block + one pixel right/down: the cells anchored here
+        cx0, cy0, cx1, cy1 = _halo_window(*key, block, raster_size, 0, 1)
+        z = _window(pdf, cx0, cy0, cx1, cy1)
         rows = []
         if z.shape[0] >= 2 and z.shape[1] >= 2:
             for lv in lvls:
@@ -167,9 +115,9 @@ def contour_segments(
                     )
         return pd.DataFrame(rows, columns=["level", "x1", "y1", "x2", "y2"])
 
-    return exploded.groupBy("dst_bx", "dst_by").applyInPandas(
-        per_block, schema=SEG_SCHEMA
-    )
+    return _halo_strips(blocks, raster_size, block, 0, 1).groupBy(
+        "dst_bx", "dst_by"
+    ).applyInPandas(per_block, schema=SEG_SCHEMA)
 
 
 def contour_lines(segments: DataFrame, quantum: float = 1e-6) -> DataFrame:
@@ -180,11 +128,10 @@ def contour_lines(segments: DataFrame, quantum: float = 1e-6) -> DataFrame:
     Endpoints are exact rational crossings of the same cell edges on
     both sides (the blocking-invariance property), so quantizing by
     ``quantum`` keys shared endpoints identically; each segment is an
-    edge between its two endpoint keys and ``_cc_star_contraction``
-    (large-star/small-star + compose — O(log length) rounds, unlike
-    ``dedup.dup_clusters``'s O(diameter) propagation, because a
-    polyline's diameter IS its length) labels the connected endpoint
-    graph.  line_id = the component's minimum endpoint key: stable
+    edge between its two endpoint keys and ``dedup.dup_clusters``
+    (large-star/small-star + compose — O(log length) rounds, which a
+    polyline needs: its diameter IS its length) labels the connected
+    endpoint graph.  line_id = the component's minimum endpoint key: stable
     across partitionings and blockings."""
 
     def key(x, y, lv):
@@ -203,129 +150,10 @@ def contour_lines(segments: DataFrame, quantum: float = 1e-6) -> DataFrame:
         F.col("_ka").alias("id_a"), F.col("_kb").alias("id_b")
     ).distinct()
 
-    mapping = _cc_star_contraction(edges)
+    mapping = dup_clusters(edges)
     out = (
-        segs.join(mapping.withColumnRenamed("node", "_ka"), "_ka", "left")
+        segs.join(mapping.withColumnRenamed("id", "_ka"), "_ka", "left")
         .withColumn("line_id", F.coalesce(F.col("cluster"), F.col("_ka")))
         .drop("_ka", "_kb", "cluster")
     )
     return out
-
-
-def _cc_star_contraction(
-    edges: DataFrame, max_iter: int = 60, stats: dict | None = None
-) -> DataFrame:
-    """Connected components for polyline graphs → (node, cluster),
-    cluster = the component's minimum node id.
-
-    ``dedup.dup_clusters``'s plain min-label propagation is
-    O(diameter) rounds — right for shallow dedup graphs, wrong for
-    polylines, whose diameter is their length (a mosaic-long
-    coastline contour would need millions of rounds).  The r5
-    "pointer jumping" here rebuilt its pointer table from the
-    neighbor-min every round, so indirection never compounded and
-    convergence was LINEAR (VERDICT r5 #1 — blew max_iter=40 on a
-    ~150-segment loop).  Replaced (r6) with the published
-    alternating LARGE-STAR / SMALL-STAR MapReduce-CC algorithm
-    (Kiveris et al., "Connected Components in MapReduce and
-    Beyond"), plus one parent-COMPOSE step per round:
-
-    * state: parent pointers (child > parent by id — a strictly
-      decreasing forest, so composition can never cycle);
-    * large-star: every neighbor v > u links to min(Γ(u) ∪ {u});
-    * small-star: every neighbor v ≤ u (and u) links to that min;
-    * compose: parent ← parent[parent] where defined — genuine
-      doubling on the persistent pointer forest, the part r5 lacked.
-
-    Each round is a constant number of shuffles over the shrinking
-    edge set; the doubling compose halves remaining pointer depth,
-    so a cycle/path of n nodes converges in O(log n) rounds
-    (property-tested: 10k-node random-id cycle within 2·log2 n
-    rounds, tests/test_contour.py).  Per-round localCheckpoint
-    truncates lineage exactly as in dup_clusters.
-
-    ``stats`` (optional dict) receives {"outer": rounds} — kept for
-    the convergence property test."""
-    u, v = F.col("u"), F.col("v")
-    # parent pairs (u=child > v=parent candidate), one row per edge
-    e = (
-        edges.where(F.col("id_a") != F.col("id_b"))
-        .select(
-            F.greatest("id_a", "id_b").alias("u"),
-            F.least("id_a", "id_b").alias("v"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        edges.select(F.col("id_a").alias("node"))
-        .union(edges.select(F.col("id_b").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        # LARGE-STAR: symmetrize; per u link every v > u to
-        # m = min(Γ(u) ∪ {u})
-        s = e.union(e.select(v.alias("u"), u.alias("v")))
-        mins = s.groupBy("u").agg(F.least(F.min("v"), u).alias("m"))
-        e = (
-            s.join(mins, "u")
-            .where(v > u)
-            .select(v.alias("u"), F.col("m").alias("v"))
-            .where(u != v)
-            .distinct()
-        )
-        # SMALL-STAR: orient child=larger; per u link every smaller
-        # neighbor AND u itself to the min neighbor
-        mins = e.groupBy("u").agg(F.min("v").alias("m"))
-        e = (
-            e.join(mins, "u")
-            .select(v.alias("u"), F.col("m").alias("v"))
-            .union(mins.select("u", F.col("m").alias("v")))
-            .where(u != v)
-            .distinct()
-        )
-        # COMPOSE: parent ← parent[parent] (strictly decreasing ids
-        # ⇒ acyclic ⇒ safe doubling).  Edges are LOWERED, not
-        # collapsed per child — (u,v2)→(u,parent(v2)) keeps u
-        # attached to v2's tree while v2 stays attached via its own
-        # child row; a groupBy-min collapse here could disconnect a
-        # node whose only link to part of the component ran through
-        # the dropped edge.
-        p = e.select(u.alias("pu"), v.alias("pv"))
-        e = (
-            e.join(p, e.v == p.pu, "left")
-            .select("u", F.least(v, F.coalesce("pv", v)).alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        # converged ⇔ star forest: no parent is itself a child AND
-        # every child has exactly one parent (two root-parents on one
-        # child means two min-candidates still unmerged)
-        nonstar = (
-            e.alias("a")
-            .join(e.alias("b"), F.col("a.v") == F.col("b.u"))
-            .limit(1)
-            .count()
-        )
-        if nonstar == 0:
-            nonstar = (
-                e.groupBy("u").agg(F.count("*").alias("c"))
-                .where(F.col("c") > 1).limit(1).count()
-            )
-        if nonstar == 0:
-            if stats is not None:
-                stats.update({"outer": rounds})
-            mapping = e.select(F.col("u").alias("node"), F.col("v").alias("cluster"))
-            return (
-                nodes.join(mapping, "node", "left")
-                .select(
-                    "node",
-                    F.coalesce(F.col("cluster"), F.col("node")).alias("cluster"),
-                )
-            )
-    raise RuntimeError(
-        f"star-contraction CC did not converge in {max_iter} rounds"
-    )

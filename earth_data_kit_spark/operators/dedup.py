@@ -209,87 +209,134 @@ def dup_clusters(
     max_iter: int = 50,
     on_nonconverged: str = "raise",
 ) -> DataFrame:
-    """Connected components over near-dup pairs → one canonical doc
-    per cluster (min id), the step that turns pairwise candidates
-    into a KEEP/DROP decision for the corpus.
+    """Connected components over an edge table → ``(id, cluster)`` for
+    every node that appears in ``pairs``, cluster = the component's
+    minimum node id.  The one CC routine of the engine: near-dup
+    clusters (one canonical doc per cluster), raster region merges
+    (``regions``/``polygonize``) and contour polyline stitching
+    (``contour.contour_lines``) all run it.
 
-    Min-label propagation: every node starts as its own label; each
-    round joins labels across (symmetrized) edges and takes the min;
-    stops when a round changes nothing (diameter-bounded, checked
-    with one count per round — components in dedup graphs are
-    shallow).  Each round's labels are ``localCheckpoint``-ed (eager,
-    lineage-TRUNCATING): plain persist keeps the logical plan growing
-    one nested join per round, which blows up Catalyst planning (and
-    the driver heap) on deep chains — the standard iterative-
-    DataFrame pattern is checkpoint-per-round, one shuffle keyed by
-    node id.
+    Alternating LARGE-STAR / SMALL-STAR (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC 2014) plus one parent-
+    COMPOSE step per round on a strictly id-decreasing pointer forest
+    (child > parent, so composition can never cycle):
 
-    Output: (<id_a-named> id, cluster bigint) for every node that
-    appears in ``pairs``; cluster = min node id reachable.
+    * large-star: every neighbor v > u links to min(Γ(u) ∪ {u});
+    * small-star: every neighbor v ≤ u (and u) links to that min;
+    * compose: parent ← parent[parent] where defined — doubling on the
+      persistent forest.
 
-    If propagation has not converged after ``max_iter`` rounds (a
-    component with diameter > max_iter — chain-shaped drifting
-    boilerplate is plausible at corpus scale), the labels are WRONG
-    for that component; ``on_nonconverged`` picks the failure mode:
-    'raise' (default — never silently return partial labels) or
-    'warn' (UserWarning, return the partial labels).
+    Each round is a constant number of shuffles over the shrinking
+    edge set and the compose halves the remaining pointer depth, so a
+    path or cycle of n nodes converges in O(log n) rounds (a 10k-node
+    random-id cycle within 2·log2 n, tests/test_contour.py) — a
+    min-label propagation needs O(diameter) rounds, which a polyline or
+    a mosaic-long raster region turns into thousands.  Each round's
+    edges are ``localCheckpoint``-ed (eager, lineage-truncating), so
+    the plan size stays constant in rounds.
 
-    Cache lifetime: the returned labels derive from the final round's
-    localCheckpoint (freed when the DataFrame is garbage-collected)."""
+    If the forest is not a star forest after ``max_iter`` rounds the
+    labels are WRONG for some component; ``on_nonconverged`` picks the
+    failure mode: 'raise' (default — never silently return partial
+    labels) or 'warn' (UserWarning, return the current parent forest
+    as the partial labels).
+
+    Cache lifetime: the returned labels derive from localCheckpoints
+    (freed when the DataFrame is garbage-collected)."""
+    return _star_contraction(pairs, id_a, id_b, max_iter, on_nonconverged)
+
+
+def _star_contraction(
+    pairs: DataFrame,
+    id_a: str = "id_a",
+    id_b: str = "id_b",
+    max_iter: int = 50,
+    on_nonconverged: str = "raise",
+    stats: dict | None = None,
+) -> DataFrame:
+    """``dup_clusters``' body; ``stats`` (optional dict) receives
+    {"outer": rounds} for the convergence property test."""
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError(f"on_nonconverged must be 'raise' or 'warn', got {on_nonconverged!r}")
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
+    a, b, u, v = F.col(id_a), F.col(id_b), F.col("u"), F.col("v")
+    # parent pairs (u=child ≥ v=parent candidate), one row per edge; a
+    # self-loop (u = v) only keeps its node in ``nodes`` — the first
+    # large-star drops it
+    e = (
+        pairs.select(F.greatest(a, b).alias("u"), F.least(a, b).alias("v"))
         .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("cluster", F.col("id"))
         .localCheckpoint()
     )
-    changed = 0
-    for _ in range(max_iter):
-        # neighbor minimum: edge dst receives src's current label
-        neigh = (
-            edges.join(labels, edges.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("cluster").alias("neigh_min"))
+    nodes = e.select(u.alias("id")).union(e.select(v.alias("id"))).distinct()
+    for rounds in range(1, max_iter + 1):
+        # LARGE-STAR: symmetrize; per u link every v > u to
+        # m = min(Γ(u) ∪ {u})
+        s = e.union(e.select(v.alias("u"), u.alias("v")))
+        mins = s.groupBy("u").agg(F.least(F.min("v"), u).alias("m"))
+        e = (
+            s.join(mins, "u")
+            .where(v > u)
+            .select(v.alias("u"), F.col("m").alias("v"))
+            .where(u != v)
+            .distinct()
         )
-        # the previous label rides along through the checkpoint so the
-        # convergence test is a filter-count over the materialized
-        # round — not a second full join against the old labels
-        # (removes one shuffle per round; r7, guide §2.4)
-        new_labels = (
-            labels.join(neigh, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("cluster"), F.coalesce("neigh_min", F.col("cluster"))
-                ).alias("cluster"),
-                F.col("cluster").alias("_prev"),
-            )
-            .localCheckpoint()  # eager: truncates lineage AND materializes
+        # SMALL-STAR: orient child=larger; per u link every smaller
+        # neighbor AND u itself to the min neighbor
+        mins = e.groupBy("u").agg(F.min("v").alias("m"))
+        e = (
+            e.join(mins, "u")
+            .select(v.alias("u"), F.col("m").alias("v"))
+            .union(mins.select("u", F.col("m").alias("v")))
+            .where(u != v)
+            .distinct()
         )
-        changed = new_labels.where(F.col("cluster") != F.col("_prev")).count()
-        labels = new_labels.select("id", "cluster")
-        if changed == 0:
+        # COMPOSE: parent ← parent[parent] (strictly decreasing ids
+        # ⇒ acyclic ⇒ safe doubling).  Edges are LOWERED, not
+        # collapsed per child — (u,v2)→(u,parent(v2)) keeps u
+        # attached to v2's tree while v2 stays attached via its own
+        # child row; a groupBy-min collapse here could disconnect a
+        # node whose only link to part of the component ran through
+        # the dropped edge.
+        p = e.select(u.alias("pu"), v.alias("pv"))
+        e = (
+            e.join(p, e.v == p.pu, "left")
+            .select("u", F.least(v, F.coalesce("pv", v)).alias("v"))
+            .distinct()
+            .localCheckpoint()
+        )
+        # converged ⇔ star forest: no parent is itself a child AND
+        # every child has exactly one parent (two root-parents on one
+        # child means two min-candidates still unmerged) — one
+        # aggregation per node: its parent count and whether it is a
+        # parent
+        nonstar = (
+            e.select(u.alias("n"), F.lit(1).alias("c"), F.lit(0).alias("p"))
+            .union(e.select(v.alias("n"), F.lit(0).alias("c"), F.lit(1).alias("p")))
+            .groupBy("n")
+            .agg(F.sum("c").alias("c"), F.max("p").alias("p"))
+            .where((F.col("c") > 1) | ((F.col("c") > 0) & (F.col("p") > 0)))
+            .limit(1)
+            .count()
+        )
+        if not nonstar:
             break
-    edges.unpersist()
-    if changed != 0:
+    else:
         msg = (
-            f"dup_clusters did not converge in {max_iter} rounds "
-            f"({changed} labels still changing) — a component's diameter "
-            f"exceeds max_iter; labels would be partial. Raise max_iter."
+            f"dup_clusters did not converge in {max_iter} rounds — some "
+            f"component is not yet a star; labels would be partial. "
+            f"Raise max_iter."
         )
         if on_nonconverged == "raise":
             raise RuntimeError(msg)
         import warnings
 
-        warnings.warn(msg, UserWarning, stacklevel=2)
-    return labels.select(F.col("id"), F.col("cluster"))
+        warnings.warn(msg, UserWarning, stacklevel=3)
+        e = e.groupBy("u").agg(F.min("v").alias("v"))
+    if stats is not None:
+        stats["outer"] = rounds
+    return nodes.join(e.select(u.alias("id"), v.alias("cluster")), "id", "left").select(
+        "id", F.coalesce("cluster", "id").alias("cluster")
+    )
 
 
 def embedding_neardup_pairs(

@@ -7,15 +7,18 @@ pixel's output depends on its (2r+1)² neighborhood, so blocks need
 their neighbors' border pixels: a HALO EXCHANGE, like
 ``blocks.regrid_bilinear_blocks`` but on an identity grid.
 
-Scale-right shuffle: stage 1 is a map-only Arrow pass in which each
-block emits, per neighbor target, ONLY the ≤r-pixel strip that
-target's halo actually needs (plus its own full payload to itself) —
-for r=1 and 256-px blocks the shuffle moves ~1.03× the raster, not
+Scale-right shuffle, through the halo-exchange layer in blocks.py
+(shared with ``contour.contour_segments``): stage 1 is the strip
+cutter ``_halo_strips`` with ``lo = hi = r`` — a map-only Arrow pass
+in which each block emits, per neighbor target, ONLY the ≤r-pixel
+strip that target's halo needs (plus its own full payload to itself)
+— for r=1 and 256-px blocks the shuffle moves ~1.03× the raster, not
 the 9× a naive whole-block explode would.  Stage 2 groups by target
-block, assembles the halo window, edge-replicates at raster borders
-(GDAL ``-compute_edges`` semantics), applies the kernel in numpy,
-and emits the interior as a blocks-schema row — so focal output
-feeds export_cog / zonal / any block operator unchanged.
+block, assembles the halo window (``_window``: NaN fill, nodata →
+NaN, scale/offset), edge-replicates at raster borders (GDAL
+``-compute_edges`` semantics), applies the kernel in numpy, and
+emits the interior as a blocks-schema row — so focal output feeds
+export_cog / zonal / any block operator unchanged.
 
 Requires a uniform block grid (``block_x = xoff // block``), which
 is what every producer in this engine emits (synth, rasterize,
@@ -25,12 +28,17 @@ cog_scan, regrid).
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from earth_data_kit_spark.operators.blocks import (
+    BLOCK_SCHEMA,
+    _halo_strips,
+    _halo_window,
+    _window,
+)
 
 FOCAL_FNS = ("mean", "min", "max", "range", "slope", "aspect", "hillshade")
 
@@ -116,81 +124,14 @@ def focal_map(
     w, h = raster_size
     r = radius
     xres, yres = abs(float(gt[1])), abs(float(gt[5]))
-    n_bx, n_by = -(-w // block), -(-h // block)
     np_out = np.float64 if out_dtype == "float64" else np.float32
-
-    strip_schema = (
-        "band string, dst_bx int, dst_by int, xoff int, yoff int, "
-        "xsize int, ysize int, payload binary, dtype string, "
-        "nodataval double, scale double, offset double"
-    )
-
-    def strips(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from earth_data_kit_spark.operators.blocks import _decode
-
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                arr = _decode(row)
-                bx, by = int(row["block_x"]), int(row["block_y"])
-                xo, yo = int(row["xoff"]), int(row["yoff"])
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        tbx, tby = bx + dx, by + dy
-                        if not (0 <= tbx < n_bx and 0 <= tby < n_by):
-                            continue
-                        # target's halo window, clamped to raster
-                        hx0 = max(0, tbx * block - r)
-                        hx1 = min(w, min(w, (tbx + 1) * block) + r)
-                        hy0 = max(0, tby * block - r)
-                        hy1 = min(h, min(h, (tby + 1) * block) + r)
-                        # ∩ this block's window
-                        ix0, ix1 = max(xo, hx0), min(xo + int(row["xsize"]), hx1)
-                        iy0, iy1 = max(yo, hy0), min(yo + int(row["ysize"]), hy1)
-                        if ix0 >= ix1 or iy0 >= iy1:
-                            continue
-                        sub = arr[iy0 - yo: iy1 - yo, ix0 - xo: ix1 - xo]
-                        out.append(
-                            {
-                                "band": row["band"], "dst_bx": tbx, "dst_by": tby,
-                                "xoff": ix0, "yoff": iy0,
-                                "xsize": ix1 - ix0, "ysize": iy1 - iy0,
-                                "payload": np.ascontiguousarray(sub).tobytes(),
-                                "dtype": row["dtype"],
-                                "nodataval": row["nodataval"],
-                                "scale": row["scale"], "offset": row["offset"],
-                            }
-                        )
-            yield pd.DataFrame(
-                out,
-                columns=["band", "dst_bx", "dst_by", "xoff", "yoff", "xsize",
-                         "ysize", "payload", "dtype", "nodataval", "scale",
-                         "offset"],
-            )
-
-    exploded = blocks.mapInPandas(strips, schema=strip_schema)
 
     def per_block(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         band, bx, by = key
         cx0, cy0 = bx * block, by * block
         cx1, cy1 = min(w, cx0 + block), min(h, cy0 + block)
-        hx0, hy0 = max(0, cx0 - r), max(0, cy0 - r)
-        hx1, hy1 = min(w, cx1 + r), min(h, cy1 + r)
-        halo = np.full((hy1 - hy0, hx1 - hx0), np.nan, dtype=np.float64)
-        scale = float(pdf.iloc[0]["scale"])
-        offset = float(pdf.iloc[0]["offset"])
-        nod = pdf.iloc[0]["nodataval"]
-        for _, row in pdf.iterrows():
-            a = np.frombuffer(row["payload"], dtype=np.dtype(row["dtype"])).reshape(
-                int(row["ysize"]), int(row["xsize"])
-            ).astype(np.float64)
-            halo[
-                int(row["yoff"]) - hy0: int(row["yoff"]) - hy0 + int(row["ysize"]),
-                int(row["xoff"]) - hx0: int(row["xoff"]) - hx0 + int(row["xsize"]),
-            ] = a
-        if nod is not None and not np.isnan(nod):
-            halo = np.where(halo == nod, np.nan, halo)
-        halo = halo * scale + offset
+        hx0, hy0, hx1, hy1 = _halo_window(bx, by, block, raster_size, r, r)
+        halo = _window(pdf, hx0, hy0, hx1, hy1)
         # edge-replicate the part of the halo the raster edge clipped
         pad = ((r - (cy0 - hy0), r - (hy1 - cy1)),
                (r - (cx0 - hx0), r - (hx1 - cx1)))
@@ -209,8 +150,6 @@ def focal_map(
             }]
         )
 
-    from earth_data_kit_spark.operators.blocks import BLOCK_SCHEMA
-
-    return exploded.groupBy("band", "dst_bx", "dst_by").applyInPandas(
-        per_block, schema=BLOCK_SCHEMA
-    )
+    return _halo_strips(blocks, raster_size, block, r, r).groupBy(
+        "band", "dst_bx", "dst_by"
+    ).applyInPandas(per_block, schema=BLOCK_SCHEMA)

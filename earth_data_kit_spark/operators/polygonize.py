@@ -9,22 +9,20 @@ raster→vector direction (VERDICT r5 task 4).
 
 Pipeline (pixel work map-side, shuffles O(perimeter), never pixels):
 
-1. **Per-block map** (one Arrow pass, reusing ``regions._label_block``
-   run-CCL): emit per-region partial stats, the label-merge boundary
-   strips identical to ``region_label``'s, all INTERIOR boundary
-   edges (unit segments of the pixel lattice between pixels of
-   different value/validity, oriented REGION-ON-LEFT), and border
-   SIDE CANDIDATES for the four block edges, where the neighboring
-   pixel lives in another block.
-2. **Border resolution**: side-0 (pixel at coord-1) and side-1
-   (pixel at coord) candidates full-outer-join on (axis, coord, off);
-   an edge materializes where the opposite side is absent (raster
-   edge / nodata neighbor) or carries a different value — pure
-   Column geometry, no Python.
-3. **Global labels**: the same strip-pair → ``dedup.dup_clusters``
-   min-label merge as ``region_label`` (region graphs are shallow —
-   O(diameter-in-blocks) rounds); edges join label→region on the
-   label key, O(perimeter) rows through one shuffle.
+1. **Per-block map**: ``regions``' labelling pass (run-CCL, per-region
+   partial stats and the four block-border rows, each with its side
+   bit), to which polygonize adds only its INTERIOR boundary edges
+   (unit segments of the pixel lattice between pixels of different
+   value/validity, oriented REGION-ON-LEFT).
+2. **Border join**: the same side-0 (pixel at coord-1) ⋈ side-1
+   (pixel at coord) full outer join on (axis, coord, off) that merges
+   labels also resolves the block-border edges: an edge materializes
+   where the opposite side is absent (raster edge / nodata neighbor)
+   or carries a different value — pure Column geometry, no Python.
+3. **Global labels**: ``region_label``'s label merge
+   (``dedup.dup_clusters``, O(log diameter) rounds) and remap; edges
+   join label→region on the label key, O(perimeter) rows through one
+   shuffle.
 4. **Ring assembly**: groupBy(region).applyInPandas walks each
    region's edge set with a LEFT-TURN-FIRST rule (at a pinch vertex
    the boundary passes twice; left-turn keeps each ring tight, so a
@@ -43,32 +41,25 @@ smooth boundary is ~4k edges.  Pathological case — one continent-
 sized region at 100 TB — is documented in SCALE.md; its polygon is
 equally unrepresentable as a single WKT row for any engine.
 
-Scale posture: per-block work is O(block px); strips, candidates and
-edges are O(perimeter); the label mapping broadcast matches
-``region_label``'s (small — one entry per block-local region).
+Scale posture: per-block work is O(block px); border rows and edges
+are O(perimeter); the label mapping broadcast matches
+``region_label``'s (small — one entry per block-local region).  The
+call is eager and its cache call-scoped, as ``region_label``'s.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from earth_data_kit_spark.operators.regions import _BLOCK_STRIDE, _label_block
-
-# Row kinds of the per-block map output (one fused pass):
-_K_STATS = 0  # per-local-region partial stats
-_K_STRIP = 1  # label-merge strips (same as region_label)
-_K_EDGE = 2  # interior boundary edge, final geometry
-_K_SIDE = 3  # block-border side candidate, resolved by join
-
-_MAP_SCHEMA = (
-    "kind int, label bigint, value double, n_px bigint, "
-    "axis int, coord int, off int, side int, "
-    "x1 int, y1 int, x2 int, y2 int"
+from earth_data_kit_spark.operators.regions import (
+    _K_EDGE,
+    _label_map,
+    _merge,
+    _region_stats,
+    _to_region,
 )
 
 
@@ -229,198 +220,10 @@ def polygonize(
     given.  Pixels equal to the block's ``nodataval`` are background
     (no polygon), exactly as ``region_label``.  Region ids and pixel
     counts match ``region_label`` row-for-row (the two share the
-    labeling and merge machinery); the suite regions→polygonize→
+    labelling body, border join, label merge and remap); the suite regions→polygonize→
     contour documentation lives in SCALE.md."""
     if gt is not None and (gt[2] != 0 or gt[4] != 0):
         raise ValueError("polygonize requires an axis-aligned geotransform")
-    w, h = raster_size
-    n_bx = -(-w // block)
-
-    def per_block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from earth_data_kit_spark.operators.blocks import _decode
-
-        empty = {
-            "kind": pd.Series(dtype="int32"),
-            "label": pd.Series(dtype="int64"),
-            "value": pd.Series(dtype="float64"),
-            "n_px": pd.Series(dtype="int64"),
-            "axis": pd.Series(dtype="int32"),
-            "coord": pd.Series(dtype="int32"),
-            "off": pd.Series(dtype="int32"),
-            "side": pd.Series(dtype="int32"),
-            "x1": pd.Series(dtype="int32"),
-            "y1": pd.Series(dtype="int32"),
-            "x2": pd.Series(dtype="int32"),
-            "y2": pd.Series(dtype="int32"),
-        }
-
-        def _frame(**cols) -> pd.DataFrame:
-            n = max(len(v) for v in cols.values())
-            data = {}
-            for c in empty:
-                if c in cols:
-                    data[c] = np.asarray(cols[c])
-                else:
-                    data[c] = np.zeros(n, dtype=empty[c].dtype)
-            return pd.DataFrame(data)
-
-        for pdf in batches:
-            out = []
-            for _, r in pdf.iterrows():
-                arr = _decode(r).astype(np.float64)
-                nod = r["nodataval"]
-                valid = np.ones(arr.shape, dtype=bool)
-                if nod is not None and not np.isnan(nod):
-                    valid = arr != nod
-                labels, n = _label_block(arr, valid)
-                bx, by = int(r["block_x"]), int(r["block_y"])
-                xo, yo = int(r["xoff"]), int(r["yoff"])
-                base = (by * n_bx + bx) * _BLOCK_STRIDE
-                m = labels >= 0
-                if not m.any():
-                    continue
-                flat = labels[m]
-                cnt = np.bincount(flat, minlength=n)
-                value = np.zeros(n)
-                value[flat] = arr[m]
-                out.append(_frame(
-                    kind=np.full(n, _K_STATS, np.int32),
-                    label=base + np.arange(n, dtype=np.int64),
-                    value=value,
-                    n_px=cnt.astype(np.int64),
-                ))
-                bh, bw = arr.shape
-                # (a) label-merge strips — identical to region_label
-                for axis, side_lab, side_val, coord, offs in (
-                    (0, labels[:, bw - 1], arr[:, bw - 1], xo + bw, yo + np.arange(bh)),
-                    (0, labels[:, 0], arr[:, 0], xo, yo + np.arange(bh)),
-                    (1, labels[bh - 1, :], arr[bh - 1, :], yo + bh, xo + np.arange(bw)),
-                    (1, labels[0, :], arr[0, :], yo, xo + np.arange(bw)),
-                ):
-                    keep = side_lab >= 0
-                    if keep.any():
-                        out.append(_frame(
-                            kind=np.full(keep.sum(), _K_STRIP, np.int32),
-                            label=base + side_lab[keep],
-                            value=side_val[keep].astype(np.float64),
-                            axis=np.full(keep.sum(), axis, np.int32),
-                            coord=np.full(keep.sum(), coord, np.int32),
-                            off=offs[keep].astype(np.int32),
-                        ))
-                # (b) interior boundary edges
-                elab, ecoord = _interior_edges(labels, xo, yo)
-                if len(elab):
-                    out.append(_frame(
-                        kind=np.full(len(elab), _K_EDGE, np.int32),
-                        label=base + elab,
-                        x1=ecoord[:, 0].astype(np.int32),
-                        y1=ecoord[:, 1].astype(np.int32),
-                        x2=ecoord[:, 2].astype(np.int32),
-                        y2=ecoord[:, 3].astype(np.int32),
-                    ))
-                # (c) border side candidates: the four block edges.
-                # side 0 = the pixel at coord-1 (right/bottom edge of
-                # this block), side 1 = the pixel at coord (left/top).
-                for axis, side, side_lab, side_val, coord, offs in (
-                    (0, 0, labels[:, bw - 1], arr[:, bw - 1], xo + bw, yo + np.arange(bh)),
-                    (0, 1, labels[:, 0], arr[:, 0], xo, yo + np.arange(bh)),
-                    (1, 0, labels[bh - 1, :], arr[bh - 1, :], yo + bh, xo + np.arange(bw)),
-                    (1, 1, labels[0, :], arr[0, :], yo, xo + np.arange(bw)),
-                ):
-                    keep = side_lab >= 0
-                    if keep.any():
-                        out.append(_frame(
-                            kind=np.full(keep.sum(), _K_SIDE, np.int32),
-                            label=base + side_lab[keep],
-                            value=side_val[keep].astype(np.float64),
-                            axis=np.full(keep.sum(), axis, np.int32),
-                            coord=np.full(keep.sum(), coord, np.int32),
-                            off=offs[keep].astype(np.int32),
-                            side=np.full(keep.sum(), side, np.int32),
-                        ))
-            yield (pd.concat(out, ignore_index=True) if out
-                   else pd.DataFrame(empty))
-
-    raw = blocks.mapInPandas(per_block, schema=_MAP_SCHEMA).persist()
-
-    # --- global label merge (region_label's machinery, same keys)
-    strips = raw.where(F.col("kind") == _K_STRIP).select(
-        "axis", "coord", "off", "label", "value"
-    )
-    a, b = strips.alias("a"), strips.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.axis") == F.col("b.axis"))
-            & (F.col("a.coord") == F.col("b.coord"))
-            & (F.col("a.off") == F.col("b.off"))
-            & (F.col("a.label") < F.col("b.label"))
-            & (F.col("a.value") == F.col("b.value")),
-        )
-        .select(F.col("a.label").alias("id_a"), F.col("b.label").alias("id_b"))
-        .distinct()
-    )
-    from earth_data_kit_spark.operators.dedup import dup_clusters
-
-    mapping = dup_clusters(pairs, id_a="id_a", id_b="id_b").withColumnRenamed(
-        "id", "label"
-    )
-
-    # --- border resolution → edges (pure Columns)
-    cand = raw.where(F.col("kind") == _K_SIDE)
-    s0 = cand.where(F.col("side") == 0).select(
-        "axis", "coord", "off",
-        F.col("label").alias("l0"), F.col("value").alias("v0"),
-    )
-    s1 = cand.where(F.col("side") == 1).select(
-        "axis", "coord", "off",
-        F.col("label").alias("l1"), F.col("value").alias("v1"),
-    )
-    j = s0.join(s1, ["axis", "coord", "off"], "full")
-    # side-0 pixel (coord-1): axis 0 → RIGHT side (coord,off+1)→(coord,off);
-    # axis 1 → BOTTOM side (off,coord)→(off+1,coord)
-    e0 = j.where(
-        F.col("l0").isNotNull()
-        & (F.col("l1").isNull() | (F.col("v0") != F.col("v1")))
-    ).select(
-        F.col("l0").alias("label"),
-        F.when(F.col("axis") == 0, F.col("coord")).otherwise(F.col("off")).alias("x1"),
-        F.when(F.col("axis") == 0, F.col("off") + 1).otherwise(F.col("coord")).alias("y1"),
-        F.when(F.col("axis") == 0, F.col("coord")).otherwise(F.col("off") + 1).alias("x2"),
-        F.when(F.col("axis") == 0, F.col("off")).otherwise(F.col("coord")).alias("y2"),
-    )
-    # side-1 pixel (coord): axis 0 → LEFT side (coord,off)→(coord,off+1);
-    # axis 1 → TOP side (off+1,coord)→(off,coord)
-    e1 = j.where(
-        F.col("l1").isNotNull()
-        & (F.col("l0").isNull() | (F.col("v0") != F.col("v1")))
-    ).select(
-        F.col("l1").alias("label"),
-        F.when(F.col("axis") == 0, F.col("coord")).otherwise(F.col("off") + 1).alias("x1"),
-        F.when(F.col("axis") == 0, F.col("off")).otherwise(F.col("coord")).alias("y1"),
-        F.when(F.col("axis") == 0, F.col("coord")).otherwise(F.col("off")).alias("x2"),
-        F.when(F.col("axis") == 0, F.col("off") + 1).otherwise(F.col("coord")).alias("y2"),
-    )
-    interior = raw.where(F.col("kind") == _K_EDGE).select(
-        "label", "x1", "y1", "x2", "y2"
-    )
-    edges = interior.unionByName(e0.unionByName(e1))
-
-    # --- label → global region, O(perimeter) rows through the join
-    edges = (
-        edges.join(F.broadcast(mapping), "label", "left")
-        .withColumn("region", F.coalesce(F.col("cluster"), F.col("label")))
-        .drop("label", "cluster")
-    )
-    stats = (
-        raw.where(F.col("kind") == _K_STATS)
-        .join(F.broadcast(mapping), "label", "left")
-        .withColumn("region", F.coalesce(F.col("cluster"), F.col("label")))
-        .groupBy("region")
-        .agg(F.first("value").alias("value"), F.sum("n_px").alias("n_px"))
-    )
-
-    # --- per-region ring assembly
     if gt is not None:
         gx0, gxres, _, gy0, _, gyres = (float(v) for v in gt)
 
@@ -449,9 +252,48 @@ def polygonize(
             {"region": [key[0]], "n_rings": [len(ordered)], "wkt": [wkt]}
         )
 
-    polys = edges.groupBy("region").applyInPandas(
-        assemble, schema="region bigint, n_rings int, wkt string"
-    )
-    return stats.join(polys, "region").select(
-        "region", "value", "n_px", "n_rings", "wkt"
-    )
+    raw = _label_map(blocks, raster_size, block, _interior_edges).persist()
+    try:
+        border, mapping = _merge(raw)
+        # --- border resolution → edges (pure Columns): an edge
+        # materializes where the opposite side is absent (raster edge /
+        # nodata neighbor) or carries a different value.
+        # side-0 pixel (coord-1): axis 0 → RIGHT side (coord,off+1)→(coord,off);
+        # axis 1 → BOTTOM side (off,coord)→(off+1,coord)
+        e0 = border.where(
+            F.col("l0").isNotNull()
+            & (F.col("l1").isNull() | (F.col("v0") != F.col("v1")))
+        ).select(
+            F.col("l0").alias("label"),
+            F.when(F.col("axis") == 0, F.col("coord")).otherwise(F.col("off")).alias("x1"),
+            F.when(F.col("axis") == 0, F.col("off") + 1).otherwise(F.col("coord")).alias("y1"),
+            F.when(F.col("axis") == 0, F.col("coord")).otherwise(F.col("off") + 1).alias("x2"),
+            F.when(F.col("axis") == 0, F.col("off")).otherwise(F.col("coord")).alias("y2"),
+        )
+        # side-1 pixel (coord): axis 0 → LEFT side (coord,off)→(coord,off+1);
+        # axis 1 → TOP side (off+1,coord)→(off,coord)
+        e1 = border.where(
+            F.col("l1").isNotNull()
+            & (F.col("l0").isNull() | (F.col("v0") != F.col("v1")))
+        ).select(
+            F.col("l1").alias("label"),
+            F.when(F.col("axis") == 0, F.col("coord")).otherwise(F.col("off") + 1).alias("x1"),
+            F.when(F.col("axis") == 0, F.col("off")).otherwise(F.col("coord")).alias("y1"),
+            F.when(F.col("axis") == 0, F.col("coord")).otherwise(F.col("off")).alias("x2"),
+            F.when(F.col("axis") == 0, F.col("off") + 1).otherwise(F.col("coord")).alias("y2"),
+        )
+        interior = raw.where(F.col("kind") == _K_EDGE).select("label", "x1", "y1", "x2", "y2")
+        # --- label → global region, O(perimeter) rows; one ring
+        # assembly per region
+        edges = _to_region(interior.unionByName(e0.unionByName(e1)), mapping)
+        polys = edges.groupBy("region").applyInPandas(
+            assemble, schema="region bigint, n_rings int, wkt string"
+        )
+        return (
+            _region_stats(raw, mapping)
+            .join(polys, "region")
+            .select("region", "value", "n_px", "n_rings", "wkt")
+            .localCheckpoint()
+        )
+    finally:
+        raw.unpersist()

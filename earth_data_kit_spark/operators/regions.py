@@ -4,32 +4,38 @@ size and extent — without tracing vector rings).
 
 A region is a maximal 4-connected set of equal-valued pixels.  The
 classic single-node algorithm is two-pass CCL; at mosaic scale the
-raster lives as blocks on many executors, so the engine splits it:
+raster lives as blocks on many executors, so the engine splits it.
+This module holds the labelling body ``region_label`` and
+``polygonize`` (operators/polygonize.py) share — polygonize adds only
+its interior boundary edges:
 
-1. **Per-block CCL** (map-only Arrow stage): run-based two-pass
-   labeling in numpy — row runs of equal value (vectorized via
-   ``np.diff``), union-find over run-to-run adjacencies between
-   consecutive rows (loops are over RUNS, not pixels).  Local labels
-   are made globally unique by block id, so no coordination is
-   needed.  The stage emits (a) one row per local region with its
-   stats (value, pixel count, bbox), and (b) the block's four
-   boundary strips as (axis, coordinate, offset, label, value) rows
-   — the ONLY pixels any other block ever needs to see.
-2. **Cross-block edges**: boundary strips of adjacent blocks meet in
-   an equi-join on the shared edge coordinate (right edge of block
-   column c joins left edge of column c+1 at the same row, same for
-   bottom/top) with value equality → a tiny (label_a, label_b) edge
-   table.  Shuffle volume is O(perimeter), not O(area).
-3. **Label merge**: ``dedup.dup_clusters`` min-label propagation
-   over the edge table (the SAME component machinery the dedup
-   pipeline uses — regions in a raster are near-dup clusters in a
-   graph), then a broadcast join remaps local stats onto final
-   region ids and a native agg combines them (sum counts, min/max
-   bbox).
+1. **Per-block CCL** (``_label_map``, one map-only Arrow pass):
+   run-based two-pass labeling in numpy — row runs of equal value
+   (vectorized via ``np.diff``), union-find over run-to-run
+   adjacencies between consecutive rows (loops are over RUNS, not
+   pixels).  Local labels are made globally unique by block id, so
+   no coordination is needed.  The pass emits (a) one row per local
+   region with its stats (value, pixel count, bbox), and (b) the
+   block's four border rows as (axis, coordinate, offset, side,
+   label, value) — the ONLY pixels any other block ever needs to
+   see.  Side 0 is the pixel at coordinate-1 (a block's right/bottom
+   edge), side 1 the pixel at the coordinate (left/top edge).
+2. **Border join + label merge** (``_merge``): side-0 and side-1 rows
+   meet on the shared edge coordinate (axis, coord, off); where the
+   two values are equal the pair is a cross-block edge → a tiny
+   (label_a, label_b) table.  Shuffle volume is O(perimeter), not
+   O(area).  ``dedup.dup_clusters`` (the engine's one CC routine,
+   O(log diameter) rounds — a region may run across any number of
+   blocks) maps every label to its region id.
+3. **Remap** (``_to_region``): a broadcast join carries local rows
+   onto region ids; ``_region_stats`` combines the stats natively
+   (sum counts, min/max bbox).
 
 Output: (region bigint, value double, n_px bigint, xmin, ymin,
 xmax, ymax int) — one row per connected region.  ``background``
-pixels (nodata) form no region.
+pixels (nodata) form no region.  The call is eager: the labelled
+blocks are cached for the call only and the result is materialized
+by ``localCheckpoint`` before the cache is released.
 """
 
 from __future__ import annotations
@@ -40,6 +46,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from earth_data_kit_spark.operators.blocks import _decode
+from earth_data_kit_spark.operators.dedup import dup_clusters
 
 # local regions per block are numbered 0..n-1; global uniqueness via
 # block ordinal * _BLOCK_STRIDE (a 256x256 block has < 65536 runs)
@@ -103,26 +112,38 @@ def _label_block(arr: np.ndarray, valid: np.ndarray):
     return labels, len(uniq)
 
 
-def region_label(
-    blocks: DataFrame,
-    raster_size: tuple[int, int],
-    block: int,
+# Row kinds of the per-block labelling pass (one fused Arrow map):
+_K_STATS = 0  # per-local-region partial stats, pixel bbox in x1..y2
+_K_SIDE = 1  # block-border pixel at (axis, coord, off) on ``side``
+_K_EDGE = 2  # polygonize's interior boundary edge (x1, y1) → (x2, y2)
+
+_MAP_SCHEMA = (
+    "kind int, label bigint, value double, n_px bigint, "
+    "axis int, coord int, off int, side int, "
+    "x1 int, y1 int, x2 int, y2 int"
+)
+_PD_TYPES = {"int": "int32", "bigint": "int64", "double": "float64"}
+_MAP_DTYPES = {name: _PD_TYPES[t] for name, t in (f.split() for f in _MAP_SCHEMA.split(", "))}
+
+
+def _frame(n: int, **cols) -> pd.DataFrame:
+    """``n`` rows of the map schema; absent columns are 0, scalars
+    broadcast."""
+    return pd.DataFrame(
+        {c: np.broadcast_to(cols.get(c, 0), n).astype(t) for c, t in _MAP_DTYPES.items()}
+    )
+
+
+def _label_map(
+    blocks: DataFrame, raster_size: tuple[int, int], block: int, edges=None
 ) -> DataFrame:
-    """Connected equal-valued regions of a blocks raster → one row
-    per region: (region, value, n_px, xmin, ymin, xmax, ymax).
-    Pixels equal to the block's ``nodataval`` are background."""
+    """The per-block labelling pass → ``_MAP_SCHEMA`` rows: stats and
+    border rows for every block, plus ``edges(labels, xo, yo) →
+    (local labels, (n, 4) global edge coords)`` rows when given."""
     w, h = raster_size
     n_bx = -(-w // block)
 
-    stats_schema = (
-        "kind int, label bigint, value double, n_px bigint, "
-        "xmin int, ymin int, xmax int, ymax int, "
-        "axis int, coord int, off int"
-    )
-
     def per_block(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from earth_data_kit_spark.operators.blocks import _decode
-
         for pdf in batches:
             out = []
             for _, r in pdf.iterrows():
@@ -139,12 +160,9 @@ def region_label(
                 if not m.any():
                     continue
                 flat = labels[m]
-                vals = arr[m]
                 ys, xs = np.nonzero(m)
-                # per-label stats via bincount / minimum.at
-                cnt = np.bincount(flat, minlength=n)
                 value = np.zeros(n)
-                value[flat] = vals  # any member's value (all equal)
+                value[flat] = arr[m]  # any member's value (all equal)
                 gxmin = np.full(n, w, dtype=np.int64)
                 gxmax = np.full(n, -1, dtype=np.int64)
                 gymin = np.full(n, h, dtype=np.int64)
@@ -153,91 +171,94 @@ def region_label(
                 np.maximum.at(gxmax, flat, xs + xo)
                 np.minimum.at(gymin, flat, ys + yo)
                 np.maximum.at(gymax, flat, ys + yo)
-                out.append(pd.DataFrame({
-                    "kind": 0, "label": base + np.arange(n, dtype=np.int64),
-                    "value": value, "n_px": cnt.astype(np.int64),
-                    "xmin": gxmin.astype(np.int32), "ymin": gymin.astype(np.int32),
-                    "xmax": gxmax.astype(np.int32), "ymax": gymax.astype(np.int32),
-                    "axis": np.int32(0), "coord": np.int32(0),
-                    "off": np.int32(0),
-                }))
-                # boundary strips, fully vectorized: global edge
-                # coordinates so adjacent blocks join on equality.
-                # axis 0 = vertical edge at x = coord, axis 1 =
-                # horizontal edge at y = coord.
+                out.append(_frame(
+                    n, kind=_K_STATS, label=base + np.arange(n), value=value,
+                    n_px=np.bincount(flat, minlength=n),
+                    x1=gxmin, y1=gymin, x2=gxmax, y2=gymax,
+                ))
+                # border rows, vectorized, in global edge coordinates
+                # so adjacent blocks join on equality: axis 0 =
+                # vertical edge at x = coord, axis 1 = horizontal
+                # edge at y = coord.
                 bh, bw = arr.shape
-                for axis, side_lab, side_val, coord, offs in (
-                    (0, labels[:, bw - 1], arr[:, bw - 1], xo + bw, yo + np.arange(bh)),
-                    (0, labels[:, 0], arr[:, 0], xo, yo + np.arange(bh)),
-                    (1, labels[bh - 1, :], arr[bh - 1, :], yo + bh, xo + np.arange(bw)),
-                    (1, labels[0, :], arr[0, :], yo, xo + np.arange(bw)),
+                for axis, side, side_lab, side_val, coord, offs in (
+                    (0, 0, labels[:, bw - 1], arr[:, bw - 1], xo + bw, yo + np.arange(bh)),
+                    (0, 1, labels[:, 0], arr[:, 0], xo, yo + np.arange(bh)),
+                    (1, 0, labels[bh - 1, :], arr[bh - 1, :], yo + bh, xo + np.arange(bw)),
+                    (1, 1, labels[0, :], arr[0, :], yo, xo + np.arange(bw)),
                 ):
                     keep = side_lab >= 0
-                    if not keep.any():
-                        continue
-                    out.append(pd.DataFrame({
-                        "kind": 1, "label": base + side_lab[keep],
-                        "value": side_val[keep].astype(np.float64),
-                        "n_px": np.int64(0),
-                        "xmin": np.int32(0), "ymin": np.int32(0),
-                        "xmax": np.int32(0), "ymax": np.int32(0),
-                        "axis": np.int32(axis), "coord": np.int32(coord),
-                        "off": offs[keep].astype(np.int32),
-                    }))
-            if out:
-                yield pd.concat(out, ignore_index=True)
-            else:
-                yield pd.DataFrame(
-                    {c: pd.Series(dtype=t) for c, t in (
-                        ("kind", "int32"), ("label", "int64"),
-                        ("value", "float64"), ("n_px", "int64"),
-                        ("xmin", "int32"), ("ymin", "int32"),
-                        ("xmax", "int32"), ("ymax", "int32"),
-                        ("axis", "int32"), ("coord", "int32"),
-                        ("off", "int32"),
-                    )}
-                )
+                    if keep.any():
+                        out.append(_frame(
+                            int(keep.sum()), kind=_K_SIDE, label=base + side_lab[keep],
+                            value=side_val[keep], axis=axis, coord=coord,
+                            off=offs[keep], side=side,
+                        ))
+                if edges is not None:
+                    elab, ec = edges(labels, xo, yo)
+                    if len(elab):
+                        out.append(_frame(
+                            len(elab), kind=_K_EDGE, label=base + elab,
+                            x1=ec[:, 0], y1=ec[:, 1], x2=ec[:, 2], y2=ec[:, 3],
+                        ))
+            yield pd.concat(out, ignore_index=True) if out else _frame(0)
 
-    raw = blocks.mapInPandas(per_block, schema=stats_schema).persist()
-    stats = raw.where(F.col("kind") == 0)
-    strips = raw.where(F.col("kind") == 1).select(
-        "axis", "coord", "off", "label", "value"
-    )
+    return blocks.mapInPandas(per_block, schema=_MAP_SCHEMA)
 
-    # adjacent blocks share the SAME edge coordinate: a right edge of
-    # one block and the left edge of the next both carry coord = the
-    # boundary x — one self-equi-join keyed by (axis, coord, off)
-    # yields exactly the cross-block pixel adjacencies.
-    a = strips.alias("a")
-    b = strips.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.axis") == F.col("b.axis"))
-            & (F.col("a.coord") == F.col("b.coord"))
-            & (F.col("a.off") == F.col("b.off"))
-            & (F.col("a.label") < F.col("b.label"))
-            & (F.col("a.value") == F.col("b.value")),
+
+def _merge(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Border join and label merge → ``(border, mapping)``.  ``border``
+    is the side-0 ⋈ side-1 full outer join on (axis, coord, off) with
+    columns l0, v0, l1, v1 (a side is null at the raster edge or a
+    nodata neighbor); ``mapping`` is (label, cluster) over the labels
+    that touch an equal-valued pixel across a block border."""
+    side = raw.where(F.col("kind") == _K_SIDE)
+    s0, s1 = (
+        side.where(F.col("side") == s).select(
+            "axis", "coord", "off",
+            F.col("label").alias(f"l{s}"), F.col("value").alias(f"v{s}"),
         )
-        .select(F.col("a.label").alias("id_a"), F.col("b.label").alias("id_b"))
-        .distinct()
+        for s in (0, 1)
     )
-
-    from earth_data_kit_spark.operators.dedup import dup_clusters
-
-    mapping = dup_clusters(pairs, id_a="id_a", id_b="id_b").withColumnRenamed(
-        "id", "label"
+    border = s0.join(s1, ["axis", "coord", "off"], "full")
+    pairs = border.where(F.col("v0") == F.col("v1")).select(
+        F.col("l0").alias("id_a"), F.col("l1").alias("id_b")
     )
-    merged = (
-        stats.join(F.broadcast(mapping), "label", "left")
+    return border, dup_clusters(pairs).withColumnRenamed("id", "label")
+
+
+def _to_region(df: DataFrame, mapping: DataFrame) -> DataFrame:
+    """Replace ``df``'s local ``label`` by its global ``region`` id."""
+    return (
+        df.join(F.broadcast(mapping), "label", "left")
         .withColumn("region", F.coalesce(F.col("cluster"), F.col("label")))
+        .drop("label", "cluster")
     )
-    out = merged.groupBy("region").agg(
+
+
+def _region_stats(raw: DataFrame, mapping: DataFrame) -> DataFrame:
+    """(region, value, n_px, xmin, ymin, xmax, ymax) per region."""
+    return _to_region(raw.where(F.col("kind") == _K_STATS), mapping).groupBy("region").agg(
         F.first("value").alias("value"),
         F.sum("n_px").alias("n_px"),
-        F.min("xmin").alias("xmin"),
-        F.min("ymin").alias("ymin"),
-        F.max("xmax").alias("xmax"),
-        F.max("ymax").alias("ymax"),
+        F.min("x1").alias("xmin"),
+        F.min("y1").alias("ymin"),
+        F.max("x2").alias("xmax"),
+        F.max("y2").alias("ymax"),
     )
-    return out
+
+
+def region_label(
+    blocks: DataFrame,
+    raster_size: tuple[int, int],
+    block: int,
+) -> DataFrame:
+    """Connected equal-valued regions of a blocks raster → one row
+    per region: (region, value, n_px, xmin, ymin, xmax, ymax).
+    Pixels equal to the block's ``nodataval`` are background."""
+    raw = _label_map(blocks, raster_size, block).persist()
+    try:
+        _, mapping = _merge(raw)
+        return _region_stats(raw, mapping).localCheckpoint()
+    finally:
+        raw.unpersist()

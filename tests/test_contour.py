@@ -15,7 +15,7 @@ from earth_data_kit_spark.operators.blocks import BLOCK_SCHEMA
 from earth_data_kit_spark.operators.contour import contour_segments
 
 
-def _blocks_df(spark, arr, block):
+def _blocks_df(spark, arr, block, nodataval=float("nan")):
     rows = []
     h, w = arr.shape
     for by in range(0, h, block):
@@ -23,15 +23,16 @@ def _blocks_df(spark, arr, block):
             sub = np.ascontiguousarray(arr[by: by + block, bx: bx + block])
             rows.append(
                 ("t", "B1", bx // block, by // block, bx, by,
-                 sub.shape[1], sub.shape[0], "float32", float("nan"),
+                 sub.shape[1], sub.shape[0], "float32", nodataval,
                  1.0, 0.0, sub.tobytes())
             )
     return spark.createDataFrame(rows, BLOCK_SCHEMA)
 
 
-def _segs(spark, arr, block, levels):
+def _segs(spark, arr, block, levels, nodataval=float("nan")):
     h, w = arr.shape
-    rows = contour_segments(_blocks_df(spark, arr, block), (w, h), block, levels).collect()
+    blocks = _blocks_df(spark, arr, block, nodataval)
+    rows = contour_segments(blocks, (w, h), block, levels).collect()
     return Counter(
         (r["level"],) + tuple(round(v, 6) for v in (r["x1"], r["y1"], r["x2"], r["y2"]))
         for r in rows
@@ -87,6 +88,16 @@ def test_nodata_cells_produce_no_segments(spark):
     got = _segs(spark, x, 16, [10.25])
     ys = {min(y1, y2) for (_l, x1, y1, x2, y2) in got}
     # cells anchored at rows 9, 10, 11 touch a NaN corner → absent
+    assert ys == {float(v) for v in range(30 - 1) if v not in (9, 10, 11)}
+
+
+def test_nodataval_cells_produce_no_segments(spark):
+    """As above with a finite nodata value: pixels equal to the
+    blocks' ``nodataval`` are masked like NaN, not contoured as data."""
+    x = np.tile(np.arange(40, dtype=np.float32), (30, 1))
+    x[10:12, :] = -9999.0
+    got = _segs(spark, x, 16, [10.25], nodataval=-9999.0)
+    ys = {min(y1, y2) for (_l, x1, y1, x2, y2) in got}
     assert ys == {float(v) for v in range(30 - 1) if v not in (9, 10, 11)}
 
 

@@ -132,6 +132,17 @@ def test_dup_clusters_connected_components(spark):
     }
 
 
+def test_dup_clusters_long_path_default_rounds(spark):
+    """A 100-node path (diameter 99, twice the default max_iter) is one
+    cluster under the default arguments: the rounds grow with
+    log(diameter), not with the diameter."""
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(99)], "id_a bigint, id_b bigint"
+    )
+    got = {r.id: r.cluster for r in dedup.dup_clusters(path).collect()}
+    assert got == {i: 0 for i in range(100)}
+
+
 def test_embedding_neardup(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").limit(150)
     # plant a near-identical vector
@@ -181,9 +192,9 @@ def test_dup_clusters_nonconverged_raises_not_partial(spark):
         [(i, i + 1) for i in range(12)], "id_a bigint, id_b bigint"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.dup_clusters(chain, max_iter=3)
+        dedup.dup_clusters(chain, max_iter=1)
     with pytest.warns(UserWarning, match="did not converge"):
-        got = {r.id: r.cluster for r in dedup.dup_clusters(chain, max_iter=3, on_nonconverged="warn").collect()}
+        got = {r.id: r.cluster for r in dedup.dup_clusters(chain, max_iter=1, on_nonconverged="warn").collect()}
     assert len(got) == 13  # partial labels returned under 'warn'
     # and with enough rounds the same chain converges to min-id 0
     ok = {r.id: r.cluster for r in dedup.dup_clusters(chain, max_iter=20).collect()}

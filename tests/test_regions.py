@@ -9,19 +9,20 @@ import numpy as np
 import pytest
 
 from earth_data_kit_spark.operators.blocks import BLOCK_SCHEMA
+from earth_data_kit_spark.operators.polygonize import polygonize
 from earth_data_kit_spark.operators.regions import region_label
 
 W, H, B = 300, 260, 128
 
 
-def _blocks_df(spark, arr, nodataval=float("nan")):
+def _blocks_df(spark, arr, nodataval=float("nan"), block=B):
     rows = []
     h, w = arr.shape
-    for by in range(0, h, B):
-        for bx in range(0, w, B):
-            sub = np.ascontiguousarray(arr[by: by + B, bx: bx + B])
+    for by in range(0, h, block):
+        for bx in range(0, w, block):
+            sub = np.ascontiguousarray(arr[by: by + block, bx: bx + block])
             rows.append(
-                ("t", "B1", bx // B, by // B, bx, by, sub.shape[1], sub.shape[0],
+                ("t", "B1", bx // block, by // block, bx, by, sub.shape[1], sub.shape[0],
                  "float32", nodataval, 1.0, 0.0, sub.tobytes())
             )
     return spark.createDataFrame(rows, BLOCK_SCHEMA)
@@ -99,3 +100,27 @@ def test_single_region_spanning_all_blocks(spark):
     arr = np.full((H, W), 7.0, dtype=np.float32)
     got = _got_regions(spark, arr)
     assert got == Counter({(7.0, W * H, 0, 0, W - 1, H - 1): 1})
+
+
+LABELLERS = {"region_label": region_label, "polygonize": polygonize}
+
+
+@pytest.mark.parametrize("name", sorted(LABELLERS))
+def test_region_across_many_blocks(spark, name):
+    """A 240×4 px stripe cut into 60 blocks of 4 px is ONE region: the
+    label merge must not be bounded by the region's length in blocks."""
+    arr = np.full((4, 240), 2.0, dtype=np.float32)
+    rows = LABELLERS[name](_blocks_df(spark, arr, block=4), (240, 4), 4).collect()
+    assert [(r["value"], r["n_px"]) for r in rows] == [(2.0, 960)]
+
+
+@pytest.mark.parametrize("name", sorted(LABELLERS))
+def test_labelling_leaves_no_cache(spark, name):
+    """Cache hygiene: the labelled-block cache is scoped to the call —
+    after the regions are collected, the session's cache manager is
+    empty."""
+    x, y = np.meshgrid(np.arange(W), np.arange(H))
+    arr = (((x // 37) * 7 + (y // 29) * 13) % 4).astype(np.float32)
+    spark.catalog.clearCache()
+    LABELLERS[name](_blocks_df(spark, arr, nodataval=-1.0), (W, H), B).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
