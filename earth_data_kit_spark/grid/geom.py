@@ -1,4 +1,6 @@
-"""Vectorized geometry: haversine, ray-cast point-in-polygon, bboxes.
+"""Vectorized geometry: haversine, ray-cast point-in-polygon, bboxes,
+and the pixel-centre polygon mask the raster operators burn and
+aggregate with.
 
 Pure numpy; used identically by single-node test oracles and by the
 pandas UDFs in functions/udfs.py.  Reference analogs:
@@ -73,6 +75,23 @@ def point_in_polygon(lons, lats, shell: np.ndarray, holes: list[np.ndarray] | No
     for h in holes or []:
         inside &= ~point_in_ring(lons, lats, h)
     return inside
+
+
+def pixel_mask(xs, ys, wkt, bbox, cache: dict) -> np.ndarray:
+    """(len(ys), len(xs)) mask of the pixel centres ``xs`` × ``ys``
+    inside one polygon: a closed-bbox rectangle when ``wkt`` is not a
+    string (None/NaN), else the even-odd ray-cast of the WKT, parsed
+    once per distinct string into ``cache``."""
+    if not isinstance(wkt, str):
+        xmin, ymin, xmax, ymax = bbox
+        xm = (xs >= xmin) & (xs <= xmax)
+        ym = (ys >= ymin) & (ys <= ymax)
+        return ym[:, None] & xm[None, :]
+    if wkt not in cache:
+        cache[wkt] = parse_wkt_polygon(wkt)
+    shell, holes = cache[wkt]
+    lon, lat = np.meshgrid(xs, ys)
+    return point_in_polygon(lon.ravel(), lat.ravel(), shell, holes).reshape(lon.shape)
 
 
 def parse_wkt_polygon(wkt: str) -> tuple[np.ndarray, list[np.ndarray]]:

@@ -11,7 +11,7 @@ side stays a DataFrame end-to-end, its covering is generated
 IN-PLAN, and the probe join is broadcast under a row threshold /
 shuffle-on-cell above it.
 
-Three building blocks, all pure Column plans (the
+Building blocks, all pure Column plans (the
 ``knn.QuadScheme.query_cells`` pattern — two ``explode(sequence(...))``
 nodes, zero Python in the covering):
 
@@ -23,10 +23,12 @@ nodes, zero Python in the covering):
   ``res``, cell-for-cell identical to ``grid.cells.covering_bbox``
   including antimeridian wrap (xmin > xmax ⇒ the x-range wraps
   through nx), as ``explode(sequence)`` columns.
-* ``pixel_tiles`` — the gt-space analog for raster operators: explode
-  each bbox to the (tile_x, tile_y) squares of a ``tile``-pixel grid,
-  so blocks×polygons becomes an equi-join on (ptx, pty) instead of a
-  broadcast nested-loop bbox theta join.
+* ``block_pairs`` — the raster side, written once for ``zonal_stats``
+  and ``rasterize``: the polygon table (``polygon_table``), its pixel
+  range (``polygons_pixel_bbox``) and the block↔polygon overlap
+  join.  A DataFrame side is exploded onto a ``tile``-pixel grid
+  (``pixel_tiles``) and equi-joined on (ptx, pty), each pair kept on
+  one reference tile, instead of a broadcast nested-loop theta join.
 
 Scale posture: covering and bbox prep are map-side over the polygon
 table; the probe side never collects anything; geometry (wkt) rides
@@ -37,6 +39,7 @@ join-back shape knn.py uses.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -192,6 +195,10 @@ def refine_predicate_cols(lon_col: str, lat_col: str) -> "F.Column":
 
 
 # ------------------------------------------------------- raster side
+#
+# zonal_stats and rasterize pair blocks with polygons here and keep
+# only their kernels (partial stats, burn); both mask pixel centres
+# with ``grid.geom.pixel_mask``.
 
 
 def pixel_tiles(
@@ -223,9 +230,13 @@ def pixel_tiles(
 
 
 def polygons_pixel_bbox(norm: DataFrame, gt: tuple) -> DataFrame:
-    """Map each polygon's geo bbox to inclusive PIXEL bounds
-    ``p_lo_x, p_hi_x, p_lo_y, p_hi_y`` on the raster grid ``gt``
-    (axis-aligned; yres < 0 flips are handled by the min/max)."""
+    """Map each polygon's geo bbox to the inclusive PIXEL index range
+    ``p_lo_x..p_hi_x, p_lo_y..p_hi_y`` on the raster grid ``gt``
+    (axis-aligned; yres < 0 flips are handled by the min/max).  The
+    range is ``[floor(lo), floor(hi)]`` of the fractional pixel
+    bounds: every pixel whose centre lies in the bbox is inside it,
+    with at least half a pixel to spare, so an exact pixel-centre mask
+    downstream decides membership."""
     x0, xres, _, y0, _, yres = (float(g) for g in gt)
     px_a = (F.col("xmin") - F.lit(x0)) / F.lit(xres)
     px_b = (F.col("xmax") - F.lit(x0)) / F.lit(xres)
@@ -233,8 +244,87 @@ def polygons_pixel_bbox(norm: DataFrame, gt: tuple) -> DataFrame:
     py_b = (F.col("ymax") - F.lit(y0)) / F.lit(yres)
     return norm.select(
         "*",
-        F.least(px_a, px_b).alias("p_lo_x"),
-        F.greatest(px_a, px_b).alias("p_hi_x"),
-        F.least(py_a, py_b).alias("p_lo_y"),
-        F.greatest(py_a, py_b).alias("p_hi_y"),
+        F.floor(F.least(px_a, px_b)).alias("p_lo_x"),
+        F.floor(F.greatest(px_a, px_b)).alias("p_hi_x"),
+        F.floor(F.least(py_a, py_b)).alias("p_lo_y"),
+        F.floor(F.greatest(py_a, py_b)).alias("p_hi_y"),
     )
+
+
+def polygon_table(
+    spark, polygons: "list | DataFrame", burn: dict | None = None
+) -> DataFrame:
+    """Any polygon input as the ``normalize_polygons_df`` schema.  A
+    driver ``list[Polygon]`` is built straight into it (bbox from
+    ``Polygon.envelope()``; ``wkt`` null for bbox rectangles), plus
+    ``burn_ord`` (list position) and ``burn_v`` (``burn[code]``) when
+    ``burn`` is given; a DataFrame goes through
+    ``normalize_polygons_df``."""
+    if isinstance(polygons, DataFrame):
+        return normalize_polygons_df(polygons)
+    cols = ["code", "wkt", "xmin", "ymin", "xmax", "ymax"]
+    schema = "code string, wkt string, xmin double, ymin double, xmax double, ymax double"
+    rows = [
+        (p.code, None if p.bbox is not None else p.wkt,
+         *(float(v) for v in p.envelope()))
+        for p in polygons
+    ]
+    if burn is not None:
+        cols += ["burn_ord", "burn_v"]
+        schema += ", burn_ord int, burn_v double"
+        rows = [(*r, i, float(burn[r[0]])) for i, r in enumerate(rows)]
+    # from pandas, not a row list: with Arrow on this plans as a local
+    # table scan instead of a Python RDD job per query
+    return spark.createDataFrame(pd.DataFrame(rows, columns=cols), schema)
+
+
+def block_pairs(
+    blocks: DataFrame,
+    polygons: "list | DataFrame",
+    gt: tuple,
+    tile_px: int,
+    how: str,
+    burn: dict | None = None,
+) -> DataFrame:
+    """(block × polygon) pairs whose pixel ranges overlap: the
+    ``blocks`` columns plus the ``polygon_table`` columns, joined
+    ``how`` (``"inner"``, or ``"left"`` to keep blocks no polygon
+    touches).  A block covers pixels ``[xoff, xoff + xsize - 1]``, a
+    polygon ``polygons_pixel_bbox``'s range.
+
+    A driver list is broadcast into a nested-loop join on that
+    predicate.  A DataFrame stays distributed: both sides explode onto
+    the ``tile_px`` pixel grid (``pixel_tiles``) and equi-join on the
+    tile key, and a pair is kept only on the tile holding its
+    intersection's low corner ``(max(xoff, p_lo_x), max(yoff,
+    p_lo_y))`` — both sides cover that tile, so each pair appears
+    exactly once with no dedup pass (Dittrich & Seeger's reference
+    point, the rule ``overlay`` uses on quadgrid cells)."""
+    polys = polygons_pixel_bbox(
+        polygon_table(blocks.sparkSession, polygons, burn), gt
+    )
+    b_lo_x, b_lo_y = F.col("xoff"), F.col("yoff")
+    b_hi_x = F.col("xoff") + F.col("xsize") - 1
+    b_hi_y = F.col("yoff") + F.col("ysize") - 1
+    p_lo_x, p_hi_x, p_lo_y, p_hi_y = (
+        F.col(c) for c in ("p_lo_x", "p_hi_x", "p_lo_y", "p_hi_y")
+    )
+    on = (
+        (b_lo_x <= p_hi_x) & (b_hi_x >= p_lo_x)
+        & (b_lo_y <= p_hi_y) & (b_hi_y >= p_lo_y)
+    )
+    if isinstance(polygons, DataFrame):
+        t = F.lit(float(tile_px))
+        blocks = pixel_tiles(blocks, b_lo_x, b_hi_x, b_lo_y, b_hi_y, tile_px)
+        polys = pixel_tiles(
+            polys, p_lo_x, p_hi_x, p_lo_y, p_hi_y, tile_px
+        ).withColumnsRenamed({"ptx": "_ptx", "pty": "_pty"})
+        on = (
+            (F.col("ptx") == F.col("_ptx")) & (F.col("pty") == F.col("_pty")) & on
+            & (F.col("ptx") == F.floor(F.greatest(b_lo_x, p_lo_x) / t))
+            & (F.col("pty") == F.floor(F.greatest(b_lo_y, p_lo_y) / t))
+        )
+    else:
+        polys = F.broadcast(polys)
+    pairs = blocks.join(polys, on, how)
+    return pairs.drop("ptx", "pty", "_ptx", "_pty", "p_lo_x", "p_hi_x", "p_lo_y", "p_hi_y")

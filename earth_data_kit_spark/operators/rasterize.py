@@ -15,15 +15,15 @@ Stages:
    pixel window) as pure Columns — the grid is distributed from
    birth, never a driver list (a 10^6-block mosaic is a range, not
    a collect).
-2. Broadcast-join the tiny polygon table on bbox∩block interval
-   overlap (LEFT join: blocks no polygon touches stay, burn to
-   nodata fill — a raster has every pixel).
+2. ``polygons.block_pairs`` LEFT-joins the polygons whose pixel
+   ranges overlap each block (blocks no polygon touches stay, burn
+   to nodata fill — a raster has every pixel).
 3. One grouped Arrow stage per block: paint nodata, then burn each
-   intersecting polygon in list order (later polygons overwrite,
-   GDAL layer semantics) by pixel-center rectangle closed-form or
-   ray-cast mask.  The shuffle that groups (block × polygon) pairs
-   carries polygon METADATA rows only — pixels are born inside the
-   Arrow stage and leave as encoded payloads.
+   intersecting polygon in ``burn_ord`` order (later polygons
+   overwrite, GDAL layer semantics) through the pixel-centre mask
+   ``grid.geom.pixel_mask``.  The shuffle that groups (block ×
+   polygon) pairs carries polygon METADATA rows only — pixels are
+   born inside the Arrow stage and leave as encoded payloads.
 """
 
 from __future__ import annotations
@@ -34,49 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from earth_data_kit_spark.grid import geom
+from earth_data_kit_spark.operators import polygons as P
 from earth_data_kit_spark.operators.spatial_join import Polygon
-
-
-def _pairs_left_df(
-    g: DataFrame, polygons: DataFrame, gt: tuple, tile_px: int
-) -> DataFrame:
-    """LEFT (block × polygon) pairs with a DATAFRAME polygon side:
-    both sides exploded onto a ``tile_px`` pixel grid in-plan and
-    equi-joined on (ptx, pty) — LEFT so untouched blocks survive to
-    burn nodata.  Requires ``burn_v``/``burn_ord`` columns on the
-    polygon table (a distributed table has no list order).  Pairs
-    sharing several tiles are deduped on (block, burn_ord); strays
-    whose exact bbox misses the block simply burn an empty mask."""
-    from earth_data_kit_spark.operators import polygons as P
-
-    norm = P.polygons_pixel_bbox(P.normalize_polygons_df(polygons), gt)
-    missing = {"burn_v", "burn_ord"} - set(norm.columns)
-    if missing:
-        raise ValueError(
-            f"DataFrame rasterize needs explicit {sorted(missing)} columns"
-        )
-    pside = P.pixel_tiles(
-        norm,
-        F.col("p_lo_x"), F.col("p_hi_x"), F.col("p_lo_y"), F.col("p_hi_y"),
-        tile_px,
-    ).select(
-        "ptx", "pty", "burn_ord", "burn_v", "wkt",
-        F.col("xmin").alias("pxmin"), F.col("ymin").alias("pymin"),
-        F.col("xmax").alias("pxmax"), F.col("ymax").alias("pymax"),
-    )
-    bside = P.pixel_tiles(
-        g,
-        F.col("xoff").cast("double"),
-        (F.col("xoff") + F.col("xsize") - 1).cast("double"),
-        F.col("yoff").cast("double"),
-        (F.col("yoff") + F.col("ysize") - 1).cast("double"),
-        tile_px,
-    )
-    return (
-        bside.join(pside, ["ptx", "pty"], "left")
-        .drop("ptx", "pty")
-        .dropDuplicates(["block_x", "block_y", "burn_ord"])
-    )
 
 
 def rasterize(
@@ -100,37 +59,23 @@ def rasterize(
     ``polygons`` may instead be a **DataFrame** (VERDICT r5 task 3)
     with `code` + `wkt`/bbox columns plus ``burn_v`` (value) and
     ``burn_ord`` (explicit overwrite order — a distributed table has
-    no list order, so determinism must be declared): the polygon side
-    is exploded onto a ``tile_px`` pixel grid in-plan and LEFT
-    equi-joined to the block grid on the tile key (blocks no polygon
-    touches still emit nodata — a raster has every pixel), with no
-    driver materialization at any polygon count."""
+    no list order, so determinism must be declared), tile-equi-joined
+    to the block grid in-plan on a ``tile_px``-pixel grid with no
+    driver materialization at any polygon count (see
+    ``operators.polygons.block_pairs``)."""
     if gt[2] != 0 or gt[4] != 0:
         raise ValueError("rasterize requires an axis-aligned geotransform")
     x0, xres, _, y0, _, yres = (float(g) for g in gt)
 
     if isinstance(polygons, DataFrame):
-        polys = None  # df path joins below
+        missing = {"burn_v", "burn_ord"} - set(polygons.columns)
+        if missing:
+            raise ValueError(
+                f"DataFrame rasterize needs explicit {sorted(missing)} columns"
+            )
+        vals = None
     else:
         vals = values or {p.code: float(i + 1) for i, p in enumerate(polygons)}
-        poly_rows = []
-        for i, p in enumerate(polygons):
-            if p.bbox is not None:
-                xmin, ymin, xmax, ymax = (float(v) for v in p.bbox)
-                wkt = None
-            else:
-                shell, _holes = geom.parse_wkt_polygon(p.wkt)
-                xmin, ymin, xmax, ymax = geom.polygon_bbox(shell)
-                wkt = p.wkt
-            poly_rows.append((i, float(vals[p.code]), xmin, ymin, xmax, ymax, wkt))
-        polys = spark.createDataFrame(
-            pd.DataFrame(
-                poly_rows,
-                columns=["burn_ord", "burn_v", "pxmin", "pymin", "pxmax", "pymax", "wkt"],
-            ),
-            "burn_ord int, burn_v double, pxmin double, pymin double, "
-            "pxmax double, pymax double, wkt string",
-        )
 
     n_bx, n_by = -(-width // block), -(-height // block)
     grid = (
@@ -144,27 +89,9 @@ def rasterize(
         .withColumn("xsize", F.least(F.lit(block), F.lit(width) - F.col("xoff")))
         .withColumn("ysize", F.least(F.lit(block), F.lit(height) - F.col("yoff")))
     )
-    bx0 = F.lit(x0) + F.col("xoff") * F.lit(xres)
-    bx1 = F.lit(x0) + (F.col("xoff") + F.col("xsize")) * F.lit(xres)
-    by0 = F.lit(y0) + F.col("yoff") * F.lit(yres)
-    by1 = F.lit(y0) + (F.col("yoff") + F.col("ysize")) * F.lit(yres)
-    g = grid.withColumn("bxmin", F.least(bx0, bx1)).withColumn(
-        "bxmax", F.greatest(bx0, bx1)
-    ).withColumn("bymin", F.least(by0, by1)).withColumn("bymax", F.greatest(by0, by1))
-
-    if polys is not None:
-        pairs = g.join(
-            F.broadcast(polys),
-            (F.col("bxmin") <= F.col("pxmax"))
-            & (F.col("bxmax") >= F.col("pxmin"))
-            & (F.col("bymin") <= F.col("pymax"))
-            & (F.col("bymax") >= F.col("pymin")),
-            "left",
-        )
-    else:
-        pairs = _pairs_left_df(g, polygons, gt, tile_px)
-
+    pairs = P.block_pairs(grid, polygons, gt, tile_px, "left", vals)
     npdt = np.dtype(dtype)
+    wkt_cache: dict[str, tuple] = {}
 
     def burn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         r0 = pdf.iloc[0]
@@ -172,19 +99,12 @@ def rasterize(
         arr = np.full((ys_n, xs_n), nodata, dtype=npdt)
         xs = x0 + (np.arange(r0["xoff"], r0["xoff"] + xs_n) + 0.5) * xres
         ys = y0 + (np.arange(r0["yoff"], r0["yoff"] + ys_n) + 0.5) * yres
-        lon, lat = np.meshgrid(xs, ys)
         hit = pdf[pdf["burn_ord"].notna()].sort_values("burn_ord")
         for _, r in hit.iterrows():
-            if r["wkt"] is None or (isinstance(r["wkt"], float) and pd.isna(r["wkt"])):
-                mask = (
-                    (lon >= r["pxmin"]) & (lon <= r["pxmax"])
-                    & (lat >= r["pymin"]) & (lat <= r["pymax"])
-                )
-            else:
-                shell, holes = geom.parse_wkt_polygon(r["wkt"])
-                mask = geom.point_in_polygon(
-                    lon.ravel(), lat.ravel(), shell, holes
-                ).reshape(arr.shape)
+            mask = geom.pixel_mask(
+                xs, ys, r["wkt"], (r["xmin"], r["ymin"], r["xmax"], r["ymax"]),
+                wkt_cache,
+            )
             arr[mask] = npdt.type(r["burn_v"])
         return pd.DataFrame(
             [{

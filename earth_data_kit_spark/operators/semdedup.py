@@ -89,15 +89,10 @@ def kmeans_assign(
     centroid matrix between iterations.  The argmin assignment is a
     shuffle-free map-side projection over centroid literals (r7), so
     the only exchange per iteration is the k×d-bounded partial-mean
-    aggregation."""
+    aggregation.  The iteration cache is released before returning;
+    the result is a lazy plan over ``emb``."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = emb.select(F.col(id_col), v.alias("_v")).cache()
-    cents = [
-        r["_v"]
-        for r in base.orderBy(id_col).limit(k).collect()
-    ]
-    d = len(cents[0])
-
+    base = emb.select(F.col(id_col), v.alias("_v")).persist()
     # Map-side argmin (r7, guide §2.4 remove shuffles outright): the
     # centroids are k×d driver-held floats, so the nearest-centroid
     # assignment is a pure projection — an array of (d2, cluster)
@@ -123,22 +118,27 @@ def kmeans_assign(
             ])
         )["cluster"]
 
-    for _ in range(iters):
-        assign = base.select(
-            F.col(id_col), _argmin_cluster(cents).alias("cluster"), "_v"
-        )
-        means = (
-            assign.select("cluster", F.posexplode("_v").alias("pos", "val"))
-            .groupBy("cluster", "pos")
-            .agg(F.round(F.avg("val"), ROUND_C).alias("m"))
-            .collect()
-        )
-        new = {c: list(old) for c, old in enumerate(cents)}  # empty keeps old
-        got: dict[int, list] = {}
-        for r in means:
-            got.setdefault(r["cluster"], [0.0] * d)[r["pos"]] = r["m"]
-        new.update(got)
-        cents = [new[i] for i in range(k)]
+    try:
+        cents = [r["_v"] for r in base.orderBy(id_col).limit(k).collect()]
+        d = len(cents[0])
+        for _ in range(iters):
+            assign = base.select(
+                F.col(id_col), _argmin_cluster(cents).alias("cluster"), "_v"
+            )
+            means = (
+                assign.select("cluster", F.posexplode("_v").alias("pos", "val"))
+                .groupBy("cluster", "pos")
+                .agg(F.round(F.avg("val"), ROUND_C).alias("m"))
+                .collect()
+            )
+            new = {c: list(old) for c, old in enumerate(cents)}  # empty keeps old
+            got: dict[int, list] = {}
+            for r in means:
+                got.setdefault(r["cluster"], [0.0] * d)[r["pos"]] = r["m"]
+            new.update(got)
+            cents = [new[i] for i in range(k)]
+    finally:
+        base.unpersist()
     return base.select(
         F.col(id_col), _argmin_cluster(cents).alias("cluster"), "_v"
     )
@@ -166,8 +166,12 @@ def semdedup(
     ``k ≥ n²/(2·pair_budget)`` — see ``recommended_k`` and the
     SCALE.md §semdedup arithmetic — so the expected Σ|c|² pair work
     fits the budget; tests/test_semdedup.py pins the pair-count
-    bound."""
-    assign = kmeans_assign(emb, k, iters, vec_col, id_col).cache()
+    bound.
+
+    The call is eager: the assignment is cached for the call only and
+    the result is materialized by ``localCheckpoint`` before the cache
+    is released."""
+    assign = kmeans_assign(emb, k, iters, vec_col, id_col).persist()
     sizes = assign.groupBy("cluster").count()
     a = (
         assign.join(F.broadcast(sizes), "cluster")
@@ -201,15 +205,16 @@ def semdedup(
         .distinct()
         .withColumn("_dup", F.lit(True))
     )
-    return (
-        a.join(dups, id_col, "left")
-        .select(
-            id_col,
-            "cluster",
-            F.coalesce("_dup", F.lit(False)).alias("is_dup"),
-            "capped",
-        )
+    out = a.join(dups, id_col, "left").select(
+        id_col,
+        "cluster",
+        F.coalesce("_dup", F.lit(False)).alias("is_dup"),
+        "capped",
     )
+    try:
+        return out.localCheckpoint()
+    finally:
+        assign.unpersist()
 
 
 def semdedup_oracle_sql(

@@ -10,27 +10,21 @@ zonal stats is that reduction keyed by polygon membership.
 Spark-first shape (mirrors ``spatial_join.pip_join``'s
 prefilter-then-refine and ``blocks.block_mean``'s partial+final):
 
-1. Block geo-bboxes as PURE COLUMNS from the geotransform (no
-   decode): ``x = gt0 + px*gt1``, ``y = gt3 + py*gt5``.
-2. Broadcast join blocks × polygon bbox rows on interval overlap —
-   only intersecting (block, polygon) pairs survive; a block far
-   from every polygon is pruned before its payload is ever read
-   (column pruning keeps the payload out of the join's build side —
-   the broadcast carries only the tiny polygon rows).
-3. Arrow partial stage: per surviving pair, decode the block once,
-   build pixel-center coordinate grids (vectorized), mask by
-   rectangle closed-form or ray-cast (``grid/geom.point_in_polygon``
-   — the same refine the PIP join trusts), drop nodata, apply
-   scale/offset, emit (code, band, sum, sum_sq, count, min, max).
-4. Final NATIVE agg by (code, band): mean/std/min/max/count — one
+1. ``polygons.block_pairs`` pairs blocks with polygons whose pixel
+   ranges overlap (broadcast theta join for a driver list, tile
+   equi-join for a DataFrame) — a block far from every polygon is
+   pruned before its payload is ever read.
+2. Arrow partial stage: per surviving pair, decode the block once,
+   mask its pixel centres (``grid.geom.pixel_mask``: rectangle
+   closed-form or ray-cast), drop nodata, apply scale/offset, emit
+   (code, band, sum, sum_sq, count, min, max).
+3. Final NATIVE agg by (code, band): mean/std/min/max/count — one
    shuffle of O(pairs) partial rows, never pixels.
 
-Scale posture: polygons are broadcast (same bar as pip_join — for a
-polygon set too big to broadcast, pre-cover both sides with grid
-cells and equi-join, the documented pip_join escape hatch); pixel
-work is map-side and proportional to *intersecting* blocks only;
-the final shuffle carries one partial row per (block, polygon), not
-per pixel.
+Scale posture: pixel work is map-side and proportional to
+*intersecting* blocks only; the final shuffle carries one partial row
+per (block, polygon), not per pixel.  A polygon set too big to
+broadcast goes in as a DataFrame.
 """
 
 from __future__ import annotations
@@ -43,67 +37,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from earth_data_kit_spark.grid import geom
+from earth_data_kit_spark.operators import polygons as P
 from earth_data_kit_spark.operators.spatial_join import Polygon
-
-
-def _with_geo_bbox(blocks: DataFrame, gt: tuple) -> DataFrame:
-    """Block pixel window → geo bbox, pure Columns (yres < 0 flips)."""
-    x0, xres, _, y0, _, yres = (float(g) for g in gt)
-    bx0 = F.lit(x0) + F.col("xoff") * F.lit(xres)
-    bx1 = F.lit(x0) + (F.col("xoff") + F.col("xsize")) * F.lit(xres)
-    by0 = F.lit(y0) + F.col("yoff") * F.lit(yres)
-    by1 = F.lit(y0) + (F.col("yoff") + F.col("ysize")) * F.lit(yres)
-    return (
-        blocks.withColumn("bxmin", F.least(bx0, bx1))
-        .withColumn("bxmax", F.greatest(bx0, bx1))
-        .withColumn("bymin", F.least(by0, by1))
-        .withColumn("bymax", F.greatest(by0, by1))
-    )
-
-
-def _pairs_df(
-    blocks: DataFrame, polygons: DataFrame, gt: tuple, tile_px: int
-) -> DataFrame:
-    """(block × polygon) candidate pairs with a DATAFRAME polygon
-    side: both sides exploded onto a ``tile_px`` pixel grid in-plan,
-    equi-joined on (ptx, pty), deduped back to one row per (block,
-    polygon), then exact-bbox-filtered.  The join shuffles (or
-    broadcasts, AQE's call) tile keys — never a nested loop, never a
-    driver list.  Output schema matches the list path's ``pairs``:
-    blocks columns + code, wkt, pxmin/pymin/pxmax/pymax."""
-    from earth_data_kit_spark.operators import polygons as P
-
-    norm = P.polygons_pixel_bbox(P.normalize_polygons_df(polygons), gt)
-    pside = P.pixel_tiles(
-        norm,
-        F.col("p_lo_x"), F.col("p_hi_x"), F.col("p_lo_y"), F.col("p_hi_y"),
-        tile_px,
-    ).select(
-        "ptx", "pty",
-        "code", "wkt",
-        F.col("xmin").alias("pxmin"), F.col("ymin").alias("pymin"),
-        F.col("xmax").alias("pxmax"), F.col("ymax").alias("pymax"),
-        "p_lo_x", "p_hi_x", "p_lo_y", "p_hi_y",
-    )
-    bside = P.pixel_tiles(
-        blocks,
-        F.col("xoff").cast("double"),
-        (F.col("xoff") + F.col("xsize") - 1).cast("double"),
-        F.col("yoff").cast("double"),
-        (F.col("yoff") + F.col("ysize") - 1).cast("double"),
-        tile_px,
-    )
-    joined = bside.join(pside, ["ptx", "pty"]).drop("ptx", "pty")
-    # a pair sharing several tiles appears several times → one row
-    # per (block, polygon); then exact pixel-interval overlap prune
-    ident = ["tile_name", "band", "block_x", "block_y", "code"]
-    pairs = joined.dropDuplicates(ident).where(
-        (F.col("xoff") <= F.col("p_hi_x"))
-        & (F.col("xoff") + F.col("xsize") - 1 >= F.col("p_lo_x"))
-        & (F.col("yoff") <= F.col("p_hi_y"))
-        & (F.col("yoff") + F.col("ysize") - 1 >= F.col("p_lo_y"))
-    )
-    return pairs.drop("p_lo_x", "p_hi_x", "p_lo_y", "p_hi_y")
 
 
 def zonal_stats(
@@ -119,48 +54,16 @@ def zonal_stats(
     pixels to polygon coordinates (axis-aligned: gt[2] == gt[4] == 0).
     Returns (code, band, n_px, mean_v, std_v, min_v, max_v).
 
-    ``polygons`` is a driver list (tiny zone tables — broadcast bbox
-    theta join, the original plan) or a **DataFrame** (`code` +
-    `wkt`/bbox — VERDICT r5 task 3): the DataFrame path covers BOTH
-    sides with a ``tile_px``-pixel grid IN-PLAN
-    (``operators.polygons.pixel_tiles``) and equi-joins on the tile
-    key — broadcastable or shuffleable by Catalyst/AQE, no driver
-    materialization, no nested-loop theta join.  Both paths feed the
-    identical Arrow partial stage and agree row-for-row
-    (tests/test_zonal.py parity).
+    ``polygons`` is a driver list (tiny zone tables, broadcast) or a
+    **DataFrame** (`code` + `wkt`/bbox columns) tile-equi-joined
+    in-plan on a ``tile_px``-pixel grid — see
+    ``operators.polygons.block_pairs``.  Both feed the same partial
+    stage and agree row-for-row (tests/test_polygons_df.py parity).
     """
     if gt[2] != 0 or gt[4] != 0:
         raise ValueError("zonal_stats requires an axis-aligned geotransform")
-    spark = blocks.sparkSession
     x0, xres, _, y0, _, yres = (float(g) for g in gt)
-
-    if isinstance(polygons, DataFrame):
-        pairs = _pairs_df(blocks, polygons, gt, tile_px)
-    else:
-        poly_rows = []
-        for p in polygons:
-            if p.bbox is not None:
-                xmin, ymin, xmax, ymax = (float(v) for v in p.bbox)
-                poly_rows.append((p.code, xmin, ymin, xmax, ymax, None))
-            else:
-                shell, _holes = geom.parse_wkt_polygon(p.wkt)
-                xmin, ymin, xmax, ymax = geom.polygon_bbox(shell)
-                poly_rows.append((p.code, xmin, ymin, xmax, ymax, p.wkt))
-        polys = spark.createDataFrame(
-            pd.DataFrame(
-                poly_rows, columns=["code", "pxmin", "pymin", "pxmax", "pymax", "wkt"]
-            ),
-            "code string, pxmin double, pymin double, pxmax double, pymax double, wkt string",
-        )
-
-        b = _with_geo_bbox(blocks, gt)
-        pairs = b.join(
-            F.broadcast(polys),
-            (F.col("bxmin") <= F.col("pxmax"))
-            & (F.col("bxmax") >= F.col("pxmin"))
-            & (F.col("bymin") <= F.col("pymax"))
-            & (F.col("bymax") >= F.col("pymin")),
-        )
+    pairs = P.block_pairs(blocks, polygons, gt, tile_px, "inner")
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from earth_data_kit_spark.operators.blocks import _decode
@@ -177,21 +80,9 @@ def zonal_stats(
                 # pixel-center coordinates of this block's window
                 xs = x0 + (np.arange(r.xoff, r.xoff + r.xsize) + 0.5) * xres
                 ys = y0 + (np.arange(r.yoff, r.yoff + r.ysize) + 0.5) * yres
-                if r.wkt is None or (isinstance(r.wkt, float) and np.isnan(r.wkt)):
-                    # rectangle: 1-D interval tests broadcast to the
-                    # 2-D mask — same boolean result as the meshgrid
-                    # form without materializing two float grids (r7)
-                    xm = (xs >= r.pxmin) & (xs <= r.pxmax)
-                    ym = (ys >= r.pymin) & (ys <= r.pymax)
-                    mask = ym[:, None] & xm[None, :]
-                else:
-                    shell, holes = wkt_cache.setdefault(
-                        r.wkt, geom.parse_wkt_polygon(r.wkt)
-                    )
-                    lon, lat = np.meshgrid(xs, ys)
-                    mask = geom.point_in_polygon(
-                        lon.ravel(), lat.ravel(), shell, holes
-                    ).reshape(arr.shape)
+                mask = geom.pixel_mask(
+                    xs, ys, r.wkt, (r.xmin, r.ymin, r.xmax, r.ymax), wkt_cache
+                )
                 sel = arr[mask & valid] * r.scale + r.offset
                 if sel.size == 0:
                     continue

@@ -5,6 +5,8 @@ list==DataFrame parity for pip_join / zonal_stats / rasterize, the
 10^5-polygon parity run, and plan-shape assertions (in-plan covering
 generators, shuffle join above the broadcast threshold)."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -264,25 +266,38 @@ def test_zonal_stats_list_df_parity(spark):
             assert got[code][k] == pytest.approx(want[code][k]), (code, k)
 
 
-def test_zonal_df_plan_is_equi_join(spark):
+@pytest.mark.parametrize("op", ["zonal_stats", "rasterize"])
+def test_zonal_df_plan_is_equi_join(spark, op):
     """The DataFrame polygon path must plan a hash EQUI-join on the
     pixel-tile key (broadcastable AND shuffleable), never the
-    nested-loop bbox theta join the list path's broadcast uses."""
+    nested-loop bbox theta join the list path's broadcast uses, and
+    must keep each (block, polygon) pair once without an aggregate
+    over payload-carrying rows; rasterize groups its pairs with one
+    exchange on the block key."""
     blocks = synth_blocks_df(spark, 512, 512, 128)
     pdf_df = spark.createDataFrame(
         pd.DataFrame(
             {"code": ["A"], "wkt": [None], "xmin": [12.0], "ymin": [41.0],
-             "xmax": [20.0], "ymax": [45.0]}
+             "xmax": [20.0], "ymax": [45.0], "burn_v": [1.0], "burn_ord": [0]}
         ),
-        "code string, wkt string, xmin double, ymin double, xmax double, ymax double",
+        "code string, wkt string, xmin double, ymin double, xmax double, "
+        "ymax double, burn_v double, burn_ord int",
     )
-    out = zonal_stats(blocks, pdf_df, GT, tile_px=256)
+    if op == "zonal_stats":
+        out = zonal_stats(blocks, pdf_df, GT, tile_px=256)
+    else:
+        out = rasterize(spark, pdf_df, GT, 512, 512, block=128, tile_px=256)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert ("BroadcastHashJoin" in plan) or ("SortMergeJoin" in plan) or (
         "ShuffledHashJoin" in plan
     )
+    assert "SortAggregate" not in plan
+    assert "first(payload" not in plan
+    if op == "rasterize":
+        keyed = re.findall(r"Exchange hashpartitioning\(block_x#\d+, block_y#\d+", plan)
+        assert len(keyed) == 1, plan
 
 
 # ---------------------------------------------------- rasterize parity

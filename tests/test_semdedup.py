@@ -178,3 +178,15 @@ def test_recommended_k_bounds_pairs(spark):
     assert pairs <= 5 * budget, (k, pairs)
     # and the rule is monotone: a bigger corpus demands more clusters
     assert recommended_k(10 * n, budget) >= k
+
+
+@pytest.mark.parametrize("name", ["kmeans_assign", "semdedup"])
+def test_call_leaves_no_cache(spark, name):
+    """Cache hygiene: the iteration and assignment caches are scoped
+    to the call — after the result is collected the session's cache
+    manager is empty."""
+    fn = {"kmeans_assign": kmeans_assign, "semdedup": semdedup}[name]
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    spark.catalog.clearCache()
+    fn(emb, k=8, iters=3).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -40,13 +40,22 @@ def _check(row, exp):
         assert row[k] == pytest.approx(exp[k], rel=1e-9), k
 
 
-def test_rectangle_zones_with_nodata_and_scale(spark):
+@pytest.mark.parametrize("source", ["list", "df"])
+def test_rectangle_zones_with_nodata_and_scale(spark, source):
     blocks = synth_blocks_df(spark, W, H, 128)
     polys = [
         Polygon("A", "a", bbox=(12.03, 41.02, 20.57, 45.49)),
         Polygon("B", "b", bbox=(10.01, 48.0, 11.99, 49.99)),
+        # low pixel-space edge in the first half of a block's last
+        # pixel, whose centre is inside (x: pixel 127, y: pixel 127)
+        Polygon("X", "x", bbox=(22.73, 41.02, 30.0, 45.49)),
+        Polygon("Y", "y", bbox=(12.0, 30.0, 20.0, 37.27)),
     ]
-    got = {r["code"]: r.asDict() for r in zonal_stats(blocks, polys, GT).collect()}
+    zones = polys if source == "list" else spark.createDataFrame(
+        [(p.code, None, *p.bbox) for p in polys],
+        "code string, wkt string, xmin double, ymin double, xmax double, ymax double",
+    )
+    got = {r["code"]: r.asDict() for r in zonal_stats(blocks, zones, GT).collect()}
     v, valid, lon, lat = _synth()
     for p in polys:
         xmin, ymin, xmax, ymax = p.bbox
