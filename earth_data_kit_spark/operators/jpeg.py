@@ -1,28 +1,35 @@
 """JPEG codec — pure numpy/stdlib, no codec lib.
 
-Closes the last first-class multimodal seam (VERDICT r4 task 5): the
-dominant real-corpus image format decodes for REAL behind
-``multimodal.decode_image``.  Implements the public ITU-T T.81
-baseline process AND (r6, VERDICT r5 task 6) the progressive DCT
-process — SOF2 with spectral selection + successive approximation,
-the form a significant fraction of real web images ship in:
+Decodes the two JPEG inputs the engine reads — JPEG-compressed COG
+tiles (``gtiff``, compression 7) and the image columns of the web-page
+corpus (``multimodal.decode_image``) — per the public ITU-T T.81:
 
 * 8-bit samples, Huffman entropy coding (no arithmetic), sequential
-  (SOF0) and progressive (SOF2) DCT, grayscale (1 component) and
-  YCbCr with 4:2:0 or 4:4:4 subsampling, restart markers honored;
+  (SOF0) and progressive (SOF2: spectral selection + successive
+  approximation) DCT, grayscale (1 component) and YCbCr with 4:2:0 or
+  4:4:4 subsampling, restart markers honored;
+* the decoder is ONE marker loop: the frame header allocates one
+  zigzag coefficient array per component, every scan — sequential or
+  progressive, interleaved or one component per scan (T.81 A.2.2) —
+  accumulates into it through one restart-aware block walk, and one
+  dequantize → IDCT → upsample → colour step runs at the end;
 * the encoder exists so tests can synthesize deterministic fixtures
   (standard Annex K quantization tables scaled by quality, standard
-  Annex K Huffman tables) — encoder and decoder are INDEPENDENT
-  implementations of the two halves of the spec, the same posture as
-  gtiff.py's writer vs spec-following reader, and the test oracle
-  additionally hand-builds a minimal bitstream straight from the
-  spec to pin the decoder alone.
+  Annex K Huffman tables): one front half (colour, pad, box-down,
+  quantize) and one scan emitter walking a scan script, baseline and
+  progressive alike.  Encoder and decoder are INDEPENDENT readings of
+  the two halves of the spec — they share no block-order or entropy
+  step, the same posture as gtiff.py's writer vs spec-following
+  reader — so progressive-vs-baseline equality and the round trips
+  catch an ordering bug on either side, and the test oracle
+  additionally hand-builds bitstreams straight from the spec to pin
+  the decoder alone.
 
 Performance posture: the DCT/quantization math is vectorized numpy;
-the entropy coder is a per-symbol python loop — "baseline sequential"
-in both senses.  It runs inside the Arrow ``mapInPandas`` decode
-stage (operators/multimodal.py) where payload decode is per-blob
-work, exactly where a production codec drops in.
+the entropy coder is a per-symbol python loop.  It runs inside the
+Arrow ``mapInPandas`` decode stage (operators/multimodal.py) where
+payload decode is per-blob work, exactly where a production codec
+drops in.
 """
 
 from __future__ import annotations
@@ -261,350 +268,6 @@ def _magnitude(v: int) -> tuple[int, int]:
     return t, v
 
 
-# --- encoder --------------------------------------------------------
-
-def _encode_block(bw, block, qtbl, dc_codes, ac_codes, pred):
-    coef = np.round(fdct2(block.astype(np.float64) - 128.0) / qtbl).astype(np.int64)
-    zz = coef.ravel()[ZIGZAG]
-    diff = int(zz[0]) - pred
-    t, code = _magnitude(diff)
-    c, ln = dc_codes[t]
-    bw.write(c, ln)
-    if t:
-        bw.write(code, t)
-    run = 0
-    last_nz = int(np.max(np.nonzero(zz)[0])) if np.any(zz[1:]) else 0
-    for i in range(1, 64):
-        v = int(zz[i])
-        if v == 0:
-            if i > last_nz:
-                c, ln = ac_codes[0x00]  # EOB
-                bw.write(c, ln)
-                break
-            run += 1
-            if run == 16:
-                c, ln = ac_codes[0xF0]  # ZRL
-                bw.write(c, ln)
-                run = 0
-            continue
-        t2, code2 = _magnitude(v)
-        c, ln = ac_codes[(run << 4) | t2]
-        bw.write(c, ln)
-        bw.write(code2, t2)
-        run = 0
-    return int(zz[0])
-
-
-def _seg(marker: int, body: bytes) -> bytes:
-    return struct.pack(">HH", marker, len(body) + 2) + body
-
-
-def _dht_body(tc_th: int, bits, vals) -> bytes:
-    return bytes([tc_th]) + bytes(bits) + bytes(vals)
-
-
-def encode_jpeg(img: np.ndarray, quality: int = 90, subsample: bool = True) -> bytes:
-    """Baseline JFIF encoder.  2D array → grayscale; (h, w, 3) uint8
-    RGB → YCbCr, 4:2:0 when ``subsample`` else 4:4:4."""
-    img = np.asarray(img)
-    gray = img.ndim == 2
-    h, w = img.shape[:2]
-    ql = quality_scale(QTBL_LUMA, quality)
-    qc = quality_scale(QTBL_CHROMA, quality)
-    dc_l, ac_l = _huff_codes(*DC_LUMA), _huff_codes(*AC_LUMA)
-    dc_c, ac_c = _huff_codes(*DC_CHROMA), _huff_codes(*AC_CHROMA)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += _seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += _seg(0xFFDB, b"\x00" + bytes(ql.ravel()[ZIGZAG].astype(np.uint8)))
-    if not gray:
-        out += _seg(0xFFDB, b"\x01" + bytes(qc.ravel()[ZIGZAG].astype(np.uint8)))
-    # SOF0
-    if gray:
-        comp = bytes([1, 0x11, 0])
-        ncomp = 1
-    else:
-        smp = 0x22 if subsample else 0x11
-        comp = bytes([1, smp, 0, 2, 0x11, 1, 3, 0x11, 1])
-        ncomp = 3
-    out += _seg(0xFFC0, struct.pack(">BHHB", 8, h, w, ncomp) + comp)
-    out += _seg(0xFFC4, _dht_body(0x00, *DC_LUMA))
-    out += _seg(0xFFC4, _dht_body(0x10, *AC_LUMA))
-    if not gray:
-        out += _seg(0xFFC4, _dht_body(0x01, *DC_CHROMA))
-        out += _seg(0xFFC4, _dht_body(0x11, *AC_CHROMA))
-    # SOS
-    if gray:
-        out += _seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    else:
-        out += _seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
-
-    bw = _BitWriter()
-    if gray:
-        y = img.astype(np.float64)
-        bh, bwid = -(-h // 8) * 8, -(-w // 8) * 8
-        yp = np.pad(y, ((0, bh - h), (0, bwid - w)), mode="edge")
-        pred = 0
-        for by in range(0, bh, 8):
-            for bx in range(0, bwid, 8):
-                pred = _encode_block(bw, yp[by:by+8, bx:bx+8], ql, dc_l, ac_l, pred)
-    else:
-        r = img[..., 0].astype(np.float64)
-        g = img[..., 1].astype(np.float64)
-        b = img[..., 2].astype(np.float64)
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-        if subsample:
-            mcu = 16
-            mh, mw = -(-h // mcu) * mcu, -(-w // mcu) * mcu
-            yp = np.pad(y, ((0, mh - h), (0, mw - w)), mode="edge")
-            cbp = np.pad(cb, ((0, mh - h), (0, mw - w)), mode="edge")
-            crp = np.pad(cr, ((0, mh - h), (0, mw - w)), mode="edge")
-            # 2x2 box down for chroma
-            cbs = cbp.reshape(mh // 2, 2, mw // 2, 2).mean(axis=(1, 3))
-            crs = crp.reshape(mh // 2, 2, mw // 2, 2).mean(axis=(1, 3))
-            py = pcb = pcr = 0
-            for my in range(0, mh, 16):
-                for mx in range(0, mw, 16):
-                    for dy in (0, 8):
-                        for dx in (0, 8):
-                            py = _encode_block(
-                                bw, yp[my+dy:my+dy+8, mx+dx:mx+dx+8], ql, dc_l, ac_l, py)
-                    sy, sx = my // 2, mx // 2
-                    pcb = _encode_block(bw, cbs[sy:sy+8, sx:sx+8], qc, dc_c, ac_c, pcb)
-                    pcr = _encode_block(bw, crs[sy:sy+8, sx:sx+8], qc, dc_c, ac_c, pcr)
-        else:
-            mh, mw = -(-h // 8) * 8, -(-w // 8) * 8
-            planes = [
-                np.pad(p, ((0, mh - h), (0, mw - w)), mode="edge") for p in (y, cb, cr)
-            ]
-            py = pcb = pcr = 0
-            preds = [0, 0, 0]
-            for my in range(0, mh, 8):
-                for mx in range(0, mw, 8):
-                    for ci, p in enumerate(planes):
-                        q, dc, ac = (ql, dc_l, ac_l) if ci == 0 else (qc, dc_c, ac_c)
-                        preds[ci] = _encode_block(
-                            bw, p[my:my+8, mx:mx+8], q, dc, ac, preds[ci])
-    bw.flush()
-    out += bw.buf
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-# --- decoder --------------------------------------------------------
-
-def _decode_block(br, dc_tbl, ac_tbl, qtbl, pred):
-    zz = np.zeros(64, dtype=np.int64)
-    t = _read_huff(br, dc_tbl)
-    diff = _extend(br.read_bits(t), t) if t else 0
-    dc = pred + diff
-    zz[0] = dc
-    i = 1
-    while i < 64:
-        rs = _read_huff(br, ac_tbl)
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:
-                i += 16  # ZRL
-                continue
-            break  # EOB
-        i += r
-        if i > 63:
-            raise ValueError("corrupt JPEG: AC index out of range")
-        zz[i] = _extend(br.read_bits(s), s)
-        i += 1
-    coef = np.zeros(64, dtype=np.float64)
-    coef[ZIGZAG] = zz * qtbl.ravel()[ZIGZAG]
-    return idct2(coef.reshape(8, 8)) + 128.0, dc
-
-
-def _read_huff(br, tbl) -> int:
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | br.read_bit()
-        v = tbl.get((length, code))
-        if v is not None:
-            return v
-    raise ValueError("corrupt JPEG: invalid Huffman code")
-
-
-def _planes_to_image(full: dict, comps: list) -> np.ndarray:
-    """Component planes (already cropped to h×w) → uint8 image:
-    shared by the baseline and progressive decode paths so the
-    color-convert semantics can never fork."""
-    if len(comps) == 1:
-        return np.clip(np.round(full[comps[0][0]]), 0, 255).astype(np.uint8)
-    y, cb, cr = (full[c[0]] for c in comps)
-    r = y + 1.402 * (cr - 128.0)
-    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
-    b = y + 1.772 * (cb - 128.0)
-    rgb = np.stack([r, g, b], axis=2)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-def _sof_marker(payload: bytes) -> int:
-    """First SOFn marker in the stream (frame-type dispatch)."""
-    pos = 2
-    while pos + 3 < len(payload):
-        if payload[pos] != 0xFF:
-            pos += 1
-            continue
-        marker = payload[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        if marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-                      0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            return marker
-        (seglen,) = struct.unpack_from(">H", payload, pos)
-        pos += seglen
-        if marker == 0xDA:
-            break
-    return 0
-
-
-def decode_jpeg(payload: bytes) -> np.ndarray:
-    """JPEG decode → (h, w) uint8 grayscale or (h, w, 3) uint8 RGB.
-
-    Baseline sequential (SOF0) and progressive (SOF2: spectral
-    selection + successive approximation, r6 — a large share of real
-    web corpora is progressive) both decode for real; other frame
-    types (lossless, arithmetic, hierarchical) raise."""
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload (no SOI)")
-    if _sof_marker(payload) == 0xC2:
-        return _decode_progressive(payload)
-    pos = 2
-    qtbls: dict[int, np.ndarray] = {}
-    dc_tbls: dict[int, dict] = {}
-    ac_tbls: dict[int, dict] = {}
-    comps = []  # (id, h_samp, v_samp, qtbl_id)
-    h = w = 0
-    restart_interval = 0
-    scan = None
-    while pos < len(payload):
-        if payload[pos] != 0xFF:
-            pos += 1
-            continue
-        marker = payload[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        (seglen,) = struct.unpack_from(">H", payload, pos)
-        body = payload[pos + 2 : pos + seglen]
-        pos += seglen
-        if marker == 0xDB:  # DQT
-            bpos = 0
-            while bpos < len(body):
-                pq_tq = body[bpos]
-                pq, tq = pq_tq >> 4, pq_tq & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables not baseline")
-                q = np.zeros(64, dtype=np.int64)
-                q[ZIGZAG] = np.frombuffer(body, np.uint8, 64, bpos + 1)
-                qtbls[tq] = q.reshape(8, 8)
-                bpos += 65
-        elif marker == 0xC4:  # DHT
-            bpos = 0
-            while bpos < len(body):
-                tc_th = body[bpos]
-                tc, th = tc_th >> 4, tc_th & 0x0F
-                bits = list(body[bpos + 1 : bpos + 17])
-                n = sum(bits)
-                vals = list(body[bpos + 17 : bpos + 17 + n])
-                tbl = _huff_decode_table(bits, vals)
-                (dc_tbls if tc == 0 else ac_tbls)[th] = tbl
-                bpos += 17 + n
-        elif marker == 0xC0:  # SOF0 baseline
-            prec, h, w, nc = struct.unpack_from(">BHHB", body, 0)
-            if prec != 8:
-                raise ValueError("only 8-bit baseline JPEG supported")
-            for ci in range(nc):
-                cid, samp, tq = body[6 + ci * 3 : 9 + ci * 3]
-                comps.append((cid, samp >> 4, samp & 0x0F, tq))
-        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                        0xCB, 0xCD, 0xCE, 0xCF):
-            raise ValueError(f"non-baseline SOF marker 0xFF{marker:02X}")
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack_from(">H", body, 0)
-        elif marker == 0xDA:  # SOS
-            ns = body[0]
-            scan = []
-            for si in range(ns):
-                cid, tbls = body[1 + si * 2], body[2 + si * 2]
-                scan.append((cid, tbls >> 4, tbls & 0x0F))
-            entropy_start = pos
-            # entropy data runs to the next non-RST marker
-            p = pos
-            while p + 1 < len(payload):
-                if payload[p] == 0xFF and payload[p + 1] not in (0x00,) and not (
-                    0xD0 <= payload[p + 1] <= 0xD7
-                ):
-                    break
-                p += 1
-            entropy = payload[entropy_start:p]
-            pos = p
-            break
-    if scan is None or not comps:
-        raise ValueError("corrupt JPEG: missing SOF/SOS")
-
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcus_x = -(-w // mcu_w)
-    mcus_y = -(-h // mcu_h)
-    planes = {}
-    for cid, hs, vs, _ in comps:
-        planes[cid] = np.zeros((mcus_y * vs * 8, mcus_x * hs * 8), dtype=np.float64)
-
-    br = _BitReader(entropy)
-    preds = {cid: 0 for cid, _, _ in scan}
-    comp_by_id = {c[0]: c for c in comps}
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                br.align_and_skip_rst()
-                preds = {cid: 0 for cid in preds}
-            for cid, dct, act in scan:
-                _, hs, vs, tq = comp_by_id[cid]
-                for by in range(vs):
-                    for bx in range(hs):
-                        blk, preds[cid] = _decode_block(
-                            br, dc_tbls[dct], ac_tbls[act], qtbls[tq], preds[cid]
-                        )
-                        y0 = (my * vs + by) * 8
-                        x0 = (mx * hs + bx) * 8
-                        planes[cid][y0:y0+8, x0:x0+8] = blk
-            mcu_count += 1
-
-    # upsample to full resolution (nearest/box — matches 2x2 box down)
-    full = {}
-    for cid, hs, vs, _ in comps:
-        p = planes[cid]
-        if hs != hmax or vs != vmax:
-            p = np.repeat(np.repeat(p, vmax // vs, axis=0), hmax // hs, axis=1)
-        full[cid] = p[:h, :w]
-    return _planes_to_image(full, comps)
-
-
-# --- progressive (SOF2) ---------------------------------------------
-#
-# Spectral selection + successive approximation per T.81 Annexes F/G
-# (public spec; the scan-script shape matches what cjpeg/libjpeg emit
-# for the web's progressive JPEGs).  The decoder accumulates DEQUANT-
-# READY coefficients across scans; the encoder exists primarily as
-# the fixture generator for the oracle test: progressive layering of
-# the SAME quantized coefficients must decode bit-identically to the
-# baseline stream (tests/test_jpeg.py).
-
-
 def _tz(v: int, al: int) -> int:
     """AC point transform: divide by 2^Al truncating toward zero."""
     v = int(v)
@@ -619,249 +282,18 @@ def _comp_block_dims(h: int, w: int, hs: int, vs: int, hmax: int, vmax: int):
     return -(-ch // 8), -(-cw // 8)
 
 
-def _decode_progressive(payload: bytes) -> np.ndarray:
-    qtbls: dict[int, np.ndarray] = {}
-    dc_tbls: dict[int, dict] = {}
-    ac_tbls: dict[int, dict] = {}
-    comps: list = []
-    h = w = 0
-    restart_interval = 0
-    coef: dict[int, np.ndarray] = {}
-    hmax = vmax = 1
-    mcus_x = mcus_y = 0
-    pos = 2
-    while pos + 1 < len(payload):
-        if payload[pos] != 0xFF:
-            pos += 1
-            continue
-        marker = payload[pos + 1]
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:  # EOI
-            break
-        (seglen,) = struct.unpack_from(">H", payload, pos)
-        body = payload[pos + 2 : pos + seglen]
-        pos += seglen
-        if marker == 0xDB:
-            bpos = 0
-            while bpos < len(body):
-                pq_tq = body[bpos]
-                pq, tq = pq_tq >> 4, pq_tq & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables unsupported")
-                q = np.zeros(64, dtype=np.int64)
-                q[ZIGZAG] = np.frombuffer(body, np.uint8, 64, bpos + 1)
-                qtbls[tq] = q.reshape(8, 8)
-                bpos += 65
-        elif marker == 0xC4:
-            bpos = 0
-            while bpos < len(body):
-                tc_th = body[bpos]
-                tc, th = tc_th >> 4, tc_th & 0x0F
-                bits = list(body[bpos + 1 : bpos + 17])
-                n = sum(bits)
-                vals = list(body[bpos + 17 : bpos + 17 + n])
-                (dc_tbls if tc == 0 else ac_tbls)[th] = _huff_decode_table(bits, vals)
-                bpos += 17 + n
-        elif marker == 0xC2:
-            prec, h, w, nc = struct.unpack_from(">BHHB", body, 0)
-            if prec != 8:
-                raise ValueError("only 8-bit progressive JPEG supported")
-            for ci in range(nc):
-                cid, samp, tq = body[6 + ci * 3 : 9 + ci * 3]
-                comps.append((cid, samp >> 4, samp & 0x0F, tq))
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mcus_x = -(-w // (8 * hmax))
-            mcus_y = -(-h // (8 * vmax))
-            for cid, hs, vs, _ in comps:
-                coef[cid] = np.zeros((mcus_y * vs, mcus_x * hs, 64), dtype=np.int64)
-        elif marker == 0xDD:
-            (restart_interval,) = struct.unpack_from(">H", body, 0)
-        elif marker == 0xDA:
-            ns = body[0]
-            scan = []
-            for si in range(ns):
-                cid, tbls = body[1 + si * 2], body[2 + si * 2]
-                scan.append((cid, tbls >> 4, tbls & 0x0F))
-            ss, se, ahal = body[1 + ns * 2 : 4 + ns * 2]
-            ah, al = ahal >> 4, ahal & 0x0F
-            if (ss == 0) != (se == 0) or se > 63 or se < ss:
-                raise ValueError(
-                    "invalid progressive scan header (DC scans are "
-                    f"Ss=Se=0, AC bands 1<=Ss<=Se<=63; got {ss}..{se})"
-                )
-            # entropy segment: to the next non-RST marker
-            p = pos
-            while p + 1 < len(payload):
-                if payload[p] == 0xFF and payload[p + 1] != 0x00 and not (
-                    0xD0 <= payload[p + 1] <= 0xD7
-                ):
-                    break
-                p += 1
-            br = _BitReader(payload[pos:p])
-            pos = p
-            comp_by_id = {c[0]: c for c in comps}
-            if ss == 0:
-                _scan_dc(br, scan, comp_by_id, coef, ah, al,
-                         mcus_x, mcus_y, dc_tbls, restart_interval, h, w,
-                         hmax, vmax)
-            else:
-                if len(scan) != 1:
-                    raise ValueError("progressive AC scan must be single-component")
-                cid, _, act = scan[0]
-                _, hs, vs, _ = comp_by_id[cid]
-                nby, nbx = _comp_block_dims(h, w, hs, vs, hmax, vmax)
-                _scan_ac(br, coef[cid], ac_tbls[act], ss, se, ah, al,
-                         nby, nbx, restart_interval)
-    if not comps or h == 0:
-        raise ValueError("corrupt JPEG: missing SOF2/SOS")
-    planes = {}
-    for cid, hs, vs, tq in comps:
-        cf = coef[cid]
-        nby, nbx = cf.shape[:2]
-        plane = np.zeros((nby * 8, nbx * 8), dtype=np.float64)
-        qz = qtbls[tq].ravel()[ZIGZAG]
-        nat = np.zeros(64, dtype=np.float64)
-        for by in range(nby):
-            for bx in range(nbx):
-                zz = cf[by, bx]
-                nat[:] = 0.0
-                nat[ZIGZAG] = zz * qz
-                plane[by*8:by*8+8, bx*8:bx*8+8] = idct2(nat.reshape(8, 8)) + 128.0
-        if hs != hmax or vs != vmax:
-            plane = np.repeat(np.repeat(plane, vmax // vs, axis=0), hmax // hs, axis=1)
-        planes[cid] = plane[:h, :w]
-    return _planes_to_image(planes, comps)
-
-
-def _scan_dc(br, scan, comp_by_id, coef, ah, al, mcus_x, mcus_y,
-             dc_tbls, restart_interval, h, w, hmax, vmax):
-    """DC scan (Ss=Se=0): first pass (Ah=0) Huffman-coded diffs of the
-    point-transformed DC; refinement (Ah>0) one raw bit per block."""
-    preds = {cid: 0 for cid, _, _ in scan}
-    if len(scan) > 1:
-        mcu_count = 0
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                    br.align_and_skip_rst()
-                    preds = {cid: 0 for cid in preds}
-                for cid, dct, _ in scan:
-                    _, hs, vs, _ = comp_by_id[cid]
-                    for by in range(vs):
-                        for bx in range(hs):
-                            zz = coef[cid][my * vs + by, mx * hs + bx]
-                            if ah == 0:
-                                t = _read_huff(br, dc_tbls[dct])
-                                diff = _extend(br.read_bits(t), t) if t else 0
-                                preds[cid] += diff
-                                zz[0] = preds[cid] << al
-                            elif br.read_bit():
-                                zz[0] |= 1 << al
-                mcu_count += 1
-    else:
-        cid, dct, _ = scan[0]
-        _, hs, vs, _ = comp_by_id[cid]
-        nby, nbx = _comp_block_dims(h, w, hs, vs, hmax, vmax)
-        blk_count = 0
-        for by in range(nby):
-            for bx in range(nbx):
-                if restart_interval and blk_count and blk_count % restart_interval == 0:
-                    br.align_and_skip_rst()
-                    preds = {cid: 0}
-                zz = coef[cid][by, bx]
-                if ah == 0:
-                    t = _read_huff(br, dc_tbls[dct])
-                    diff = _extend(br.read_bits(t), t) if t else 0
-                    preds[cid] += diff
-                    zz[0] = preds[cid] << al
-                elif br.read_bit():
-                    zz[0] |= 1 << al
-                blk_count += 1
-
-
-def _scan_ac(br, cf, ac_tbl, ss, se, ah, al, nby, nbx, restart_interval):
-    """AC scan over one component's spec-dim block grid: first pass
-    (Ah=0) with EOB-run coding; refinement (Ah>0) with correction
-    bits interleaved per T.81 G.1.2.3 (the decoder mirror of
-    libjpeg's decode_mcu_AC_refine control flow)."""
-    eobrun = 0
-    p1, m1 = 1 << al, -1 << al
-    blk_count = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            if restart_interval and blk_count and blk_count % restart_interval == 0:
-                br.align_and_skip_rst()
-                eobrun = 0
-            blk_count += 1
-            zz = cf[by, bx]
-            if ah == 0:
-                if eobrun > 0:
-                    eobrun -= 1
-                    continue
-                k = ss
-                while k <= se:
-                    rs = _read_huff(br, ac_tbl)
-                    r, s = rs >> 4, rs & 0x0F
-                    if s == 0:
-                        if r == 15:
-                            k += 16
-                            continue
-                        eobrun = (1 << r) - 1
-                        if r:
-                            eobrun += br.read_bits(r)
-                        break
-                    k += r
-                    if k > se:
-                        raise ValueError("corrupt JPEG: AC index past Se")
-                    zz[k] = _extend(br.read_bits(s), s) << al
-                    k += 1
-            else:
-                k = ss
-                if eobrun == 0:
-                    while k <= se:
-                        rs = _read_huff(br, ac_tbl)
-                        r, s = rs >> 4, rs & 0x0F
-                        val = 0
-                        if s == 0:
-                            if r < 15:
-                                eobrun = 1 << r
-                                if r:
-                                    eobrun += br.read_bits(r)
-                                break
-                            # r == 15: ZRL — skip 16 zero-history coefs
-                        else:
-                            val = p1 if br.read_bit() else m1
-                        while k <= se:
-                            if zz[k] != 0:
-                                if br.read_bit() and (abs(zz[k]) & p1) == 0:
-                                    zz[k] += p1 if zz[k] > 0 else m1
-                            else:
-                                if r == 0:
-                                    break
-                                r -= 1
-                            k += 1
-                        if val and k <= se:
-                            zz[k] = val
-                        k += 1
-                if eobrun > 0:
-                    while k <= se:
-                        if zz[k] != 0 and br.read_bit() and (abs(zz[k]) & p1) == 0:
-                            zz[k] += p1 if zz[k] > 0 else m1
-                        k += 1
-                    eobrun -= 1
-
-
-# --- progressive encoder (fixture generator for the oracle test) ----
+# --- encoder --------------------------------------------------------
+#
+# One front half (``_coef_blocks``) and one scan emitter (``_encode``)
+# walking a scan script of (components, Ss, Se, Ah, Al): the baseline
+# script is one interleaved 0..63 scan, the progressive one the
+# libjpeg-shaped layering of the SAME quantized coefficients.
 
 
 def _coef_blocks(img: np.ndarray, quality: int, subsample: bool):
-    """Quantized zigzag coefficient arrays per component — the SAME
-    padding / chroma box-downsample / quantization arithmetic as
-    ``encode_jpeg``, so a progressive stream built from these decodes
-    bit-identically to the baseline stream (the oracle property)."""
+    """Colour convert, edge-pad to whole MCUs, 2x2 box-down the chroma
+    for 4:2:0, then FDCT + quantize: per-component zigzag coefficient
+    arrays ``(blocks_y, blocks_x, 64)`` with the frame layout."""
     img = np.asarray(img)
     gray = img.ndim == 2
     h, w = img.shape[:2]
@@ -880,108 +312,169 @@ def _coef_blocks(img: np.ndarray, quality: int, subsample: bool):
         return out
 
     if gray:
-        bh, bwid = -(-h // 8) * 8, -(-w // 8) * 8
-        yp = np.pad(img.astype(np.float64), ((0, bh - h), (0, bwid - w)), mode="edge")
-        return h, w, [(1, 1, 1, 0)], {1: blocks_of(yp, ql)}, {0: ql}
-    r = img[..., 0].astype(np.float64)
-    g = img[..., 1].astype(np.float64)
-    b = img[..., 2].astype(np.float64)
-    y = 0.299 * r + 0.587 * g + 0.114 * b
-    cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
-    cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
-    if subsample:
-        mcu = 16
-        mh, mw = -(-h // mcu) * mcu, -(-w // mcu) * mcu
-        yp = np.pad(y, ((0, mh - h), (0, mw - w)), mode="edge")
-        cbp = np.pad(cb, ((0, mh - h), (0, mw - w)), mode="edge")
-        crp = np.pad(cr, ((0, mh - h), (0, mw - w)), mode="edge")
-        cbs = cbp.reshape(mh // 2, 2, mw // 2, 2).mean(axis=(1, 3))
-        crs = crp.reshape(mh // 2, 2, mw // 2, 2).mean(axis=(1, 3))
-        comps = [(1, 2, 2, 0), (2, 1, 1, 1), (3, 1, 1, 1)]
-        coef = {1: blocks_of(yp, ql), 2: blocks_of(cbs, qc), 3: blocks_of(crs, qc)}
+        planes, comps = [img.astype(np.float64)], [(1, 1, 1, 0)]
     else:
-        mh, mw = -(-h // 8) * 8, -(-w // 8) * 8
-        planes = [np.pad(p, ((0, mh - h), (0, mw - w)), mode="edge") for p in (y, cb, cr)]
-        comps = [(1, 1, 1, 0), (2, 1, 1, 1), (3, 1, 1, 1)]
-        coef = {1: blocks_of(planes[0], ql), 2: blocks_of(planes[1], qc),
-                3: blocks_of(planes[2], qc)}
-    return h, w, comps, coef, {0: ql, 1: qc}
+        r, g, b = (img[..., i].astype(np.float64) for i in range(3))
+        y = 0.299 * r + 0.587 * g + 0.114 * b
+        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0
+        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128.0
+        s = 2 if subsample else 1
+        planes, comps = [y, cb, cr], [(1, s, s, 0), (2, 1, 1, 1), (3, 1, 1, 1)]
+    mcu = 8 * comps[0][1]
+    mh, mw = -(-h // mcu) * mcu, -(-w // mcu) * mcu
+    planes = [np.pad(p, ((0, mh - h), (0, mw - w)), mode="edge") for p in planes]
+    if mcu == 16:  # 2x2 box down for chroma
+        planes[1:] = [p.reshape(mh // 2, 2, mw // 2, 2).mean(axis=(1, 3)) for p in planes[1:]]
+    qts = {0: ql} if gray else {0: ql, 1: qc}
+    coef = {cid: blocks_of(p, qts[tq]) for (cid, _, _, tq), p in zip(comps, planes)}
+    return h, w, comps, coef, qts
 
 
-def _enc_ac_first(bw, blocks, ac_codes, ss, se, al):
-    for zz in blocks:
-        band = [_tz(zz[k], al) for k in range(ss, se + 1)]
-        nz = [i for i, v in enumerate(band) if v]
-        if not nz:
-            c, ln = ac_codes[0x00]
+def _seg(marker: int, body: bytes) -> bytes:
+    return struct.pack(">HH", marker, len(body) + 2) + body
+
+
+def _dht_body(tc_th: int, bits, vals) -> bytes:
+    return bytes([tc_th]) + bytes(bits) + bytes(vals)
+
+
+def _enc_blocks(h, w, comps, coef, cids):
+    """Encoder-side block order of one scan (T.81 A.2): MCU order when
+    the scan interleaves, the component's own block grid otherwise."""
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
+    scomps = [c for c in comps if c[0] in cids]
+    if len(scomps) > 1:
+        for my in range(-(-h // (8 * vmax))):
+            for mx in range(-(-w // (8 * hmax))):
+                for cid, hs, vs, _ in scomps:
+                    for by in range(vs):
+                        for bx in range(hs):
+                            yield cid, coef[cid][my * vs + by, mx * hs + bx]
+    else:
+        cid, hs, vs, _ = scomps[0]
+        nby, nbx = _comp_block_dims(h, w, hs, vs, hmax, vmax)
+        for by in range(nby):
+            for bx in range(nbx):
+                yield cid, coef[cid][by, bx]
+
+
+def _enc_ac_first(bw, zz, ac_codes, ss, se, al):
+    """AC first pass over Ss..Se of one block (EOB0 only, no runs)."""
+    band = [_tz(v, al) for v in zz[ss:se + 1].tolist()]
+    nz = [i for i, v in enumerate(band) if v]
+    last = nz[-1] if nz else -1
+    run = 0
+    for i, v in enumerate(band):
+        if i > last:
+            c, ln = ac_codes[0x00]  # EOB
             bw.write(c, ln)
+            break
+        if v == 0:
+            run += 1
+            if run == 16:
+                c, ln = ac_codes[0xF0]  # ZRL
+                bw.write(c, ln)
+                run = 0
             continue
-        last = nz[-1]
+        t, code = _magnitude(v)
+        c, ln = ac_codes[(run << 4) | t]
+        bw.write(c, ln)
+        bw.write(code, t)
         run = 0
-        for i, v in enumerate(band):
-            if i > last:
-                c, ln = ac_codes[0x00]
-                bw.write(c, ln)
-                break
-            if v == 0:
-                run += 1
-                if run == 16:
-                    c, ln = ac_codes[0xF0]
-                    bw.write(c, ln)
-                    run = 0
-                continue
-            t, code = _magnitude(v)
-            c, ln = ac_codes[(run << 4) | t]
-            bw.write(c, ln)
-            bw.write(code, t)
-            run = 0
 
 
-def _enc_ac_refine(bw, blocks, ac_codes, ss, se, al):
-    """Mirror of _scan_ac's refinement branch: correction bits for
-    already-significant coefficients ride after the next Huffman
-    symbol, in position order, exactly as the decoder consumes them."""
-    for zz in blocks:
-        # queue of events since the last emitted symbol:
-        # ('z',) zero-history zero, ('h', bit) history correction bit
-        queue: list = []
-        emitted_any = False
-        for k in range(ss, se + 1):
-            v = int(zz[k])
-            now = _tz(v, al)
-            hist = _tz(v, al + 1) != 0
-            if hist:
-                queue.append(("h", (abs(v) >> al) & 1))
-            elif now != 0:
-                # newly significant (|now| == 1 by construction)
-                zr = sum(1 for e in queue if e[0] == "z")
-                while zr >= 16:
-                    c, ln = ac_codes[0xF0]
-                    bw.write(c, ln)
-                    consumed = 0
-                    while queue and consumed < 16:
-                        e = queue.pop(0)
-                        if e[0] == "z":
-                            consumed += 1
-                        else:
-                            bw.write(e[1], 1)
-                    zr -= 16
-                c, ln = ac_codes[(zr << 4) | 1]
+def _enc_ac_refine(bw, zz, ac_codes, ss, se, al):
+    """AC refinement of one block: correction bits for already-
+    significant coefficients ride after the next Huffman symbol, in
+    position order (T.81 G.1.2.3)."""
+    # queue of events since the last emitted symbol:
+    # ('z',) zero-history zero, ('h', bit) history correction bit
+    queue: list = []
+    emitted_any = False
+    for k in range(ss, se + 1):
+        v = int(zz[k])
+        now = _tz(v, al)
+        hist = _tz(v, al + 1) != 0
+        if hist:
+            queue.append(("h", (abs(v) >> al) & 1))
+        elif now != 0:
+            # newly significant (|now| == 1 by construction)
+            zr = sum(1 for e in queue if e[0] == "z")
+            while zr >= 16:
+                c, ln = ac_codes[0xF0]
                 bw.write(c, ln)
-                bw.write(1 if now > 0 else 0, 1)
-                for e in queue:
-                    if e[0] == "h":
+                consumed = 0
+                while queue and consumed < 16:
+                    e = queue.pop(0)
+                    if e[0] == "z":
+                        consumed += 1
+                    else:
                         bw.write(e[1], 1)
-                queue.clear()
-                emitted_any = True
-            else:
-                queue.append(("z",))
-        if queue or not emitted_any:
-            c, ln = ac_codes[0x00]  # EOB0
+                zr -= 16
+            c, ln = ac_codes[(zr << 4) | 1]
             bw.write(c, ln)
+            bw.write(1 if now > 0 else 0, 1)
             for e in queue:
                 if e[0] == "h":
                     bw.write(e[1], 1)
+            queue.clear()
+            emitted_any = True
+        else:
+            queue.append(("z",))
+    if queue or not emitted_any:
+        c, ln = ac_codes[0x00]  # EOB0
+        bw.write(c, ln)
+        for e in queue:
+            if e[0] == "h":
+                bw.write(e[1], 1)
+
+
+def _encode(frame, sof, script) -> bytes:
+    """JFIF headers for the ``_coef_blocks`` frame + one entropy-coded
+    segment per scan of ``script``: ``(component ids or None for all,
+    Ss, Se, Ah, Al)``."""
+    h, w, comps, coef, qts = frame
+    huff = {0: (DC_LUMA, AC_LUMA), 1: (DC_CHROMA, AC_CHROMA)}
+    codes = {tq: (_huff_codes(*dc), _huff_codes(*ac)) for tq, (dc, ac) in huff.items()}
+    tq_of = {cid: tq for cid, _, _, tq in comps}
+    out = bytearray(b"\xff\xd8")  # SOI
+    out += _seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    for tq, q in qts.items():
+        out += _seg(0xFFDB, bytes([tq]) + bytes(q.ravel()[ZIGZAG].astype(np.uint8)))
+    out += _seg(sof, struct.pack(">BHHB", 8, h, w, len(comps)) + b"".join(
+        bytes([cid, (hs << 4) | vs, tq]) for cid, hs, vs, tq in comps))
+    for tq in qts:
+        dc, ac = huff[tq]
+        out += _seg(0xFFC4, _dht_body(tq, *dc)) + _seg(0xFFC4, _dht_body(0x10 | tq, *ac))
+    for cids, ss, se, ah, al in script:
+        cids = cids or [c[0] for c in comps]
+        out += _seg(0xFFDA, bytes([len(cids)]) + b"".join(
+            bytes([cid, 0x11 * tq_of[cid]]) for cid in cids) + bytes([ss, se, (ah << 4) | al]))
+        bw = _BitWriter()
+        preds = dict.fromkeys(cids, 0)
+        for cid, zz in _enc_blocks(h, w, comps, coef, cids):
+            dc_codes, ac_codes = codes[tq_of[cid]]
+            if ss == 0 and ah:
+                bw.write((int(zz[0]) >> al) & 1, 1)  # DC refinement bit
+            elif ss == 0:
+                v = int(zz[0]) >> al  # DC point transform: arithmetic shift
+                t, code = _magnitude(v - preds[cid])
+                preds[cid] = v
+                bw.write(*dc_codes[t])
+                bw.write(code, t)
+            if se:
+                (_enc_ac_refine if ah else _enc_ac_first)(bw, zz, ac_codes, max(ss, 1), se, al)
+        bw.flush()
+        out += bw.buf
+    out += b"\xff\xd9"  # EOI
+    return bytes(out)
+
+
+def encode_jpeg(img: np.ndarray, quality: int = 90, subsample: bool = True) -> bytes:
+    """Baseline JFIF encoder.  2D array → grayscale; (h, w, 3) uint8
+    RGB → YCbCr, 4:2:0 when ``subsample`` else 4:4:4."""
+    return _encode(_coef_blocks(img, quality, subsample), 0xFFC0, [(None, 0, 63, 0, 0)])
 
 
 def encode_jpeg_progressive(
@@ -994,106 +487,262 @@ def encode_jpeg_progressive(
     refinement to Al=0.  EOB runs are restricted to EOB0 so the
     standard Annex K Huffman tables stay sufficient (pure size cost,
     spec-valid)."""
-    h, w, comps, coef, qts = _coef_blocks(img, quality, subsample)
-    gray = len(comps) == 1
-    dc_l, ac_l = _huff_codes(*DC_LUMA), _huff_codes(*AC_LUMA)
-    dc_c, ac_c = _huff_codes(*DC_CHROMA), _huff_codes(*AC_CHROMA)
-    dc_for = {cid: (dc_l if tq == 0 else dc_c) for cid, _, _, tq in comps}
-    ac_for = {cid: (ac_l if tq == 0 else ac_c) for cid, _, _, tq in comps}
+    frame = _coef_blocks(img, quality, subsample)
+    cids = [c[0] for c in frame[2]]
+    script = [(None, 0, 0, 0, 1)]
+    script += [([c], ss, se, 0, 2) for c in cids for ss, se in ((1, 5), (6, 63))]
+    script += [([c], 1, 63, 2, 1) for c in cids]
+    script += [(None, 0, 0, 1, 0)]
+    script += [([c], 1, 63, 1, 0) for c in cids]
+    return _encode(frame, 0xFFC2, script)
+
+
+# --- decoder --------------------------------------------------------
+#
+# One marker loop; SOF0 and SOF2 both allocate one zigzag coefficient
+# array per component, every scan (sequential or progressive,
+# interleaved or not) accumulates into it, and one dequantize → IDCT
+# → upsample → colour step runs after EOI.  A sequential scan is the
+# DC first pass plus the AC first pass over 1..63 at Al=0.
+
+
+def _read_huff(br, tbl) -> int:
+    code = 0
+    for length in range(1, 17):
+        code = (code << 1) | br.read_bit()
+        v = tbl.get((length, code))
+        if v is not None:
+            return v
+    raise ValueError("corrupt JPEG: invalid Huffman code")
+
+
+def _dec_dc(br, zz, tbl, pred, ah, al) -> int:
+    """DC step: first pass (Ah=0) adds a Huffman-coded diff to the
+    predictor; refinement (Ah>0) ORs in one raw bit."""
+    if ah:
+        if br.read_bit():
+            zz[0] |= 1 << al
+        return pred
+    t = _read_huff(br, tbl)
+    pred += _extend(br.read_bits(t), t)
+    zz[0] = pred << al
+    return pred
+
+
+def _dec_ac_first(br, zz, tbl, ss, se, al, eobrun) -> int:
+    """AC first pass over Ss..Se with EOB-run coding; returns the EOB
+    run still pending after this block."""
+    if eobrun:
+        return eobrun - 1
+    k = ss
+    while k <= se:
+        rs = _read_huff(br, tbl)
+        r, s = rs >> 4, rs & 0x0F
+        if s == 0:
+            if r == 15:
+                k += 16  # ZRL
+                continue
+            return (1 << r) - 1 + br.read_bits(r)  # EOBn
+        k += r
+        if k > se:
+            raise ValueError("corrupt JPEG: AC index out of range (past Se)")
+        zz[k] = _extend(br.read_bits(s), s) << al
+        k += 1
+    return 0
+
+
+def _dec_ac_refine(br, zz, tbl, ss, se, al, eobrun) -> int:
+    """AC refinement with correction bits interleaved per T.81
+    G.1.2.3 (the decoder mirror of libjpeg's decode_mcu_AC_refine)."""
+    p1, m1 = 1 << al, -1 << al
+    k = ss
+    if eobrun == 0:
+        while k <= se:
+            rs = _read_huff(br, tbl)
+            r, s = rs >> 4, rs & 0x0F
+            val = 0
+            if s == 0:
+                if r < 15:
+                    eobrun = (1 << r) + br.read_bits(r)
+                    break
+                # r == 15: ZRL — skip 16 zero-history coefs
+            else:
+                val = p1 if br.read_bit() else m1
+            while k <= se:
+                if zz[k] != 0:
+                    if br.read_bit() and (abs(zz[k]) & p1) == 0:
+                        zz[k] += p1 if zz[k] > 0 else m1
+                else:
+                    if r == 0:
+                        break
+                    r -= 1
+                k += 1
+            if val and k <= se:
+                zz[k] = val
+            k += 1
+    if eobrun > 0:
+        while k <= se:
+            if zz[k] != 0 and br.read_bit() and (abs(zz[k]) & p1) == 0:
+                zz[k] += p1 if zz[k] > 0 else m1
+            k += 1
+        eobrun -= 1
+    return eobrun
+
+
+def _decode_scan(br, scan, comps, coef, h, w, hdr, dc_tbls, ac_tbls, restart_interval):
+    """The restart-aware block walk of one scan (T.81 A.2): MCUs of
+    the interleaved components in MCU order, or the lone component's
+    own block grid; every ``restart_interval`` MCUs byte-align past
+    RSTn and reset the DC predictors and the EOB run."""
+    ss, se, ah, al = hdr
+    samp = {cid: (hs, vs) for cid, hs, vs, _ in comps}
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
+    if len(scan) > 1:
+        parts = [(sc, *samp[sc[0]]) for sc in scan]
+        mcus = (
+            [(sc, coef[sc[0]][my * vs + by, mx * hs + bx])
+             for sc, hs, vs in parts for by in range(vs) for bx in range(hs)]
+            for my in range(-(-h // (8 * vmax)))
+            for mx in range(-(-w // (8 * hmax)))
+        )
+    else:
+        nby, nbx = _comp_block_dims(h, w, *samp[scan[0][0]], hmax, vmax)
+        mcus = ([(scan[0], coef[scan[0][0]][by, bx])]
+                for by in range(nby) for bx in range(nbx))
+    preds, eobrun = {}, 0
+    for n, mcu in enumerate(mcus):
+        if restart_interval and n and n % restart_interval == 0:
+            br.align_and_skip_rst()
+            preds, eobrun = {}, 0
+        for (cid, dct, act), zz in mcu:
+            if ss == 0:
+                preds[cid] = _dec_dc(br, zz, dc_tbls.get(dct), preds.get(cid, 0), ah, al)
+            if se:
+                step = _dec_ac_refine if ah else _dec_ac_first
+                eobrun = step(br, zz, ac_tbls[act], max(ss, 1), se, al, eobrun)
 
-    out = bytearray(b"\xff\xd8")
-    out += _seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += _seg(0xFFDB, b"\x00" + bytes(qts[0].ravel()[ZIGZAG].astype(np.uint8)))
-    if not gray:
-        out += _seg(0xFFDB, b"\x01" + bytes(qts[1].ravel()[ZIGZAG].astype(np.uint8)))
-    comp_bytes = b"".join(
-        bytes([cid, (hs << 4) | vs, tq]) for cid, hs, vs, tq in comps
-    )
-    out += _seg(0xFFC2, struct.pack(">BHHB", 8, h, w, len(comps)) + comp_bytes)
-    out += _seg(0xFFC4, _dht_body(0x00, *DC_LUMA))
-    out += _seg(0xFFC4, _dht_body(0x10, *AC_LUMA))
-    if not gray:
-        out += _seg(0xFFC4, _dht_body(0x01, *DC_CHROMA))
-        out += _seg(0xFFC4, _dht_body(0x11, *AC_CHROMA))
 
-    def sos(scan_comps, ss, se, ah, al):
-        body = bytes([len(scan_comps)])
-        for cid in scan_comps:
-            tq = next(c[3] for c in comps if c[0] == cid)
-            body += bytes([cid, (tq << 4) | tq])  # luma 0x00, chroma 0x11
-        body += bytes([ss, se, (ah << 4) | al])
-        return _seg(0xFFDA, body)
+def _planes_to_image(full: dict, comps: list) -> np.ndarray:
+    """Component planes (already cropped to h×w) → uint8 image."""
+    if len(comps) == 1:
+        return np.clip(np.round(full[comps[0][0]]), 0, 255).astype(np.uint8)
+    y, cb, cr = (full[c[0]] for c in comps)
+    r = y + 1.402 * (cr - 128.0)
+    g = y - 0.344136 * (cb - 128.0) - 0.714136 * (cr - 128.0)
+    b = y + 1.772 * (cb - 128.0)
+    rgb = np.stack([r, g, b], axis=2)
+    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
 
-    def dc_scan_blocks():
-        """MCU order when interleaved, row-major otherwise."""
-        if len(comps) > 1:
-            mcus_x = -(-w // (8 * hmax))
-            mcus_y = -(-h // (8 * vmax))
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    for cid, hs, vs, _ in comps:
-                        for by in range(vs):
-                            for bx in range(hs):
-                                yield cid, coef[cid][my * vs + by, mx * hs + bx]
-        else:
-            cid, hs, vs, _ = comps[0]
-            nby, nbx = _comp_block_dims(h, w, hs, vs, hmax, vmax)
-            for by in range(nby):
-                for bx in range(nbx):
-                    yield cid, coef[cid][by, bx]
 
-    def ac_blocks(cid):
-        c = next(cc for cc in comps if cc[0] == cid)
-        nby, nbx = _comp_block_dims(h, w, c[1], c[2], hmax, vmax)
-        for by in range(nby):
-            for bx in range(nbx):
-                yield coef[cid][by, bx]
+def decode_jpeg(payload: bytes) -> np.ndarray:
+    """JPEG decode → (h, w) uint8 grayscale or (h, w, 3) uint8 RGB.
 
-    # scan 1: DC first, Al=1
-    out += sos([c[0] for c in comps], 0, 0, 0, 1)
-    bw = _BitWriter()
-    preds = {c[0]: 0 for c in comps}
-    for cid, zz in dc_scan_blocks():
-        v = int(zz[0]) >> 1  # DC point transform: arithmetic shift
-        diff = v - preds[cid]
-        preds[cid] = v
-        t, code = _magnitude(diff)
-        c, ln = dc_for[cid][t]
-        bw.write(c, ln)
-        if t:
-            bw.write(code, t)
-    bw.flush()
-    out += bw.buf
-    # scans 2..: AC bands at Al=2, per component
-    for cid in [c[0] for c in comps]:
-        for ss, se in ((1, 5), (6, 63)):
-            out += sos([cid], ss, se, 0, 2)
-            bw = _BitWriter()
-            _enc_ac_first(bw, ac_blocks(cid), ac_for[cid], ss, se, 2)
-            bw.flush()
-            out += bw.buf
-    # AC refinement Al 2->1
-    for cid in [c[0] for c in comps]:
-        out += sos([cid], 1, 63, 2, 1)
-        bw = _BitWriter()
-        _enc_ac_refine(bw, ac_blocks(cid), ac_for[cid], 1, 63, 1)
-        bw.flush()
-        out += bw.buf
-    # DC refinement Ah=1 -> Al=0 (raw bits)
-    out += sos([c[0] for c in comps], 0, 0, 1, 0)
-    bw = _BitWriter()
-    for cid, zz in dc_scan_blocks():
-        bw.write(int(zz[0]) & 1, 1)
-    bw.flush()
-    out += bw.buf
-    # AC refinement Al 1->0
-    for cid in [c[0] for c in comps]:
-        out += sos([cid], 1, 63, 1, 0)
-        bw = _BitWriter()
-        _enc_ac_refine(bw, ac_blocks(cid), ac_for[cid], 1, 63, 0)
-        bw.flush()
-        out += bw.buf
-    out += b"\xff\xd9"
-    return bytes(out)
+    Baseline sequential (SOF0, interleaved or one scan per component)
+    and progressive (SOF2: spectral selection + successive
+    approximation) both decode for real; other frame types (lossless,
+    arithmetic, hierarchical) raise."""
+    if payload[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG payload (no SOI)")
+    qtbls: dict[int, np.ndarray] = {}
+    dc_tbls: dict[int, dict] = {}
+    ac_tbls: dict[int, dict] = {}
+    comps: list = []  # (id, h_samp, v_samp, qtbl_id)
+    coef: dict[int, np.ndarray] = {}
+    h = w = restart_interval = 0
+    progressive = scanned = False
+    pos = 2
+    while pos + 1 < len(payload):
+        if payload[pos] != 0xFF:
+            pos += 1
+            continue
+        marker = payload[pos + 1]
+        pos += 2
+        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+            continue
+        if marker == 0xD9:  # EOI
+            break
+        (seglen,) = struct.unpack_from(">H", payload, pos)
+        body = payload[pos + 2 : pos + seglen]
+        pos += seglen
+        if marker == 0xDB:  # DQT
+            for bpos in range(0, len(body), 65):
+                if body[bpos] >> 4:
+                    raise ValueError("16-bit quant tables unsupported (not baseline)")
+                q = np.zeros(64, dtype=np.int64)
+                q[ZIGZAG] = np.frombuffer(body, np.uint8, 64, bpos + 1)
+                qtbls[body[bpos] & 0x0F] = q.reshape(8, 8)
+        elif marker == 0xC4:  # DHT
+            bpos = 0
+            while bpos < len(body):
+                tc_th = body[bpos]
+                bits = list(body[bpos + 1 : bpos + 17])
+                n = sum(bits)
+                vals = list(body[bpos + 17 : bpos + 17 + n])
+                (ac_tbls if tc_th >> 4 else dc_tbls)[tc_th & 0x0F] = _huff_decode_table(bits, vals)
+                bpos += 17 + n
+        elif marker in (0xC0, 0xC2):  # SOF0 baseline, SOF2 progressive
+            progressive = marker == 0xC2
+            prec, h, w, nc = struct.unpack_from(">BHHB", body, 0)
+            if prec != 8:
+                kind = "progressive" if progressive else "baseline"
+                raise ValueError(f"only 8-bit {kind} JPEG supported")
+            comps = []
+            for ci in range(nc):
+                cid, samp, tq = body[6 + ci * 3 : 9 + ci * 3]
+                comps.append((cid, samp >> 4, samp & 0x0F, tq))
+            mcus_x = -(-w // (8 * max(c[1] for c in comps)))
+            mcus_y = -(-h // (8 * max(c[2] for c in comps)))
+            coef = {cid: np.zeros((mcus_y * vs, mcus_x * hs, 64), dtype=np.int64)
+                    for cid, hs, vs, _ in comps}
+        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
+                        0xCB, 0xCD, 0xCE, 0xCF):
+            raise ValueError(f"non-baseline SOF marker 0xFF{marker:02X}")
+        elif marker == 0xDD:  # DRI
+            (restart_interval,) = struct.unpack_from(">H", body, 0)
+        elif marker == 0xDA:  # SOS
+            if not comps:
+                raise ValueError("corrupt JPEG: missing SOF/SOS")
+            ns = body[0]
+            scan = [(body[1 + si * 2], body[2 + si * 2] >> 4, body[2 + si * 2] & 0x0F)
+                    for si in range(ns)]
+            ss, se, ahal = body[1 + ns * 2 : 4 + ns * 2]
+            if not progressive:
+                ss, se, ahal = 0, 63, 0  # sequential: the whole block, no shift
+            elif (ss == 0) != (se == 0) or se > 63 or se < ss:
+                raise ValueError(
+                    "invalid progressive scan header (DC scans are "
+                    f"Ss=Se=0, AC bands 1<=Ss<=Se<=63; got {ss}..{se})"
+                )
+            elif ss and ns != 1:
+                raise ValueError("progressive AC scan must be single-component")
+            # entropy segment: to the next non-RST marker
+            p = pos
+            while p + 1 < len(payload) and not (
+                payload[p] == 0xFF and payload[p + 1] != 0x00
+                and not 0xD0 <= payload[p + 1] <= 0xD7
+            ):
+                p += 1
+            _decode_scan(_BitReader(payload[pos:p]), scan, comps, coef, h, w,
+                         (ss, se, ahal >> 4, ahal & 0x0F), dc_tbls, ac_tbls,
+                         restart_interval)
+            pos = p
+            scanned = True
+    if not scanned:
+        raise ValueError("corrupt JPEG: missing SOF/SOS")
+
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
+    full = {}
+    for cid, hs, vs, tq in comps:
+        cf = coef[cid]
+        nby, nbx = cf.shape[:2]
+        nat = np.zeros((nby, nbx, 64), dtype=np.float64)
+        nat[..., ZIGZAG] = cf * qtbls[tq].ravel()[ZIGZAG]
+        blocks = _DCT.T @ nat.reshape(nby, nbx, 8, 8) @ _DCT + 128.0  # idct2
+        plane = blocks.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
+        # upsample to full resolution (nearest/box — matches 2x2 box down)
+        if hs != hmax or vs != vmax:
+            plane = np.repeat(np.repeat(plane, vmax // vs, axis=0), hmax // hs, axis=1)
+        full[cid] = plane[:h, :w]
+    return _planes_to_image(full, comps)

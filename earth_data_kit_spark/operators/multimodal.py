@@ -3,7 +3,7 @@ metadata, processed via Arrow-batched ``mapInPandas``.
 
 The decode step is REAL for every image format a synthetic corpus
 carries — binary PPM (P6), PNG (own zlib-inflate + Paeth unfilter),
-and baseline-sequential JPEG (own Huffman+IDCT, operators/jpeg.py) —
+and baseline or progressive JPEG (own Huffman+IDCT, operators/jpeg.py) —
 plus raw little-endian int16 PCM audio and raw packed RGB video
 frames, all numpy/stdlib only.  Audio/video COMPRESSED codecs
 (Opus/H.264) still need external libraries absent from this
@@ -142,10 +142,9 @@ def decode_png(payload: bytes) -> np.ndarray:
 def decode_image(payload: bytes, width: int | None = None, height: int | None = None) -> np.ndarray:
     """Image decode dispatch — all three real-corpus formats decode
     for REAL with numpy/stdlib only: PPM (header+raster), PNG (zlib +
-    unfilter), and baseline-sequential JPEG (own Huffman+IDCT,
-    operators/jpeg.py — VERDICT r4 task 5 closed the last codec
-    seam).  Grayscale decodes broadcast to 3 channels so downstream
-    pooling sees a uniform (h, w, 3)."""
+    unfilter), and baseline-sequential or progressive JPEG (own
+    Huffman+IDCT, operators/jpeg.py).  Grayscale decodes broadcast
+    to 3 channels so downstream pooling sees a uniform (h, w, 3)."""
     if payload is None:
         raise ValueError("null image payload")
     if payload[:2] == b"P6":

@@ -29,6 +29,19 @@ def tumbling_agg(events: DataFrame, window: str = "1 hour") -> DataFrame:
     )
 
 
+def _read_stream(spark, schema, parquet_dir, max_files_per_trigger=None) -> DataFrame:
+    """Streaming parquet-directory source, optionally rate-limited."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(parquet_dir)
+
+
+def _memory_sink(df: DataFrame, mode: str, query_name: str):
+    """Start ``df`` into a memory-sink table named ``query_name``."""
+    return df.writeStream.outputMode(mode).format("memory").queryName(query_name).start()
+
+
 def sessionize_batch(events: DataFrame, gap_s: int = 1800) -> DataFrame:
     """Batch sessionization: lag + gap-flag running sum → per-user
     (n_sessions, n_events).  Twin of the streaming version below and
@@ -101,20 +114,14 @@ def sessionize_stream(
             {"user_id": [user_id], "n_sessions": [n_sessions], "n_events": [n_events]}
         )
 
-    stream = spark.readStream.schema(schema).parquet(parquet_dir)
-    out = stream.groupBy("user_id").applyInPandasWithState(
+    out = _read_stream(spark, schema, parquet_dir).groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType="user_id bigint, n_sessions bigint, n_events bigint",
         stateStructType="last_ts bigint, n_sessions bigint, n_events bigint",
         outputMode="update",
         timeoutConf="NoTimeout",
     )
-    return (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _memory_sink(out, "update", query_name)
 
 
 def tumbling_agg_stream(
@@ -129,22 +136,9 @@ def tumbling_agg_stream(
     """The same aggregation as a streaming query over a parquet
     directory source; memory sink for synchronous smoke runs
     (q.processAllAvailable()).  Returns the StreamingQuery."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(parquet_dir)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-        .select(F.col("w.start").alias("bucket"), "event_type", "n", "total_value")
-    )
-    return (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    stream = _read_stream(spark, schema, parquet_dir, max_files_per_trigger)
+    agg = tumbling_agg(stream.withWatermark("ts", watermark), window)
+    return _memory_sink(agg, "complete", query_name)
 
 
 def cell_window_agg(
@@ -189,16 +183,11 @@ def cell_window_stream(
     Memory-sink caveat: the sink table accumulates one row per
     UPDATE, so a reader takes the LAST row per (bucket, cell); the
     single-batch parity test sees exactly one emission per key."""
-    stream = spark.readStream.schema(schema).parquet(parquet_dir)
+    stream = _read_stream(spark, schema, parquet_dir)
     agg = cell_window_agg(
         stream.withWatermark(ts_col, watermark), res=res, window=window, ts_col=ts_col
     )
-    return (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _memory_sink(agg, "update", query_name)
 
 
 def exact_dedup_stream(
@@ -226,10 +215,7 @@ def exact_dedup_stream(
     comes from the RocksDB state store configured in session.py
     (heap-backed state cannot hold one row per distinct hash at
     corpus scale)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(parquet_dir)
+    stream = _read_stream(spark, schema, parquet_dir, max_files_per_trigger)
     out = (
         stream.withColumn("text_md5", F.md5(F.col(text_col)))
         .groupBy("text_md5")
@@ -238,12 +224,7 @@ def exact_dedup_stream(
             F.count("*").alias("n_dups"),
         )
     )
-    return (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _memory_sink(out, "update", query_name)
 
 
 def exact_dedup_stream_jvm(
@@ -262,21 +243,13 @@ def exact_dedup_stream_jvm(
     hash is emitted once (append mode); reach for
     ``exact_dedup_stream`` when a running min-id/dup-count per key is
     required.  Append-mode memory sink."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(parquet_dir)
+    stream = _read_stream(spark, schema, parquet_dir, max_files_per_trigger)
     out = (
         stream.withColumn("text_md5", F.md5(F.col(text_col)))
         .select("text_md5", id_col)
         .dropDuplicates(["text_md5"])
     )
-    return (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _memory_sink(out, "append", query_name)
 
 
 def tumbling_agg_stream_append(
@@ -294,19 +267,11 @@ def tumbling_agg_stream_append(
     can't show (its state never finalizes).  This is the form a
     100 TB ingest would run: bounded state, one immutable row per
     finalized window."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(parquet_dir)
+    stream = _read_stream(spark, schema, parquet_dir, max_files_per_trigger)
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"))
         .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
         .select(F.col("w.start").alias("bucket"), "n", "total_value")
     )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
+    return _memory_sink(agg, "append", query_name)

@@ -124,6 +124,29 @@ def test_decoder_restart_markers_reset_dc_predictor():
     assert np.array_equal(out, np.full((8, 16), 160, dtype=np.uint8))
 
 
+def test_decoder_non_interleaved_baseline_scans():
+    # T.81 A.2.2: a sequential frame may code each component in its
+    # own scan.  8×8 frame, three components (1,0x11,0 / 2,0x11,0 /
+    # 3,0x11,0) all on the luma tables, then three single-component
+    # SOS segments each carrying D0 AF (DC diff +16, EOB — the bits of
+    # the restart test above).  Y = Cb = Cr = 160, so every pixel is
+    # R = 160 + 1.402·32 → 205, G = 160 − (0.344136 + 0.714136)·32
+    # → 126, B = 160 + 1.772·32 → 217.
+    from earth_data_kit_spark.operators.jpeg import AC_LUMA, DC_LUMA
+
+    out = bytearray(b"\xff\xd8")
+    out += _seg(0xFFDB, b"\x00" + bytes(QTBL_LUMA.ravel()[ZIGZAG].astype(np.uint8)))
+    comps = bytes([1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0])
+    out += _seg(0xFFC0, struct.pack(">BHHB", 8, 8, 8, 3) + comps)
+    out += _seg(0xFFC4, bytes([0x00]) + bytes(DC_LUMA[0]) + bytes(DC_LUMA[1]))
+    out += _seg(0xFFC4, bytes([0x10]) + bytes(AC_LUMA[0]) + bytes(AC_LUMA[1]))
+    for cid in (1, 2, 3):
+        out += _seg(0xFFDA, bytes([1, cid, 0x00, 0, 63, 0])) + b"\xd0\xaf"
+    out += b"\xff\xd9"
+    expect = np.broadcast_to(np.array([205, 126, 217], np.uint8), (8, 8, 3))
+    assert np.array_equal(decode_jpeg(bytes(out)), expect)
+
+
 def test_decoder_rejects_non_baseline_and_garbage():
     with pytest.raises(ValueError, match="SOI"):
         decode_jpeg(b"nope")
@@ -163,10 +186,16 @@ def test_byte_stuffing_roundtrip():
 # shifts, EOB runs, ZRL skips or refinement correction bits breaks
 # exact equality.
 
-from earth_data_kit_spark.operators.jpeg import (  # noqa: E402
-    _sof_marker,
-    encode_jpeg_progressive,
-)
+from earth_data_kit_spark.operators.jpeg import encode_jpeg_progressive  # noqa: E402
+
+
+def _sof_marker(payload):
+    """First SOFn marker byte: walk the marker segments after SOI."""
+    pos = 2
+    while not (0xC0 <= payload[pos + 1] <= 0xCF and payload[pos + 1] not in (0xC4, 0xC8, 0xCC)):
+        (seglen,) = struct.unpack_from(">H", payload, pos + 2)
+        pos += 2 + seglen
+    return payload[pos + 1]
 
 
 def _assert_prog_equals_baseline(img, q=90, sub=True):
