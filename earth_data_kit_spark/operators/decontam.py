@@ -90,8 +90,11 @@ def flag_contaminated(
     min_overlap n-grams with ANY eval example) — the filter stage:
     ``flag_contaminated(...).where(~F.col("contaminated"))``.
 
-    Implemented as a broadcast LEFT SEMI against the distinct
-    contaminated-doc ids; the corpus side streams map-side.
+    Implemented as a broadcast LEFT join against the distinct
+    contaminated-doc ids; the corpus side streams map-side.  ``docs``
+    is read twice (the probe and the flag join), so pass a
+    materialized frame (checkpointed or committed) when it carries
+    expensive lineage such as a Python UDF.
     """
     bad = (
         contamination_report(

@@ -46,10 +46,12 @@ dedup (corpus-token-sized, 32 B/row, shuffled once on uniform keys;
 the suffix-array build moves the same bytes through a single
 machine's RAM instead).  The window table is persisted so the
 tokenize+hash pass runs once while feeding both the occurrence
-aggregation and the marked-span join (caller-owned cache lifetime,
-the minhash-signature convention; at 100 TB this is a checkpointed
-stage).  ``max_occurrences`` caps degenerate windows (empty/
-boilerplate explosions — the max_bucket pattern from the LSH family);
+aggregation and the marked-span join; the cache is scoped to the
+call (persist → eager ``localCheckpoint`` of the per-doc spans →
+``unpersist``), so the call runs the window job and returns a lazy
+text rebuild (at 100 TB the window table is a checkpointed stage).
+``max_occurrences`` caps degenerate windows (empty/boilerplate
+explosions — the max_bucket pattern from the LSH family);
 capped hashes are treated as boilerplate and removed from every doc
 INCLUDING the would-be keeper, reported separately.
 """

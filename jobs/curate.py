@@ -20,6 +20,14 @@ fill rate.  Every stage is map-only or a single bounded shuffle; the
 whole job has no driver-side data loops, so the identical plan runs
 at cluster scale (see SCALE.md).
 
+Each stage output (stages 1-3c) is materialized exactly once, by
+``_stage``: with a ``work_dir`` it is committed through
+``lineage.checkpoint_stage`` and re-read from disk; without one it is
+an eager ``localCheckpoint``, which also truncates the lineage.  The
+stage's count and every later stage read the materialized frame, so
+no Python UDF of an earlier stage (repetition signals, substring cut)
+runs again downstream, and no cache is left in the session.
+
 Usage:
   spark-submit --py-files dist/edk_spark.zip jobs/curate.py \
       --sf-dir /root/testdata/sf0.001 --max-tokens 512
@@ -66,22 +74,24 @@ def run(
     if work_dir:
         docs = docs.withColumn("part", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(32)))
 
-    def _commit(df, stage: str):
-        """Commit only not-yet-done partitions; return the full stage
-        output re-read from disk (committed + pre-existing)."""
-        return lineage.checkpoint_stage(df, work_dir, job_id, stage, "part", lineage_cols=["doc_id"])
+    def _stage(df, name: str):
+        """The stage's output, materialized once: committed (only the
+        not-yet-done partitions) and re-read from disk with a
+        ``work_dir``, else an eager ``localCheckpoint``."""
+        if work_dir:
+            return lineage.checkpoint_stage(df, work_dir, job_id, name, "part", lineage_cols=["doc_id"])
+        return df.localCheckpoint()
 
     # ---- stage 1: quality (shape + repetition) --------------------------
     q = cu.gopher_quality_cols(F.col("text"))
     r = cu.repetition_signals_udf()(F.col("text"))
-    kept = (
+    kept = _stage(
         docs.withColumn("_keep_q", cu.gopher_keep_col(q))
         .withColumn("_keep_r", cu.gopher_repetition_keep_col(r))
         .where(F.col("_keep_q") & F.col("_keep_r"))
-        .drop("_keep_q", "_keep_r")
+        .drop("_keep_q", "_keep_r"),
+        "quality",
     )
-    if work_dir:
-        kept = _commit(kept, "quality")
     n_quality = kept.count()
 
     # ---- stage 2: decontamination --------------------------------------
@@ -92,31 +102,24 @@ def run(
         [(i, " ".join(r.text.split()[2:30])) for i, r in enumerate(rows)],
         "eval_id int, text string",
     )
-    clean = flag_contaminated(kept, eval_df, shingle_k=13).where(
-        ~F.col("contaminated")
-    ).drop("contaminated")
-    if work_dir:
-        # the committed stage output on disk plays the persist's role
-        clean = _commit(clean, "decontam")
-    else:
-        clean = clean.persist()
-    n_clean = clean.count()  # materializes the cache stage 3 reuses
+    # flag_contaminated reads `kept` twice (probe + flag join): both
+    # read the materialized quality output
+    clean = _stage(
+        flag_contaminated(kept, eval_df, shingle_k=13).where(~F.col("contaminated")).drop("contaminated"),
+        "decontam",
+    )
+    n_clean = clean.count()
 
     # ---- stage 3: exact dedup ------------------------------------------
     # exact_dedup returns (doc_id, n_dups) representatives.  The
     # restore is a plain shuffle equi-join on doc_id — NOT broadcast:
     # a mostly-unique corpus leaves `reps` nearly corpus-sized, so it
-    # never fits under the broadcast threshold at scale (advisor r3
-    # flagged the old comment as overselling this).  doc_id is the
+    # never fits under the broadcast threshold at scale.  doc_id is the
     # stored sort key, so both sides shuffle-partition the same way
-    # (or co-locate for free under bucketed storage).  `clean` is
-    # persisted first: `reps` derives from it, and without the persist
-    # the un-cached lineage recomputes the quality+decontam stages
-    # twice (once for reps, once for the join's left side).
+    # (or co-locate for free under bucketed storage).  Both sides read
+    # the materialized `clean`, so the quality+decontam stages run once.
     reps = exact_dedup(clean).select("doc_id")
-    unique = clean.join(reps, "doc_id")
-    if work_dir:
-        unique = _commit(unique, "dedup")
+    unique = _stage(clean.join(reps, "doc_id"), "dedup")
     n_unique = unique.count()
 
     # ---- stage 3b (optional): exact-substring dedup ---------------------
@@ -125,13 +128,13 @@ def run(
     if substring_k:
         from earth_data_kit_spark.operators.substring_dedup import substring_dedup
 
-        scrubbed = substring_dedup(unique, k=substring_k)
+        # the count columns are part of the materialized stage output,
+        # so the char sum reads it instead of re-running the cut
+        scrubbed = _stage(substring_dedup(unique, k=substring_k), "substring")
         n_removed_chars = int(
             scrubbed.agg(F.sum("n_removed_chars").alias("c")).first()["c"] or 0
         )
         unique = scrubbed.drop("n_removed_chars", "n_spans")
-        if work_dir:
-            unique = _commit(unique, "substring")
         n_substring = unique.count()
 
     # ---- stage 3c (optional): DSIR selection toward a target slice ------
@@ -144,12 +147,13 @@ def run(
             if dsir_target_source
             else unique
         )
-        unique = dsir_resample(
-            unique, target, n=dsir_n, text_col="text", id_col="doc_id",
-            n_buckets=1 << 14,
-        ).drop("dsir_log_w", "dsir_rank")
-        if work_dir:
-            unique = _commit(unique, "select")
+        unique = _stage(
+            dsir_resample(
+                unique, target, n=dsir_n, text_col="text", id_col="doc_id",
+                n_buckets=1 << 14,
+            ).drop("dsir_log_w", "dsir_rank"),
+            "select",
+        )
         n_selected = unique.count()
 
     # ---- stage 4: sequence packing -------------------------------------

@@ -1,9 +1,13 @@
 """jobs/curate.py — the composed curation funnel: monotone counts,
-planted leakage removed, deterministic output."""
+planted leakage removed, deterministic output, each stage
+materialized once."""
+
+import re
 
 from jobs.curate import run
 
 SF = "/root/testdata/sf0.001"
+OPTIONAL = dict(substring_k=8, dsir_n=50, dsir_target_source="src1")
 
 
 def test_funnel_monotone_and_deterministic(spark):
@@ -62,3 +66,73 @@ def test_funnel_with_substring_and_dsir_stages(spark):
         substring_k=8, dsir_n=50, dsir_target_source="src1",
     )
     assert out == out2
+
+
+def test_funnel_resumable_with_optional_stages(spark, tmp_path):
+    """The work_dir path with substring and DSIR on matches the
+    in-memory funnel on every key, commits a lineage for every stage
+    and appends nothing on a re-run."""
+    wd = str(tmp_path / "funnel")
+    out1 = run(spark, SF, max_tokens=512, work_dir=wd, **OPTIONAL)
+    assert out1 == run(spark, SF, max_tokens=512, **OPTIONAL)
+
+    lin = spark.read.parquet(f"{wd}/lineage")
+    stages = {r.stage for r in lin.select("stage").distinct().collect()}
+    assert stages == {"quality", "decontam", "dedup", "substring", "select"}
+    n_lineage_rows = lin.count()
+    assert run(spark, SF, max_tokens=512, work_dir=wd, **OPTIONAL) == out1
+    assert spark.read.parquet(f"{wd}/lineage").count() == n_lineage_rows
+
+
+def test_in_memory_run_leaves_no_cache(spark):
+    """Stage outputs are local checkpoints, not cached frames: an
+    in-memory run leaves the session cache manager empty."""
+    spark.catalog.clearCache()
+    run(spark, SF, max_tokens=512, **OPTIONAL)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _final_plan_nodes(plan: str) -> list[tuple[str, str]]:
+    """(operator, detail block) per node of an execution's final
+    physical plan.  A formatted adaptive plan lists the nodes of its
+    initial plan too (with the same UDF calls); only the ids in the
+    '== Final Plan ==' tree ran."""
+    nodes = {
+        int(m.group(1)): (m.group(2), block)
+        for block in plan.split("\n\n")
+        if (m := re.match(r"\((\d+)\) (\w+)", block.strip()))
+    }
+    if "== Final Plan ==" in plan:
+        tree = plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
+        ran = {int(i) for i in re.findall(r"\((\d+)\)", tree)}
+        return [node for i, node in nodes.items() if i in ran]
+    return list(nodes.values())
+
+
+def test_python_stages_run_once(spark):
+    """Each stage is materialized once, so each Python pass of the
+    funnel runs in exactly one SQL execution: the repetition UDF
+    (quality), the substring window mapInArrow and the substring cut
+    UDF.  Read from the final plans in the SQL status store."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    before = max((e.executionId() for e in executions()), default=-1)
+    run(spark, SF, max_tokens=512, **OPTIONAL)
+    plans = [
+        _final_plan_nodes(e.physicalPlanDescription())
+        for e in executions()
+        if e.executionId() > before
+    ]
+
+    def n_executions(hit) -> int:
+        return sum(any(hit(op, block) for op, block in nodes) for nodes in plans)
+
+    assert n_executions(lambda op, b: op == "ArrowEvalPython" and "_rep(" in b) == 1
+    assert n_executions(lambda op, b: op == "ArrowEvalPython" and "_cut(" in b) == 1
+    assert n_executions(lambda op, b: op == "MapInArrow") == 1
