@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from earth_data_kit_spark.grid.affine import pixel_window_clamped
+from earth_data_kit_spark.operators.gtiff import _DTYPES
 
 BLOCK_SCHEMA = (
     "tile_name string, band string, block_x int, block_y int, "
@@ -90,12 +91,24 @@ def window_filter(blocks: DataFrame, xoff: int, yoff: int, xsize: int, ysize: in
     )
 
 
-_DT = {"int16": np.int16, "uint8": np.uint8, "int32": np.int32, "float32": np.float32, "float64": np.float64}
-
-
 def _decode(row) -> np.ndarray:
-    a = np.frombuffer(row["payload"], dtype=_DT[row["dtype"]])
+    """A block row's stored samples as a (ysize, xsize) array of its
+    ``dtype`` (any name in the GeoTIFF dtype table)."""
+    a = np.frombuffer(row["payload"], dtype=_DTYPES[row["dtype"]][2])
     return a.reshape(int(row["ysize"]), int(row["xsize"]))
+
+
+def _samples(row, window=np.s_[:, :], ftype=np.float64) -> np.ndarray:
+    """The one sample rule (reference entrypoint.py:75-91, F8/F9): the
+    ``window`` (row, column slices) of a block row's stored values as
+    ``ftype``, nodata → NaN, then ``* scale + offset``, all in
+    ``ftype``.  A sample that is already NaN stays NaN, so every
+    caller reads NaN as missing."""
+    a = _decode(row)[window].astype(ftype)
+    nod = row["nodataval"]
+    if nod is not None:
+        a[a == ftype(nod)] = np.nan
+    return a * ftype(row["scale"]) + ftype(row["offset"])
 
 
 # --- halo exchange: the block-neighbourhood layer of focal and contour.
@@ -160,44 +173,34 @@ def _halo_strips(blocks: DataFrame, raster_size: tuple[int, int], block: int,
 
 def _window(pdf: pd.DataFrame, x0: int, y0: int, x1: int, y1: int) -> np.ndarray:
     """Window assembler: the float64 raster window [x0, x1) × [y0, y1)
-    from block or strip rows (parts outside it are clipped, uncovered
-    pixels stay NaN), nodata → NaN, then scale/offset — nodataval,
-    scale and offset read from the first row, as every caller's inputs
-    share them."""
+    from block or strip rows, each decoded by ``_samples`` with its
+    own nodataval, scale and offset (parts outside the window are
+    clipped, uncovered pixels stay NaN)."""
     win = np.full((y1 - y0, x1 - x0), np.nan, dtype=np.float64)
     for _, row in pdf.iterrows():
         xo, yo = int(row["xoff"]), int(row["yoff"])
         ix0, ix1 = max(xo, x0), min(xo + int(row["xsize"]), x1)
         iy0, iy1 = max(yo, y0), min(yo + int(row["ysize"]), y1)
         if ix0 < ix1 and iy0 < iy1:
-            win[iy0 - y0: iy1 - y0, ix0 - x0: ix1 - x0] = _decode(row)[
-                iy0 - yo: iy1 - yo, ix0 - xo: ix1 - xo
-            ]
-    first = pdf.iloc[0]
-    nod = first["nodataval"]
-    if nod is not None and not np.isnan(nod):
-        win[win == nod] = np.nan
-    return win * float(first["scale"]) + float(first["offset"])
+            win[iy0 - y0: iy1 - y0, ix0 - x0: ix1 - x0] = _samples(
+                row, np.s_[iy0 - yo: iy1 - yo, ix0 - xo: ix1 - xo]
+            )
+    return win
 
 
 def decode_block_window(row, xoff: int, yoff: int, xsize: int, ysize: int):
-    """One block's contribution to a read window: clamped
-    intersection, decode, nodata → NaN, scale/offset (the reference's
+    """One block's contribution to a read window: the clamped
+    intersection through ``_samples`` in float32 (the reference's
     force-cast semantics, commons.py:6-7).  Returns (dst_x, dst_y,
-    iw, ih, float32 array) or None when the block misses the window.
-    Shared by windowed_read and the DataArray facade so the decode
-    semantics can never fork."""
+    iw, ih, float32 array) or None when the block misses the
+    window."""
     ix0, iy0, iw, ih = pixel_window_clamped(
         xoff - int(row["xoff"]), yoff - int(row["yoff"]),
         xsize, ysize, int(row["xsize"]), int(row["ysize"]),
     )
     if iw == 0 or ih == 0:
         return None
-    arr = _decode(row)[iy0 : iy0 + ih, ix0 : ix0 + iw].astype(np.float32)
-    nod = row["nodataval"]
-    if nod is not None and not np.isnan(nod):
-        arr = np.where(arr == np.float32(nod), np.nan, arr)
-    arr = (arr * np.float32(row["scale"]) + np.float32(row["offset"])).astype(np.float32)
+    arr = _samples(row, np.s_[iy0 : iy0 + ih, ix0 : ix0 + iw], np.float32)
     return (int(row["xoff"]) + ix0 - xoff, int(row["yoff"]) + iy0 - yoff, iw, ih, arr)
 
 
@@ -260,11 +263,7 @@ def block_mean(blocks: DataFrame) -> DataFrame:
         for pdf in batches:
             sums, cnts, bands = [], [], []
             for _, row in pdf.iterrows():
-                arr = _decode(row).astype(np.float64)
-                nod = row["nodataval"]
-                if nod is not None and not np.isnan(nod):
-                    arr = np.where(arr == nod, np.nan, arr)
-                arr = arr * row["scale"] + row["offset"]
+                arr = _samples(row)
                 sums.append(np.nansum(arr))
                 cnts.append(int(np.sum(~np.isnan(arr))))
                 bands.append(row["band"])
@@ -276,15 +275,39 @@ def block_mean(blocks: DataFrame) -> DataFrame:
     )
 
 
-def _interp_indices(n_dst: int, n_src: int, method: str):
-    """Dst-pixel-center sample positions in src space and the src
-    index window a method needs: (positions, base_idx, hi_extra).
+def _interp_indices(dst_px: np.ndarray, n_dst: int, n_src: int, method: str):
+    """Sample positions of dst pixel centers ``dst_px`` in src space
+    and the src index each reads from: (positions, base_idx).
     linear: floor clipped to n_src-2, samples base..base+1;
     nearest: rint clipped to n_src-1, samples base only."""
-    pos = (np.arange(n_dst) + 0.5) * (n_src / n_dst) - 0.5
+    pos = (dst_px + 0.5) * (n_src / n_dst) - 0.5
     if method == "nearest":
-        return pos, np.clip(np.rint(pos).astype(int), 0, n_src - 1), 0
-    return pos, np.clip(np.floor(pos).astype(int), 0, max(0, n_src - 2)), 1
+        return pos, np.clip(np.rint(pos).astype(int), 0, n_src - 1)
+    return pos, np.clip(np.floor(pos).astype(int), 0, max(0, n_src - 2))
+
+
+def _resample(pdf: pd.DataFrame, dst_x: np.ndarray, dst_y: np.ndarray,
+              src_size: tuple[int, int], dst_size: tuple[int, int],
+              method: str) -> np.ndarray:
+    """The resampling kernel: float64 values at dst pixel columns
+    ``dst_x`` × rows ``dst_y`` from the block rows ``pdf`` that cover
+    the src footprint — only that footprint is assembled."""
+    xs, xi = _interp_indices(dst_x, dst_size[0], src_size[0], method)
+    ys, yi = _interp_indices(dst_y, dst_size[1], src_size[1], method)
+    extra = 0 if method == "nearest" else 1
+    x_lo, y_lo = int(xi.min()), int(yi.min())
+    # halo-slack rows that miss the footprint clip away here
+    local = _window(pdf, x_lo, y_lo, int(xi.max()) + extra + 1, int(yi.max()) + extra + 1)
+    x0, y0 = xi - x_lo, yi - y_lo
+    if method == "nearest":
+        return local[y0][:, x0]
+    wy = (ys - yi)[:, None]
+    wx = (xs - xi)[None, :]
+    a = local[y0][:, x0]
+    b = local[y0][:, x0 + 1]
+    c = local[y0 + 1][:, x0]
+    d = local[y0 + 1][:, x0 + 1]
+    return a * (1 - wy) * (1 - wx) + b * (1 - wy) * wx + c * wy * (1 - wx) + d * wy * wx
 
 
 def _check_method(method: str) -> None:
@@ -292,60 +315,6 @@ def _check_method(method: str) -> None:
         raise NotImplementedError(
             f"interpolation method {method!r} ('linear' and 'nearest' only)"
         )
-
-
-def regrid_bilinear(
-    blocks: DataFrame,
-    src_size: tuple[int, int],
-    dst_size: tuple[int, int],
-    method: str = "linear",
-) -> DataFrame:
-    """J4/R9: grid-align a (small-per-group) raster onto a new grid —
-    ``groupBy(tile, band).applyInPandas``: each group assembles its
-    blocks, interpolates in numpy, re-blocks.  ``method`` is
-    'linear' (bilinear, the reference default) or 'nearest' (nearest
-    source pixel center — exact passthrough of categorical rasters).
-
-    Scale note: per-group assembly bounds group size to one tile
-    (2400² × 4 B ≈ 23 MB — executor-safe).  Cross-tile regrids at
-    100 TB would use halo exchange (explode each src block to the dst
-    blocks it contributes to, groupBy dst block) — same math, one
-    more shuffle; this entry point covers the reference's per-tile
-    warp semantics (dataset.py:516-541).
-    """
-    _check_method(method)
-    sw, sh = src_size
-    dw, dh = dst_size
-
-    def per_group(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        full = _window(pdf, 0, 0, sw, sh)
-        # sample at dst pixel centers mapped into src space
-        ys, y0, _ = _interp_indices(dh, sh, method)
-        xs, x0, _ = _interp_indices(dw, sw, method)
-        if method == "nearest":
-            out = full[y0][:, x0]
-        else:
-            wy = (ys - y0)[:, None]
-            wx = (xs - x0)[None, :]
-            a = full[y0][:, x0]
-            b = full[y0][:, x0 + 1]
-            c = full[y0 + 1][:, x0]
-            d = full[y0 + 1][:, x0 + 1]
-            out = a * (1 - wy) * (1 - wx) + b * (1 - wy) * wx + c * wy * (1 - wx) + d * wy * wx
-        return pd.DataFrame(
-            {
-                "tile_name": [key[0]],
-                "band": [key[1]],
-                "dst_xsize": [dw],
-                "dst_ysize": [dh],
-                "values": [out.astype(np.float32).ravel().tolist()],
-            }
-        )
-
-    return blocks.groupBy("tile_name", "band").applyInPandas(
-        per_group,
-        schema="tile_name string, band string, dst_xsize int, dst_ysize int, values array<float>",
-    )
 
 
 def combine_blocks(
@@ -405,10 +374,10 @@ def regrid_bilinear_blocks(
     out_dtype: str = "float32",
     method: str = "linear",
 ) -> DataFrame:
-    """J4 at mosaic scale: cross-tile bilinear regrid via HALO
-    EXCHANGE (reference ``Dataset.combine``/grid-align semantics,
-    dataset.py:922-965) — the plan ``regrid_bilinear``'s docstring
-    promised:
+    """J4/R9: bilinear (or nearest) regrid of a blocks raster onto a
+    new grid via HALO EXCHANGE (reference ``Dataset.combine``/
+    grid-align and per-tile warp semantics, dataset.py:516-541,
+    922-965):
 
       1. each src block computes (pure Columns) the conservative
          range of DST BLOCKS its pixels can contribute to under the
@@ -420,11 +389,12 @@ def regrid_bilinear_blocks(
 
     Group state is bounded by dst_block²·(scale factor) + halo —
     independent of mosaic size, so a 10⁶×10⁶ mosaic regrids with the
-    same per-executor memory as one tile (unlike the per-tile
-    ``regrid_bilinear``, whose group is a whole tile).  Output: one
-    row per dst block with ``values`` (row-major).  The interpolation
-    math (pixel-center mapping, edge clamp to sw-2, weights from the
-    clipped index) matches regrid_bilinear exactly.
+    same per-executor memory as one tile; a ``dst_block`` covering
+    the whole dst grid is the single-group (per-tile) regrid.
+    Output: one row per dst block with ``values`` (row-major).  The
+    interpolation (``_resample``) maps dst pixel centers into src
+    space, clamps the base index to sw-2 and weights from the
+    clipped index.
 
     ``out_dtype='float64'`` keeps full precision (used by the
     oracle-paired driver query); float32 is the raster-convention
@@ -435,7 +405,6 @@ def regrid_bilinear_blocks(
     _check_method(method)
     sw, sh = src_size
     dw, dh = dst_size
-    sxf, syf = sw / dw, sh / dh
     bpx = dst_block
 
     def dst_px_range(off: F.Column, size: F.Column, scale: float, dst_n: int):
@@ -446,8 +415,8 @@ def regrid_bilinear_blocks(
         )
         return lo, hi
 
-    x_lo, x_hi = dst_px_range(F.col("xoff"), F.col("xsize"), sxf, dw)
-    y_lo, y_hi = dst_px_range(F.col("yoff"), F.col("ysize"), syf, dh)
+    x_lo, x_hi = dst_px_range(F.col("xoff"), F.col("xsize"), sw / dw, dw)
+    y_lo, y_hi = dst_px_range(F.col("yoff"), F.col("ysize"), sh / dh, dh)
     exploded = (
         blocks.withColumn(
             "dst_bx",
@@ -465,32 +434,8 @@ def regrid_bilinear_blocks(
         band, bx, by = key
         x0_px, x1_px = bx * bpx, min(dw, bx * bpx + bpx) - 1
         y0_px, y1_px = by * bpx, min(dh, by * bpx + bpx) - 1
-        xs = (np.arange(x0_px, x1_px + 1) + 0.5) * sxf - 0.5
-        ys = (np.arange(y0_px, y1_px + 1) + 0.5) * syf - 0.5
-        if method == "nearest":
-            xf = np.clip(np.rint(xs).astype(int), 0, sw - 1)
-            yf = np.clip(np.rint(ys).astype(int), 0, sh - 1)
-            extra = 0
-        else:
-            xf = np.clip(np.floor(xs).astype(int), 0, sw - 2)
-            yf = np.clip(np.floor(ys).astype(int), 0, sh - 2)
-            extra = 1
-        sx_lo, sx_hi = int(xf.min()), int(xf.max()) + extra
-        sy_lo, sy_hi = int(yf.min()), int(yf.max()) + extra
-        # halo-slack blocks that miss the src window clip away here
-        local = _window(pdf, sx_lo, sy_lo, sx_hi + 1, sy_hi + 1)
-        y0 = yf - sy_lo
-        x0 = xf - sx_lo
-        if method == "nearest":
-            out = local[y0][:, x0]
-        else:
-            wy = (ys - yf)[:, None]
-            wx = (xs - xf)[None, :]
-            a = local[y0][:, x0]
-            b = local[y0][:, x0 + 1]
-            c = local[y0 + 1][:, x0]
-            d = local[y0 + 1][:, x0 + 1]
-            out = a * (1 - wy) * (1 - wx) + b * (1 - wy) * wx + c * wy * (1 - wx) + d * wy * wx
+        out = _resample(pdf, np.arange(x0_px, x1_px + 1), np.arange(y0_px, y1_px + 1),
+                        src_size, dst_size, method)
         return pd.DataFrame(
             {
                 "band": [band],

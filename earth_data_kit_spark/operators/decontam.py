@@ -25,7 +25,7 @@ build-brief training-data operator.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from earth_data_kit_spark.functions.udfs import shingle_hashes_udf
@@ -61,16 +61,21 @@ def contamination_report(
     string (analysis.shingles' short-text fallback), so exact short
     matches are still caught.
     """
-    ev = _shingle_table(eval_df, eval_id_col, eval_text_col, shingle_k, "eval_id").distinct()
-    ev_sizes = ev.groupBy("eval_id").agg(F.count("*").alias("eval_ngrams"))
+    # one eval table carries each example's distinct n-gram count, so
+    # the eval-side shingle UDF runs once
+    ev = (
+        _shingle_table(eval_df, eval_id_col, eval_text_col, shingle_k, "eval_id")
+        .distinct()
+        .withColumn("eval_ngrams", F.count("*").over(Window.partitionBy("eval_id")))
+    )
     corpus = _shingle_table(docs, id_col, text_col, shingle_k, "doc_id")
     hits = (
         corpus.join(F.broadcast(ev), "shingle")
-        .groupBy("doc_id", "eval_id")
+        .groupBy("doc_id", "eval_id", "eval_ngrams")
         .agg(F.count("*").alias("n_hits"))
         .where(F.col("n_hits") >= min_overlap)
     )
-    return hits.join(F.broadcast(ev_sizes), "eval_id").select(
+    return hits.select(
         "doc_id",
         "eval_id",
         "n_hits",

@@ -14,8 +14,9 @@ in which each block emits, per neighbor target, ONLY the ≤r-pixel
 strip that target's halo needs (plus its own full payload to itself)
 — for r=1 and 256-px blocks the shuffle moves ~1.03× the raster, not
 the 9× a naive whole-block explode would.  Stage 2 groups by target
-block, assembles the halo window (``_window``: NaN fill, nodata →
-NaN, scale/offset), edge-replicates at raster borders (GDAL
+block, assembles the halo window (``_window``: NaN fill, each strip
+through the one sample rule ``_samples`` — nodata or NaN → NaN, then
+scale/offset), edge-replicates at raster borders (GDAL
 ``-compute_edges`` semantics), applies the kernel in numpy, and
 emits the interior as a blocks-schema row — so focal output feeds
 export_cog / zonal / any block operator unchanged.

@@ -26,6 +26,8 @@ roundtrip rather than being mirrored.
 from __future__ import annotations
 
 import struct
+from pathlib import Path
+from typing import NamedTuple
 
 import numpy as np
 
@@ -392,130 +394,19 @@ def write_gtiff(
 
 
 def read_gtiff(path: str):
-    """Spec-following reader (the independent oracle): parse the
-    first IFD, reassemble tiles, clip to (height, width).  Returns
+    """Spec-following reader (the independent oracle): the first IFD's
+    image, tiles reassembled and clipped to (height, width).  Returns
     (array, tags) where tags maps tag id → value list."""
-    raw = open(path, "rb").read()
-    order, magic, ifd = struct.unpack_from("<2sHI", raw, 0)
-    assert order == b"II" and magic == 42, "not a little-endian TIFF"
-    arr, tags, _ = _read_ifd(raw, ifd)
-    return arr, tags
+    return _read_image(Path(path).read_bytes(), 0)
 
 
 def read_gtiff_ifds(path: str) -> list[tuple]:
-    """All images in the file by walking the next-IFD chain (spec
-    §2: each IFD ends with the offset of the next, 0 terminates) —
-    the full-resolution raster first, then reduced-resolution
-    overview IFDs (NewSubfileType bit 0 set).  Returns a list of
-    (array, tags) per IFD."""
-    raw = open(path, "rb").read()
-    order, magic, ifd = struct.unpack_from("<2sHI", raw, 0)
-    assert order == b"II" and magic == 42, "not a little-endian TIFF"
-    out = []
-    while ifd:
-        arr, tags, ifd = _read_ifd(raw, ifd)
-        out.append((arr, tags))
-    return out
-
-
-def _parse_ifd(raw: bytes, ifd: int):
-    """Tags + next-IFD offset only — the metadata a COG reader can
-    resolve from the header bytes without touching tile data."""
-    (n,) = struct.unpack_from("<H", raw, ifd)
-    tags = {}
-    _SZ = {_T_SHORT: ("H", 2), _T_LONG: ("I", 4), _T_DOUBLE: ("d", 8), _T_ASCII: ("c", 1)}
-    for i in range(n):
-        tag, typ, cnt, val_raw = struct.unpack_from("<HHI4s", raw, ifd + 2 + 12 * i)
-        code, sz = _SZ[typ]
-        total = sz * cnt
-        src = val_raw[:total] if total <= 4 else raw[
-            struct.unpack("<I", val_raw)[0] : struct.unpack("<I", val_raw)[0] + total
-        ]
-        if typ == _T_ASCII:
-            tags[tag] = src
-        else:
-            tags[tag] = list(struct.unpack("<" + code * cnt, src))
-    (next_ifd,) = struct.unpack_from("<I", raw, ifd + 2 + 12 * n)
-    return tags, next_ifd
-
-
-def _tile_params(tags):
-    """Decode parameters shared by full and windowed reads."""
-    bits = tags[TAG_BITS][0]
-    fmt = tags.get(TAG_SAMPLE_FORMAT, [1])[0]
-    npdt = {
-        (8, 1): np.uint8, (8, 2): np.int8,
-        (16, 1): np.uint16, (16, 2): np.int16, (32, 1): np.uint32,
-        (32, 2): np.int32, (32, 3): np.float32, (64, 3): np.float64,
-    }[(bits, fmt)]
-    comp = tags.get(TAG_COMPRESSION, [1])[0]
-    if comp not in (1, 5, 7, 8):
-        raise ValueError(f"unsupported TIFF compression {comp}")
-    predictor = tags.get(TAG_PREDICTOR, [1])[0]
-    if predictor not in (1, 2):
-        raise ValueError(f"unsupported TIFF predictor {predictor}")
-    if predictor == 2 and not np.issubdtype(npdt, np.integer):
-        raise ValueError("horizontal-differencing predictor is integer-only")
-    return npdt, comp, predictor, bits
-
-
-def _decode_tile(raw: bytes, tags, idx: int, npdt, comp, predictor, bits):
-    """One tile by flat index (band-major then row-major) → (th, tw)
-    array.  This is the COG unit of IO: a range read of exactly
-    [offset, offset+bytecount)."""
-    import zlib
-
-    th, tw = tags[TAG_TILE_H][0], tags[TAG_TILE_W][0]
-    off = tags[TAG_TILE_OFFSETS][idx]
-    cnt_b = tags[TAG_TILE_BYTES][idx]
-    buf = raw[off : off + cnt_b]
-    if comp == 7:
-        # new-style JPEG: the tile IS a complete interchange stream
-        from earth_data_kit_spark.operators.jpeg import decode_jpeg
-
-        tile = decode_jpeg(buf).astype(npdt)
-        if tile.shape != (th, tw):
-            raise ValueError(
-                f"JPEG tile dims {tile.shape} != tile grid ({th},{tw})"
-            )
-    else:
-        if comp == 8:
-            buf = zlib.decompress(buf)
-        elif comp == 5:
-            buf = lzw_decompress(buf)
-        tile = np.frombuffer(buf, dtype=npdt).reshape(th, tw)
-    if predictor == 2:
-        # undo horizontal differencing: rows accumulate left to
-        # right with wraparound in the sample dtype (TIFF §14)
-        bits_mask = (1 << bits) - 1
-        acc = np.cumsum(tile.astype(np.int64) & bits_mask, axis=1) & bits_mask
-        utile = acc.astype({8: np.uint8, 16: np.uint16, 32: np.uint32}[bits])
-        tile = utile.view(npdt) if npdt().nbytes * 8 == bits else utile.astype(npdt)
-    return tile
-
-
-def _read_ifd(raw: bytes, ifd: int):
-    tags, next_ifd = _parse_ifd(raw, ifd)
-    width, height = tags[TAG_WIDTH][0], tags[TAG_LENGTH][0]
-    tw, th = tags[TAG_TILE_W][0], tags[TAG_TILE_H][0]
-    n_tx = -(-width // tw)
-    n_ty = -(-height // th)
-    n_bands = tags.get(TAG_SAMPLES, [1])[0]
-    planar = tags.get(TAG_PLANAR, [1])[0]
-    if n_bands > 1 and planar != 2:
-        raise ValueError("multi-band reads support PlanarConfiguration=2 only")
-    npdt, comp, predictor, bits = _tile_params(tags)
-
-    full = np.zeros((n_bands, n_ty * th, n_tx * tw), dtype=npdt)
-    per_band = n_tx * n_ty
-    for idx in range(len(tags[TAG_TILE_OFFSETS])):
-        tile = _decode_tile(raw, tags, idx, npdt, comp, predictor, bits)
-        band, rem = divmod(idx, per_band)
-        ty, tx = divmod(rem, n_tx)
-        full[band, ty * th : (ty + 1) * th, tx * tw : (tx + 1) * tw] = tile
-    clipped = full[:, :height, :width]
-    # single band returns 2D for backward-compatible callers
-    return (clipped[0] if n_bands == 1 else clipped), tags, next_ifd
+    """All images in the file, in next-IFD chain order — the
+    full-resolution raster first, then reduced-resolution overview
+    IFDs (NewSubfileType bit 0 set).  Returns a list of (array, tags)
+    per IFD."""
+    raw = Path(path).read_bytes()
+    return [_read_image(raw, level) for level in range(len(_ifd_chain(raw)))]
 
 
 def read_gtiff_window(
@@ -530,46 +421,183 @@ def read_gtiff_window(
     window is expressed in THAT level's pixel space.  Returns
     (ysize, xsize) for single-band files, (bands, ysize, xsize) for
     planar multi-band.  Out-of-range windows raise."""
-    raw = open(path, "rb").read()
-    order, magic, ifd = struct.unpack_from("<2sHI", raw, 0)
-    assert order == b"II" and magic == 42, "not a little-endian TIFF"
-    for _ in range(level):
-        _, ifd = _parse_ifd(raw, ifd)
-        if not ifd:
-            raise ValueError(f"overview level {level} beyond IFD chain")
-    tags, _ = _parse_ifd(raw, ifd)
-    width, height = tags[TAG_WIDTH][0], tags[TAG_LENGTH][0]
-    if xoff < 0 or yoff < 0 or xoff + xsize > width or yoff + ysize > height:
-        raise ValueError(
-            f"window ({xoff},{yoff},{xsize},{ysize}) outside {width}x{height}"
-        )
-    tw, th = tags[TAG_TILE_W][0], tags[TAG_TILE_H][0]
-    n_tx = -(-width // tw)
-    n_ty = -(-height // th)
-    n_bands = tags.get(TAG_SAMPLES, [1])[0]
-    planar = tags.get(TAG_PLANAR, [1])[0]
-    if n_bands > 1 and planar != 2:
-        raise ValueError("multi-band reads support PlanarConfiguration=2 only")
-    npdt, comp, predictor, bits = _tile_params(tags)
+    raw = Path(path).read_bytes()
+    return _read_window(raw, _layout(raw, level), xoff, yoff, xsize, ysize)
 
-    tx0, tx1 = xoff // tw, (xoff + xsize - 1) // tw
-    ty0, ty1 = yoff // th, (yoff + ysize - 1) // th
-    out = np.zeros((n_bands, ysize, xsize), dtype=npdt)
-    per_band = n_tx * n_ty
-    for band in range(n_bands):
-        for ty in range(ty0, ty1 + 1):
-            for tx in range(tx0, tx1 + 1):
-                tile = _decode_tile(
-                    raw, tags, band * per_band + ty * n_tx + tx,
-                    npdt, comp, predictor, bits,
-                )
-                # overlap of this tile with the window, in both frames
-                gx0, gx1 = max(xoff, tx * tw), min(xoff + xsize, tx * tw + tw)
-                gy0, gy1 = max(yoff, ty * th), min(yoff + ysize, ty * th + th)
-                out[band, gy0 - yoff : gy1 - yoff, gx0 - xoff : gx1 - xoff] = tile[
-                    gy0 - ty * th : gy1 - ty * th, gx0 - tx * tw : gx1 - tx * tw
-                ]
-    return out[0] if n_bands == 1 else out
+
+# (BitsPerSample, SampleFormat) → dtype name: the reader's view of
+# the one dtype table
+_DTYPE_NAMES = {(bits, fmt): name for name, (bits, fmt, _) in _DTYPES.items()}
+
+# field types the reader decodes (TIFF 6.0 §2) → (struct code, size)
+_FIELDS = {_T_SHORT: ("H", 2), _T_LONG: ("I", 4), _T_DOUBLE: ("d", 8), _T_ASCII: ("c", 1)}
+
+# the tags the reader acts on; an entry of any other tag whose field
+# type is not in _FIELDS is skipped, as §2 asks of readers
+_NEEDED = {
+    TAG_WIDTH, TAG_LENGTH, TAG_BITS, TAG_COMPRESSION, TAG_SAMPLES,
+    TAG_PREDICTOR, TAG_PLANAR, TAG_TILE_W, TAG_TILE_H, TAG_TILE_OFFSETS,
+    TAG_TILE_BYTES, TAG_SAMPLE_FORMAT, TAG_NODATA,
+}
+
+
+def _ifd_chain(raw: bytes) -> list[int]:
+    """Header step: check the 8-byte header (little-endian classic
+    TIFF only) and walk the next-IFD chain (§2: each IFD ends with
+    the next one's offset, 0 terminates) → the offset of every IFD,
+    full resolution first."""
+    if raw[:4] == b"MM\x00*":
+        raise ValueError("big-endian TIFF is not supported")
+    if len(raw) < 8 or raw[:4] != b"II*\x00":
+        raise ValueError("not a little-endian TIFF")
+    (ifd,) = struct.unpack_from("<I", raw, 4)
+    chain: list[int] = []
+    while ifd:
+        if ifd in chain:
+            raise ValueError("cyclic TIFF IFD chain")
+        chain.append(ifd)
+        (n,) = struct.unpack_from("<H", raw, ifd)
+        (ifd,) = struct.unpack_from("<I", raw, ifd + 2 + 12 * n)
+    return chain
+
+
+def _parse_ifd(raw: bytes, ifd: int) -> dict:
+    """One IFD's tags (tag id → value list; ASCII as bytes) — the
+    metadata a COG reader resolves from the header bytes without
+    touching tile data."""
+    (n,) = struct.unpack_from("<H", raw, ifd)
+    tags = {}
+    for i in range(n):
+        tag, typ, cnt, val_raw = struct.unpack_from("<HHI4s", raw, ifd + 2 + 12 * i)
+        if typ not in _FIELDS:
+            if tag in _NEEDED:
+                raise ValueError(f"TIFF tag {tag}: field type {typ} is not supported")
+            continue
+        code, sz = _FIELDS[typ]
+        total = sz * cnt
+        if total <= 4:
+            src = val_raw[:total]
+        else:
+            (off,) = struct.unpack("<I", val_raw)
+            src = raw[off : off + total]
+        tags[tag] = src if typ == _T_ASCII else list(struct.unpack("<" + code * cnt, src))
+    return tags
+
+
+class _Layout(NamedTuple):
+    """One IFD's image layout: sizes, tile grid and decode parameters."""
+
+    tags: dict
+    width: int
+    height: int
+    tile_w: int
+    tile_h: int
+    n_tx: int
+    n_ty: int
+    n_bands: int
+    dtype: str
+    comp: int
+    predictor: int
+
+    def tiles(self, x0: int, y0: int, x1: int, y1: int):
+        """(band, tx, ty, byte offset, byte count) of every tile
+        meeting the pixel window [x0, x1) × [y0, y1), in file order:
+        band-major, then row-major."""
+        offsets, counts = self.tags[TAG_TILE_OFFSETS], self.tags[TAG_TILE_BYTES]
+        for band in range(self.n_bands):
+            for ty in range(y0 // self.tile_h, -(-y1 // self.tile_h)):
+                for tx in range(x0 // self.tile_w, -(-x1 // self.tile_w)):
+                    i = (band * self.n_ty + ty) * self.n_tx + tx
+                    yield band, tx, ty, offsets[i], counts[i]
+
+
+def _layout(raw: bytes, level: int) -> _Layout:
+    """Layout step: IFD ``level`` of the chain → its ``_Layout``.
+    Malformed or unsupported images raise ``ValueError``."""
+    chain = _ifd_chain(raw)
+    if not 0 <= level < len(chain):
+        raise ValueError(f"overview level {level} beyond IFD chain")
+    tags = _parse_ifd(raw, chain[level])
+    required = (TAG_WIDTH, TAG_LENGTH, TAG_BITS, TAG_TILE_W, TAG_TILE_H,
+                TAG_TILE_OFFSETS, TAG_TILE_BYTES)
+    if any(t not in tags for t in required):
+        raise ValueError(f"not a tiled TIFF image: tags {required} are required")
+    width, height = tags[TAG_WIDTH][0], tags[TAG_LENGTH][0]
+    tw, th = tags[TAG_TILE_W][0], tags[TAG_TILE_H][0]
+    n_tx, n_ty = -(-width // tw), -(-height // th)
+    n_bands = tags.get(TAG_SAMPLES, [1])[0]
+    if n_bands > 1 and tags.get(TAG_PLANAR, [1])[0] != 2:
+        raise ValueError("multi-band reads support PlanarConfiguration=2 only")
+    n_tiles = n_bands * n_tx * n_ty
+    if len(tags[TAG_TILE_OFFSETS]) != n_tiles or len(tags[TAG_TILE_BYTES]) != n_tiles:
+        raise ValueError(f"tile index does not hold the {n_tiles} tiles of the image")
+    sample = (tags[TAG_BITS][0], tags.get(TAG_SAMPLE_FORMAT, [1])[0])
+    if sample not in _DTYPE_NAMES:
+        raise ValueError(f"unsupported (BitsPerSample, SampleFormat) {sample}")
+    dtype = _DTYPE_NAMES[sample]
+    comp = tags.get(TAG_COMPRESSION, [1])[0]
+    if comp not in (1, 5, 7, 8):
+        raise ValueError(f"unsupported TIFF compression {comp}")
+    predictor = tags.get(TAG_PREDICTOR, [1])[0]
+    if predictor not in (1, 2):
+        raise ValueError(f"unsupported TIFF predictor {predictor}")
+    if predictor == 2 and not np.issubdtype(_DTYPES[dtype][2], np.integer):
+        raise ValueError("horizontal-differencing predictor is integer-only")
+    return _Layout(tags, width, height, tw, th, n_tx, n_ty, n_bands, dtype, comp, predictor)
+
+
+def _decode_tile(buf: bytes, shape: tuple[int, int], npdt, comp: int, predictor: int):
+    """One tile's bytes — exactly its [offset, offset + count) range,
+    the COG unit of IO — → its ``shape`` (tile_h, tile_w) array."""
+    import zlib
+
+    if comp == 7:
+        # new-style JPEG: the tile IS a complete interchange stream
+        from earth_data_kit_spark.operators.jpeg import decode_jpeg
+
+        tile = decode_jpeg(buf).astype(npdt)
+        if tile.shape != tuple(shape):
+            raise ValueError(f"JPEG tile dims {tile.shape} != tile grid {tuple(shape)}")
+    else:
+        if comp == 8:
+            buf = zlib.decompress(buf)
+        elif comp == 5:
+            buf = lzw_decompress(buf)
+        tile = np.frombuffer(buf, dtype=npdt).reshape(shape)
+    if predictor == 2:
+        # undo horizontal differencing: rows accumulate left to
+        # right with wraparound in the sample width (TIFF §14)
+        u = tile.view(f"<u{tile.itemsize}")
+        tile = np.cumsum(u, axis=1, dtype=u.dtype).view(npdt)
+    return tile
+
+
+def _read_window(raw: bytes, lay: _Layout, xoff: int, yoff: int, xsize: int, ysize: int):
+    """The one tile-placement loop: decode the tiles meeting the
+    window and copy each one's overlap into place.  (ysize, xsize)
+    for one band, else (bands, ysize, xsize)."""
+    if xoff < 0 or yoff < 0 or xoff + xsize > lay.width or yoff + ysize > lay.height:
+        raise ValueError(
+            f"window ({xoff},{yoff},{xsize},{ysize}) outside {lay.width}x{lay.height}"
+        )
+    tw, th = lay.tile_w, lay.tile_h
+    npdt = _DTYPES[lay.dtype][2]
+    out = np.zeros((lay.n_bands, ysize, xsize), dtype=npdt)
+    for band, tx, ty, off, cnt in lay.tiles(xoff, yoff, xoff + xsize, yoff + ysize):
+        tile = _decode_tile(raw[off : off + cnt], (th, tw), npdt, lay.comp, lay.predictor)
+        # overlap of this tile with the window, in both frames
+        gx0, gx1 = max(xoff, tx * tw), min(xoff + xsize, tx * tw + tw)
+        gy0, gy1 = max(yoff, ty * th), min(yoff + ysize, ty * th + th)
+        out[band, gy0 - yoff : gy1 - yoff, gx0 - xoff : gx1 - xoff] = tile[
+            gy0 - ty * th : gy1 - ty * th, gx0 - tx * tw : gx1 - tx * tw
+        ]
+    return out[0] if lay.n_bands == 1 else out
+
+
+def _read_image(raw: bytes, level: int) -> tuple:
+    """(full-extent array, tags) of IFD ``level``."""
+    lay = _layout(raw, level)
+    return _read_window(raw, lay, 0, 0, lay.width, lay.height), lay.tags
 
 
 def downsample_2x2_mean(a: np.ndarray) -> np.ndarray:
@@ -647,9 +675,9 @@ def export_cog(blocks, path: str, width: int, height: int, tile: int = 256,
         key = (tx, ty) if len(bands) == 1 else (b_idx[r["band"]], tx, ty)
         tiles[key] = a
     # overview pyramid: assemble each band's full mosaic once, then
-    # factor-2 reduce per level (2×2 mean — the blocks.regrid_bilinear
-    # math degenerates to exactly this at scale 0.5 with pixel-center
-    # alignment) and re-tile on the same COG tile grid.  Built in the
+    # factor-2 reduce per level (2×2 mean — the bilinear kernel of
+    # blocks.regrid_bilinear_blocks degenerates to exactly this at
+    # scale 0.5 with pixel-center alignment) and re-tile on the same COG tile grid.  Built in the
     # single-writer step from bytes already collected — no extra
     # Spark pass; at scale each level is one more reduce of the block
     # table before the fan-in.

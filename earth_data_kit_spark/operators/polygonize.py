@@ -217,8 +217,8 @@ def polygonize(
 
     ``wkt``: POLYGON (shell, holes…) over pixel-lattice vertex
     coordinates, or geo coordinates when an axis-aligned ``gt`` is
-    given.  Pixels equal to the block's ``nodataval`` are background
-    (no polygon), exactly as ``region_label``.  Region ids and pixel
+    given.  Pixels equal to the block's ``nodataval``, or NaN, are
+    background (no polygon), exactly as ``region_label``.  Region ids and pixel
     counts match ``region_label`` row-for-row (the two share the
     labelling body, border join, label merge and remap); the suite regions→polygonize→
     contour documentation lives in SCALE.md."""

@@ -32,10 +32,11 @@ its interior boundary edges:
    (sum counts, min/max bbox).
 
 Output: (region bigint, value double, n_px bigint, xmin, ymin,
-xmax, ymax int) — one row per connected region.  ``background``
-pixels (nodata) form no region.  The call is eager: the labelled
-blocks are cached for the call only and the result is materialized
-by ``localCheckpoint`` before the cache is released.
+xmax, ymax int) — one row per connected region, valued by the
+stored (unscaled) sample.  ``background`` pixels — nodata or NaN,
+the ``blocks._samples`` rule — form no region.  The call is eager:
+the labelled blocks are cached for the call only and the result is
+materialized by ``localCheckpoint`` before the cache is released.
 """
 
 from __future__ import annotations
@@ -47,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from earth_data_kit_spark.operators.blocks import _decode
+from earth_data_kit_spark.operators.blocks import _decode, _samples
 from earth_data_kit_spark.operators.dedup import dup_clusters
 
 # local regions per block are numbered 0..n-1; global uniqueness via
@@ -148,11 +149,7 @@ def _label_map(
             out = []
             for _, r in pdf.iterrows():
                 arr = _decode(r).astype(np.float64)
-                nod = r["nodataval"]
-                valid = np.ones(arr.shape, dtype=bool)
-                if nod is not None and not np.isnan(nod):
-                    valid = arr != nod
-                labels, n = _label_block(arr, valid)
+                labels, n = _label_block(arr, ~np.isnan(_samples(r)))
                 bx, by = int(r["block_x"]), int(r["block_y"])
                 xo, yo = int(r["xoff"]), int(r["yoff"])
                 base = (by * n_bx + bx) * _BLOCK_STRIDE
@@ -255,7 +252,8 @@ def region_label(
 ) -> DataFrame:
     """Connected equal-valued regions of a blocks raster → one row
     per region: (region, value, n_px, xmin, ymin, xmax, ymax).
-    Pixels equal to the block's ``nodataval`` are background."""
+    Pixels equal to the block's ``nodataval``, or NaN, are
+    background."""
     raw = _label_map(blocks, raster_size, block).persist()
     try:
         _, mapping = _merge(raw)

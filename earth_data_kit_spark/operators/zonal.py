@@ -16,7 +16,8 @@ prefilter-then-refine and ``blocks.block_mean``'s partial+final):
    pruned before its payload is ever read.
 2. Arrow partial stage: per surviving pair, decode the block once,
    mask its pixel centres (``grid.geom.pixel_mask``: rectangle
-   closed-form or ray-cast), drop nodata, apply scale/offset, emit
+   closed-form or ray-cast), decode through ``blocks._samples``
+   (nodata → NaN, scale/offset), drop NaN samples, emit
    (code, band, sum, sum_sq, count, min, max).
 3. Final NATIVE agg by (code, band): mean/std/min/max/count — one
    shuffle of O(pairs) partial rows, never pixels.
@@ -66,24 +67,20 @@ def zonal_stats(
     pairs = P.block_pairs(blocks, polygons, gt, tile_px, "inner")
 
     def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from earth_data_kit_spark.operators.blocks import _decode
+        from earth_data_kit_spark.operators.blocks import _samples
 
         wkt_cache: dict[str, tuple] = {}
         for pdf in batches:
             out = []
             for r in pdf.itertuples(index=False):
-                arr = _decode(r._asdict()).astype(np.float64)
-                nod = r.nodataval
-                valid = np.ones(arr.shape, dtype=bool)
-                if nod is not None and not np.isnan(nod):
-                    valid &= arr != nod
+                v = _samples(r._asdict())
                 # pixel-center coordinates of this block's window
                 xs = x0 + (np.arange(r.xoff, r.xoff + r.xsize) + 0.5) * xres
                 ys = y0 + (np.arange(r.yoff, r.yoff + r.ysize) + 0.5) * yres
                 mask = geom.pixel_mask(
                     xs, ys, r.wkt, (r.xmin, r.ymin, r.xmax, r.ymax), wkt_cache
                 )
-                sel = arr[mask & valid] * r.scale + r.offset
+                sel = v[mask & ~np.isnan(v)]
                 if sel.size == 0:
                     continue
                 out.append(

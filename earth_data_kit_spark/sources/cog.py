@@ -30,35 +30,14 @@ map-only, and the expensive stage starts only after pruning.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from pathlib import Path
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from earth_data_kit_spark.operators.gtiff import (
-    TAG_BITS,
-    TAG_COMPRESSION,
-    TAG_LENGTH,
-    TAG_NODATA,
-    TAG_PLANAR,
-    TAG_PREDICTOR,
-    TAG_SAMPLES,
-    TAG_SAMPLE_FORMAT,
-    TAG_TILE_BYTES,
-    TAG_TILE_H,
-    TAG_TILE_OFFSETS,
-    TAG_TILE_W,
-    TAG_WIDTH,
-    _parse_ifd,
-)
-
-_DTYPE_NAME = {
-    (8, 1): "uint8", (8, 2): "int8",
-    (16, 1): "uint16", (16, 2): "int16",
-    (32, 1): "uint32", (32, 2): "int32", (32, 3): "float32",
-    (64, 3): "float64",
-}
+from earth_data_kit_spark.operators.gtiff import _DTYPES, TAG_NODATA, _layout
 
 INDEX_SCHEMA = (
     "path string, band int, tx int, ty int, xoff int, yoff int, "
@@ -73,42 +52,16 @@ def cog_tile_index(spark: SparkSession, path: str, level: int = 0) -> DataFrame:
     bytes touched.  Columns per INDEX_SCHEMA; filter on the pixel
     window columns, then feed the survivors to
     ``cog_decode_blocks``."""
-    import struct
-
-    raw = open(path, "rb").read()  # header parse; tile data unused here
-    order, magic, ifd = struct.unpack_from("<2sHI", raw, 0)
-    assert order == b"II" and magic == 42, "not a little-endian TIFF"
-    for _ in range(level):
-        _, ifd = _parse_ifd(raw, ifd)
-        if not ifd:
-            raise ValueError(f"overview level {level} beyond IFD chain")
-    tags, _ = _parse_ifd(raw, ifd)
-    width, height = tags[TAG_WIDTH][0], tags[TAG_LENGTH][0]
-    tw, th = tags[TAG_TILE_W][0], tags[TAG_TILE_H][0]
-    n_tx, n_ty = -(-width // tw), -(-height // th)
-    n_bands = tags.get(TAG_SAMPLES, [1])[0]
-    if n_bands > 1 and tags.get(TAG_PLANAR, [1])[0] != 2:
-        raise ValueError("multi-band COG scan supports PlanarConfiguration=2 only")
-    bits = tags[TAG_BITS][0]
-    fmt = tags.get(TAG_SAMPLE_FORMAT, [1])[0]
-    dtype = _DTYPE_NAME[(bits, fmt)]
-    nod = tags.get(TAG_NODATA)
+    lay = _layout(Path(path).read_bytes(), level)  # tile data unused here
+    nod = lay.tags.get(TAG_NODATA)
     nodata = float(nod.rstrip(b"\x00")) if nod else None
-    comp = tags.get(TAG_COMPRESSION, [1])[0]
-    pred = tags.get(TAG_PREDICTOR, [1])[0]
-    rows = []
-    per_band = n_tx * n_ty
-    for idx, (off, cnt) in enumerate(
-        zip(tags[TAG_TILE_OFFSETS], tags[TAG_TILE_BYTES])
-    ):
-        band, rem = divmod(idx, per_band)
-        ty, tx = divmod(rem, n_tx)
-        xo, yo = tx * tw, ty * th
-        rows.append(
-            (path, band, tx, ty, xo, yo,
-             min(tw, width - xo), min(th, height - yo), tw, th,
-             off, cnt, dtype, nodata, comp, pred, bits)
-        )
+    tw, th = lay.tile_w, lay.tile_h
+    rows = [
+        (path, band, tx, ty, tx * tw, ty * th,
+         min(tw, lay.width - tx * tw), min(th, lay.height - ty * th), tw, th,
+         off, cnt, lay.dtype, nodata, lay.comp, lay.predictor, _DTYPES[lay.dtype][0])
+        for band, tx, ty, off, cnt in lay.tiles(0, 0, lay.width, lay.height)
+    ]
     return spark.createDataFrame(rows, INDEX_SCHEMA)
 
 
@@ -126,19 +79,13 @@ def cog_decode_blocks(index: DataFrame) -> DataFrame:
         for pdf in batches:
             out = []
             for _, r in pdf.iterrows():
-                raw = handles.setdefault(r["path"], open(r["path"], "rb").read())
-                # _decode_tile reads [offset, offset+count) through the
-                # tag dict — synthesize the minimal tag view it needs
-                tags = {
-                    TAG_TILE_H: [int(r["tile_h"])],
-                    TAG_TILE_W: [int(r["tile_w"])],
-                    TAG_TILE_OFFSETS: [int(r["byte_offset"])],
-                    TAG_TILE_BYTES: [int(r["byte_count"])],
-                }
-                npdt = np.dtype(r["dtype"])
+                if r["path"] not in handles:
+                    handles[r["path"]] = Path(r["path"]).read_bytes()
+                off = int(r["byte_offset"])
                 tile = _decode_tile(
-                    raw, tags, 0, npdt, int(r["compression"]),
-                    int(r["predictor"]), int(r["bits"]),
+                    handles[r["path"]][off : off + int(r["byte_count"])],
+                    (int(r["tile_h"]), int(r["tile_w"])), _DTYPES[r["dtype"]][2],
+                    int(r["compression"]), int(r["predictor"]),
                 )
                 clip = tile[: int(r["ysize"]), : int(r["xsize"])]
                 out.append(

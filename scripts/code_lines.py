@@ -6,14 +6,18 @@ Blank lines, comment-only lines and docstrings do not count; every
 line of a multi-line statement or string literal does.
 
     python scripts/code_lines.py earth_data_kit_spark/operators/dedup.py ...
+    python scripts/code_lines.py earth_data_kit_spark
 
-Prints one ``<count>  <path>`` line per file and a ``total`` line.
+A directory stands for its ``*.py`` files, recursively.  Prints one
+``<count>  <path>`` line per file and a ``total`` line.
 """
 
 from __future__ import annotations
 
 import ast
 import io
+import os
+import pathlib
 import sys
 import tokenize
 
@@ -40,9 +44,21 @@ def code_lines(source: str) -> int:
     return len(lines)
 
 
+def _files(paths: list[str]) -> list[str]:
+    """``paths`` with each directory replaced by its ``*.py`` files,
+    recursively and in sorted order."""
+    out: list[str] = []
+    for path in paths:
+        if os.path.isdir(path):
+            out += sorted(str(p) for p in pathlib.Path(path).rglob("*.py"))
+        else:
+            out.append(path)
+    return out
+
+
 def main(paths: list[str]) -> None:
     total = 0
-    for path in paths:
+    for path in _files(paths):
         with open(path, encoding="utf-8") as f:
             n = code_lines(f.read())
         total += n

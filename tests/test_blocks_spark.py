@@ -67,7 +67,8 @@ def test_block_mean_is_partial_final(spark, blocks):
 
 def test_regrid_bilinear_matches_oracle(spark):
     bl = B.synth_blocks_df(spark, 64, 64, 32, nodata=-1.0, scale=1.0)
-    out = B.regrid_bilinear(bl, (64, 64), (32, 32)).collect()
+    # one dst block covers the whole dst grid: the single-group regrid
+    out = B.regrid_bilinear_blocks(bl, (64, 64), (32, 32), dst_block=32).collect()
     assert len(out) == 1
     got = np.array(out[0]["values"], dtype=np.float32).reshape(32, 32)
 
@@ -188,7 +189,8 @@ def test_regrid_nearest_matches_oracle_and_identity(spark):
     (every output value IS a source value, no blending), identity
     regrid exact."""
     bl = B.synth_blocks_df(spark, 64, 64, 32, nodata=-1.0, scale=1.0)
-    out = B.regrid_bilinear(bl, (64, 64), (48, 48), method="nearest").collect()
+    out = B.regrid_bilinear_blocks(bl, (64, 64), (48, 48), dst_block=48, method="nearest").collect()
+    assert len(out) == 1
     got = np.array(out[0]["values"], dtype=np.float32).reshape(48, 48)
 
     xg, yg = np.meshgrid(np.arange(64), np.arange(64))
@@ -199,13 +201,14 @@ def test_regrid_nearest_matches_oracle_and_identity(spark):
     assert (both_nan | (got == exp)).all()
     assert np.isin(got[~np.isnan(got)], full[~np.isnan(full)]).all()
 
-    ident = B.regrid_bilinear(bl, (64, 64), (64, 64), method="nearest").collect()
+    ident = B.regrid_bilinear_blocks(bl, (64, 64), (64, 64), dst_block=64, method="nearest").collect()
+    assert len(ident) == 1
     gid = np.array(ident[0]["values"], dtype=np.float32).reshape(64, 64)
     bn = np.isnan(gid) & np.isnan(full)
     assert (bn | (gid == full.astype(np.float32))).all()
 
     with pytest.raises(NotImplementedError, match="cubic"):
-        B.regrid_bilinear(bl, (64, 64), (32, 32), method="cubic")
+        B.regrid_bilinear_blocks(bl, (64, 64), (32, 32), dst_block=32, method="cubic")
 
 
 @pytest.mark.parametrize("dst", [(96, 64), (256, 320)])  # down- and up-sample

@@ -91,3 +91,17 @@ def test_plan_broadcast_probe(spark, docs, eval_df):
     # no sort-merge join anywhere: the corpus side must not shuffle
     # for the probe
     assert "SortMergeJoin" not in plan
+
+
+def test_shingle_udf_runs_once_per_side(spark, docs, eval_df):
+    """One distinct eval table carries each example's n-gram count, so
+    the executed plan holds exactly two shingle ArrowEvalPython nodes
+    (corpus and eval), with one broadcast join."""
+    rep = contamination_report(docs, eval_df, shingle_k=13)
+    rep.collect()
+    plan = rep._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the final plan that ran
+    lines = plan.toString().splitlines()
+    assert sum("ArrowEvalPython" in ln and "_sh(" in ln for ln in lines) == 2
+    assert sum("BroadcastHashJoin" in ln for ln in lines) == 1

@@ -3,6 +3,8 @@ GTiff via GDAL (edk_accessor.py:131-183); here the tiled-GeoTIFF byte
 layout is produced from the TIFF 6.0 / GeoTIFF 1.1 specs directly and
 verified by a spec-following reader + structural assertions."""
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -358,62 +360,79 @@ def test_gtiff_lzw_compression_roundtrip(tmp_path):
     assert tags[TAG_COMPRESSION] == [5]
 
 
-def test_gtiff_reader_undoes_horizontal_predictor(tmp_path):
+def _hand_tiff(path, payload, entries):
+    """Write a one-IFD, one-tile little-endian TIFF by hand, straight
+    from the spec: ``entries`` are (tag, type, count, little-endian
+    value bytes); values over 4 bytes go after the IFD, and the
+    TileOffsets entry added here points at ``payload``."""
+    entries = sorted([*entries, (324, 4, 1, None)], key=lambda e: e[0])
+    ext, pos = {}, 8 + 2 + 12 * len(entries) + 4
+    for tag, _, _, blob in entries:
+        if blob is not None and len(blob) > 4:
+            ext[tag] = pos
+            pos += len(blob)
+    out = bytearray(struct.pack("<2sHIH", b"II", 42, 8, len(entries)))
+    for tag, typ, cnt, blob in entries:
+        val = struct.pack("<I", ext.get(tag, pos)) if blob is None or tag in ext else blob
+        out += struct.pack("<HHI", tag, typ, cnt) + val.ljust(4, b"\x00")
+    out += struct.pack("<I", 0)
+    out += b"".join(blob for tag, _, _, blob in entries if tag in ext)
+    assert len(out) == pos
+    open(path, "wb").write(bytes(out) + payload)
+
+
+def _short(v):
+    return struct.pack("<H", v)
+
+
+def _long(v):
+    return struct.pack("<I", v)
+
+
+def _predictor_tiff(path):
     """Predictor=2 (horizontal differencing) is what GDAL writes with
-    LZW; our writer never emits it, so build the file bytes BY HAND:
-    difference the rows, LZW-compress, patch a predictor tag into a
-    writer-produced file's tile payload is fragile — instead write a
-    minimal single-tile TIFF from scratch in the test."""
-    import struct
-
-    import numpy as np
-
-    from earth_data_kit_spark.operators.gtiff import (
-        TAG_PREDICTOR,
-        lzw_compress,
-        read_gtiff,
-    )
+    LZW; our writer never emits it, so the file is built by hand:
+    difference the rows, LZW-compress, one 8×8 int16 tile.  Returns
+    the pixels."""
+    from earth_data_kit_spark.operators.gtiff import lzw_compress
 
     rng = np.random.default_rng(4)
     a = rng.integers(-300, 300, size=(8, 8), dtype=np.int16)
     diff = a.astype(np.int64).copy()
     diff[:, 1:] = (a[:, 1:].astype(np.int64) - a[:, :-1].astype(np.int64))
-    payload_tile = lzw_compress((diff & 0xFFFF).astype(np.uint16).astype("<u2").tobytes())
+    payload = lzw_compress((diff & 0xFFFF).astype(np.uint16).astype("<u2").tobytes())
+    _hand_tiff(path, payload, [
+        (256, 4, 1, _long(8)), (257, 4, 1, _long(8)),   # width, length
+        (258, 3, 1, _short(16)), (259, 3, 1, _short(5)),  # bits, LZW
+        (262, 3, 1, _short(1)), (277, 3, 1, _short(1)),
+        (317, 3, 1, _short(2)),                          # predictor: horizontal differencing
+        (322, 4, 1, _long(8)), (323, 4, 1, _long(8)),   # tile w, h
+        (325, 4, 1, _long(len(payload))),                # tile byte counts
+        (339, 3, 1, _short(2)),                          # sample format: signed int
+    ])
+    return a
 
-    entries = []  # (tag, type, count, packed-little-endian values)
-    def add(tag, typ, cnt, vals):
-        entries.append((tag, typ, cnt, vals))
 
-    T_SHORT, T_LONG = 3, 4
-    add(256, T_LONG, 1, [8])       # width
-    add(257, T_LONG, 1, [8])       # length
-    add(258, T_SHORT, 1, [16])     # bits
-    add(259, T_SHORT, 1, [5])      # LZW
-    add(262, T_SHORT, 1, [1])
-    add(277, T_SHORT, 1, [1])
-    add(317, T_SHORT, 1, [2])      # predictor: horizontal differencing
-    add(322, T_LONG, 1, [8])       # tile w
-    add(323, T_LONG, 1, [8])       # tile h
-    add(339, T_SHORT, 1, [2])      # sample format: signed int
-    data_off = 8 + 2 + 12 * (len(entries) + 2) + 4
-    add(324, T_LONG, 1, [data_off])            # tile offsets
-    add(325, T_LONG, 1, [len(payload_tile)])   # tile byte counts
-    entries.sort(key=lambda e: e[0])
-    out = bytearray(struct.pack("<2sHI", b"II", 42, 8))
-    out += struct.pack("<H", len(entries))
-    for tag, typ, cnt, vals in entries:
-        code = {T_SHORT: "H", T_LONG: "I"}[typ]
-        blob = struct.pack("<" + code * cnt, *vals).ljust(4, b"\x00")
-        out += struct.pack("<HHI", tag, typ, cnt) + blob
-    out += struct.pack("<I", 0)
-    assert len(out) == data_off
-    out += payload_tile
+def test_gtiff_reader_undoes_horizontal_predictor(tmp_path):
+    from earth_data_kit_spark.operators.gtiff import TAG_PREDICTOR, read_gtiff
+
     p = str(tmp_path / "pred2.tif")
-    open(p, "wb").write(bytes(out))
-
+    a = _predictor_tiff(p)
     got, tags = read_gtiff(p)
     assert tags[TAG_PREDICTOR] == [2]
     assert np.array_equal(got, a)
+
+
+def test_cog_scan_undoes_horizontal_predictor(spark, tmp_path):
+    """The distributed COG source decodes predictor-2 tiles like the
+    reader does (its decode step once crashed on them)."""
+    from earth_data_kit_spark.sources.cog import cog_scan
+
+    p = str(tmp_path / "pred2.tif")
+    a = _predictor_tiff(p)
+    (r,) = cog_scan(spark, p).collect()
+    assert r["dtype"] == "int16" and (r["xsize"], r["ysize"]) == (8, 8)
+    assert np.array_equal(np.frombuffer(r["payload"], dtype=np.int16).reshape(8, 8), a)
 
 
 def _psnr(a, b):
@@ -546,3 +565,55 @@ def test_read_gtiff_window_multiband_and_overview(tmp_path):
     assert np.array_equal(lv1, ov[7:37, 5:45])
     with pytest.raises(ValueError, match="beyond IFD chain"):
         gtiff.read_gtiff_window(p2, 0, 0, 4, 4, level=2)
+
+
+def _uint8_tiff(path, extra=(), tile_w=(4, _long(4))):
+    """A hand-built 4×4 uint8 TIFF of one tile plus the ``extra``
+    entries; ``tile_w`` is TileWidth's (field type, value bytes).
+    Returns the pixels."""
+    a = np.arange(16, dtype=np.uint8).reshape(4, 4)
+    _hand_tiff(path, a.tobytes(), [
+        (256, 4, 1, _long(4)), (257, 4, 1, _long(4)), (258, 3, 1, _short(8)),
+        (259, 3, 1, _short(1)), (262, 3, 1, _short(1)), (322, tile_w[0], 1, tile_w[1]),
+        (323, 4, 1, _long(4)), (325, 4, 1, _long(a.nbytes)), *extra,
+    ])
+    return a
+
+
+def test_reader_skips_field_types_it_does_not_decode(tmp_path):
+    """TIFF 6.0 §2: a reader skips entries of a field type it does not
+    decode — here XResolution/YResolution as RATIONAL — unless it needs
+    the tag, in which case the file is rejected with ValueError."""
+    p = str(tmp_path / "rational.tif")
+    rational = struct.pack("<II", 72, 1)
+    a = _uint8_tiff(p, [(282, 5, 1, rational), (283, 5, 1, rational)])
+    got, tags = gtiff.read_gtiff(p)
+    assert np.array_equal(got, a)
+    assert 282 not in tags and tags[gtiff.TAG_TILE_W] == [4]
+    assert np.array_equal(gtiff.read_gtiff_window(p, 1, 1, 2, 3), a[1:4, 1:3])
+
+    bad = str(tmp_path / "rational_tile_w.tif")
+    _uint8_tiff(bad, tile_w=(5, rational))
+    with pytest.raises(ValueError, match="field type 5"):
+        gtiff.read_gtiff(bad)
+
+
+def test_reader_rejects_non_tiff_and_big_endian_headers(spark, tmp_path):
+    """The header check is a ValueError (files come from outside the
+    program), on every read path: full, IFD chain, window and the
+    COG source index."""
+    from earth_data_kit_spark.sources.cog import cog_tile_index
+
+    big = tmp_path / "big.tif"
+    big.write_bytes(b"MM\x00\x2a\x00\x00\x00\x08" + bytes(64))
+    other = tmp_path / "other.tif"
+    other.write_bytes(b"\x89PNG\r\n\x1a\n" + bytes(64))
+    for path, msg in ((big, "big-endian"), (other, "not a little-endian TIFF")):
+        for read in (
+            gtiff.read_gtiff,
+            gtiff.read_gtiff_ifds,
+            lambda q: gtiff.read_gtiff_window(q, 0, 0, 1, 1),
+            lambda q: cog_tile_index(spark, q),
+        ):
+            with pytest.raises(ValueError, match=msg):
+                read(str(path))

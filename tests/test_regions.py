@@ -124,3 +124,15 @@ def test_labelling_leaves_no_cache(spark, name):
     spark.catalog.clearCache()
     LABELLERS[name](_blocks_df(spark, arr, nodataval=-1.0), (W, H), B).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_nan_pixels_are_background(spark):
+    """A NaN sample is missing, as a nodata one is (focal output marks
+    nodata that way): a NaN stripe splits the raster into two regions
+    and forms none itself, in region_label and polygonize alike."""
+    arr = np.full((H, W), 3.0, dtype=np.float32)
+    arr[:, 100:110] = np.nan
+    got = _got_regions(spark, arr)  # nodataval NaN
+    assert got == _oracle_regions(np.where(np.isnan(arr), -9.0, arr), nodataval=-9.0)
+    assert len(got) == 2
+    assert polygonize(_blocks_df(spark, arr), (W, H), B).count() == 2

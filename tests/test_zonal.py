@@ -106,3 +106,39 @@ def test_plan_broadcasts_polygons(spark):
     df = zonal_stats(blocks, [Polygon("A", "a", bbox=(10.0, 20.0, 40.0, 50.0))], GT)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan
+
+
+def test_zones_skip_nan_samples_of_focal_output(spark):
+    """focal_map marks nodata as NaN samples (nodataval=NaN); the
+    zonal partials read NaN as missing, so a zone touching the NaN
+    slope stripe keeps finite stats over its other pixels."""
+    from earth_data_kit_spark.operators.focal import focal_map
+
+    slope = focal_map(synth_blocks_df(spark, W, H, 128, nodata_stripe=True),
+                      (W, H), 128, "slope", gt=GT)
+    polys = [
+        Polygon("A", "a", bbox=(12.03, 41.02, 20.57, 45.49)),  # off the stripe
+        Polygon("B", "b", bbox=(10.01, 48.0, 11.99, 49.99)),   # row 0 stripe
+        Polygon("Y", "y", bbox=(12.0, 30.0, 20.0, 37.27)),     # row 194 stripe
+    ]
+    got = {r["code"]: r.asDict() for r in zonal_stats(slope, polys, GT).collect()}
+    # nan-aware oracle: Horn slope of the decoded raster on the
+    # unblocked array (NaN spreads over each stripe pixel's 3×3),
+    # stored as float32 like the focal output
+    v, valid, lon, lat = _synth()
+    z = np.pad(np.where(valid, v * 1e-4, np.nan), 1, mode="edge")
+    dzdx = ((z[:-2, 2:] + 2 * z[1:-1, 2:] + z[2:, 2:])
+            - (z[:-2, :-2] + 2 * z[1:-1, :-2] + z[2:, :-2])) / (8 * 0.1)
+    dzdy = ((z[2:, :-2] + 2 * z[2:, 1:-1] + z[2:, 2:])
+            - (z[:-2, :-2] + 2 * z[:-2, 1:-1] + z[:-2, 2:])) / (8 * 0.1)
+    s = np.degrees(np.arctan(np.hypot(dzdx, dzdy))).astype(np.float32).astype(np.float64)
+    for p in polys:
+        xmin, ymin, xmax, ymax = p.bbox
+        mask = (lon >= xmin) & (lon <= xmax) & (lat >= ymin) & (lat <= ymax)
+        sel = s[mask & ~np.isnan(s)]
+        assert (sel.size < mask.sum()) == (p.code != "A")
+        row = got[p.code]
+        assert row["n_px"] == sel.size
+        for k, e in (("mean_v", sel.mean()), ("std_v", sel.std()),
+                     ("min_v", sel.min()), ("max_v", sel.max())):
+            assert row[k] == pytest.approx(e, rel=1e-6), (p.code, k)
