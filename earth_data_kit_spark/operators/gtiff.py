@@ -455,16 +455,28 @@ def _ifd_chain(raw: bytes) -> list[int]:
     while ifd:
         if ifd in chain:
             raise ValueError("cyclic TIFF IFD chain")
-        chain.append(ifd)
+        _check_range(raw, ifd, 2, f"IFD {len(chain)} entry count")
         (n,) = struct.unpack_from("<H", raw, ifd)
+        _check_range(raw, ifd + 2, 12 * n + 4, f"IFD {len(chain)} entry table")
+        chain.append(ifd)
         (ifd,) = struct.unpack_from("<I", raw, ifd + 2 + 12 * n)
     return chain
 
 
-def _parse_ifd(raw: bytes, ifd: int) -> dict:
-    """One IFD's tags (tag id → value list; ASCII as bytes) — the
-    metadata a COG reader resolves from the header bytes without
-    touching tile data."""
+def _check_range(raw: bytes, off: int, size: int, what: str) -> None:
+    """``ValueError`` naming ``what`` unless bytes [off, off + size)
+    lie inside the file (a truncated or corrupt file)."""
+    if off + size > len(raw):
+        raise ValueError(
+            f"TIFF {what}: bytes [{off}, {off + size}) run past the end of the file ({len(raw)} bytes)"
+        )
+
+
+def _parse_ifd(raw: bytes, ifd: int, level: int) -> dict:
+    """IFD ``level``'s tags (tag id → value list; ASCII as bytes) —
+    the metadata a COG reader resolves from the header bytes without
+    touching tile data.  ``ifd`` comes from ``_ifd_chain``, which has
+    range-checked its entry table."""
     (n,) = struct.unpack_from("<H", raw, ifd)
     tags = {}
     for i in range(n):
@@ -479,6 +491,7 @@ def _parse_ifd(raw: bytes, ifd: int) -> dict:
             src = val_raw[:total]
         else:
             (off,) = struct.unpack("<I", val_raw)
+            _check_range(raw, off, total, f"IFD {level} tag {tag} value")
             src = raw[off : off + total]
         tags[tag] = src if typ == _T_ASCII else list(struct.unpack("<" + code * cnt, src))
     return tags
@@ -517,7 +530,7 @@ def _layout(raw: bytes, level: int) -> _Layout:
     chain = _ifd_chain(raw)
     if not 0 <= level < len(chain):
         raise ValueError(f"overview level {level} beyond IFD chain")
-    tags = _parse_ifd(raw, chain[level])
+    tags = _parse_ifd(raw, chain[level], level)
     required = (TAG_WIDTH, TAG_LENGTH, TAG_BITS, TAG_TILE_W, TAG_TILE_H,
                 TAG_TILE_OFFSETS, TAG_TILE_BYTES)
     if any(t not in tags for t in required):
@@ -531,6 +544,8 @@ def _layout(raw: bytes, level: int) -> _Layout:
     n_tiles = n_bands * n_tx * n_ty
     if len(tags[TAG_TILE_OFFSETS]) != n_tiles or len(tags[TAG_TILE_BYTES]) != n_tiles:
         raise ValueError(f"tile index does not hold the {n_tiles} tiles of the image")
+    for i, (off, cnt) in enumerate(zip(tags[TAG_TILE_OFFSETS], tags[TAG_TILE_BYTES])):
+        _check_range(raw, off, cnt, f"IFD {level} tile {i}")
     sample = (tags[TAG_BITS][0], tags.get(TAG_SAMPLE_FORMAT, [1])[0])
     if sample not in _DTYPE_NAMES:
         raise ValueError(f"unsupported (BitsPerSample, SampleFormat) {sample}")

@@ -20,7 +20,12 @@ Spark:
   resume-filter, commit, re-read the stage directory.  There is no
   emptiness probe before the write (it would run the stage's plan,
   Python UDFs included, a second time): a fully committed stage
-  still runs its write once, observes no keys, and appends nothing.
+  still runs its write once, observes no keys, and appends nothing;
+* the bookkeeping frames — the empty completed-keys frame of a fresh
+  base, the keys written by this call, the empty lineage frame of a
+  fully committed stage — are planned in the JVM (``range(0)``, an
+  ``isin`` filter), never built from a Python list, so lineage starts
+  no PythonRDD job and runs no Python.
 
 Iceberg would give this via snapshot atomicity; the sandbox has no
 Iceberg jar, so the same semantics run on parquet + a lineage parquet
@@ -107,22 +112,22 @@ def commit_stage(
     keys = sorted(obs.get["keys"])
     if not keys:
         print(f"[{job_id}] {stage}: all partitions committed, nothing written")
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    # lineage only for the partitions written THIS call — semi-join
-    # the re-read of {out} against the observed keys.  The round-2
-    # version derived "new" as disk-minus-already-in-lineage, which
-    # (a) gave a re-committed partition NO fresh row (stale
-    # row_count/checksum while dynamic overwrite changed the data)
-    # and (b) attributed partitions a DIFFERENT job sharing base_dir
-    # had written to this job (ADVICE r2).  Re-reading from disk
-    # (rather than hashing ``df`` directly) keeps the checksum
-    # computed over what actually landed; the key set is bounded and
-    # partition-prunes the re-read.  A re-commit appends a second
-    # lineage row for the key — readers wanting current metrics take
-    # the latest committed_at per (job_id, stage, part_key); resume
-    # semantics (key-existence) are unaffected.
-    this_call = spark.createDataFrame([(k,) for k in keys], f"{part_key} bigint")
-    written = spark.read.parquet(out).join(F.broadcast(this_call), part_key, "left_semi")
+        return _empty(spark, LINEAGE_SCHEMA)
+    # lineage only for the partitions written THIS call — the re-read
+    # of {out} filtered to the observed keys.  Deriving "new" as
+    # disk-minus-already-in-lineage instead would (a) give a
+    # re-committed partition NO fresh row (stale row_count/checksum
+    # while dynamic overwrite changed the data) and (b) attribute
+    # partitions a DIFFERENT job sharing base_dir had written to this
+    # job.  Re-reading from disk (rather than hashing
+    # ``df`` directly) keeps the checksum computed over what actually
+    # landed; the key set is bounded, and the ``isin`` filter on the
+    # partition column prunes the re-read to those directories.  A
+    # re-commit appends a second lineage row for the key — readers
+    # wanting current metrics take the latest committed_at per
+    # (job_id, stage, part_key); resume semantics (key-existence) are
+    # unaffected.
+    written = spark.read.parquet(out).where(F.col(part_key).isin(keys))
     lin = (
         partition_lineage(written, part_key, lineage_cols)
         .withColumn("job_id", F.lit(job_id))
@@ -135,10 +140,17 @@ def commit_stage(
     return lin
 
 
+def _empty(spark: SparkSession, ddl: str) -> DataFrame:
+    """A zero-row DataFrame of schema ``ddl``, planned in the JVM (a
+    Python-list ``createDataFrame`` runs a PythonRDD job when read)."""
+    cols = (c.split() for c in ddl.split(", "))
+    return spark.range(0).select([F.lit(None).cast(t).alias(name) for name, t in cols])
+
+
 def completed_partitions(spark: SparkSession, base_dir: str, job_id: str, stage: str) -> DataFrame:
     path = f"{base_dir}/lineage"
     if not os.path.exists(path):
-        return spark.createDataFrame([], "part_key bigint")
+        return _empty(spark, "part_key bigint")
     lin = spark.read.parquet(path)
     return (
         lin.where((F.col("job_id") == job_id) & (F.col("stage") == stage))

@@ -16,8 +16,7 @@ what exercises the salting / AQE-skew paths at scale.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DENSE_PCT = 20  # % of pages in the dense cell
@@ -110,23 +109,18 @@ def pages_meta_df(spark: SparkSession, sf_dir: str, reps: int = 1) -> DataFrame:
     return spark.sql(pages_cte_sql(reps=reps))
 
 
-_HTML_SCHEMA = (
-    "doc_id bigint, url string, warc_ts timestamp, html binary, "
-    "text string, lang string, lat double, lon double, h bigint"
-)
-
-
 def mutate_url(url: str, lat: float, lon: float, h: int) -> str:
     """h%7==0 pages embed coordinates in the URL (url-geocode path).
-    Pure python (python round/str) so the golden generator and the
-    executor UDF format floats identically."""
+    Pure python (python round/str): the oracle for the JVM render in
+    ``synth_pages_df`` and the golden generator's twin."""
     if h % 7 == 0:
         return f"{url}/@{round(lat, 4)},{round(lon, 4)}"
     return url
 
 
 def mutate_text(text: str, lat: float, lon: float, h: int) -> str:
-    """h%7==1 pages carry a ``geo:`` marker (content-geocode path)."""
+    """h%7==1 pages carry a ``geo:`` marker (content-geocode path).
+    Oracle for the JVM render in ``synth_pages_df``."""
     if h % 7 == 1:
         return f"{text}\ngeo: {round(lat, 4)}, {round(lon, 4)}"
     return text
@@ -135,7 +129,8 @@ def mutate_text(text: str, lat: float, lon: float, h: int) -> str:
 def render_html(text: str, doc_id: int) -> bytes:
     """Deterministic HTML wrapper whose extraction round-trips through
     text/extract.py (the golden invariant); includes tag/entity/
-    whitespace noise the extractor must strip."""
+    whitespace noise the extractor must strip.  Oracle for the JVM
+    render in ``synth_pages_df``."""
     body = (
         text.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
     ).replace("\n", "</p>\n<p>")
@@ -155,6 +150,16 @@ def expected_text(text: str, doc_id: int) -> str:
     return extract_text(render_html(text, doc_id))
 
 
+def round4_str(x: Column) -> Column:
+    """Python's ``str(round(x, 4))`` for a double on the 1e-4 grid (every
+    lat/lon of ``pages_cte_sql``), as a Column: four fixed decimals,
+    trailing zeros stripped, a bare trailing point printed as ``.0``.
+    (``cast(x as string)`` prints ``1.0E-4`` where Python prints
+    ``0.0001``.)"""
+    fixed = F.regexp_replace(F.format_string("%.4f", x), "0+$", "")
+    return F.regexp_replace(fixed, "\\.$", ".0")
+
+
 def synth_pages_df(
     spark: SparkSession, sf_dir: str, reps: int = 1, partitions: int | None = None
 ) -> DataFrame:
@@ -163,9 +168,13 @@ def synth_pages_df(
     (``/@lat,lon``), h%7==1 rows carry a ``geo:`` marker in text, the
     rest geocode via ccTLD — exercising all three geocode paths.
 
-    ``partitions``: repartition BEFORE the html-render UDF — the
-    single-file documents parquet otherwise pins the whole Arrow UDF
-    stage to 1-2 partitions.
+    The url/text mutation and the html render are Column expressions,
+    row for row equal to ``mutate_url``/``mutate_text``/``render_html``
+    (their oracle), so building the table runs no Python.
+
+    ``partitions``: round-robin the rendered rows into that many
+    partitions (and split the single-file documents scan before the
+    fan-out).
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if partitions:
@@ -179,36 +188,31 @@ def synth_pages_df(
     )
     if partitions:
         meta = meta.repartition(partitions)
-    meta = meta.withColumn("warc_ts", F.timestamp_seconds(F.col("ts_s")))
 
-    # one fused Arrow pass: url/text mutation + html render (pure
-    # python twins shared with scripts/make_goldens.py)
-    @F.pandas_udf("struct<url: string, text: string, html: binary>")
-    def build_udf(
-        url: pd.Series, text: pd.Series, lat: pd.Series, lon: pd.Series,
-        h: pd.Series, page_id: pd.Series,
-    ) -> pd.DataFrame:
-        urls, texts, htmls = [], [], []
-        for u, t, la, lo, hh, pid in zip(url, text, lat, lon, h, page_id):
-            fu = mutate_url(u, la, lo, int(hh))
-            ft = mutate_text(t, la, lo, int(hh))
-            urls.append(fu)
-            texts.append(ft)
-            htmls.append(render_html(ft, int(pid)))
-        return pd.DataFrame({"url": urls, "text": texts, "html": htmls})
-
-    built = meta.withColumn(
-        "b",
-        build_udf(
-            F.col("url"), F.col("text"), F.col("lat"), F.col("lon"),
-            F.col("h"), F.col("page_id"),
-        ),
+    h7 = F.pmod(F.col("h"), F.lit(7))
+    lat, lon = round4_str(F.col("lat")), round4_str(F.col("lon"))
+    url = F.when(h7 == 0, F.concat(F.col("url"), F.lit("/@"), lat, F.lit(","), lon)).otherwise(
+        F.col("url")
     )
-    return built.select(
+    text = F.when(
+        h7 == 1, F.concat(F.col("text"), F.lit("\ngeo: "), lat, F.lit(", "), lon)
+    ).otherwise(F.col("text"))
+    body = text
+    for old, new in (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"), ("\n", "</p>\n<p>")):
+        body = F.replace(body, F.lit(old), F.lit(new))
+    # render_html(text, page_id)
+    pid = F.col("page_id").cast("string")
+    html = F.concat(
+        F.lit("<html><!-- synthetic page "), pid, F.lit(" --><head><title>doc "), pid,
+        F.lit("</title><style>p {margin: 0}</style></head>\n<body>\n<h1>Document   "), pid,
+        F.lit("</h1>\n<p>"), body, F.lit("</p>\n<script>var x = "), pid,
+        F.lit(";</script></body></html>"),
+    )
+    return meta.select(
         "page_id", "doc_id",
-        F.col("b.url").alias("url"),
-        "warc_ts",
-        F.col("b.html").alias("html"),
-        F.col("b.text").alias("text"),
+        url.alias("url"),
+        F.timestamp_seconds(F.col("ts_s")).alias("warc_ts"),
+        F.encode(html, "UTF-8").alias("html"),
+        text.alias("text"),
         "lang", "lat", "lon", "h",
     )

@@ -9,7 +9,9 @@ crash resumes from the last committed partition — north_rule
 "resumable from checkpoint with per-partition lineage + metrics"):
 
   1. ingest    — synthesize/load the pages table (url, warc_ts, html,
-                 text, lang), partitioned by coarse cell prefix
+                 text, lang) with JVM expressions only (no Python),
+                 hash-partitioned by coarse cell prefix so each
+                 ``part`` directory gets one file
   2. geocode   — one fused UDF pass: extract text from html, geocode,
                  stamp the S2 leaf; then the quadgrid cell at
                  CELL_RES in the JVM; partition key = parent cell at
@@ -101,10 +103,16 @@ def main(argv: list[str] | None = None) -> None:
     t_start = time.time()
 
     # ---- stage 1: ingest ------------------------------------------------
-    pages = synth_pages_df(
-        spark, args.sf_dir, reps=args.reps,
-        partitions=spark.sparkContext.defaultParallelism,
-    ).withColumn("part", cell_id_col(F.col("lon"), F.col("lat"), PART_RES))
+    # hash-partitioned on part, so each part directory gets one file
+    # (round-robin tasks would each write one into every part)
+    pages = (
+        synth_pages_df(
+            spark, args.sf_dir, reps=args.reps,
+            partitions=spark.sparkContext.defaultParallelism,
+        )
+        .withColumn("part", cell_id_col(F.col("lon"), F.col("lat"), PART_RES))
+        .repartition("part")
+    )
     ingested = lineage.checkpoint_stage(
         pages, base, job, "ingest", "part", lineage_cols=["page_id", "url"]
     )

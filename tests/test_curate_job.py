@@ -2,8 +2,7 @@
 planted leakage removed, deterministic output, each stage
 materialized once."""
 
-import re
-
+from conftest import final_plan_nodes, last_execution_id, sql_executions
 from jobs.curate import run
 
 SF = "/root/testdata/sf0.001"
@@ -92,43 +91,14 @@ def test_in_memory_run_leaves_no_cache(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def _final_plan_nodes(plan: str) -> list[tuple[str, str]]:
-    """(operator, detail block) per node of an execution's final
-    physical plan.  A formatted adaptive plan lists the nodes of its
-    initial plan too (with the same UDF calls); only the ids in the
-    '== Final Plan ==' tree ran."""
-    nodes = {
-        int(m.group(1)): (m.group(2), block)
-        for block in plan.split("\n\n")
-        if (m := re.match(r"\((\d+)\) (\w+)", block.strip()))
-    }
-    if "== Final Plan ==" in plan:
-        tree = plan.split("== Final Plan ==", 1)[1].split("== Initial Plan ==", 1)[0]
-        ran = {int(i) for i in re.findall(r"\((\d+)\)", tree)}
-        return [node for i, node in nodes.items() if i in ran]
-    return list(nodes.values())
-
-
 def test_python_stages_run_once(spark):
     """Each stage is materialized once, so each Python pass of the
     funnel runs in exactly one SQL execution: the repetition UDF
     (quality), the substring window mapInArrow and the substring cut
     UDF.  Read from the final plans in the SQL status store."""
-    sc = spark.sparkContext
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        execs = store.executionsList()
-        return [execs.apply(i) for i in range(execs.size())]
-
-    before = max((e.executionId() for e in executions()), default=-1)
+    before = last_execution_id(spark)
     run(spark, SF, max_tokens=512, **OPTIONAL)
-    plans = [
-        _final_plan_nodes(e.physicalPlanDescription())
-        for e in executions()
-        if e.executionId() > before
-    ]
+    plans = [final_plan_nodes(e.physicalPlanDescription()) for e in sql_executions(spark, before)]
 
     def n_executions(hit) -> int:
         return sum(any(hit(op, block) for op, block in nodes) for nodes in plans)

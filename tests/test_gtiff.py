@@ -617,3 +617,44 @@ def test_reader_rejects_non_tiff_and_big_endian_headers(spark, tmp_path):
         ):
             with pytest.raises(ValueError, match=msg):
                 read(str(path))
+
+
+def _patch_first_tile_offset(raw: bytes, value: int) -> bytes:
+    """``raw`` with IFD 0's first TileOffsets value set to ``value``."""
+    (ifd,) = struct.unpack_from("<I", raw, 4)
+    (n,) = struct.unpack_from("<H", raw, ifd)
+    for i in range(n):
+        entry = ifd + 2 + 12 * i
+        tag, _, cnt = struct.unpack_from("<HHI", raw, entry)
+        if tag == gtiff.TAG_TILE_OFFSETS:
+            at = entry + 8 if cnt == 1 else struct.unpack_from("<I", raw, entry + 8)[0]
+            return raw[:at] + struct.pack("<I", value) + raw[at + 4 :]
+    raise AssertionError("no TileOffsets entry")
+
+
+def test_reader_rejects_truncated_files_and_tiles_past_eof(spark, tmp_path):
+    """A truncated file, or a tile whose byte range runs past the end
+    of the file, is a ValueError naming the IFD (and the tile) on every
+    read path, not a struct or numpy error."""
+    from earth_data_kit_spark.sources.cog import cog_tile_index
+
+    good = tmp_path / "good.tif"
+    tiles = {(tx, ty): np.full((16, 16), tx + 2 * ty, np.int16) for tx in range(2) for ty in range(2)}
+    gtiff.write_gtiff(str(good), tiles, 32, 32, 16, 16, dtype="int16")
+    raw = good.read_bytes()
+    assert len(raw) > 600
+    cases = [
+        (raw[:20], r"IFD 0 entry table"),
+        (raw[:600], r"IFD 0 tile \d+"),
+        (_patch_first_tile_offset(raw, len(raw)), r"IFD 0 tile 0"),
+    ]
+    for k, (data, msg) in enumerate(cases):
+        path = tmp_path / f"bad{k}.tif"
+        path.write_bytes(data)
+        for read in (
+            gtiff.read_gtiff,
+            lambda q: gtiff.read_gtiff_window(q, 0, 0, 1, 1),
+            lambda q: cog_tile_index(spark, q),
+        ):
+            with pytest.raises(ValueError, match=msg):
+                read(str(path))

@@ -7,7 +7,8 @@ import subprocess
 import sys
 
 import pandas as pd
-from conftest import REPO, SF_SMALL
+import pytest
+from conftest import REPO, SF_SMALL, final_plan_nodes, last_execution_id, sql_executions
 from pyspark.sql import functions as F
 
 STAGES = ("ingest", "geocode", "pip_counts", "knn", "quality")
@@ -97,3 +98,46 @@ def test_pipeline_rerun_resumes_without_rewriting(spark, tmp_path):
         assert f"[resume1] {st}: all partitions committed" in second.stdout, second.stdout
     assert spark.read.parquet(f"{base}/lineage").count() == n_lineage
     assert [_digest(d) for d in dirs] == digests
+
+
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow")
+
+
+def test_ingest_runs_no_python_and_writes_one_file_per_part(spark, tmp_path):
+    """The ingest stage's executions run no Python; no lineage
+    execution scans a Python-list DataFrame (``Scan ExistingRDD``),
+    on a fresh base, on a fully committed re-run, or when a commit
+    observes no keys; and every ``ingest/data/part=*`` directory
+    holds one parquet file."""
+    from jobs import pipeline
+
+    from earth_data_kit_spark.plans import lineage
+
+    base = str(tmp_path / "job")
+    argv = ["--sf-dir", SF_SMALL, "--base-dir", base, "--job-id", "nopy", "--reps", "2",
+            "--cpus", "4", "--fail-after-stage", "ingest"]
+    for run in ("fresh", "re-run"):
+        before = last_execution_id(spark)
+        with pytest.raises(SystemExit, match="injected failure after ingest"):
+            pipeline.main(argv)
+        execs = sql_executions(spark, before)
+        assert execs, run
+        for e in execs:
+            plan = e.physicalPlanDescription()
+            assert "ExistingRDD" not in plan, (run, plan)
+            ops = {op for op, _ in final_plan_nodes(plan)}
+            assert not ops & set(PYTHON_NODES), (run, plan)
+
+    data = f"{base}/ingest/data"
+    parts = [d for d in os.listdir(data) if d.startswith("part=")]
+    assert len(parts) > 1
+    for d in parts:
+        files = [f for f in os.listdir(f"{data}/{d}") if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+
+    before = last_execution_id(spark)
+    ingested = spark.read.parquet(data)
+    lin = lineage.commit_stage(ingested.limit(0), base, "nopy", "ingest", "part")
+    assert lin.count() == 0
+    assert lin.schema == spark.createDataFrame([], lineage.LINEAGE_SCHEMA).schema
+    assert all("ExistingRDD" not in e.physicalPlanDescription() for e in sql_executions(spark, before))
