@@ -543,7 +543,7 @@ def _q_dd_semdedup(spark, sf_dir):
 
 def _q_geo_pip_antimeridian(spark, sf_dir):
     """Antimeridian-crossing bbox (xmin > xmax): the covering wraps
-    (grid/cells.covering_bbox) and the rectangle refine switches to a
+    (operators/polygons.covering_cells_df) and the rectangle refine switches to a
     longitude DISJUNCTION — the silent-empty AND was a real bug the
     wrap-aware refine fixed.  Pacific box, hits on both sides of
     ±180."""

@@ -89,37 +89,6 @@ def zorder_id_udf(res: int):
     return _z
 
 
-def pip_refine_udf(polygons: dict[str, str]):
-    """Factory: exact ray-cast refinement for the cell-prefiltered
-    spatial join (J1).  ``polygons`` maps code → WKT POLYGON; the
-    parsed rings ride to executors in the task closure (small —
-    equivalently a broadcast variable).  Returns a boolean per row:
-    point (lon, lat) strictly inside polygons[code].
-    """
-    parsed = {
-        code: geom.parse_wkt_polygon(wkt) for code, wkt in polygons.items()
-    }
-
-    @F.pandas_udf(T.BooleanType())
-    def _pip(lon: pd.Series, lat: pd.Series, code: pd.Series) -> pd.Series:
-        lons = lon.values.astype(np.float64)
-        lats = lat.values.astype(np.float64)
-        out = np.zeros(len(lons), dtype=bool)
-        codes = code.values
-        for c in pd.unique(codes):
-            # total over all codes: Spark gives no short-circuit
-            # guarantee, so rows guarded by other predicates may
-            # still reach the UDF — unknown codes are simply False
-            if c not in parsed:
-                continue
-            shell, holes = parsed[c]
-            m = codes == c
-            out[m] = geom.point_in_polygon(lons[m], lats[m], shell, holes)
-        return pd.Series(out)
-
-    return _pip
-
-
 @F.pandas_udf(
     T.StructType(
         [
@@ -149,12 +118,13 @@ def wkt_bbox_udf(wkt: pd.Series) -> pd.DataFrame:
 
 @F.pandas_udf(T.BooleanType())
 def pip_refine_wkt_udf(lon: pd.Series, lat: pd.Series, wkt: pd.Series) -> pd.Series:
-    """Exact ray-cast refine against a CARRIED ``wkt`` column (the
-    DataFrame-polygon-side twin of ``pip_refine_udf``, whose geometry
-    rides the task closure).  Each distinct wkt in the Arrow batch is
-    parsed once and its rows refined as one vectorized call — the
-    batch-level analog of the per-code loop above.  Null wkt → False
-    (rectangles are refined by pure Columns upstream)."""
+    """Exact ray-cast refine against a CARRIED ``wkt`` column — the
+    only Python in ``pip_join``'s refine, for every cell scheme and
+    for list and DataFrame polygon sides alike
+    (``operators.polygons.refine_predicate_cols``).  Each distinct wkt
+    in the Arrow batch is parsed once and its rows refined as one
+    vectorized call.  Null wkt → False (rectangles are refined by
+    pure Columns upstream)."""
     lons = lon.values.astype(np.float64)
     lats = lat.values.astype(np.float64)
     out = np.zeros(len(lons), dtype=bool)

@@ -159,8 +159,9 @@ def k_ring(cid: int, k: int) -> list[int]:
 def covering_bbox(xmin: float, ymin: float, xmax: float, ymax: float, res: int) -> list[int]:
     """Cells intersecting a lon/lat bbox (superset covering).
 
-    Handles antimeridian-crossing boxes (xmin > xmax).  This is the
-    cell-prefilter side of the spatial join (SURVEY.md §2.3 J1).
+    Handles antimeridian-crossing boxes (xmin > xmax).  The oracle of
+    the spatial join's in-plan cell prefilter (SURVEY.md §2.3 J1,
+    ``operators.polygons.covering_cells_df``).
     """
     nx, ny = nx_ny(res)
     x0, y1 = (int(v[0]) for v in cell_xy(np.array([xmin]), np.array([ymin]), res))
@@ -170,17 +171,6 @@ def covering_bbox(xmin: float, ymin: float, xmax: float, ymax: float, res: int) 
     else:  # antimeridian wrap
         xs = list(range(x0, nx)) + list(range(0, x1 + 1))
     return [int(encode(res, x, y)) for y in range(y0, y1 + 1) for x in xs]
-
-
-def covering_polygon(ring: list[tuple[float, float]], res: int) -> list[int]:
-    """Superset cell covering of a polygon ring: bbox covering kept
-    when the cell bbox may intersect the polygon (cheap conservative
-    test: cell bbox vs polygon bbox + any-corner-in-polygon or
-    polygon-vertex-in-cell or edge crossing is approximated by just
-    the bbox covering — exactness is restored by the refine stage)."""
-    xs = [p[0] for p in ring]
-    ys = [p[1] for p in ring]
-    return covering_bbox(min(xs), min(ys), max(xs), max(ys), res)
 
 
 # ---------------------------------------------------------------- zorder

@@ -94,7 +94,6 @@ class CellScheme:
     * ``point_key(lon_col, lat_col, stored)`` — a point's key as a
       Column, from lon/lat or from a stored index column;
     * ``output_cell()`` — the ``cell`` output Column, from the key;
-    * ``covering(spark, polygons)`` — ``(code, key)`` polygon rows;
     * ``query_cells(queries, reach)`` — ``(query_id, qlat, qlon, key)``
       ring rows;
     * ``radius_reach(radius_m)`` — the reach that covers a radius;
@@ -129,17 +128,6 @@ class QuadScheme(CellScheme):
 
     def output_cell(self) -> "F.Column":
         return F.col("cell")
-
-    def covering(self, spark: SparkSession, polygons) -> DataFrame:
-        import pandas as pd
-
-        rows = [(p.code, int(cell)) for p in polygons for cell in p.covering(self.res)]
-        # Arrow path (pandas → LocalTableScan) instead of a pickled-RDD
-        # scan: saves ~2 s of per-query driver work and keeps the
-        # broadcast side JVM-local
-        pdf = pd.DataFrame(rows, columns=["code", "cell"])
-        pdf["cell"] = pdf["cell"].astype("int64")
-        return spark.createDataFrame(pdf, "code string, cell bigint")
 
     def query_cells(self, queries: DataFrame, ring) -> DataFrame:
         """k-ring cell expansion of a query table — PURE Column plan.

@@ -1,32 +1,34 @@
-"""Polygon side of the flagship join family AS A DATAFRAME.
+"""The polygon side of the flagship join family, as ONE DataFrame.
 
-``pip_join`` / ``zonal_stats`` / ``rasterize`` historically took a
-driver-side ``list[Polygon]`` and broadcast its covering — the right
-call for country tables (10²–10³ rows), a dead end for a
-million-polygon parcels layer (reference analog: the flagship J1
-nested loop, /root/reference/earth_data_kit/stitching/classes/
-dataset.py:252-274, whose polygon side is equally driver-bound).
-This module is the distributed twin (VERDICT r5 task 3): the polygon
-side stays a DataFrame end-to-end, its covering is generated
-IN-PLAN, and the probe join is broadcast under a row threshold /
-shuffle-on-cell above it.
+``pip_join`` (all three cell schemes), ``zonal_stats`` and
+``rasterize`` take a driver ``list[Polygon]`` (country tables,
+10²–10³ rows) or a polygon DataFrame (a million-polygon parcels
+layer — reference analog: the flagship J1 nested loop in the
+reference's ``stitching/classes/dataset.py:252-274``, whose polygon
+side is driver-bound).  Both become the same table
+(``polygon_table``), so every consumer has one code path: the
+covering is generated IN-PLAN and the probe join is broadcast under a
+row threshold / shuffle-on-cell above it.
 
 Building blocks, all pure Column plans (the
 ``knn.QuadScheme.query_cells`` pattern — two ``explode(sequence(...))``
 nodes, zero Python in the covering):
 
-* ``normalize_polygons_df`` — canonicalize any (code, wkt?, bbox?)
-  polygon table to ``code, wkt, xmin, ymin, xmax, ymax``; the bbox of
-  WKT rows is computed by one Arrow-batched UDF over the POLYGON
-  table (O(polygons) work, runs wherever the polygon rows live).
+* ``polygon_table`` / ``normalize_polygons_df`` — any polygon input as
+  ``code, wkt, xmin, ymin, xmax, ymax``; a list is built straight
+  into it, and the bbox of DataFrame WKT rows is computed by one
+  Arrow-batched UDF over the POLYGON table (O(polygons) work, runs
+  wherever the polygon rows live).
 * ``covering_cells_df`` — quadgrid covering of each polygon bbox at
   ``res``, cell-for-cell identical to ``grid.cells.covering_bbox``
   including antimeridian wrap (xmin > xmax ⇒ the x-range wraps
   through nx), as ``explode(sequence)`` columns.
+* ``refine_predicate_cols`` — the exact PIP refine against the
+  carried geometry columns (codegen rectangles, ray-cast WKT rows).
 * ``block_pairs`` — the raster side, written once for ``zonal_stats``
-  and ``rasterize``: the polygon table (``polygon_table``), its pixel
-  range (``polygons_pixel_bbox``) and the block↔polygon overlap
-  join.  A DataFrame side is exploded onto a ``tile``-pixel grid
+  and ``rasterize``: the polygon table, its pixel range
+  (``polygons_pixel_bbox``) and the block↔polygon overlap join.  A
+  DataFrame side is exploded onto a ``tile``-pixel grid
   (``pixel_tiles``) and equi-joined on (ptx, pty), each pair kept on
   one reference tile, instead of a broadcast nested-loop theta join.
 
@@ -46,10 +48,10 @@ from pyspark.sql import functions as F
 from earth_data_kit_spark.functions.columns import RES_SHIFT_MULT, X_SHIFT_MULT
 from earth_data_kit_spark.grid.cells import nx_ny
 
-#: below this many polygon rows the covering is broadcast (matches
-#: the list-path pip_join threshold); above it the join shuffles both
-#: sides on ``cell`` — co-located if the probe table is stored
-#: cell-partitioned (SCALE.md).
+#: below this many polygon rows the covering is broadcast (a list is
+#: measured by its length, a DataFrame counted); above it the join
+#: shuffles both sides on ``cell`` — co-located if the probe table is
+#: stored cell-partitioned (SCALE.md).
 BROADCAST_MAX_POLYGONS = 10_000
 
 
@@ -171,27 +173,30 @@ def covering_cells_df(norm: DataFrame, res: int) -> DataFrame:
     return ex.select(cell.alias("cell"), *keep)
 
 
-def refine_predicate_cols(lon_col: str, lat_col: str) -> "F.Column":
-    """Exact PIP refine against CARRIED geometry columns (the
-    DataFrame-side twin of ``spatial_join.refine_predicate``):
-    wkt-null rows are rectangles — pure codegen comparisons,
-    antimeridian-aware (xmin > xmax ⇒ longitude disjunction) —
-    wkt rows go through the vectorized per-batch-cached ray-cast."""
-    from earth_data_kit_spark.functions.udfs import pip_refine_wkt_udf
-
+def refine_predicate_cols(lon_col: str, lat_col: str, ray_cast: bool) -> "F.Column":
+    """Exact PIP refine against CARRIED geometry columns, the one
+    refine of every ``pip_join`` scheme: wkt-null rows are
+    rectangles — pure codegen comparisons, antimeridian-aware
+    (xmin > xmax ⇒ longitude disjunction) — and, with ``ray_cast``,
+    wkt rows go through the vectorized per-batch-cached ray-cast.
+    Without it the predicate is all Columns (no Python node): the
+    caller passes False only when no row can carry a wkt."""
     lon, lat = F.col(lon_col), F.col(lat_col)
     lon_in = F.when(
         F.col("xmin") <= F.col("xmax"),
         (lon >= F.col("xmin")) & (lon <= F.col("xmax")),
     ).otherwise((lon >= F.col("xmin")) | (lon <= F.col("xmax")))
-    rect_ok = (
+    keep = (
         F.col("wkt").isNull()
         & lon_in
         & (lat >= F.col("ymin"))
         & (lat <= F.col("ymax"))
     )
-    poly_ok = F.col("wkt").isNotNull() & pip_refine_wkt_udf(lon, lat, F.col("wkt"))
-    return rect_ok | poly_ok
+    if not ray_cast:
+        return keep
+    from earth_data_kit_spark.functions.udfs import pip_refine_wkt_udf
+
+    return keep | (F.col("wkt").isNotNull() & pip_refine_wkt_udf(lon, lat, F.col("wkt")))
 
 
 # ------------------------------------------------------- raster side
@@ -254,9 +259,11 @@ def polygons_pixel_bbox(norm: DataFrame, gt: tuple) -> DataFrame:
 def polygon_table(
     spark, polygons: "list | DataFrame", burn: dict | None = None
 ) -> DataFrame:
-    """Any polygon input as the ``normalize_polygons_df`` schema.  A
-    driver ``list[Polygon]`` is built straight into it (bbox from
-    ``Polygon.envelope()``; ``wkt`` null for bbox rectangles), plus
+    """Any polygon input as the ``normalize_polygons_df`` schema — the
+    one polygon side of ``pip_join`` (every cell scheme),
+    ``zonal_stats`` and ``rasterize``.  A driver ``list[Polygon]`` is
+    built straight into it (bbox from ``Polygon.envelope()``; ``wkt``
+    null for bbox rectangles), plus
     ``burn_ord`` (list position) and ``burn_v`` (``burn[code]``) when
     ``burn`` is given; a DataFrame goes through
     ``normalize_polygons_df``."""

@@ -5,19 +5,26 @@ ST_Intersects over a process pool (/root/reference/earth_data_kit/
 stitching/classes/dataset.py:252-274, SURVEY.md §2.3 J1).  The
 Spark-first restatement:
 
-  1. cover each polygon with quadgrid cells at ``res``
-     (superset covering, driver-side — polygons are small);
-  2. explode to a (code, cell) DataFrame and **broadcast** it
-     (polygon side ≪ broadcast threshold by construction — no
-     shuffle of the pages side at all);
-  3. equi-join pages on ``cell`` — Catalyst turns this into a
+  1. the polygon side is one table, ``polygons.polygon_table``
+     (``code, wkt, xmin, ymin, xmax, ymax``): a driver
+     ``list[Polygon]`` is built straight into it, a DataFrame is
+     normalized into it;
+  2. cover each polygon with cells at ``res`` IN-PLAN
+     (``polygons.covering_cells_df``: two explode(sequence) nodes),
+     each covering row carrying its polygon's geometry columns;
+  3. **broadcast** the covering (polygon side ≪ broadcast threshold
+     by construction — no shuffle of the pages side at all) and
+     equi-join pages on ``cell`` — Catalyst turns this into a
      BroadcastHashJoin, so the 100 TB side streams map-side;
-  4. exact refine: bbox test as a pure Column predicate (codegen),
-     ray-cast pandas UDF only for non-rectangular polygons.
+  4. exact refine against the carried columns
+     (``polygons.refine_predicate_cols``): bbox rows are codegen'd
+     comparisons, WKT rows go through the vectorized ray-cast UDF —
+     a term planned only when the polygon side can hold WKT.
 
-Steps 2-4 are ``_pip``, written once over ``knn.CellScheme``: the S2
+Steps 3-4 are ``_pip``, written once over ``knn.CellScheme``: the S2
 (``pip_join_s2``) and H3 (``pip_join_h3``) joins run the same body
-with their own covering and point key.
+over their own driver-built ``(code, key)`` covering, with the
+polygon table's geometry attached by ``code``.
 
 Scale notes: the join never shuffles the big side; skewed cells
 (dense urban) are irrelevant to a broadcast join (skew only matters
@@ -32,8 +39,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from earth_data_kit_spark.functions.udfs import pip_refine_udf
-from earth_data_kit_spark.grid import cells, geom
+from earth_data_kit_spark.grid import geom
+from earth_data_kit_spark.operators import polygons as P
 from earth_data_kit_spark.operators.knn import CellScheme, QuadScheme
 
 
@@ -43,12 +50,6 @@ class Polygon:
     name: str
     wkt: str | None = None  # non-rectangular → ray-cast refine
     bbox: tuple[float, float, float, float] | None = None  # rectangle
-
-    def covering(self, res: int) -> list[int]:
-        if self.bbox is not None:
-            return cells.covering_bbox(*self.bbox, res)
-        shell, _ = geom.parse_wkt_polygon(self.wkt)
-        return cells.covering_polygon([tuple(p) for p in shell], res)
 
     def envelope(self) -> tuple[float, float, float, float]:
         """(xmin, ymin, xmax, ymax): the bbox, or the WKT shell's
@@ -74,7 +75,6 @@ def pip_join(
     lon_col: str = "lon",
     lat_col: str = "lat",
     broadcast_covering: bool | None = None,
-    covering: DataFrame | None = None,
 ) -> DataFrame:
     """pages ⋈ polygons with exact PIP semantics.
 
@@ -84,15 +84,13 @@ def pip_join(
 
     ``polygons`` is a driver list (broadcast metadata — countries,
     admin regions) or a **DataFrame** (`code` + `wkt` and/or
-    xmin/ymin/xmax/ymax — the million-polygon parcels case, VERDICT
-    r5 task 3): the DataFrame path generates the covering IN-PLAN
-    (``operators.polygons.covering_cells_df``, two explode(sequence)
-    nodes, zero driver materialization) and refines against carried
-    geometry columns; both paths produce identical rows
-    (tests/test_spatial_join_spark.py parity).  When
-    ``broadcast_covering`` is None the polygon table is counted (one
-    tiny aggregate job — a scalar, not a materialization) and
-    broadcast under ``polygons.BROADCAST_MAX_POLYGONS``.
+    xmin/ymin/xmax/ymax — the million-polygon parcels case).  Either
+    becomes ``polygons.polygon_table``, whose covering is generated
+    IN-PLAN (zero driver materialization) and refined against the
+    carried geometry columns.  When ``broadcast_covering`` is None a
+    list broadcasts under ``polygons.BROADCAST_MAX_POLYGONS`` by its
+    length; a DataFrame is counted (one tiny aggregate job — a
+    scalar, not a materialization).
 
     Join-strategy selection (SURVEY.md §4 "broadcast vs shuffle"):
     the covering broadcasts while it fits the broadcast threshold
@@ -100,28 +98,13 @@ def pip_join(
     large polygon sets pass ``broadcast_covering=False`` to shuffle
     BOTH sides on ``cell`` instead — with the pages table stored
     partitioned by cell prefix (SCALE.md) that shuffle is co-located.
-    ``covering`` lets callers reuse a precomputed/persisted covering
-    table (the index-reuse path at scale).
     """
-    scheme = QuadScheme(res)
-    if isinstance(polygons, DataFrame):
-        from earth_data_kit_spark.operators import polygons as P
-
-        norm = P.normalize_polygons_df(polygons)
-        if broadcast_covering is None:
-            broadcast_covering = norm.count() < P.BROADCAST_MAX_POLYGONS
-        return _pip(
-            scheme, pages, P.covering_cells_df(norm, res),
-            P.refine_predicate_cols(lon_col, lat_col), lon_col, lat_col,
-            broadcast=broadcast_covering,
-            carried=("wkt", "xmin", "ymin", "xmax", "ymax"),
-        )
+    table = P.polygon_table(pages.sparkSession, polygons)
     if broadcast_covering is None:
-        broadcast_covering = len(polygons) < 10_000
-    if covering is None:
-        covering = scheme.covering(pages.sparkSession, polygons)
+        n = table.count() if isinstance(polygons, DataFrame) else len(polygons)
+        broadcast_covering = n < P.BROADCAST_MAX_POLYGONS
     return _pip(
-        scheme, pages, covering, refine_predicate(polygons, lon_col, lat_col),
+        QuadScheme(res), pages, polygons, P.covering_cells_df(table, res),
         lon_col, lat_col, broadcast=broadcast_covering,
     )
 
@@ -129,59 +112,29 @@ def pip_join(
 def _pip(
     scheme: CellScheme,
     pages: DataFrame,
+    polygons: "list[Polygon] | DataFrame",
     covering: DataFrame,
-    refine: "F.Column",
     lon_col: str,
     lat_col: str,
     stored: str | None = None,
     broadcast: bool = True,
-    carried: tuple[str, ...] = (),
 ) -> DataFrame:
     """The pip body every cell scheme shares: index the pages
-    (``scheme.index``), equi-join the ``(code, key)`` covering on the
-    scheme key — broadcast, so the pages side never shuffles — then
-    the exact refine.  Output ``cell, <pages columns>, code`` (plus any
-    non-geometry polygon columns; ``carried`` geometry is dropped)."""
+    (``scheme.index``), equi-join the covering — ``polygon_table``
+    rows keyed by the scheme key — broadcast, so the pages side never
+    shuffles, then the exact refine against the carried geometry.
+    The ray-cast term is planned only when ``polygons`` can hold WKT:
+    always for a DataFrame, for a list only if one polygon has no
+    bbox.  Output ``cell, <pages columns>, code`` (plus any
+    non-geometry polygon columns)."""
+    ray_cast = isinstance(polygons, DataFrame) or any(p.bbox is None for p in polygons)
     cand = scheme.index(pages, lon_col, lat_col, stored).join(
         F.broadcast(covering) if broadcast else covering, scheme.key
     )
-    rest = [c for c in cand.columns if c not in (scheme.key, "cell", *carried)]
+    geometry = (scheme.key, "cell", "wkt", "xmin", "ymin", "xmax", "ymax")
+    rest = [c for c in cand.columns if c not in geometry]
+    refine = P.refine_predicate_cols(lon_col, lat_col, ray_cast)
     return cand.where(refine).select(scheme.output_cell(), *rest)
-
-
-def refine_predicate(polygons: list[Polygon], lon_col: str, lat_col: str) -> "F.Column":
-    """Exact PIP refine as a single predicate: rectangles become
-    codegen'd comparisons (antimeridian-aware), true polygons go
-    through the vectorized ray-cast UDF.  Shared by every covering
-    scheme (quadgrid `pip_join`, S2 `pip_join_s2`, H3 `pip_join_h3`) —
-    the covering only has to be a superset, the refine is what defines
-    the semantics."""
-    rect = {p.code: p.bbox for p in polygons if p.bbox is not None}
-    poly = {p.code: p.wkt for p in polygons if p.wkt is not None}
-
-    keep = F.lit(False)
-    if rect:
-        bx = F.create_map(
-            *[x for c, b in rect.items() for x in (F.lit(c), F.array(*[F.lit(v) for v in b]))]
-        )
-        bb = bx[F.col("code")]
-        # antimeridian-crossing boxes have xmin > xmax (the covering
-        # side already wraps, cells.covering_bbox): longitude test
-        # becomes a disjunction there instead of silently-empty AND
-        lon_in = F.when(
-            bb[0] <= bb[2],
-            (F.col(lon_col) >= bb[0]) & (F.col(lon_col) <= bb[2]),
-        ).otherwise((F.col(lon_col) >= bb[0]) | (F.col(lon_col) <= bb[2]))
-        keep = keep | (
-            bb.isNotNull()
-            & lon_in
-            & (F.col(lat_col) >= bb[1]) & (F.col(lat_col) <= bb[3])
-        )
-    if poly:
-        refine = pip_refine_udf(poly)
-        is_poly = F.col("code").isin(*poly.keys())
-        keep = keep | (is_poly & refine(F.col(lon_col), F.col(lat_col), F.col("code")))
-    return keep
 
 
 def salted_hot_keys(

@@ -13,7 +13,8 @@ icosahedral hex grid.  What the scheme supplies:
   stored ``cell_col`` (zero Python at query time);
 * polygon covering — each polygon's adaptive coarse cap covering
   (``_covering_for_polygon``), uncompacted to ``res`` and clipped to
-  the circumradius-inflated envelope;
+  the circumradius-inflated envelope; ``pip_join_h3`` attaches the
+  polygon table's geometry to it by ``code`` for the shared refine;
 * query rings — per-row ``cover_cap`` inside an Arrow UDF + explode,
   so rings materialize wherever the QUERY rows live;
 * radius reach — the radius itself; auto-grow need — the k-th
@@ -41,7 +42,8 @@ from pyspark.sql.functions import pandas_udf
 
 from earth_data_kit_spark.grid import geom, h3
 from earth_data_kit_spark.operators.knn import CellScheme, _knn, _radius
-from earth_data_kit_spark.operators.spatial_join import _pip, refine_predicate
+from earth_data_kit_spark.operators.polygons import polygon_table
+from earth_data_kit_spark.operators.spatial_join import _pip
 
 
 def h3_cell_udf(res: int):
@@ -283,7 +285,8 @@ def pip_join_h3(
 ) -> DataFrame:
     """pages ⋈ polygons over the H3-class covering: same output
     contract as ``spatial_join.pip_join`` (``cell`` + pages columns +
-    ``code``) and the same exact ray-cast refine — the flagship join
+    ``code``) and the same exact refine over the same polygon table
+    (``polygons.polygon_table``, attached by ``code``) — the flagship join
     on its third index (quadgrid / S2 / H3 — engine-parity pinned in
     tests/test_h3.py).
 
@@ -299,11 +302,9 @@ def pip_join_h3(
     query time): a plain column holding res-``res`` ids, or a format
     string like ``"h3_cell_r{res}"`` (the multi-res ingest layout
     ``h3_cells_udf`` stamps — only the res-``res`` column is read)."""
-    scheme = H3Scheme(res, max_cover_cells)
-    return _pip(
-        scheme, pages, scheme.covering(pages.sparkSession, polygons),
-        refine_predicate(polygons, lon_col, lat_col), lon_col, lat_col, cell_col,
-    )
+    scheme, spark = H3Scheme(res, max_cover_cells), pages.sparkSession
+    covering = scheme.covering(spark, polygons).join(polygon_table(spark, polygons), "code")
+    return _pip(scheme, pages, polygons, covering, lon_col, lat_col, cell_col)
 
 
 def radius_join_h3(

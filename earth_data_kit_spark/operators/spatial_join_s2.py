@@ -26,8 +26,10 @@ What the scheme supplies:
   covers the radius; auto-grow need — the first even ring covering
   the k-th distance, or double the ring while starved.
 
-The exact refine is the quadgrid's (``spatial_join.refine_predicate``),
-so S2 and quadgrid joins return the same rows (tests/test_s2.py).
+The covering rows carry the polygon table's geometry (attached by
+``code``) and the exact refine is the quadgrid's
+(``polygons.refine_predicate_cols``), so S2 and quadgrid joins return
+the same rows (tests/test_s2.py).
 """
 
 from __future__ import annotations
@@ -41,7 +43,8 @@ from pyspark.sql.functions import pandas_udf
 from earth_data_kit_spark.functions.udfs import s2_leaf_series
 from earth_data_kit_spark.grid import s2
 from earth_data_kit_spark.operators.knn import CellScheme, _knn, _radius
-from earth_data_kit_spark.operators.spatial_join import Polygon, _pip, refine_predicate
+from earth_data_kit_spark.operators.polygons import polygon_table
+from earth_data_kit_spark.operators.spatial_join import Polygon, _pip
 
 
 def s2_leaf_udf():
@@ -255,8 +258,6 @@ def pip_join_s2(
     table layout at scale: leaf computed once at ingest, every query
     derives its join level in codegen) to skip the UDF pass entirely.
     """
-    scheme = S2Scheme(level)
-    return _pip(
-        scheme, pages, scheme.covering(pages.sparkSession, polygons),
-        refine_predicate(polygons, lon_col, lat_col), lon_col, lat_col, leaf_col,
-    )
+    scheme, spark = S2Scheme(level), pages.sparkSession
+    covering = scheme.covering(spark, polygons).join(polygon_table(spark, polygons), "code")
+    return _pip(scheme, pages, polygons, covering, lon_col, lat_col, leaf_col)

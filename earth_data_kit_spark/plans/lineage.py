@@ -132,7 +132,7 @@ def commit_stage(
         partition_lineage(written, part_key, lineage_cols)
         .withColumn("job_id", F.lit(job_id))
         .withColumn("stage", F.lit(stage))
-        .withColumn("wall_ms", F.lit(int((time.time() - t0) * 1000)))
+        .withColumn("wall_ms", F.lit(int((time.time() - t0) * 1000)).cast("bigint"))
         .withColumn("committed_at", F.current_timestamp())
         .select("job_id", "stage", "part_key", "row_count", "checksum", "wall_ms", "committed_at")
     )

@@ -148,3 +148,21 @@ def test_checkpoint_stage_filters_before_build(spark, tmp_path):
     assert out.count() == total
     lin = spark.read.parquet(f"{base}/lineage")
     assert sorted(r.part_key for r in lin.collect()) == [0, 1, 2, 3]
+
+
+def test_commit_returns_and_writes_lineage_schema_types(spark, tmp_path):
+    """A non-empty commit's returned lineage frame, and the lineage
+    files it appends, carry exactly ``LINEAGE_SCHEMA``'s column types
+    (``wall_ms`` is bigint, like the empty frame of a fully committed
+    commit)."""
+    base = str(tmp_path / "ckpt")
+    pages = pages_meta_df(spark, SF).withColumn("part", F.col("page_id") % 4)
+    want = [
+        (f.name, f.dataType)
+        for f in spark.createDataFrame([], lineage.LINEAGE_SCHEMA).schema
+    ]
+    lin = lineage.commit_stage(pages, base, "job1", "geocode", "part")
+    assert lin.count() == 4
+    assert [(f.name, f.dataType) for f in lin.schema] == want
+    read = spark.read.parquet(f"{base}/lineage")
+    assert [(f.name, f.dataType) for f in read.schema] == want

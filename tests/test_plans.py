@@ -242,3 +242,31 @@ def test_runtime_bloom_filter_prunes_shuffle_join(spark, tmp_path):
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("scheme", ["quad", "s2", "h3"])
+def test_pip_join_ray_cast_planned_only_for_wkt(spark, indexed_pages, scheme):
+    """Every scheme's pip join refines against the polygon table's
+    carried geometry.  Over a bbox-only polygon list the refine is
+    all Columns: no Python eval node with the quadgrid cell computed
+    in-plan and the S2 / H3 keys read from stored columns.  One WKT
+    polygon added plans exactly one eval node, the ray-cast."""
+    from earth_data_kit_spark.operators.spatial_join import Polygon, pip_join
+    from earth_data_kit_spark.operators.spatial_join_h3 import pip_join_h3
+    from earth_data_kit_spark.operators.spatial_join_s2 import pip_join_s2
+
+    boxes = [
+        Polygon("AL", "albania", bbox=(19.3, 39.6, 21.0, 42.7)),
+        Polygon("FJ", "fiji wrap", bbox=(177.0, -20.0, -178.0, -15.0)),
+    ]
+    tri = Polygon("TRI", "triangle", wkt="POLYGON ((20 40, 22 40, 21 42, 20 40))")
+    join = {
+        "quad": lambda polys: pip_join(indexed_pages, polys, res=6),
+        "s2": lambda polys: pip_join_s2(indexed_pages, polys, level=7, leaf_col="s2_leaf"),
+        "h3": lambda polys: pip_join_h3(indexed_pages, polys, res=6, cell_col="h3_cell"),
+    }[scheme]
+    for polys, n in ((boxes, 0), (boxes + [tri], 1)):
+        plan = plan_of(join(polys))
+        assert plan.count("ArrowEvalPython") == n, plan
+        assert "BatchEvalPython" not in plan
+        assert ("pip_refine_wkt_udf" in plan) == bool(n), plan

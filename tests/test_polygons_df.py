@@ -159,6 +159,27 @@ def test_pip_join_list_df_parity(spark):
     assert len(got) > 0
 
 
+def test_pip_join_s2_h3_match_quadgrid_table_path(spark):
+    """The parity fixture — rectangle, wide box, concave shell, holed
+    shell, antimeridian box — through the S2 and H3 coverings returns
+    exactly the quadgrid table path's rows: every scheme refines the
+    same polygon table, holes and concave shells included."""
+    from earth_data_kit_spark.operators.spatial_join_h3 import pip_join_h3
+    from earth_data_kit_spark.operators.spatial_join_s2 import pip_join_s2
+
+    pages = pages_meta_df(spark, SF)
+    want = sj.pip_join(pages, _polys_df(spark), res=7).select("page_id", "code")
+    codes = {r["code"] for r in want.select("code").distinct().collect()}
+    assert codes >= {RECT[0], CONCAVE[0], HOLED[0]}, codes
+    for got in (
+        pip_join_s2(pages, _polys_list(), level=6),
+        pip_join_h3(pages, _polys_list(), res=4),
+    ):
+        got = got.select("page_id", "code")
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+
+
 def test_pip_join_df_shuffle_path_same_rows(spark):
     pages = pages_meta_df(spark, SF)
     bc = sj.pip_join(pages, _polys_df(spark), res=7, broadcast_covering=True)

@@ -78,10 +78,14 @@ def test_pip_join_plan_is_broadcast(spark, polys):
 
 
 def test_covering_superset(spark, polys):
-    # every oracle hit's cell must appear in the polygon covering
+    # every oracle hit's cell must appear in the in-plan covering
+    # pip_join joins on (covering_cells_df of the polygon table)
+    from earth_data_kit_spark.operators import polygons as P
+
     pages = pages_meta_df(spark, SF).select("page_id", "lon", "lat").toPandas()
     for p in polys:
-        cov = set(p.covering(7))
+        table = P.polygon_table(spark, [p])
+        cov = {r.cell for r in P.covering_cells_df(table, 7).select("cell").collect()}
         hits = oracle_pip(pages, [p])
         ids = {pid for pid, _ in hits}
         sub = pages[pages["page_id"].isin(ids)]
