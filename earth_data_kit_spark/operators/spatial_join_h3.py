@@ -206,7 +206,10 @@ class H3Scheme(CellScheme):
                     lon_ok |= (clon + shift >= bx[0] - dlon) & (clon + shift <= bx[2] + dlon)
                 keep |= lat_ok & lon_ok
             rows += [(poly.code, int(c)) for c in cells[keep]]
-        return spark.createDataFrame(rows, "code string, _h3c bigint")
+        # a pandas frame plans as a LocalTableScan (a Python list would
+        # ship as a Python RDD, Scan ExistingRDD, on every join)
+        pdf = pd.DataFrame(rows, columns=["code", "_h3c"]).astype({"_h3c": "int64"})
+        return spark.createDataFrame(pdf, "code string, _h3c bigint")
 
     def query_cells(self, queries: DataFrame, radius_m: float) -> DataFrame:
         """Explode each query row to its cover-cap cells — an Arrow UDF

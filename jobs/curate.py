@@ -23,10 +23,14 @@ at cluster scale (see SCALE.md).
 Each stage output (stages 1-3c) is materialized exactly once, by
 ``_stage``: with a ``work_dir`` it is committed through
 ``lineage.checkpoint_stage`` and re-read from disk; without one it is
-an eager ``localCheckpoint``, which also truncates the lineage.  The
-stage's count and every later stage read the materialized frame, so
-no Python UDF of an earlier stage (repetition signals, substring cut)
-runs again downstream, and no cache is left in the session.
+an eager ``localCheckpoint``, which also truncates the lineage.  Every
+later stage reads the materialized frame, so no Python UDF of an
+earlier stage (repetition signals, substring cut) runs again
+downstream, and no cache is left in the session.  In memory, the
+stage's row count (and the substring stage's removed chars) come from
+an ``Observation`` on the job that materializes it, not from a job of
+their own.  The decontam eval fixture is planned from ``docs`` (no
+driver collect), so its shingle pass is one task on one partition.
 
 Usage:
   spark-submit --py-files dist/edk_spark.zip jobs/curate.py \
@@ -42,7 +46,24 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from pyspark.sql import Observation, Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+# Python's str.split() separators: Java's \s misses NBSP, \x85, the
+# \x1c-\x1f separators and the other Unicode spaces
+_WS = r"[\s\x1c-\x1f\x85\p{Z}]+"
+
+
+def eval_fixture(docs, n: int):
+    """(eval_id, text) for the ``n`` lowest-``doc_id`` docs: eval_id
+    0..n-1 in doc_id order, text their words 3-30 joined by one space
+    (Python's ``" ".join(t.split()[2:30])``), planned in the JVM.  The
+    frame is one partition, so the eval-side shingle pass is one task."""
+    words = F.filter(F.split(F.col("text"), _WS), lambda w: w != "")
+    return docs.orderBy("doc_id").limit(n).select(
+        (F.row_number().over(Window.orderBy("doc_id")) - 1).alias("eval_id"),
+        F.array_join(F.slice(words, 3, 28), " ").alias("text"),
+    )
 
 
 def run(
@@ -74,41 +95,46 @@ def run(
     if work_dir:
         docs = docs.withColumn("part", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(32)))
 
-    def _stage(df, name: str):
-        """The stage's output, materialized once: committed (only the
-        not-yet-done partitions) and re-read from disk with a
-        ``work_dir``, else an eager ``localCheckpoint``."""
+    def _stage(df, name: str, *sums: str):
+        """(the stage's output materialized once, its row count, the sum
+        of each column in ``sums``).  With a ``work_dir`` the output is
+        committed (only the not-yet-done partitions) and re-read from
+        disk, and one aggregate over the re-read gives the numbers (a
+        resumed stage still counts its earlier commits).  Else it is an
+        eager ``localCheckpoint`` whose own job fills an
+        ``Observation``; the checkpoint truncates the plan, so no later
+        query fires the observation again."""
+        aggs = [F.count(F.lit(1)).alias("n")] + [F.sum(c).alias(c) for c in sums]
         if work_dir:
-            return lineage.checkpoint_stage(df, work_dir, job_id, name, "part", lineage_cols=["doc_id"])
-        return df.localCheckpoint()
+            out = lineage.checkpoint_stage(df, work_dir, job_id, name, "part", lineage_cols=["doc_id"])
+            row = out.agg(*aggs).first().asDict()
+        else:
+            obs = Observation()
+            out = df.observe(obs, *aggs).localCheckpoint()
+            row = obs.get
+        return out, row["n"], [row[c] for c in sums]
 
     # ---- stage 1: quality (shape + repetition) --------------------------
     q = cu.gopher_quality_cols(F.col("text"))
     r = cu.repetition_signals_udf()(F.col("text"))
-    kept = _stage(
+    kept, n_quality, _ = _stage(
         docs.withColumn("_keep_q", cu.gopher_keep_col(q))
         .withColumn("_keep_r", cu.gopher_repetition_keep_col(r))
         .where(F.col("_keep_q") & F.col("_keep_r"))
         .drop("_keep_q", "_keep_r"),
         "quality",
     )
-    n_quality = kept.count()
 
     # ---- stage 2: decontamination --------------------------------------
     # eval fixture: verbatim spans lifted from the corpus (deterministic
     # planted leakage — a real run broadcasts the real eval sets)
-    rows = docs.orderBy("doc_id").limit(eval_snippets).collect()
-    eval_df = spark.createDataFrame(
-        [(i, " ".join(r.text.split()[2:30])) for i, r in enumerate(rows)],
-        "eval_id int, text string",
-    )
+    eval_df = eval_fixture(docs, eval_snippets)
     # flag_contaminated reads `kept` twice (probe + flag join): both
     # read the materialized quality output
-    clean = _stage(
+    clean, n_clean, _ = _stage(
         flag_contaminated(kept, eval_df, shingle_k=13).where(~F.col("contaminated")).drop("contaminated"),
         "decontam",
     )
-    n_clean = clean.count()
 
     # ---- stage 3: exact dedup ------------------------------------------
     # exact_dedup returns (doc_id, n_dups) representatives.  The
@@ -119,8 +145,7 @@ def run(
     # (or co-locate for free under bucketed storage).  Both sides read
     # the materialized `clean`, so the quality+decontam stages run once.
     reps = exact_dedup(clean).select("doc_id")
-    unique = _stage(clean.join(reps, "doc_id"), "dedup")
-    n_unique = unique.count()
+    unique, n_unique, _ = _stage(clean.join(reps, "doc_id"), "dedup")
 
     # ---- stage 3b (optional): exact-substring dedup ---------------------
     n_substring = None
@@ -128,14 +153,13 @@ def run(
     if substring_k:
         from earth_data_kit_spark.operators.substring_dedup import substring_dedup
 
-        # the count columns are part of the materialized stage output,
-        # so the char sum reads it instead of re-running the cut
-        scrubbed = _stage(substring_dedup(unique, k=substring_k), "substring")
-        n_removed_chars = int(
-            scrubbed.agg(F.sum("n_removed_chars").alias("c")).first()["c"] or 0
+        # the removed chars are summed by the stage's own job, so the
+        # cut runs once
+        scrubbed, n_substring, (chars,) = _stage(
+            substring_dedup(unique, k=substring_k), "substring", "n_removed_chars"
         )
+        n_removed_chars = int(chars or 0)
         unique = scrubbed.drop("n_removed_chars", "n_spans")
-        n_substring = unique.count()
 
     # ---- stage 3c (optional): DSIR selection toward a target slice ------
     n_selected = None
@@ -147,14 +171,13 @@ def run(
             if dsir_target_source
             else unique
         )
-        unique = _stage(
+        unique, n_selected, _ = _stage(
             dsir_resample(
                 unique, target, n=dsir_n, text_col="text", id_col="doc_id",
                 n_buckets=1 << 14,
             ).drop("dsir_log_w", "dsir_rank"),
             "select",
         )
-        n_selected = unique.count()
 
     # ---- stage 4: sequence packing -------------------------------------
     packed = pack_sequences(unique, max_tokens, shards=32)

@@ -3,7 +3,7 @@ planted leakage removed, deterministic output, each stage
 materialized once."""
 
 from conftest import final_plan_nodes, last_execution_id, sql_executions
-from jobs.curate import run
+from jobs.curate import eval_fixture, run
 
 SF = "/root/testdata/sf0.001"
 OPTIONAL = dict(substring_k=8, dsir_n=50, dsir_target_source="src1")
@@ -106,3 +106,65 @@ def test_python_stages_run_once(spark):
     assert n_executions(lambda op, b: op == "ArrowEvalPython" and "_rep(" in b) == 1
     assert n_executions(lambda op, b: op == "ArrowEvalPython" and "_cut(" in b) == 1
     assert n_executions(lambda op, b: op == "MapInArrow") == 1
+
+
+def _python_fixture(texts: list[str]) -> list[tuple[int, str]]:
+    """The fixture's Python reference: words 3-30 of each text by
+    ``str.split()``."""
+    return [(i, " ".join(t.split()[2:30])) for i, t in enumerate(texts)]
+
+
+def _fixture_rows(docs, n: int) -> list[tuple[int, str]]:
+    return [(r.eval_id, r.text) for r in eval_fixture(docs, n).orderBy("eval_id").collect()]
+
+
+def test_eval_fixture_matches_python_split_on_corpus(spark):
+    """The planned fixture over every sf0.001 doc equals the Python
+    split fixture, and is one partition (one eval-side shingle task)."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    texts = [r.text for r in docs.orderBy("doc_id").select("text").collect()]
+    assert _fixture_rows(docs, len(texts)) == _python_fixture(texts)
+    assert eval_fixture(docs, 3).rdd.getNumPartitions() == 1
+
+
+def test_eval_fixture_matches_python_split_on_unicode_whitespace(spark):
+    """Java's ``\\s`` alone misses NBSP and ``\\x1c``; the fixture's
+    separator class splits exactly where ``str.split()`` does: on the
+    listed cases, and on every BMP code point between two words."""
+    cases = [
+        "w1\tw2 w3\tw4 w5",
+        "\nw1 w2 w3 w4",
+        "w1\xa0w2\xa0w3\xa0w4",
+        "w1\u2028w2\u2028w3\u2028w4",
+        "w1\u3000w2\u3000w3\u3000w4",
+        "w1\x1cw2\x1cw3\x1cw4",
+        "one two",
+        "",
+        " ".join(f"w{i}" for i in range(40)),
+    ]
+    docs = spark.createDataFrame(list(enumerate(cases)), "doc_id long, text string")
+    assert _fixture_rows(docs, len(cases)) == _python_fixture(cases)
+
+    sweep = [f"w1 w2 w3{chr(c)}w4" for c in range(0x10000) if not 0xD800 <= c < 0xE000]
+    docs = spark.createDataFrame(list(enumerate(sweep)), "doc_id long, text string")
+    assert _fixture_rows(docs, len(sweep)) == _python_fixture(sweep)
+
+
+def test_in_memory_run_has_no_count_only_executions(spark):
+    """Each stage's row count (and the substring chars) come from the
+    job that materializes the stage: an in-memory run has no SQL
+    execution that only counts or sums a checkpointed stage (a
+    ``Scan ExistingRDD`` under aggregates), and none that collects the
+    eval snippets to the driver.  That leaves 10 executions: the
+    input count, five stage checkpoints, DSIR's two
+    bucket-count collects and the packing stats."""
+    agg_only = {"Scan", "Project", "HashAggregate", "Exchange", "ShuffleQueryStage",
+                "AQEShuffleRead", "ResultQueryStage"}
+    before = last_execution_id(spark)
+    run(spark, SF, max_tokens=512, **OPTIONAL)
+    plans = [final_plan_nodes(e.physicalPlanDescription()) for e in sql_executions(spark, before)]
+    for nodes in plans:
+        ops = {op for op, _ in nodes}
+        assert not (ops <= agg_only and any("ExistingRDD" in b for op, b in nodes if op == "Scan")), nodes
+        assert not ops <= {"Scan", "ColumnarToRow", "TakeOrderedAndProject"}, nodes
+    assert len(plans) == 10

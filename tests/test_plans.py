@@ -270,3 +270,21 @@ def test_pip_join_ray_cast_planned_only_for_wkt(spark, indexed_pages, scheme):
         assert plan.count("ArrowEvalPython") == n, plan
         assert "BatchEvalPython" not in plan
         assert ("pip_refine_wkt_udf" in plan) == bool(n), plan
+
+
+@pytest.mark.parametrize("scheme", ["s2", "h3"])
+def test_pip_join_covering_is_local_table(spark, indexed_pages, scheme):
+    """The driver-built S2 / H3 covering enters the plan as a
+    LocalTableScan, never a Python RDD (Scan ExistingRDD)."""
+    from earth_data_kit_spark.operators.spatial_join import Polygon
+    from earth_data_kit_spark.operators.spatial_join_h3 import pip_join_h3
+    from earth_data_kit_spark.operators.spatial_join_s2 import pip_join_s2
+
+    polys = [Polygon("AL", "albania", bbox=(19.3, 39.6, 21.0, 42.7))]
+    if scheme == "s2":
+        joined = pip_join_s2(indexed_pages, polys, level=7, leaf_col="s2_leaf")
+    else:
+        joined = pip_join_h3(indexed_pages, polys, res=6, cell_col="h3_cell")
+    plan = plan_of(joined)
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
