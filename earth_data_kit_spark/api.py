@@ -25,6 +25,14 @@ workflow shape:
 
 Everything returns DataFrames — the plan stays declarative end to
 end, so Catalyst sees the whole discover→assign→clip pipeline.
+
+The beyond-reference raster operators have no façade verb; call them
+from their modules: ``blocks.windowed_read``,
+``contour.contour_segments``, ``regions.region_label``,
+``polygonize.polygonize``, ``focal.focal_map``,
+``rasterize.rasterize``, ``zonal.zonal_stats`` (all under
+``operators``), ``sources.cog.cog_scan`` and
+``operators.gtiff.read_gtiff_window``.
 """
 
 from __future__ import annotations
@@ -154,16 +162,6 @@ class Dataset:
 
         return combine_blocks(ref_blocks, others, ref_size, src_sizes, method, dst_block)
 
-    def read_window(
-        self, blocks: DataFrame, xoff: int, yoff: int, xsize: int, ysize: int
-    ) -> DataFrame:
-        """Reference ``.to_dataarray()`` read path analog: clamped
-        windowed read over the blocks table (prune → decode → mask →
-        scale), one row per surviving block."""
-        from earth_data_kit_spark.operators.blocks import windowed_read
-
-        return windowed_read(blocks, xoff, yoff, xsize, ysize)
-
     def to_dataarray(
         self,
         blocks: DataFrame,
@@ -204,7 +202,6 @@ class Dataset:
             width, height, n_bands, chunk_x, chunk_y, x_first, x_last, y_first, y_last
         )
         return t, cog.cog_block_layout(spark, width, height, n_bands, chunk_x, chunk_y)
-
 
     def to_labeled_dataarray(
         self,
@@ -248,99 +245,6 @@ class Dataset:
             blocks, path, width, height, tile=tile, gt=gt, compression=compression,
             overviews=overviews, jpeg_quality=jpeg_quality,
         )
-
-    def contours(
-        self, blocks: DataFrame, raster_size: tuple[int, int], block: int,
-        levels: list[float],
-    ) -> DataFrame:
-        """Marching-squares contour segments (the gdal_contour
-        analog): one-sided 1-pixel halo, every 2x2 cell marched by
-        exactly one task; (level, x1, y1, x2, y2) in pixel coords."""
-        from earth_data_kit_spark.operators.contour import contour_segments
-
-        return contour_segments(blocks, raster_size, block, levels)
-
-    def regions(
-        self, blocks: DataFrame, raster_size: tuple[int, int], block: int,
-    ) -> DataFrame:
-        """Connected equal-valued regions (GDAL polygonize core):
-        per-block run CCL → boundary-strip equi-join → min-label
-        merge; one row per region (value, n_px, bbox)."""
-        from earth_data_kit_spark.operators.regions import region_label
-
-        return region_label(blocks, raster_size, block)
-
-    def polygonize(
-        self, blocks: DataFrame, raster_size: tuple[int, int], block: int,
-        gt: tuple | None = None,
-    ) -> DataFrame:
-        """Regions → vector rings (the full GDAL polygonize): one WKT
-        POLYGON (shell + holes) per connected equal-valued region,
-        in pixel-lattice or geo (``gt``) coordinates; region ids and
-        pixel counts match ``regions`` row-for-row."""
-        from earth_data_kit_spark.operators.polygonize import polygonize as _pz
-
-        return _pz(blocks, raster_size, block, gt=gt)
-
-    def focal(
-        self, blocks: DataFrame, raster_size: tuple[int, int], block: int,
-        fn: str = "mean", **kw,
-    ) -> DataFrame:
-        """Focal stats / Horn terrain derivatives (the gdaldem analog:
-        slope, aspect, hillshade, mean/min/max/range) via strip-based
-        halo exchange; output is blocks-schema, composes with every
-        sink."""
-        from earth_data_kit_spark.operators.focal import focal_map
-
-        return focal_map(blocks, raster_size, block, fn, **kw)
-
-    def rasterize(
-        self, spark: SparkSession, polygons, gt: tuple, width: int, height: int,
-        **kw,
-    ) -> DataFrame:
-        """Vector→raster burn (GDAL RasterizeLayer semantics: pixel
-        centers, later polygons overwrite) → blocks DataFrame;
-        composes with export_cog / scan_cog / zonal_stats."""
-        from earth_data_kit_spark.operators.rasterize import rasterize as _rz
-
-        return _rz(spark, polygons, gt, width, height, **kw)
-
-    def zonal_stats(self, blocks: DataFrame, polygons, gt: tuple) -> DataFrame:
-        """Per-polygon raster statistics (raster↔vector): broadcast
-        bbox prefilter → Arrow partial per intersecting block →
-        native final agg.  ``polygons``: list of spatial_join.Polygon,
-        or a DataFrame (code + wkt/bbox columns — the distributed
-        polygon side, r6) tile-equi-joined in-plan."""
-        from earth_data_kit_spark.operators.zonal import zonal_stats as _zs
-
-        return _zs(blocks, polygons, gt)
-
-    def scan_cog(
-        self,
-        spark: SparkSession,
-        path: str,
-        level: int = 0,
-        window: tuple[int, int, int, int] | None = None,
-    ) -> DataFrame:
-        """COG → distributed blocks DataFrame (the inverse of
-        ``export_cog``): driver parses only the header-resident tile
-        index, Catalyst prunes tiles on the metadata window, and a
-        map-only Arrow stage decodes the survivors into the standard
-        blocks schema for the block operators."""
-        from earth_data_kit_spark.sources.cog import cog_scan
-
-        return cog_scan(spark, path, level=level, window=window)
-
-    def read_cog_window(
-        self, path: str, xoff: int, yoff: int, xsize: int, ysize: int,
-        level: int = 0,
-    ):
-        """Windowed COG read: decode only the tiles intersecting the
-        window (ranged-GET access pattern); ``level`` selects an
-        overview IFD."""
-        from earth_data_kit_spark.operators.gtiff import read_gtiff_window
-
-        return read_gtiff_window(path, xoff, yoff, xsize, ysize, level=level)
 
     def plot(self, labeled_array, to_html_path: str | None = None, **kw):
         """Reference ``da.edk.plot()`` / folium overlay analog: one

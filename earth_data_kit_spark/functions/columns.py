@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from earth_data_kit_spark.grid.geom import EARTH_RADIUS_M
+
 RES_SHIFT_MULT = 1 << 58  # quadgrid id = res*2^58 + x*2^29 + y
 X_SHIFT_MULT = 1 << 29
 
@@ -45,7 +47,7 @@ def haversine_m_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
     (Trig may differ by ulps across libms — consumers round before
     hash comparison.)"""
     return (
-        f"(2.0 * 6371000.0 * asin(sqrt(least(1.0, "
+        f"(2.0 * {EARTH_RADIUS_M} * asin(sqrt(least(1.0, "
         f"pow(sin(radians(({lat2}) - ({lat1})) / 2.0), 2.0) + "
         f"cos(radians({lat1})) * cos(radians({lat2})) * "
         f"pow(sin(radians(({lon2}) - ({lon1})) / 2.0), 2.0)))))"
@@ -82,7 +84,7 @@ def haversine_m_col(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> C
         F.pow(F.sin(F.radians(lat2 - lat1) / 2.0), 2.0)
         + F.cos(F.radians(lat1)) * F.cos(F.radians(lat2)) * F.pow(F.sin(F.radians(lon2 - lon1) / 2.0), 2.0)
     )
-    return 2.0 * 6371000.0 * F.asin(F.sqrt(F.least(F.lit(1.0), a)))
+    return 2.0 * EARTH_RADIUS_M * F.asin(F.sqrt(F.least(F.lit(1.0), a)))
 
 
 def salt_col(key: Column, buckets: int) -> Column:

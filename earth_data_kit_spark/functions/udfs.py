@@ -17,18 +17,8 @@ from pyspark.sql import types as T
 
 from earth_data_kit_spark.grid import cells, geom, s2
 from earth_data_kit_spark.text import analysis
-from earth_data_kit_spark.text.extract import extract_text, text_sha256
+from earth_data_kit_spark.text.extract import extract_text
 from earth_data_kit_spark.text.geocode import geocode
-
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(lambda b: extract_text(b) if b is not None else None)
-
-
-@F.pandas_udf(T.StringType())
-def text_sha256_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: text_sha256(t) if t is not None else None)
 
 
 def s2_leaf_series(lat: np.ndarray, lon: np.ndarray) -> pd.Series:
@@ -140,11 +130,6 @@ def pip_refine_wkt_udf(lon: pd.Series, lat: pd.Series, wkt: pd.Series) -> pd.Ser
 @F.pandas_udf(T.StringType())
 def detect_lang_udf(text: pd.Series) -> pd.Series:
     return text.map(lambda t: analysis.detect_lang(t or ""))
-
-
-@F.pandas_udf(T.DoubleType())
-def quality_score_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: analysis.quality_score(t or ""))
 
 
 @F.pandas_udf(T.IntegerType())

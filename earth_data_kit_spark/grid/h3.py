@@ -60,6 +60,8 @@ import math
 
 import numpy as np
 
+from earth_data_kit_spark.grid.geom import EARTH_RADIUS_M
+
 MAX_RES = 15
 _RES_SHIFT = 59
 _FACE_SHIFT = 54
@@ -135,7 +137,6 @@ FACE_CENTERS, FACE_U, FACE_V = _build_faces()
 
 # Angular radius of a face: center-to-vertex angle (all equal).
 VERTEX_ANG = math.acos(float(np.dot(FACE_CENTERS[0], [0.0, 0.0, 1.0])))
-EARTH_R_M = 6371000.0
 
 
 def _to_xyz(lat_deg, lon_deg):
@@ -313,7 +314,7 @@ def min_cell_pitch_m(res: int) -> float:
     a planar step of ``pitch`` at angular distance θ from the face
     center subtends at least ``pitch·cos²(θ)`` radians (inverse of
     the gnomonic sec² stretch), minimized at the face vertex."""
-    return pitch(res) * math.cos(VERTEX_ANG) ** 2 * EARTH_R_M
+    return pitch(res) * math.cos(VERTEX_ANG) ** 2 * EARTH_RADIUS_M
 
 
 def _cap_plan(lat_deg: float, lon_deg: float, radius_m: float, res: int):
@@ -322,7 +323,7 @@ def _cap_plan(lat_deg: float, lon_deg: float, radius_m: float, res: int):
     COUNT a cover (``cover_cap_count``) without materializing it —
     the adaptive-resolution covering in operators/spatial_join_h3.py
     sizes the resolution from these counts."""
-    alpha = radius_m / EARTH_R_M  # angular radius
+    alpha = radius_m / EARTH_RADIUS_M  # angular radius
     xyz = _to_xyz(np.array([lat_deg]), np.array([lon_deg]))[0]
     cosd = FACE_CENTERS @ xyz
     # face Voronoi region ⊆ cap(center, VERTEX_ANG); intersects query
@@ -409,7 +410,7 @@ def cover_cap(lat_deg: float, lon_deg: float, radius_m: float, res: int):
     Lipschitz-inflated disks carry phantom positions far outside the
     face/cap — ~50× the true covering for continent-sized caps.
     Returns int64 array (deduped)."""
-    alpha = radius_m / EARTH_R_M
+    alpha = radius_m / EARTH_RADIUS_M
     xyz = _to_xyz(np.array([lat_deg]), np.array([lon_deg]))[0]
     full_face = math.tan(VERTEX_ANG)
     margin = pitch(res) / SQRT3 * 1.0001 + 1e-12

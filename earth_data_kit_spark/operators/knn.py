@@ -45,8 +45,9 @@ from earth_data_kit_spark.functions.columns import (
 )
 from earth_data_kit_spark.grid import cells
 from earth_data_kit_spark.grid.cells import nx_ny
+from earth_data_kit_spark.grid.geom import EARTH_RADIUS_M, METERS_PER_DEGREE
 
-_M_PER_DEG = math.pi / 180.0 * 6371000.0  # meridional meters/degree
+_M_PER_DEG = math.pi / 180.0 * EARTH_RADIUS_M  # meridional meters/degree
 
 
 def queries_df(spark: SparkSession, queries) -> DataFrame:
@@ -68,15 +69,15 @@ def ring_for_radius(radius_m: float, res: int, at_lat: float = 0.0) -> int:
     """Smallest ring count whose cells cover a radius at a latitude.
 
     Sized at the WORST-case latitude reachable within the radius
-    (``|lat| + radius/111320``), where the longitudinal meter-width of
-    a cell is smallest — sizing at the query's own latitude under-
-    covers poleward radii.  When the radius reaches the pole the ring
+    (``|lat| + radius/METERS_PER_DEGREE``), where the longitudinal
+    meter-width of a cell is smallest — sizing at the query's own
+    latitude under-covers poleward radii.  When the radius reaches the pole the ring
     spans the full longitude circle (the wrap is handled by the ring
     enumeration), so the join stays exact at any latitude."""
     cell_deg = 180.0 / (1 << res)
     nx = 2 << res
     full_lon = (nx + 1) // 2  # 2k+1 >= nx → ring covers every column
-    radius_deg = radius_m / 111320.0
+    radius_deg = radius_m / METERS_PER_DEGREE
     lat_reach = abs(at_lat) + radius_deg
     y_ring = max(1, math.ceil(radius_deg / cell_deg))
     if lat_reach >= 89.9:
@@ -192,7 +193,7 @@ class QuadScheme(CellScheme):
         cell_deg = 180.0 / (1 << self.res)
         nx = 2 << self.res
         full_lon = (nx + 1) // 2
-        radius_deg = radius_m / 111320.0
+        radius_deg = radius_m / METERS_PER_DEGREE
         y_ring = max(1, math.ceil(radius_deg / cell_deg))
         lat_reach = F.abs(F.col("qlat")) + F.lit(radius_deg)
         ring_else = F.greatest(

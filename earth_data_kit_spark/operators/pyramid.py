@@ -18,7 +18,6 @@ from __future__ import annotations
 
 from functools import reduce
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -69,53 +68,3 @@ def pyramid_rollup(
     out = reduce(lambda a, b: a.unionByName(b), levels)
     return out.select("res", "cell", *aggs.keys())
 
-
-def h3_parent_udf():
-    """Arrow-vectorized H3-class parent (grid/h3.py center-containment
-    parenting — geometric, so a UDF rather than bit math; see the
-    quadgrid ``parent_cell_col`` for the arithmetic-index contrast)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _udf(cell: pd.Series) -> pd.Series:
-        from earth_data_kit_spark.grid import h3
-
-        return pd.Series(h3.parent(cell.to_numpy()))
-
-    return _udf
-
-
-def pyramid_rollup_h3(
-    df: DataFrame,
-    cell_col: str,
-    res: int,
-    min_res: int,
-    agg_cols: dict[str, Column] | None = None,
-) -> DataFrame:
-    """``pyramid_rollup`` over the aperture-7 H3-class hierarchy: the
-    hex analog rolls ~7 children into each parent per level.  Same
-    scale shape — the base aggregate is the only |rows|-sized job;
-    every level above re-aggregates |cells|-sized output, so the
-    parent UDF (Arrow, one pass per level) runs over cell counts,
-    never row counts.  Output: (res, cell, n [, extras])."""
-    aggs = {"n": F.count("*").cast("bigint"), **(agg_cols or {})}
-    parent = h3_parent_udf()
-    base = (
-        df.groupBy(F.col(cell_col).alias("cell"))
-        .agg(*[v.alias(k) for k, v in aggs.items()])
-        .withColumn("res", F.lit(res).cast("bigint"))
-    )
-    levels = [base]
-    cur = base
-    for r in range(res - 1, min_res - 1, -1):
-        cur = (
-            cur.groupBy(parent(F.col("cell")).alias("cell"))
-            .agg(*[
-                (F.sum(k).cast("bigint") if k == "n" else F.sum(k)).alias(k)
-                for k in aggs
-            ])
-            .withColumn("res", F.lit(r).cast("bigint"))
-        )
-        levels.append(cur)
-    out = reduce(lambda a, b: a.unionByName(b), levels)
-    return out.select("res", "cell", *aggs.keys())

@@ -47,13 +47,15 @@ from earth_data_kit_spark.operators.spatial_join import _pip
 
 
 def h3_cell_udf(res: int):
-    """Arrow-vectorized (lon, lat) → H3-class cell id."""
+    """Arrow-vectorized (lon, lat) → H3-class cell id.  Registered
+    non-deterministic for one Arrow node per plan (see
+    ``s2_leaf_udf``)."""
 
     @pandas_udf("long")
     def _udf(lon: pd.Series, lat: pd.Series) -> pd.Series:
         return pd.Series(h3.latlng_to_cell(lat.to_numpy(), lon.to_numpy(), res))
 
-    return _udf
+    return _udf.asNondeterministic()
 
 
 def res_for_radius(radius_m: float, target_cells: int = 200) -> int:

@@ -42,6 +42,7 @@ from pyspark.sql.functions import pandas_udf
 
 from earth_data_kit_spark.functions.udfs import s2_leaf_series
 from earth_data_kit_spark.grid import s2
+from earth_data_kit_spark.grid.geom import EARTH_RADIUS_M
 from earth_data_kit_spark.operators.knn import CellScheme, _knn, _radius
 from earth_data_kit_spark.operators.polygons import polygon_table
 from earth_data_kit_spark.operators.spatial_join import Polygon, _pip
@@ -49,14 +50,17 @@ from earth_data_kit_spark.operators.spatial_join import Polygon, _pip
 
 def s2_leaf_udf():
     """Vectorized (lon, lat) → S2 level-30 leaf id, as int64 (bit
-    reinterpretation of the uint64 id — equi-join/groupBy safe)."""
+    reinterpretation of the uint64 id — equi-join/groupBy safe).
+    Registered non-deterministic, like ``extract_geocode_udf``, so the
+    join's pushed-down ``IS NOT NULL`` key filter cannot copy it into
+    a second Arrow node; the ids themselves are deterministic."""
 
     @pandas_udf("long")
     def _leaf(lon: pd.Series, lat: pd.Series) -> pd.Series:
         # NULL in → NULL out (pandas hands a NULL double over as NaN)
         return s2_leaf_series(lat.to_numpy(np.float64), lon.to_numpy(np.float64))
 
-    return _leaf
+    return _leaf.asNondeterministic()
 
 
 def s2_parent_col(leaf_col: F.Column, level: int) -> F.Column:
@@ -100,7 +104,7 @@ def s2_ring_safe_radius_m(level: int, ring: int) -> float:
     under the measured worst case (ring 2 ≥ 1.12·2^−l, ring 4 ≥
     2.40·2^−l, tests/test_s2.py pins this) — so the bound errs only
     toward wider rings, never toward missed neighbors."""
-    return 0.5 * (ring // 2) * (2.0 ** -level) * 6371000.0
+    return 0.5 * (ring // 2) * (2.0 ** -level) * EARTH_RADIUS_M
 
 
 class S2Scheme(CellScheme):
@@ -173,7 +177,7 @@ class S2Scheme(CellScheme):
         whose guaranteed radius covers dk; starved (dk null, incl.
         zero-candidate queries) → double."""
         # Column twin of s2_ring_safe_radius_m: 0.5·(r//2)·2^-level·R
-        per_layer = F.lit(0.5 * (2.0 ** -self.level) * 6371000.0)
+        per_layer = F.lit(0.5 * (2.0 ** -self.level) * EARTH_RADIUS_M)
         sat = F.filter(
             F.sequence(F.lit(ring), F.lit(max_ring), F.lit(2)),
             lambda r: per_layer * F.floor(r / 2) >= F.col("dk"),

@@ -9,9 +9,10 @@ Spark:
 * every stage writes its output partitioned by a stable ``part_key``
   (e.g. cell prefix) to the stage directory — the snapshot;
 * a lineage row per partition — (job_id, stage, part_key, row_count,
-  checksum, wall clock) — is computed IN THE SAME PASS with one
-  groupBy (count + xor-of-hash checksum: order-insensitive and
-  distributable);
+  checksum, wall clock) — is computed by ``commit_stage`` after the
+  write, with one groupBy (count + xor-of-hash checksum: order-
+  insensitive and distributable) over a re-read of the partitions
+  that write produced, so the checksum covers what landed on disk;
 * ``resume_filter`` anti-joins the completed part_keys from the
   lineage table so a restarted job processes only missing partitions
   (the existence-skip semantic, but transactional: a partition is

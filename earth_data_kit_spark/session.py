@@ -5,6 +5,12 @@ cluster (AQE on, skew-join on, Arrow batches for the UDF layer); the
 only local-mode-specific knobs are master/shuffle-partition count,
 both overridable by env (SPARK_GRAFT_CPUS) so bench.py can run the
 identical job at two parallelism levels for the scaling criterion.
+
+Under spark-submit the master is the submitter's: a driver that
+spark-submit started has ``PYSPARK_GATEWAY_PORT`` in its environment
+(the JVM it connects to already holds ``--master``), so ``local[cpus]``
+is set only for a plain Python driver.  ``SparkConf`` cannot tell the
+two apart: under plain Python it also reads a default ``local[*]``.
 """
 
 from __future__ import annotations
@@ -22,9 +28,11 @@ def get_spark(
 ) -> SparkSession:
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
+    b = SparkSession.builder
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        b = b.master(f"local[{cpus}]")
     b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
+        b.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -226,22 +226,11 @@ class Catalog:
                 # mixed-schema dirs would otherwise read back silently
                 # wrong (missing columns null, extras dropped)
                 cur = next(h for h in man["history"] if h["id"] == man["current"])
-                cur_schema = cur.get("schema")
-                if cur_schema is None:
-                    # pre-schema manifest: sniff the stored schema from
-                    # the existing dirs' footers instead of trusting
-                    # (and stamping) the unvalidated delta's schema
-                    probe = df.sparkSession.read.parquet(
-                        str(self.base / table / self._entry_dirs(cur)[0])
-                    )
-                    cur_schema = {
-                        f.name: f.dataType.simpleString() for f in probe.schema.fields
-                    }
-                if cur_schema != schema_map:
+                if cur["schema"] != schema_map:
                     shutil.rmtree(inflight, ignore_errors=True)
                     raise ValueError(
                         f"append schema mismatch for {table!r}: "
-                        f"table has {cur_schema}, append brings {schema_map}"
+                        f"table has {cur['schema']}, append brings {schema_map}"
                     )
             if require_base is not None and man["current"] != require_base:
                 # optimistic-concurrency validation (compact): the
@@ -261,18 +250,10 @@ class Catalog:
             stats = {f"{own_dir}/{k}": v for k, v in (new_stats or {}).items()}
             if mode == "append" and man["current"] is not None:
                 parent = next(h for h in man["history"] if h["id"] == man["current"])
-                dirs = self._entry_dirs(parent) + dirs
+                dirs = parent["dirs"] + dirs
                 parent_sidecar = self.base / table / f"snap-{man['current']}.stats.json"
                 if parent_sidecar.exists():
-                    pstats = json.loads(parent_sidecar.read_text())
-                    # migrate pre-dir-list sidecars (bare filenames →
-                    # that snapshot's own single dir) so old pruning
-                    # info survives the append merge
-                    pstats = {
-                        (k if "/" in k else f"snap-{man['current']}/{k}"): v
-                        for k, v in pstats.items()
-                    }
-                    stats = {**pstats, **stats}
+                    stats = {**json.loads(parent_sidecar.read_text()), **stats}
             if stats:
                 # Iceberg-manifest analog: per-file column ranges in an
                 # immutable per-snapshot sidecar (relative-path keys),
@@ -293,11 +274,6 @@ class Catalog:
             self._replace_manifest(table, man)
             return snap_id
 
-    @staticmethod
-    def _entry_dirs(entry: dict) -> list[str]:
-        """Data dirs of a history entry (pre-dirs manifests: its own)."""
-        return list(entry.get("dirs", [f"snap-{entry['id']}"]))
-
     def _replace_manifest(self, table: str, man: dict) -> None:
         tmp = self._manifest_path(table).with_suffix(f".json.tmp-{uuid.uuid4().hex}")
         tmp.parent.mkdir(parents=True, exist_ok=True)
@@ -317,7 +293,7 @@ class Catalog:
         if entry is None:
             ids = sorted(h["id"] for h in man["history"])
             raise KeyError(f"unknown snapshot {snap} for {table!r} (have {ids})")
-        return snap, self._entry_dirs(entry)
+        return snap, entry["dirs"]
 
     def scan(
         self,
@@ -371,9 +347,6 @@ class Catalog:
         for d in dirs:
             for f in sorted((tdir / d).glob("*.parquet")):
                 cols = stats.get(f"{d}/{f.name}")
-                if cols is None and len(dirs) == 1:
-                    # pre-dir-list sidecars keyed by bare filename
-                    cols = stats.get(f.name)
                 ok = True
                 if cols is not None:
                     for col, (lo, hi) in ranges.items():
@@ -455,11 +428,11 @@ class Catalog:
                 ] + keep_entries
             keep_ids = {h["id"] for h in keep_entries}
             expired = [h["id"] for h in hist if h["id"] not in keep_ids]
-            referenced = {d for h in keep_entries for d in self._entry_dirs(h)}
+            referenced = {d for h in keep_entries for d in h["dirs"]}
             for h in hist:
                 if h["id"] in keep_ids:
                     continue
-                for d in self._entry_dirs(h):
+                for d in h["dirs"]:
                     if d not in referenced:
                         shutil.rmtree(self.base / table / d, ignore_errors=True)
                 (self.base / table / f"snap-{h['id']}.stats.json").unlink(missing_ok=True)

@@ -24,7 +24,8 @@ from datetime import timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 
-from earth_data_kit_spark.sources.stac import _bbox_intersects, _naive_utc, _parse_dt
+from earth_data_kit_spark.grid import geom
+from earth_data_kit_spark.sources.stac import _naive_utc, _parse_dt
 
 EE_ITEM_COLUMNS = "gdal_path string, engine_path string, date timestamp, tile_name string"
 
@@ -53,7 +54,7 @@ def search_assets(
             continue
         if t1 is not None and _parse_dt(a["endTime"]) > t1:
             continue
-        if bbox is not None and not _bbox_intersects(a["bbox"], bbox):
+        if bbox is not None and not geom.bbox_intersects(*a["bbox"], *bbox):
             continue
         kept.append(a)
     return kept, len(assets)

@@ -26,6 +26,8 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earth_data_kit_spark.grid import geom
+
 ITEM_COLUMNS = "engine_path string, gdal_path string, tile_name string, date timestamp"
 
 
@@ -53,10 +55,6 @@ def _naive_utc(v: str) -> datetime:
     wall-clock and diverge from search_items' tz-aware filtering
     (ADVICE r2)."""
     return _parse_dt(v).astimezone(timezone.utc).replace(tzinfo=None)
-
-
-def _bbox_intersects(a, b) -> bool:
-    return a[0] <= b[2] and a[2] >= b[0] and a[1] <= b[3] and a[3] >= b[1]
 
 
 def load_catalog(catalog: str | dict) -> dict:
@@ -91,7 +89,7 @@ def search_items(
             continue
         if t1 is not None and dt > t1:
             continue
-        if bbox is not None and not _bbox_intersects(it["bbox"], bbox):
+        if bbox is not None and not geom.bbox_intersects(*it["bbox"], *bbox):
             continue
         kept.append(it)
     return kept, len(items)

@@ -143,13 +143,6 @@ def shingles(text: str, k: int = 5) -> list[str]:
     return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
 
 
-def char_ngrams(text: str, n: int = 3) -> list[str]:
-    t = _WS.sub(" ", (text or "").lower()).strip()
-    if len(t) < n:
-        return [t] if t else []
-    return [t[i : i + n] for i in range(len(t) - n + 1)]
-
-
 _MINHASH_RNG = np.random.default_rng(42)
 _MINHASH_A = (_MINHASH_RNG.integers(0, 1 << 62, size=256, dtype=np.uint64) << np.uint64(1)) | np.uint64(1)
 _MINHASH_B = _MINHASH_RNG.integers(0, 1 << 63, size=256, dtype=np.uint64)

@@ -107,14 +107,6 @@ def url_dedup(df, url_col: str = "url", id_col: str = "page_id"):
 # deleting these via translate counts total word characters in one
 # pass instead of an aggregate() lambda over the words array
 _WS_CHARS = " \t\n\x0b\f\r"
-# the EXACT charset of the r"[A-Za-zÀ-ÿ]" alpha-word test (a raw
-# range: U+00C0..U+00FF, so ×/÷ are deliberately included to keep
-# the historical semantics); translate-delete + length comparison is
-# a single char-map pass vs a per-word regex scan
-_ALPHA_CHARS = (
-    "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
-    + "".join(chr(c) for c in range(0xC0, 0x100))
-)
 
 
 def gopher_quality_cols(text: Column) -> Column:

@@ -34,7 +34,10 @@ _SPACE_CLASS_RE2 = "[ \\t\\n\\r\\f\\x0B]"
 
 
 def token_count_col(text: Column) -> Column:
-    """analysis.token_count as a Column (regexp_extract_all size)."""
+    """analysis.token_count as a Column (regexp_extract_all size).
+    Equal on ASCII text only: Java's ``\\w`` and ``\\s`` are ASCII
+    classes and Python's are Unicode, so a word with a non-ASCII
+    letter (``café``) splits into more Java tokens."""
     text = F.coalesce(text, F.lit(""))  # UDF twins map None → ""
     return F.size(F.regexp_extract_all(text, F.lit(TOKEN_PATTERN), F.lit(0)))
 

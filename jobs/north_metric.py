@@ -17,7 +17,7 @@ argv: pages_parquet_path [scan_mult=16] [runs=2]
 Prints ONE JSON line: executors observed, pip_join wall (best of
 runs), docs/sec, and a same-window single-thread CPU-calibration
 stamp (the BENCH/BASELINE.md normalization input).  The session is
-built WITHOUT a master override so spark-submit's --master wins;
+the engine's ``get_spark``, which leaves the master to spark-submit;
 scripts/cluster_scaling_run.sh drives the (N, 4N) = (1, 4)-executor
 pair and appends the section to BENCH/BASELINE.md.
 """
@@ -42,21 +42,13 @@ def main() -> None:
     scan_mult = int(sys.argv[2]) if len(sys.argv) > 2 else 16
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 2
 
-    from pyspark.sql import SparkSession
-
-    # No .master(): spark-submit --master decides (local-cluster[...]).
-    spark = (
-        SparkSession.builder.appName("edk-north-metric")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .getOrCreate()
-    )
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from earth_data_kit_spark.operators import spatial_join as sj
+    from earth_data_kit_spark.session import get_spark
+
+    # under spark-submit, --master decides (local-cluster[...])
+    spark = get_spark(app_name="edk-north-metric")
 
     # driver + N executors; block-until-registered via a tiny job
     spark.range(1).count()

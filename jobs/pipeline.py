@@ -23,6 +23,9 @@ crash resumes from the last committed partition — north_rule
   5. metrics   — per-stage row counts / checksums / wall-ms appended
                  to {base}/lineage (queryable DataFrame)
 
+Under spark-submit, ``--master`` sets the parallelism; ``--cpus`` sizes
+only a plain-Python run's ``local[cpus]`` and the shuffle partitions.
+
 Every stage is one ``lineage.checkpoint_stage`` call: resume filter,
 then the stage's single write (which also collects the lineage keys),
 then a re-read of the stage directory for the next stage.  Each stage's
@@ -104,12 +107,10 @@ def main(argv: list[str] | None = None) -> None:
 
     # ---- stage 1: ingest ------------------------------------------------
     # hash-partitioned on part, so each part directory gets one file
-    # (round-robin tasks would each write one into every part)
+    # (round-robin tasks would each write one into every part); that
+    # one exchange is the stage's only shuffle
     pages = (
-        synth_pages_df(
-            spark, args.sf_dir, reps=args.reps,
-            partitions=spark.sparkContext.defaultParallelism,
-        )
+        synth_pages_df(spark, args.sf_dir, reps=args.reps)
         .withColumn("part", cell_id_col(F.col("lon"), F.col("lat"), PART_RES))
         .repartition("part")
     )

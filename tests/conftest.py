@@ -20,6 +20,60 @@ def spark():
     s.stop()
 
 
+def _active_spark():
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.getActiveSession()
+    return None if spark is None or spark.sparkContext._jsc is None else spark
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    # ids only: a py4j handle held across a test would pin the RDD and
+    # keep the context cleaner from releasing it
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _cache_buffer_ids(spark) -> set[int]:
+    """RDD ids of the loaded in-memory buffers of the cached frames."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cm)
+    ids = set()
+    for i in range(entries.size()):
+        builder = entries.apply(i).cachedRepresentation().cacheBuilder()
+        if builder.isCachedColumnBuffersLoaded():
+            ids.add(builder.cachedColumnBuffers().id())
+    return ids
+
+
+@pytest.fixture(autouse=True)
+def no_leaked_caches():
+    """Fail a test that leaves a cache-manager entry or a persistent
+    RDD behind.  The caller-owned caches allowed: those a fixture made
+    before the test (and their buffers, loaded during it), and local
+    checkpoints, the eager operators' documented results, owned by the
+    frame they return."""
+    spark = _active_spark()
+    if spark is not None:
+        entries = spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+        rdd_ids = _persistent_rdd_ids(spark)
+    yield
+    if spark is None or _active_spark() is None:
+        return
+    added = spark._jsparkSession.sharedState().cacheManager().numCachedEntries() - entries
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    new = _persistent_rdd_ids(spark) - rdd_ids - _cache_buffer_ids(spark)
+    leaked = [
+        f"{i} {persistent.get(i).rdd().getClass().getSimpleName()}"
+        for i in sorted(new)
+        if not persistent.get(i).rdd().isCheckpointed()
+    ]
+    assert added <= 0 and not leaked, (
+        f"test left {added} cache-manager entries and persistent RDDs {leaked}"
+    )
+
+
 def sql_executions(spark, after: int = -1) -> list:
     """The session's SQL executions with an id above ``after``, read
     from the SQL status store (works with the UI off)."""

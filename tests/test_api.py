@@ -149,10 +149,10 @@ def test_facade_labeled_array_export_cog_and_plot(spark, tmp_path):
     arr, tags = gtiff.read_gtiff(p)
     assert tags[gtiff.TAG_COMPRESSION] == [8]  # deflate reached the sink
     assert arr[2, 5] == (5 * 31 + 2 * 17) % 30000
-    # windowed read + overview level through the same facade
-    win = ds.read_cog_window(p, 4, 1, 10, 8)
+    # windowed read + overview level of the written file
+    win = gtiff.read_gtiff_window(p, 4, 1, 10, 8)
     assert win.shape == (8, 10) and win[1, 1] == arr[2, 5]
-    lv1 = ds.read_cog_window(p, 0, 0, 64, 64, level=1)
+    lv1 = gtiff.read_gtiff_window(p, 0, 0, 64, 64, level=1)
     assert lv1.shape == (64, 64)
     assert lv1[1, 2] == gtiff.downsample_2x2_mean(arr)[1, 2]
 

@@ -243,59 +243,12 @@ def test_scan_fails_loudly_on_missing_dir(spark, tmp_path):
         cat.scan(spark, "t", {"cell": (0, 100)})
 
 
-def test_legacy_bare_filename_sidecar_still_prunes(spark, tmp_path):
-    """Pre-dir-list sidecars keyed by bare filenames keep pruning on
-    their (single-dir) snapshots."""
-    import json as js
-
-    from earth_data_kit_spark.sources.catalog import Catalog as C
-
-    cat = C(str(tmp_path / "legacy"))
-    df = (
-        spark.range(0, 20_000)
-        .withColumn("cell", F.col("id"))
-        .repartitionByRange(4, F.col("cell"))
-        .sortWithinPartitions("cell")
-    )
-    s1 = cat.write(df, "t", stats_cols=["cell"])
-    sidecar = cat.base / "t" / f"snap-{s1}.stats.json"
-    legacy = {k.split("/", 1)[1]: v for k, v in js.loads(sidecar.read_text()).items()}
-    sidecar.write_text(js.dumps(legacy))  # rewrite in the old format
-    out = cat.scan(spark, "t", {"cell": (100, 200)})
-    assert out.count() == 101
-    assert len(out.inputFiles()) < 4  # pruning happened via bare keys
-
-
 def test_scan_without_stats_falls_back(spark, cat_env, tmp_path):
     cat = Catalog(str(tmp_path / "nostats"))
     df = spark.range(1000).withColumn("cell", F.col("id") * 7)
     cat.write(df, "t")  # no stats_cols
     out = cat.scan(spark, "t", {"cell": (70, 140)})
     assert out.count() == 11  # cells 70,77,...,140
-
-
-def test_pre_schema_manifest_append_sniffs_footers(spark, tmp_path):
-    """Appending onto a manifest written before schema stamping must
-    validate against the stored files' footer schema, not trust (and
-    stamp) the delta's schema."""
-    import json as js
-
-    from earth_data_kit_spark.sources.catalog import Catalog as C
-
-    cat = C(str(tmp_path / "pre"))
-    cat.write(spark.range(10).withColumn("cell", F.col("id")), "t")
-    mp = cat.base / "t" / "manifest.json"
-    man = js.loads(mp.read_text())
-    for h in man["history"]:
-        h.pop("schema", None)  # simulate the pre-schema format
-    mp.write_text(js.dumps(man))
-
-    with pytest.raises(ValueError, match="schema mismatch"):
-        cat.write(
-            spark.range(5).withColumn("cel", F.col("id")), "t", mode="append"
-        )
-    cat.write(spark.range(5).withColumn("cell", F.col("id")), "t", mode="append")
-    assert cat.read(spark, "t").count() == 15
 
 
 def test_compact_rejects_zero_retries(spark, tmp_path):

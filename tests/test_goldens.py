@@ -10,10 +10,10 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as em
 from earth_data_kit_spark.functions.columns import cell_id_col
-from earth_data_kit_spark.functions.udfs import extract_text_udf, text_sha256_udf
 from earth_data_kit_spark.operators import spatial_join as sj
 from earth_data_kit_spark.operators.knn import knn_brute_force
 from earth_data_kit_spark.sources.pages import pages_meta_df, synth_pages_df
+from earth_data_kit_spark.text.extract import extract_text, text_sha256
 
 SF = "/root/testdata/sf0.001"
 GOLD = Path(__file__).resolve().parent.parent / "goldens"
@@ -32,10 +32,10 @@ def assert_same(df, golden_df):
 
 def test_extracted_text_golden(spark):
     golden = spark.read.parquet(str(GOLD / "extracted_text.parquet"))
-    pages = synth_pages_df(spark, SF)
-    got = pages.select(
-        "page_id", "url",
-        text_sha256_udf(extract_text_udf(F.col("html"))).alias("text_sha256"),
+    rows = synth_pages_df(spark, SF).select("page_id", "url", "html").collect()
+    got = spark.createDataFrame(
+        [(r.page_id, r.url, text_sha256(extract_text(r.html))) for r in rows],
+        golden.schema,
     )
     assert_same(got, golden)
 

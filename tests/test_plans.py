@@ -288,3 +288,27 @@ def test_pip_join_covering_is_local_table(spark, indexed_pages, scheme):
     plan = plan_of(joined)
     assert "ExistingRDD" not in plan, plan
     assert "LocalTableScan" in plan, plan
+
+
+@pytest.mark.parametrize("scheme", ["s2", "h3"])
+def test_computed_point_key_is_one_python_node(spark, scheme):
+    """A pip join over points without a stored key computes the S2 /
+    H3 key in exactly one Arrow node: the key UDF is non-deterministic,
+    so the join's pushed-down key filter cannot copy it into a second
+    node."""
+    from earth_data_kit_spark.operators.spatial_join import Polygon
+    from earth_data_kit_spark.operators.spatial_join_h3 import pip_join_h3
+    from earth_data_kit_spark.operators.spatial_join_s2 import pip_join_s2
+
+    pts = spark.range(200).select(
+        F.col("id").alias("page_id"),
+        (F.col("id") % 20 * 0.1 + 19.4).alias("lon"),
+        (F.col("id") / 10 * 0.1 + 39.7).alias("lat"),
+    )
+    polys = [Polygon("AL", "albania", bbox=(19.3, 39.6, 21.0, 42.7))]
+    if scheme == "s2":
+        joined, udf = pip_join_s2(pts, polys, level=6), "_leaf("
+    else:
+        joined, udf = pip_join_h3(pts, polys, res=3), "_udf("
+    nodes = [ln for ln in plan_of(joined).splitlines() if "ArrowEvalPython" in ln]
+    assert len(nodes) == 1 and udf in nodes[0], nodes

@@ -2,13 +2,17 @@
 pipeline that touches rasterize → COG sink → distributed COG scan →
 focal hillshade → labeled DataArray → PNG plot, asserting values at
 each seam (operator tests pin the math; this pins the PLUMBING —
-that the pieces actually compose through the public facade)."""
+that the pieces actually compose, through the operators and the
+public façade's export and array verbs)."""
 
 import numpy as np
 import pytest
 
 from earth_data_kit_spark.api import Dataset
+from earth_data_kit_spark.operators.focal import focal_map
+from earth_data_kit_spark.operators.rasterize import rasterize
 from earth_data_kit_spark.operators.spatial_join import Polygon
+from earth_data_kit_spark.sources.cog import cog_scan
 
 GT = (10.0, 0.1, 0.0, 50.0, 0.0, -0.1)
 W, H = 300, 260
@@ -20,7 +24,7 @@ def test_vector_to_cog_to_terrain_to_plot(spark, tmp_path):
         Polygon("A", "a", bbox=(11.0, 42.0, 18.0, 48.0)),
         Polygon("B", "b", bbox=(14.0, 44.0, 16.0, 46.0)),
     ]
-    burned = ds.rasterize(
+    burned = rasterize(
         spark, polys, GT, W, H, block=128, values={"A": 50.0, "B": 200.0}
     )
 
@@ -28,14 +32,14 @@ def test_vector_to_cog_to_terrain_to_plot(spark, tmp_path):
     p = str(tmp_path / "zones.tif")
     ds.export_cog(burned, p, W, H, tile=128, gt=GT, compression="deflate",
                   overviews=1)
-    scanned = ds.scan_cog(spark, p)
+    scanned = cog_scan(spark, p)
     assert scanned.count() == 9
 
     # → Horn hillshade over the re-scanned raster.  The background
     # carries the stamped nodata (0.0), which the focal stage masks
     # to NaN — gdaldem's nodata semantics — while flat zone interiors
     # get the constant flat-shade value.
-    hs = ds.focal(scanned, (W, H), 128, "hillshade", gt=GT)
+    hs = focal_map(scanned, (W, H), 128, "hillshade", gt=GT)
     rows = [r.asDict() for r in hs.collect()]
     full = np.full((H, W), np.nan, dtype=np.float32)
     for r in rows:

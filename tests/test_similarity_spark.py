@@ -84,6 +84,7 @@ def test_lsh_high_recall_at_retrieval_similarity(spark, emb):
     k = 6
     exp = oracle_topk(corpus.toPandas(), q.toPandas(), k)
     got = sim.cosine_topk_lsh(corpus, q, k=k, n_planes=8, n_tables=12).collect()
+    corpus.unpersist()
     by_q = {}
     for r in got:
         by_q.setdefault(r.query_id, set()).add(r.vec_id)

@@ -69,3 +69,33 @@ def test_spark_submit_pyfiles_runs_pipeline(tmp_path):
     assert 0 < by["pip_counts"]["rows"] <= 64
     # kNN: k=5 per configured query
     assert by["knn"]["rows"] % 5 == 0 and by["knn"]["rows"] > 0
+
+
+_MASTER_PROBE = """
+from earth_data_kit_spark.session import get_spark
+
+spark = get_spark(app_name="edk-master-probe", cpus=2)
+print("MASTER=" + spark.sparkContext.master)
+print("SHUFFLE=" + spark.conf.get("spark.sql.shuffle.partitions"))
+spark.stop()
+"""
+
+
+@pytest.mark.skipif(not os.path.exists(SPARK_SUBMIT), reason="no spark-submit")
+def test_spark_submit_master_wins_over_get_spark(tmp_path):
+    """A submitted driver keeps spark-submit's ``--master``; ``cpus``
+    still sizes the shuffle partitions."""
+    job = tmp_path / "probe.py"
+    job.write_text(_MASTER_PROBE)
+    proc = subprocess.run(
+        [SPARK_SUBMIT, "--master", "local[3]", str(job)],
+        cwd=str(tmp_path), capture_output=True, text=True, timeout=300,
+        env={**os.environ, "PYTHONPATH": REPO},
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "MASTER=local[3]" in proc.stdout.splitlines(), proc.stdout
+    assert "SHUFFLE=8" in proc.stdout.splitlines(), proc.stdout
+
+
+def test_plain_python_get_spark_sets_local_master(spark):
+    assert spark.sparkContext.master == "local[4]"

@@ -86,4 +86,3 @@ def test_simhash_hamming():
 
 def test_shingles_and_ngrams():
     assert analysis.shingles("a b c d e", 3) == ["a b c", "b c d", "c d e"]
-    assert analysis.char_ngrams("ab  c", 3) == ["ab ", "b c"]

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from earth_data_kit_spark.functions.udfs import (
     detect_lang_udf,
-    quality_score_udf,
     token_count_udf,
 )
 from earth_data_kit_spark.text import analysis
@@ -42,11 +41,9 @@ def test_quality_udf_column_python_agree(docs):
     out = docs.select(
         "doc_id",
         "text",
-        quality_score_udf(F.col("text")).alias("q_udf"),
         quality_score_col(F.col("text")).alias("q_col"),
     ).collect()
     for r in out:
-        assert abs(r.q_udf - r.q_col) < 1e-9, (r.doc_id, r.q_udf, r.q_col)
         assert abs(analysis.quality_score(r.text) - r.q_col) < 1e-9, r.doc_id
 
 
