@@ -885,25 +885,10 @@ def _q_geo_catalog_time_travel(spark, sf_dir):
 def _q_rel_sessions(spark, sf_dir):
     """Sessionization: 30-min-gap sessions per user via lag +
     gap-flag running sum (the window composition Spark lacks a
-    batch session_window shortcut for)."""
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ts_s = F.unix_timestamp(F.col("ts"))
-    gapped = ev.withColumn(
-        "new_sess",
-        F.when(ts_s - F.lag(ts_s).over(w) > 1800, 1).otherwise(F.lit(0)),
-    )
-    sess = gapped.withColumn(
-        "sess_id", F.sum("new_sess").over(w.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    return (
-        sess.groupBy("user_id")
-        .agg(
-            (F.max("sess_id") + 1).alias("n_sessions"),
-            F.count("*").alias("n_events"),
-        )
-        .select("user_id", F.col("n_sessions").cast("bigint").alias("n_sessions"), "n_events")
-    )
+    batch session_window shortcut for) — the engine's operator."""
+    from earth_data_kit_spark.streaming.windows import sessionize_batch
+
+    return sessionize_batch(_read(spark, sf_dir, "events"), gap_s=1800)
 
 
 ASOF_PROBE_DAYS = ["2024-01-05", "2024-01-15", "2024-01-31"]

@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import math
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -59,8 +60,11 @@ def queries_df(spark: SparkSession, queries) -> DataFrame:
         if missing:
             raise ValueError(f"queries DataFrame missing columns {sorted(missing)}")
         return queries.select("query_id", "qlat", "qlon")
+    # from pandas, not a row list: with Arrow on this plans as a local
+    # table scan instead of a Python RDD
+    rows = [(int(q), float(la), float(lo)) for q, la, lo in queries]
     return spark.createDataFrame(
-        [(int(q), float(la), float(lo)) for q, la, lo in queries],
+        pd.DataFrame(rows, columns=["query_id", "qlat", "qlon"]),
         "query_id bigint, qlat double, qlon double",
     )
 

@@ -21,16 +21,15 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_RES_MULT = 1 << 58
-_X_MULT = 1 << 29
+from earth_data_kit_spark.functions.columns import RES_SHIFT_MULT, X_SHIFT_MULT
 
 
 def parent_cell_col(cell: Column) -> Column:
     """Parent quadgrid cell id, one resolution up (pure arithmetic)."""
-    r = F.floor(cell / _RES_MULT)
-    x = F.floor(cell / _X_MULT) % _X_MULT
-    y = cell % _X_MULT
-    return ((r - 1) * _RES_MULT + F.floor(x / 2) * _X_MULT + F.floor(y / 2)).cast("bigint")
+    r = F.floor(cell / RES_SHIFT_MULT)
+    x = F.floor(cell / X_SHIFT_MULT) % X_SHIFT_MULT
+    y = cell % X_SHIFT_MULT
+    return ((r - 1) * RES_SHIFT_MULT + F.floor(x / 2) * X_SHIFT_MULT + F.floor(y / 2)).cast("bigint")
 
 
 def pyramid_rollup(

@@ -16,21 +16,23 @@ relationally:
    per-byte python loop, r7 optimization: the r6 per-token FNV loop
    was the row's dominant cost), and the output batches are built as
    Arrow arrays directly (no per-window python dicts).
-2. duplicate detection (shuffle 1, on the 16-byte (h, h2) key):
-   occurrence count per window; windows seen at >1 position keep
-   their GLOBAL KEEPER occurrence = min(doc_id, start) — the
-   deterministic stand-in for the paper's "first" occurrence.
+2. duplicate detection (one exchange, on the 16-byte (h, h2) key):
+   a window partitioned by (h, h2) gives every window row its
+   occurrence count and its GLOBAL KEEPER occurrence =
+   min(doc_id, start) — the deterministic stand-in for the paper's
+   "first" occurrence — in place, so no aggregate is joined back.
    Keying on two independent 64-bit hashes makes a false-positive
    cut require a simultaneous collision in both (≈2⁻¹²⁸ per pair):
    at 10¹³ windows the expected number of false cuts is ~10⁻¹²,
    i.e. the "exact" in the name is honest at any corpus size
    (a single 64-bit key would expect ~10⁶ birthday collisions
    there — ADVICE r6).
-3. span assembly (shuffle 2, on doc_id): every non-keeper occurrence
+3. span assembly (exchange on doc_id): every non-keeper occurrence
    of a duplicated window marks its char span for removal; per doc
-   the spans are merged (overlapping duplicate windows from one
-   shared passage collapse to a single cut) and the text is rebuilt
-   in one Arrow pass.  Whitespace is normalized ONLY at the cut
+   the spans are collected and joined back onto the input, where the
+   cut UDF merges them (overlapping duplicate windows from one
+   shared passage collapse to a single cut) and rebuilds the text in
+   one Arrow pass.  Whitespace is normalized ONLY at the cut
    seams (one space per seam) — bytes far from any duplicate span
    are preserved exactly, the paper's semantics (ADVICE r6: the r6
    cut reflowed the whole document).
@@ -44,12 +46,12 @@ tests/test_substring_dedup.py.
 Scale shape: the window table is the honest cost of EXACT substring
 dedup (corpus-token-sized, 32 B/row, shuffled once on uniform keys;
 the suffix-array build moves the same bytes through a single
-machine's RAM instead).  The window table is persisted so the
-tokenize+hash pass runs once while feeding both the occurrence
-aggregation and the marked-span join; the cache is scoped to the
-call (persist → eager ``localCheckpoint`` of the per-doc spans →
-``unpersist``), so the call runs the window job and returns a lazy
-text rebuild (at 100 TB the window table is a checkpointed stage).
+machine's RAM instead).  The call is lazy: it starts no Spark job and
+caches nothing, and the window ``mapInArrow`` appears once in the
+returned plan, so it runs once, in whatever job materializes the
+result (in ``jobs/curate.py``, the stage's checkpoint or commit).
+The input is read twice (by the window pass and by the final join),
+so a caller should hand in a materialized frame.
 ``max_occurrences`` caps degenerate windows (empty/boilerplate
 explosions — the max_bucket pattern from the LSH family);
 capped hashes are treated as boilerplate and removed from every doc
@@ -63,7 +65,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _B = 1099511628211  # FNV-ish odd multiplier for the rolling hash
@@ -251,41 +253,21 @@ def substring_dedup(
         _windows_map_arrow(k, id_col),
         schema=f"{id_col} {id_type}, h bigint, h2 bigint, s int, e int",
     )
-    # persisted: the tokenize+hash pass feeds the occurrence
-    # aggregation AND the marked-span join below — without this the
-    # python pass (and the source scan) runs twice per consume.  The
-    # cache is SCOPED to this call: the spans table below is
-    # materialized eagerly (localCheckpoint — the dup_clusters
-    # iterative convention) and wins is unpersisted before returning,
-    # so repeated invocations in one JVM never accumulate
-    # corpus-token-sized cached tables (r7; at 100 TB this stage is a
-    # checkpointed table, see module docstring).
-    wins = wins.persist()
-    # shuffle 1 (on the 128-bit (h, h2) key): occurrence count +
-    # global keeper
-    dup = (
-        wins.groupBy("h", "h2")
-        .agg(
-            F.count("*").alias("occ"),
-            F.min(F.struct(F.col(id_col).alias("kid"), F.col("s").alias("ks"))).alias(
-                "keep"
-            ),
-        )
-        .where(F.col("occ") > 1)
-    )
-    marked = wins.join(dup, ["h", "h2"]).where(
-        (F.col("occ") > max_occurrences)
+    # one exchange on the 128-bit (h, h2) key gives every window its
+    # occurrence count and its global keeper, beside the window row; a
+    # window seen once is its own keeper, so only the cap needs occ > 1
+    w = Window.partitionBy("h", "h2")
+    keep = F.min(F.struct(F.col(id_col).alias("kid"), F.col("s").alias("ks"))).over(w)
+    marked = wins.select(
+        id_col, "s", "e", F.count(F.lit(1)).over(w).alias("occ"), keep.alias("keep")
+    ).where(
+        (F.col("occ") > max(max_occurrences, 1))
         | (F.col(id_col) != F.col("keep.kid"))
         | (F.col("s") != F.col("keep.ks"))
     )
-    # shuffle 2 (on doc id): spans per doc — materialized NOW
-    # (eager localCheckpoint: output is O(docs-with-cuts), tiny next
-    # to the window table) so the wins cache can be released before
-    # the lazy rebuild is returned
     spans = marked.groupBy(id_col).agg(
         F.collect_list(F.struct("s", "e")).alias("_spans")
-    ).localCheckpoint()
-    wins.unpersist()
+    )
     cut = _cut_spans_udf(text_col)
     joined = df.join(spans, id_col, "left")
     out = joined.withColumn("_c", cut(F.col(text_col), F.col("_spans")))

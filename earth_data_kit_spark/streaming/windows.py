@@ -44,8 +44,8 @@ def _memory_sink(df: DataFrame, mode: str, query_name: str):
 
 def sessionize_batch(events: DataFrame, gap_s: int = 1800) -> DataFrame:
     """Batch sessionization: lag + gap-flag running sum → per-user
-    (n_sessions, n_events).  Twin of the streaming version below and
-    of the rel_sessions harness query."""
+    (n_sessions, n_events).  Twin of the streaming version below; the
+    rel_sessions harness query runs it against its DuckDB oracle."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")

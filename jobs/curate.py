@@ -26,11 +26,15 @@ Each stage output (stages 1-3c) is materialized exactly once, by
 an eager ``localCheckpoint``, which also truncates the lineage.  Every
 later stage reads the materialized frame, so no Python UDF of an
 earlier stage (repetition signals, substring cut) runs again
-downstream, and no cache is left in the session.  In memory, the
-stage's row count (and the substring stage's removed chars) come from
-an ``Observation`` on the job that materializes it, not from a job of
-their own.  The decontam eval fixture is planned from ``docs`` (no
-driver collect), so its shingle pass is one task on one partition.
+downstream, and no cache is left in the session.  The substring
+operator is lazy, so its stage's checkpoint (or commit) is the one
+job that runs its window pass, span assembly and cut; DSIR's two
+bucket-count fits still run when ``dsir_resample`` is called, before
+its stage's job.  In memory, the stage's row count (and the
+substring stage's removed chars) come from an ``Observation`` on the
+job that materializes it, not from a job of their own.  The decontam
+eval fixture is planned from ``docs`` (no driver collect), so its
+shingle pass is one task on one partition.
 
 Usage:
   spark-submit --py-files dist/edk_spark.zip jobs/curate.py \

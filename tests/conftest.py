@@ -74,6 +74,19 @@ def no_leaked_caches():
     )
 
 
+@pytest.fixture(scope="module", autouse=True)
+def no_module_caches():
+    """Fail a module that ends with cache-manager entries still
+    present: a module fixture that caches a frame releases it at its
+    teardown, which runs before this check."""
+    yield
+    spark = _active_spark()
+    if spark is None:
+        return
+    n = spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+    assert n == 0, f"module left {n} cache-manager entries"
+
+
 def sql_executions(spark, after: int = -1) -> list:
     """The session's SQL executions with an id above ``after``, read
     from the SQL status store (works with the UI off)."""

@@ -19,7 +19,9 @@ def oracle_raster():
 
 @pytest.fixture(scope="module")
 def blocks(spark):
-    return B.synth_blocks_df(spark, RX, RY, BLK, nodata=NODATA, scale=SCALE).cache()
+    df = B.synth_blocks_df(spark, RX, RY, BLK, nodata=NODATA, scale=SCALE).cache()
+    yield df
+    df.unpersist()
 
 
 def test_window_filter_prunes(spark, blocks):

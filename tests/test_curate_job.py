@@ -155,7 +155,7 @@ def test_in_memory_run_has_no_count_only_executions(spark):
     job that materializes the stage: an in-memory run has no SQL
     execution that only counts or sums a checkpointed stage (a
     ``Scan ExistingRDD`` under aggregates), and none that collects the
-    eval snippets to the driver.  That leaves 10 executions: the
+    eval snippets to the driver.  That leaves 9 executions: the
     input count, five stage checkpoints, DSIR's two
     bucket-count collects and the packing stats."""
     agg_only = {"Scan", "Project", "HashAggregate", "Exchange", "ShuffleQueryStage",
@@ -167,4 +167,4 @@ def test_in_memory_run_has_no_count_only_executions(spark):
         ops = {op for op, _ in nodes}
         assert not (ops <= agg_only and any("ExistingRDD" in b for op, b in nodes if op == "Scan")), nodes
         assert not ops <= {"Scan", "ColumnarToRow", "TakeOrderedAndProject"}, nodes
-    assert len(plans) == 10
+    assert len(plans) == 9

@@ -26,7 +26,9 @@ def docs_with_dups(spark):
         "source",
         "n_chars",
     )
-    return docs.unionByName(exact).unionByName(near).cache()
+    df = docs.unionByName(exact).unionByName(near).cache()
+    yield df
+    df.unpersist()
 
 
 def test_exact_dedup(spark, docs_with_dups):

@@ -36,7 +36,9 @@ def corpus(spark):
         vocab = sci if style == "sci" else spam
         words = [vocab[j % len(vocab)] for j in rng.integers(0, 60, 30)]
         rows.append((i, style, " ".join(words)))
-    return spark.createDataFrame(rows, "doc_id long, style string, text string").cache()
+    df = spark.createDataFrame(rows, "doc_id long, style string, text string").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

@@ -17,14 +17,18 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+    df = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def queries(spark, emb):
-    return emb.limit(5).select(
+    df = emb.limit(5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     ).cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")

@@ -16,7 +16,9 @@ QUERIES = [
 
 @pytest.fixture(scope="module")
 def pages(spark):
-    return pages_meta_df(spark, SF).cache()
+    df = pages_meta_df(spark, SF).cache()
+    yield df
+    df.unpersist()
 
 
 def test_knn_matches_bruteforce(spark, pages):
@@ -191,10 +193,14 @@ def test_radius_join_df_queries_parity_with_list(spark, pages):
         ("knn_join_h3", {"res": 6, "radius_m": 1000.0}),
     ],
 )
-def test_auto_grow_releases_points_cache(spark, join, kwargs):
+def test_auto_grow_releases_points_cache(spark, pages, join, kwargs):
     """auto_grow persists the indexed points for its probe passes only:
-    once the result is collected, no cache is left behind (repeated
-    calls in one session must not pile up executor cache)."""
+    once the result is collected, the call has left no persistent RDD
+    behind (repeated calls in one session must not pile up executor
+    cache).  Compared against the ids present before the call, so the
+    local checkpoints other modules leave do not count."""
+    from conftest import _persistent_rdd_ids
+
     from earth_data_kit_spark.operators import spatial_join_h3, spatial_join_s2
 
     fn = {
@@ -202,8 +208,8 @@ def test_auto_grow_releases_points_cache(spark, join, kwargs):
         "knn_join_s2": spatial_join_s2.knn_join_s2,
         "knn_join_h3": spatial_join_h3.knn_join_h3,
     }[join]
-    # start from an empty cache (this module's `pages` fixture is cached)
-    spark.catalog.clearCache()
-    out = fn(pages_meta_df(spark, SF), QUERIES, 3, auto_grow=True, **kwargs).collect()
+    pages.count()  # the module fixture's buffers load before the call, not in it
+    before = _persistent_rdd_ids(spark)
+    out = fn(pages, QUERIES, 3, auto_grow=True, **kwargs).collect()
     assert len(out) == 3 * len(QUERIES)
-    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert not _persistent_rdd_ids(spark) - before

@@ -22,7 +22,9 @@ def docs(spark):
 
 @pytest.fixture(scope="module")
 def packed(spark, docs):
-    return pack_sequences(docs, MAX_TOK, shards=8).cache()
+    df = pack_sequences(docs, MAX_TOK, shards=8).cache()
+    yield df
+    df.unpersist()
 
 
 def test_every_doc_assigned_once(docs, packed):

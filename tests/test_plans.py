@@ -312,3 +312,30 @@ def test_computed_point_key_is_one_python_node(spark, scheme):
         joined, udf = pip_join_h3(pts, polys, res=3), "_udf("
     nodes = [ln for ln in plan_of(joined).splitlines() if "ArrowEvalPython" in ln]
     assert len(nodes) == 1 and udf in nodes[0], nodes
+
+
+@pytest.mark.parametrize("scheme", ["quad", "s2", "h3"])
+@pytest.mark.parametrize("op", ["knn", "radius"])
+def test_list_queries_are_local_table(spark, indexed_pages, scheme, op):
+    """A Python list of queries enters every kNN / radius plan as a
+    LocalTableScan, never a Python RDD (Scan ExistingRDD)."""
+    plan = plan_of(_scheme_join(scheme, op, indexed_pages, stored=True))
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan, plan
+
+
+def test_substring_dedup_is_one_lazy_plan(spark):
+    """The call starts no Spark job, and its result plans the window
+    mapInArrow once and caches nothing, so the job that materializes
+    the result is the only one that runs the window pass."""
+    from conftest import last_execution_id
+
+    from earth_data_kit_spark.operators.substring_dedup import substring_dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    before = last_execution_id(spark)
+    out = substring_dedup(docs, k=20)
+    assert last_execution_id(spark) == before
+    plan = plan_of(out)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan

@@ -23,7 +23,9 @@ def emb(spark):
 
 @pytest.fixture(scope="module")
 def emb_q(emb):
-    return quantize_embeddings(emb, keep_vec=True).cache()
+    df = quantize_embeddings(emb, keep_vec=True).cache()
+    yield df
+    df.unpersist()
 
 
 def test_roundtrip_error_bound(emb_q):

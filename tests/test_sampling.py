@@ -10,7 +10,9 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").cache()
+    df = spark.read.parquet(f"{SF}/documents.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 def test_stratified_sample_reproducible_and_sized(spark, docs):

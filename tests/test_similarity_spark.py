@@ -11,15 +11,18 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+    df = spark.read.parquet(f"{SF}/embeddings.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def queries(spark, emb):
-    q = emb.limit(5).select(
+    df = emb.limit(5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
-    )
-    return q.cache()
+    ).cache()
+    yield df
+    df.unpersist()
 
 
 def oracle_topk(emb_pdf, q_pdf, k):

@@ -34,7 +34,9 @@ def docs(spark):
     edge = spark.createDataFrame(
         [(10_000 + i, t) for i, t in enumerate(EDGE_TEXTS)], "doc_id bigint, text string"
     )
-    return base.unionByName(edge).cache()
+    df = base.unionByName(edge).cache()
+    yield df
+    df.unpersist()
 
 
 def test_quality_udf_column_python_agree(docs):
