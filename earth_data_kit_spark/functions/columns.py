@@ -6,6 +6,13 @@ oracles; everything here is written once and valid in BOTH dialects
 functions), so the Spark plan and the oracle share one source of
 truth.  The numpy twins live in grid/cells.py and grid/geom.py and
 compute the identical expressions (guarded by tests/test_cells.py).
+
+The quadgrid layout is spelled out here once: ``cell_x_col``,
+``cell_y_col``, ``cell_pack_col`` and ``parent_cell_col`` build every
+quadgrid id in a plan — the point key (``cell_id_col``), the kNN
+query rings, the polygon covering and the pyramid parent — so the
+cell prefilter's exactness (both join sides map lon/lat to cells by
+the same clamped arithmetic) holds by construction.
 """
 
 from __future__ import annotations
@@ -13,10 +20,11 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from earth_data_kit_spark.grid.cells import RES_SHIFT, X_SHIFT, nx_ny
 from earth_data_kit_spark.grid.geom import EARTH_RADIUS_M
 
-RES_SHIFT_MULT = 1 << 58  # quadgrid id = res*2^58 + x*2^29 + y
-X_SHIFT_MULT = 1 << 29
+RES_SHIFT_MULT = 1 << RES_SHIFT  # quadgrid id = res*2^58 + x*2^29 + y
+X_SHIFT_MULT = 1 << X_SHIFT
 
 
 def cell_id_sql(lon: str, lat: str, res: int) -> str:
@@ -25,20 +33,17 @@ def cell_id_sql(lon: str, lat: str, res: int) -> str:
     Pure float/integer arithmetic → bit-identical across Spark SQL,
     DuckDB and numpy (IEEE-754 ops only, no transcendentals).
     """
-    nx = 2 << res
-    ny = 1 << res
-    x = f"least(greatest(CAST(floor((({lon}) + 180.0) / 360.0 * {nx}) AS BIGINT), 0), {nx - 1})"
-    y = f"least(greatest(CAST(floor((90.0 - ({lat})) / 180.0 * {ny}) AS BIGINT), 0), {ny - 1})"
+    x, y = cell_x_sql(lon, res), cell_y_sql(lat, res)
     return f"(CAST({res} AS BIGINT) * {RES_SHIFT_MULT} + {x} * {X_SHIFT_MULT} + {y})"
 
 
 def cell_x_sql(lon: str, res: int) -> str:
-    nx = 2 << res
+    nx = nx_ny(res)[0]
     return f"least(greatest(CAST(floor((({lon}) + 180.0) / 360.0 * {nx}) AS BIGINT), 0), {nx - 1})"
 
 
 def cell_y_sql(lat: str, res: int) -> str:
-    ny = 1 << res
+    ny = nx_ny(res)[1]
     return f"least(greatest(CAST(floor((90.0 - ({lat})) / 180.0 * {ny}) AS BIGINT), 0), {ny - 1})"
 
 
@@ -63,19 +68,39 @@ def time_bucket_sql(ts_epoch_s: str, start_epoch_s: int, resolution_s: int) -> s
     )
 
 
+def cell_x_col(lon: Column, res: int) -> Column:
+    """Column twin of cell_x_sql: the clamped quadgrid column of a
+    longitude — the one float→int step of every quadgrid key, ring
+    and covering."""
+    nx = nx_ny(res)[0]
+    x = F.floor((lon + F.lit(180.0)) / 360.0 * nx).cast("bigint")
+    return F.least(F.greatest(x, F.lit(0)), F.lit(nx - 1))
+
+
+def cell_y_col(lat: Column, res: int) -> Column:
+    """Column twin of cell_y_sql (rows grow southward from 90°N)."""
+    ny = nx_ny(res)[1]
+    y = F.floor((F.lit(90.0) - lat) / 180.0 * ny).cast("bigint")
+    return F.least(F.greatest(y, F.lit(0)), F.lit(ny - 1))
+
+
+def cell_pack_col(res: int, x: Column, y: Column) -> Column:
+    """Quadgrid id of cell (x, y) at ``res``: res·2⁵⁸ + x·2²⁹ + y."""
+    return F.lit(res).cast("bigint") * RES_SHIFT_MULT + x * X_SHIFT_MULT + y
+
+
+def parent_cell_col(cell: Column) -> Column:
+    """Parent quadgrid cell id, one resolution up (pure arithmetic):
+    (r−1)·2⁵⁸ + ⌊x/2⌋·2²⁹ + ⌊y/2⌋."""
+    r = F.floor(cell / RES_SHIFT_MULT)
+    x = F.floor(cell / X_SHIFT_MULT) % X_SHIFT_MULT
+    y = cell % X_SHIFT_MULT
+    return ((r - 1) * RES_SHIFT_MULT + F.floor(x / 2) * X_SHIFT_MULT + F.floor(y / 2)).cast("bigint")
+
+
 def cell_id_col(lon: Column, lat: Column, res: int) -> Column:
     """Spark Column twin of cell_id_sql (JVM-side, codegen'd)."""
-    nx = 2 << res
-    ny = 1 << res
-    x = F.least(
-        F.greatest(F.floor((lon + F.lit(180.0)) / 360.0 * nx).cast("bigint"), F.lit(0)),
-        F.lit(nx - 1),
-    )
-    y = F.least(
-        F.greatest(F.floor((F.lit(90.0) - lat) / 180.0 * ny).cast("bigint"), F.lit(0)),
-        F.lit(ny - 1),
-    )
-    return (F.lit(res).cast("bigint") * RES_SHIFT_MULT + x * X_SHIFT_MULT + y).alias("cell")
+    return cell_pack_col(res, cell_x_col(lon, res), cell_y_col(lat, res)).alias("cell")
 
 
 def haversine_m_col(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Column:

@@ -34,8 +34,8 @@ from __future__ import annotations
 import numpy as np
 
 RES_MAX = 28  # x needs r+1 bits <= 29, y needs r bits <= 28
-_X_SHIFT = 29
-_RES_SHIFT = 58
+X_SHIFT = 29
+RES_SHIFT = 58
 
 
 def nx_ny(res: int) -> tuple[int, int]:
@@ -64,7 +64,7 @@ def cell_xy(lon, lat, res: int):
 def cell_id(lon, lat, res: int):
     """Vectorized quadgrid cell id (int64) for lon/lat arrays."""
     x, y = cell_xy(lon, lat, res)
-    return (np.int64(res) << _RES_SHIFT) | (x << _X_SHIFT) | y
+    return (np.int64(res) << RES_SHIFT) | (x << X_SHIFT) | y
 
 
 def cell_id_single(lon: float, lat: float, res: int) -> int:
@@ -74,14 +74,14 @@ def cell_id_single(lon: float, lat: float, res: int) -> int:
 def decode(cid):
     """Vectorized (res, x, y) from quadgrid cell ids."""
     cid = np.asarray(cid, dtype=np.int64)
-    res = cid >> _RES_SHIFT
-    x = (cid >> _X_SHIFT) & ((1 << _RES_SHIFT - _X_SHIFT) - 1)
-    y = cid & ((1 << _X_SHIFT) - 1)
+    res = cid >> RES_SHIFT
+    x = (cid >> X_SHIFT) & ((1 << RES_SHIFT - X_SHIFT) - 1)
+    y = cid & ((1 << X_SHIFT) - 1)
     return res, x, y
 
 
 def encode(res, x, y):
-    return (np.int64(res) << _RES_SHIFT) | (np.asarray(x, dtype=np.int64) << _X_SHIFT) | np.asarray(y, dtype=np.int64)
+    return (np.int64(res) << RES_SHIFT) | (np.asarray(x, dtype=np.int64) << X_SHIFT) | np.asarray(y, dtype=np.int64)
 
 
 def parent(cid, parent_res: int | None = None):
@@ -208,20 +208,20 @@ def zorder_id(lon, lat, res: int):
         raise ValueError("res too deep for 58-bit morton")
     x, y = cell_xy(lon, lat, res)
     m = (_part1by1(x) << np.uint64(1)) | _part1by1(y)
-    return (np.int64(res) << _RES_SHIFT) | m.astype(np.int64)
+    return (np.int64(res) << RES_SHIFT) | m.astype(np.int64)
 
 
 def zorder_parent(zid, levels: int = 1):
     zid = np.asarray(zid, dtype=np.int64)
-    res = zid >> _RES_SHIFT
-    m = zid & ((np.int64(1) << _RES_SHIFT) - 1)
-    return ((res - levels) << _RES_SHIFT) | (m >> np.int64(2 * levels))
+    res = zid >> RES_SHIFT
+    m = zid & ((np.int64(1) << RES_SHIFT) - 1)
+    return ((res - levels) << RES_SHIFT) | (m >> np.int64(2 * levels))
 
 
 def zorder_decode(zid):
     zid = np.asarray(zid, dtype=np.int64)
-    res = zid >> _RES_SHIFT
-    m = (zid & ((np.int64(1) << _RES_SHIFT) - 1)).astype(np.uint64)
+    res = zid >> RES_SHIFT
+    m = (zid & ((np.int64(1) << RES_SHIFT) - 1)).astype(np.uint64)
     x = _unpart1by1(m >> np.uint64(1)).astype(np.int64)
     y = _unpart1by1(m).astype(np.int64)
     return res, x, y

@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from earth_data_kit_spark.functions.columns import RES_SHIFT_MULT, X_SHIFT_MULT
+from earth_data_kit_spark.functions.columns import cell_pack_col, cell_x_col, cell_y_col
 from earth_data_kit_spark.grid.cells import nx_ny
 
 #: below this many polygon rows the covering is broadcast (a list is
@@ -122,35 +122,14 @@ def covering_cells_df(norm: DataFrame, res: int) -> DataFrame:
     Input: the ``normalize_polygons_df`` schema.  Output: one row per
     (polygon, covering cell) — columns ``cell`` + the input columns —
     produced by two ``explode(sequence(...))`` nodes, bit-identical
-    to ``grid.cells.covering_bbox`` (same clipped float→int cell
-    arithmetic as ``functions.columns.cell_id_col``, same wrapped
-    x-range for antimeridian boxes where xmin > xmax)."""
-    nx, ny = nx_ny(res)
-
-    def _cx(lon):
-        return F.least(
-            F.greatest(
-                F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(nx)).cast(
-                    "bigint"
-                ),
-                F.lit(0).cast("bigint"),
-            ),
-            F.lit(nx - 1).cast("bigint"),
-        )
-
-    def _cy(lat):
-        return F.least(
-            F.greatest(
-                F.floor((F.lit(90.0) - lat) / F.lit(180.0) * F.lit(ny)).cast(
-                    "bigint"
-                ),
-                F.lit(0).cast("bigint"),
-            ),
-            F.lit(ny - 1).cast("bigint"),
-        )
-
-    x0, x1 = _cx(F.col("xmin")), _cx(F.col("xmax"))
-    y0, y1 = _cy(F.col("ymax")), _cy(F.col("ymin"))  # y grows southward
+    to ``grid.cells.covering_bbox``.  The corner cells and every
+    covering id come from the point key's own builders
+    (``cell_x_col``, ``cell_y_col``, ``cell_pack_col``), and the
+    x-range wraps for antimeridian boxes where xmin > xmax."""
+    nx = nx_ny(res)[0]
+    x0, x1 = cell_x_col(F.col("xmin"), res), cell_x_col(F.col("xmax"), res)
+    # y grows southward: the first row is ymax's
+    y0, y1 = cell_y_col(F.col("ymax"), res), cell_y_col(F.col("ymin"), res)
     # covering_bbox parity: straight span when xmin<=xmax, wrapped
     # span (x0..nx-1 then 0..x1 — x0 may repeat in the degenerate
     # wrap, exactly as the list helper) when the box crosses ±180
@@ -164,11 +143,7 @@ def covering_cells_df(norm: DataFrame, res: int) -> DataFrame:
         "_dx", F.explode(F.sequence(F.lit(0).cast("bigint"), F.col("_spanx") - 1))
     ).withColumn("_yy", F.explode(F.sequence(F.col("_y0"), F.col("_y1"))))
     xx = F.pmod(F.col("_x0") + F.col("_dx"), F.lit(nx).cast("bigint"))
-    cell = (
-        F.lit(res).cast("bigint") * F.lit(RES_SHIFT_MULT)
-        + xx * F.lit(X_SHIFT_MULT)
-        + F.col("_yy")
-    )
+    cell = cell_pack_col(res, xx, F.col("_yy"))
     keep = [c for c in norm.columns]
     return ex.select(cell.alias("cell"), *keep)
 

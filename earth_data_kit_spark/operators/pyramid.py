@@ -6,12 +6,9 @@ then roll the *aggregates* up level by level (each level is built
 from the previous level's output, which is |cells|-sized, not
 |rows|-sized — the map-pyramid build every tile server uses).
 Parent derivation is pure integer arithmetic on the quadgrid id
-(grid/cells.py): for id = r·2⁵⁸ + x·2²⁹ + y,
-
-    parent = (r−1)·2⁵⁸ + ⌊x/2⌋·2²⁹ + ⌊y/2⌋
-
-so the whole pyramid stays in whole-stage codegen — no UDFs, and the
-same formula runs in DuckDB for the oracle cross-check.
+(``functions.columns.parent_cell_col``, next to the builders that pack
+the id), so the whole pyramid stays in whole-stage codegen — no UDFs,
+and the same formula runs in DuckDB for the oracle cross-check.
 """
 
 from __future__ import annotations
@@ -21,15 +18,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from earth_data_kit_spark.functions.columns import RES_SHIFT_MULT, X_SHIFT_MULT
-
-
-def parent_cell_col(cell: Column) -> Column:
-    """Parent quadgrid cell id, one resolution up (pure arithmetic)."""
-    r = F.floor(cell / RES_SHIFT_MULT)
-    x = F.floor(cell / X_SHIFT_MULT) % X_SHIFT_MULT
-    y = cell % X_SHIFT_MULT
-    return ((r - 1) * RES_SHIFT_MULT + F.floor(x / 2) * X_SHIFT_MULT + F.floor(y / 2)).cast("bigint")
+from earth_data_kit_spark.functions.columns import parent_cell_col
 
 
 def pyramid_rollup(

@@ -16,8 +16,8 @@ Everything is pure Column algebra (transform / zip_with / aggregate
   scales cancel in cosine's normalization, so cosine needs only the
   INT dot products — the scale column is kept for dot-product /
   L2 use;
-* ``cosine_topk_quantized`` — brute-force top-k over the quantized
-  table (the memory-bound scan is now 4× smaller).
+* ``cosine_topk_quantized`` — brute-force top-k (``knn._topk``) over
+  the quantized table (the memory-bound scan is now 4× smaller).
 
 The same layout is what a GPU/ANN export would consume; IVF
 (`similarity.cosine_topk_ivf`) composes with it by quantizing within
@@ -26,9 +26,10 @@ lists.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from earth_data_kit_spark.operators.knn import _topk
 from earth_data_kit_spark.partitioning import ensure_parallelism
 
 
@@ -87,15 +88,12 @@ def cosine_topk_quantized(
     ``emb_q``/``queries_q`` carry ``q8`` (and for queries ``q8`` under
     the same name) from quantize_embeddings; the corpus scan reads
     1 byte/dim."""
-    w = Window.partitionBy(qid_col).orderBy(F.col("cosine_q8").desc(), F.col(id_col).asc())
     qq = queries_q.select(
         F.col(qid_col), F.col("q8").alias("_qq8")
     )
-    return (
+    scored = (
         ensure_parallelism(emb_q)
         .crossJoin(F.broadcast(qq))
         .withColumn("cosine_q8", cosine_quantized_col(F.col("q8"), F.col("_qq8")))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(qid_col, "rank", id_col, "cosine_q8")
     )
+    return _topk(scored, k, id_col, qid_col=qid_col, order_col="cosine_q8", descending=True)

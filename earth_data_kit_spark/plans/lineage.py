@@ -43,6 +43,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from earth_data_kit_spark.session import empty_df
+
 LINEAGE_SCHEMA = (
     "job_id string, stage string, part_key bigint, row_count bigint, "
     "checksum bigint, wall_ms bigint, committed_at timestamp"
@@ -113,7 +115,7 @@ def commit_stage(
     keys = sorted(obs.get["keys"])
     if not keys:
         print(f"[{job_id}] {stage}: all partitions committed, nothing written")
-        return _empty(spark, LINEAGE_SCHEMA)
+        return empty_df(spark, LINEAGE_SCHEMA)
     # lineage only for the partitions written THIS call — the re-read
     # of {out} filtered to the observed keys.  Deriving "new" as
     # disk-minus-already-in-lineage instead would (a) give a
@@ -141,17 +143,10 @@ def commit_stage(
     return lin
 
 
-def _empty(spark: SparkSession, ddl: str) -> DataFrame:
-    """A zero-row DataFrame of schema ``ddl``, planned in the JVM (a
-    Python-list ``createDataFrame`` runs a PythonRDD job when read)."""
-    cols = (c.split() for c in ddl.split(", "))
-    return spark.range(0).select([F.lit(None).cast(t).alias(name) for name, t in cols])
-
-
 def completed_partitions(spark: SparkSession, base_dir: str, job_id: str, stage: str) -> DataFrame:
     path = f"{base_dir}/lineage"
     if not os.path.exists(path):
-        return _empty(spark, "part_key bigint")
+        return empty_df(spark, "part_key bigint")
     lin = spark.read.parquet(path)
     return (
         lin.where((F.col("job_id") == job_id) & (F.col("stage") == stage))

@@ -1,4 +1,5 @@
-"""SparkSession factory with the engine's standard configuration.
+"""SparkSession factory with the engine's standard configuration, and
+``empty_df``, the JVM-planned zero-row frame.
 
 Scale posture: these confs are what we'd ship for a 1000-executor
 cluster (AQE on, skew-join on, Arrow batches for the UDF layer); the
@@ -17,7 +18,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def get_spark(
@@ -70,3 +72,12 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def empty_df(spark: SparkSession, ddl: str) -> DataFrame:
+    """A zero-row DataFrame of schema ``ddl`` (``"a bigint, b double"``),
+    planned in the JVM: an empty Python list or pandas frame becomes a
+    Python RDD (``Scan ExistingRDD``) that runs a PythonRDD job when
+    read."""
+    cols = (c.split() for c in ddl.split(", "))
+    return spark.range(0).select([F.lit(None).cast(t).alias(name) for name, t in cols])

@@ -40,6 +40,47 @@ def test_knn_k_rows_per_query(spark, pages):
     assert counts == {1: 3, 2: 3, 3: 3}
 
 
+# both poles, the two longitude clamps (lon = 180 falls in the last
+# column) and one interior point
+RING_QUERIES = [
+    (1, 90.0, 12.5),
+    (2, -90.0, -33.0),
+    (3, 10.0, 180.0),
+    (4, -45.0, -180.0),
+    (5, 41.33, 19.82),
+]
+
+
+@pytest.mark.parametrize("res", [2, 4, 7])
+@pytest.mark.parametrize("ring", ["0", "1", "3", "nx/2", "nx"])
+def test_query_cells_equal_k_ring(spark, res, ring):
+    """The in-plan ring expansion is ``grid.cells.k_ring`` of the
+    query's point key, cell for cell with no repeats: at the poles,
+    at ±180° and in the full-longitude wrap (ring nx/2 and nx)."""
+    from earth_data_kit_spark.grid import cells
+
+    nx = cells.nx_ny(res)[0]
+    r = {"nx/2": nx // 2, "nx": nx}.get(ring) or int(ring)
+    got = {}
+    rows = knn.QuadScheme(res).query_cells(knn.queries_df(spark, RING_QUERIES), r).collect()
+    for row in rows:
+        got.setdefault(row.query_id, []).append(row.cell)
+    for qid, qlat, qlon in RING_QUERIES:
+        exp = cells.k_ring(cells.cell_id_single(qlon, qlat, res), r)
+        assert sorted(got[qid]) == sorted(exp), (qid, res, r)
+
+
+@pytest.mark.parametrize("op", ["knn", "radius"])
+def test_empty_query_list_returns_empty_frame(spark, pages, op):
+    """No queries: zero rows with the join's usual schema."""
+    if op == "knn":
+        out, ref = knn.knn_join(pages, [], 3, res=6), knn.knn_join(pages, QUERIES, 3, res=6)
+    else:
+        out, ref = knn.radius_join(pages, [], 1e5, res=6), knn.radius_join(pages, QUERIES, 1e5, res=6)
+    assert out.schema == ref.schema
+    assert out.collect() == []
+
+
 def test_ring_for_radius():
     assert knn.ring_for_radius(100_000, 7, at_lat=0.0) >= 1
     # higher latitude → wider ring for the same radius

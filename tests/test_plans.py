@@ -324,6 +324,15 @@ def test_list_queries_are_local_table(spark, indexed_pages, scheme, op):
     assert "LocalTableScan" in plan, plan
 
 
+def test_empty_query_list_is_planned_in_jvm(spark):
+    """An EMPTY list of queries is a JVM-planned empty frame, not a
+    Python RDD (an empty pandas frame skips Arrow)."""
+    from earth_data_kit_spark.operators.knn import queries_df
+
+    plan = plan_of(queries_df(spark, []))
+    assert "ExistingRDD" not in plan, plan
+
+
 def test_substring_dedup_is_one_lazy_plan(spark):
     """The call starts no Spark job, and its result plans the window
     mapInArrow once and caches nothing, so the job that materializes

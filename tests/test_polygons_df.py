@@ -64,7 +64,9 @@ def _polys_df(spark):
 
 def test_covering_cells_df_matches_covering_bbox(spark):
     """In-plan covering == grid.cells.covering_bbox cell-for-cell on
-    random boxes + the antimeridian wrap, at two resolutions."""
+    random boxes, the antimeridian wrap and the ±180 / ±90 clamps
+    (the whole world, the four corner boxes, a wrap ending at -180),
+    at two resolutions."""
     rng = np.random.default_rng(11)
     boxes = []
     for i in range(40):
@@ -73,6 +75,13 @@ def test_covering_cells_df_matches_covering_bbox(spark):
         boxes.append((f"b{i}", x0, y0, x1, y1))
     boxes.append(("wrap", 170.0, -20.0, -170.0, 10.0))  # xmin > xmax
     boxes.append(("wrap2", 179.5, 40.0, -179.5, 41.0))
+    # the clamps: lon 180 / lat -90 fall in the last column / row
+    boxes.append(("world", -180.0, -90.0, 180.0, 90.0))
+    boxes.append(("ne", 170.0, 80.0, 180.0, 90.0))
+    boxes.append(("nw", -180.0, 80.0, -170.0, 90.0))
+    boxes.append(("se", 170.0, -90.0, 180.0, -80.0))
+    boxes.append(("sw", -180.0, -90.0, -170.0, -80.0))
+    boxes.append(("wrap_m180", 170.0, -5.0, -180.0, 5.0))  # wraps, ends at -180
     pdf = pd.DataFrame(boxes, columns=["code", "xmin", "ymin", "xmax", "ymax"])
     df = spark.createDataFrame(pdf).withColumn("wkt", F.lit(None).cast("string"))
     for res in (3, 7):
