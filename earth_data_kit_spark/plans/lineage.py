@@ -13,20 +13,22 @@ Spark:
   write, with one groupBy (count + xor-of-hash checksum: order-
   insensitive and distributable) over a re-read of the partitions
   that write produced, so the checksum covers what landed on disk;
-* ``resume_filter`` anti-joins the completed part_keys from the
-  lineage table so a restarted job processes only missing partitions
-  (the existence-skip semantic, but transactional: a partition is
-  "done" only if its lineage row committed);
-* ``checkpoint_stage`` is a job stage's whole checkpoint step:
-  resume-filter, commit, re-read the stage directory.  There is no
-  emptiness probe before the write (it would run the stage's plan,
-  Python UDFs included, a second time): a fully committed stage
-  still runs its write once, observes no keys, and appends nothing;
-* the bookkeeping frames — the empty completed-keys frame of a fresh
-  base, the keys written by this call, the empty lineage frame of a
-  fully committed stage — are planned in the JVM (``range(0)``, an
-  ``isin`` filter), never built from a Python list, so lineage starts
-  no PythonRDD job and runs no Python.
+* ``resume_filter`` drops the completed part_keys — one sorted
+  driver-side list read from the lineage table, the same form as the
+  keys a commit observes — so a restarted job processes only missing
+  partitions (the existence-skip semantic, but transactional: a
+  partition is "done" only if its lineage row committed);
+* ``checkpoint_stage`` is a job stage's whole checkpoint step and the
+  one way a job stage runs: its input plus a ``build``.  It resume-
+  filters the input, builds, trims the output to uncommitted keys,
+  commits, writes a completion record for (job_id, stage), and
+  re-reads the stage directory.  A stage whose record exists is only
+  re-read, so a re-run over a fully committed base builds and runs
+  none of its stages' plans (no Python UDF, no fit, no write);
+* the bookkeeping frames — the keys written by a commit, the empty
+  lineage frame of a commit that observed no keys — are planned in
+  the JVM (``range(0)``, an ``isin`` filter), never built from a
+  Python list, so lineage starts no PythonRDD job and runs no Python.
 
 Iceberg would give this via snapshot atomicity; the sandbox has no
 Iceberg jar, so the same semantics run on parquet + a lineage parquet
@@ -36,7 +38,6 @@ catalog is Iceberg, SURVEY.md §7.4-6).
 
 from __future__ import annotations
 
-import os
 import time
 from collections.abc import Callable
 
@@ -143,25 +144,39 @@ def commit_stage(
     return lin
 
 
-def completed_partitions(spark: SparkSession, base_dir: str, job_id: str, stage: str) -> DataFrame:
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop file system, path) for ``path``: local, HDFS and object
+    store bases answer the same calls."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def completed_partitions(spark: SparkSession, base_dir: str, job_id: str, stage: str) -> list:
+    """The part_keys committed for (job_id, stage), sorted.  A stage
+    with no data directory yet reads no lineage.  A NULL key is left
+    out: in an ``isin`` list it turns the filter NULL for every
+    uncommitted row, which drops them all."""
     path = f"{base_dir}/lineage"
-    if not os.path.exists(path):
-        return empty_df(spark, "part_key bigint")
-    lin = spark.read.parquet(path)
-    return (
-        lin.where((F.col("job_id") == job_id) & (F.col("stage") == stage))
-        .select("part_key")
-        .distinct()
+    found = (_fs_path(spark, p) for p in (f"{base_dir}/{stage}/data", path))
+    if not all(fs.exists(p) for fs, p in found):
+        return []
+    done = spark.read.parquet(path).where(
+        (F.col("job_id") == job_id) & (F.col("stage") == stage) & F.col("part_key").isNotNull()
     )
+    return sorted(r.part_key for r in done.select("part_key").distinct().collect())
+
+
+def _uncommitted(df: DataFrame, part_key: str, done: list) -> DataFrame:
+    """Rows of ``df`` whose key is not in ``done``; a NULL key is never
+    committed, so its rows stay."""
+    key = F.col(part_key)
+    return df.where(key.isNull() | ~key.isin(done)) if done else df
 
 
 def resume_filter(df: DataFrame, base_dir: str, job_id: str, stage: str, part_key: str) -> DataFrame:
-    """Drop partitions already committed (anti-join on lineage) — the
-    restart path; idempotent by construction."""
-    done = completed_partitions(df.sparkSession, base_dir, job_id, stage)
-    return df.join(
-        F.broadcast(done.withColumnRenamed("part_key", part_key)), part_key, "left_anti"
-    )
+    """Drop partitions already committed — the restart path;
+    idempotent by construction."""
+    return _uncommitted(df, part_key, completed_partitions(df.sparkSession, base_dir, job_id, stage))
 
 
 def checkpoint_stage(
@@ -171,21 +186,39 @@ def checkpoint_stage(
     stage: str,
     part_key: str,
     lineage_cols: list[str] | None = None,
-    build: Callable[[DataFrame], DataFrame] | None = None,
+    *,
+    build: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """One resumable job stage: commit the partitions of ``df`` not yet
-    committed for (job_id, stage), then return the whole stage output
-    re-read from ``{base_dir}/{stage}/data`` (earlier commits included).
+    """One resumable job stage: commit the stage output for the
+    partitions of ``df`` not yet committed for (job_id, stage), then
+    return the whole stage output re-read from
+    ``{base_dir}/{stage}/data`` (earlier commits included).
 
-    ``build``, if given, maps the not-yet-committed rows of ``df`` to
-    the stage output (keeping ``part_key``).  Filtering BEFORE it keeps
-    committed partitions out of a non-deterministic UDF, which the
-    optimizer will not push the anti-join below.
+    A stage already completed for ``job_id`` is only re-read: ``build``
+    is not called, so none of its plan is built or run.  Otherwise
+    ``build`` maps the not-yet-committed rows of ``df`` to the stage
+    output (keeping ``part_key``).  Filtering BEFORE it keeps committed
+    partitions out of a non-deterministic UDF, which the optimizer will
+    not push a filter below.  A step that needs the whole input (dedup
+    representatives, substring spans, fits) reads it from its closure
+    instead; the output is trimmed to the uncommitted keys either way.
+    The completion record, an empty ``{stage}/_done.{job_id}`` file, is
+    written after the lineage append, so it never marks work that has
+    no lineage.
 
     ``resume_filter`` and ``commit_stage`` are looked up at call time
     and called positionally, so wrappers installed on this module (span
-    markers that read ``stage`` from the 4th argument) see every stage.
+    markers that read ``stage`` from the 4th argument) see every stage
+    that is built.  The output trim reads the committed keys itself, so
+    such a marker fires once per stage.
     """
-    todo = resume_filter(df, base_dir, job_id, stage, part_key)
-    commit_stage(build(todo) if build else todo, base_dir, job_id, stage, part_key, lineage_cols)
-    return df.sparkSession.read.parquet(f"{base_dir}/{stage}/data")
+    spark = df.sparkSession
+    fs, record = _fs_path(spark, f"{base_dir}/{stage}/_done.{job_id}")
+    if fs.exists(record):
+        print(f"[{job_id}] {stage}: all partitions committed, nothing written")
+    else:
+        todo = resume_filter(df, base_dir, job_id, stage, part_key)
+        done = completed_partitions(spark, base_dir, job_id, stage)
+        commit_stage(_uncommitted(build(todo), part_key, done), base_dir, job_id, stage, part_key, lineage_cols)
+        fs.create(record).close()
+    return spark.read.parquet(f"{base_dir}/{stage}/data")

@@ -21,20 +21,23 @@ whole job has no driver-side data loops, so the identical plan runs
 at cluster scale (see SCALE.md).
 
 Each stage output (stages 1-3c) is materialized exactly once, by
-``_stage``: with a ``work_dir`` it is committed through
-``lineage.checkpoint_stage`` and re-read from disk; without one it is
-an eager ``localCheckpoint``, which also truncates the lineage.  Every
-later stage reads the materialized frame, so no Python UDF of an
-earlier stage (repetition signals, substring cut) runs again
-downstream, and no cache is left in the session.  The substring
-operator is lazy, so its stage's checkpoint (or commit) is the one
-job that runs its window pass, span assembly and cut; DSIR's two
-bucket-count fits still run when ``dsir_resample`` is called, before
-its stage's job.  In memory, the stage's row count (and the
-substring stage's removed chars) come from an ``Observation`` on the
-job that materializes it, not from a job of their own.  The decontam
-eval fixture is planned from ``docs`` (no driver collect), so its
-shingle pass is one task on one partition.
+``_stage``, from the stage's input and a ``build``: with a
+``work_dir`` it is committed through ``lineage.checkpoint_stage`` and
+re-read from disk; without one ``build(input)`` is an eager
+``localCheckpoint``, which also truncates the lineage.  Every later
+stage reads the materialized frame, so no Python UDF of an earlier
+stage (repetition signals, substring cut) runs again downstream, and
+no cache is left in the session.  The operators are called inside
+``build`` only: the substring operator is lazy, so its stage's
+checkpoint (or commit) is the one job that runs its window pass, span
+assembly and cut, and DSIR's two bucket-count fits run when its build
+is called.  A stage already committed for the job id is never built,
+so a re-run over a fully committed ``work_dir`` runs none of them.
+In memory, the stage's row count (and the substring stage's removed
+chars) come from an ``Observation`` on the job that materializes it,
+not from a job of their own.  The decontam eval fixture is planned
+from ``docs`` (no driver collect), so its shingle pass is one task on
+one partition.
 
 Usage:
   spark-submit --py-files dist/edk_spark.zip jobs/curate.py \
@@ -99,57 +102,64 @@ def run(
     if work_dir:
         docs = docs.withColumn("part", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(32)))
 
-    def _stage(df, name: str, *sums: str):
-        """(the stage's output materialized once, its row count, the sum
-        of each column in ``sums``).  With a ``work_dir`` the output is
-        committed (only the not-yet-done partitions) and re-read from
+    def _stage(df, name: str, build, *sums: str):
+        """(``build``'s output for the stage input ``df``, materialized
+        once; its row count; the sum of each column in ``sums``).  With
+        a ``work_dir`` the output is committed (only the not-yet-done
+        partitions; a completed stage is not built) and re-read from
         disk, and one aggregate over the re-read gives the numbers (a
-        resumed stage still counts its earlier commits).  Else it is an
-        eager ``localCheckpoint`` whose own job fills an
-        ``Observation``; the checkpoint truncates the plan, so no later
-        query fires the observation again."""
+        resumed stage still counts its earlier commits).  A build that
+        needs the whole stage input (dedup representatives, substring
+        spans, DSIR fits) reads it from its closure, not from the
+        uncommitted rows it is passed.  Else it is an eager
+        ``localCheckpoint`` whose own job fills an ``Observation``; the
+        checkpoint truncates the plan, so no later query fires the
+        observation again."""
         aggs = [F.count(F.lit(1)).alias("n")] + [F.sum(c).alias(c) for c in sums]
         if work_dir:
-            out = lineage.checkpoint_stage(df, work_dir, job_id, name, "part", lineage_cols=["doc_id"])
+            out = lineage.checkpoint_stage(df, work_dir, job_id, name, "part", ["doc_id"], build=build)
             row = out.agg(*aggs).first().asDict()
         else:
             obs = Observation()
-            out = df.observe(obs, *aggs).localCheckpoint()
+            out = build(df).observe(obs, *aggs).localCheckpoint()
             row = obs.get
         return out, row["n"], [row[c] for c in sums]
 
     # ---- stage 1: quality (shape + repetition) --------------------------
-    q = cu.gopher_quality_cols(F.col("text"))
-    r = cu.repetition_signals_udf()(F.col("text"))
-    kept, n_quality, _ = _stage(
-        docs.withColumn("_keep_q", cu.gopher_keep_col(q))
-        .withColumn("_keep_r", cu.gopher_repetition_keep_col(r))
-        .where(F.col("_keep_q") & F.col("_keep_r"))
-        .drop("_keep_q", "_keep_r"),
-        "quality",
-    )
+    def quality(todo):
+        q = cu.gopher_quality_cols(F.col("text"))
+        r = cu.repetition_signals_udf()(F.col("text"))
+        return (
+            todo.withColumn("_keep_q", cu.gopher_keep_col(q))
+            .withColumn("_keep_r", cu.gopher_repetition_keep_col(r))
+            .where(F.col("_keep_q") & F.col("_keep_r"))
+            .drop("_keep_q", "_keep_r")
+        )
+
+    kept, n_quality, _ = _stage(docs, "quality", quality)
 
     # ---- stage 2: decontamination --------------------------------------
     # eval fixture: verbatim spans lifted from the corpus (deterministic
     # planted leakage — a real run broadcasts the real eval sets)
     eval_df = eval_fixture(docs, eval_snippets)
-    # flag_contaminated reads `kept` twice (probe + flag join): both
+    # flag_contaminated reads its input twice (probe + flag join): both
     # read the materialized quality output
-    clean, n_clean, _ = _stage(
-        flag_contaminated(kept, eval_df, shingle_k=13).where(~F.col("contaminated")).drop("contaminated"),
-        "decontam",
-    )
+    clean, n_clean, _ = _stage(kept, "decontam", lambda todo: (
+        flag_contaminated(todo, eval_df, shingle_k=13).where(~F.col("contaminated")).drop("contaminated")
+    ))
 
     # ---- stage 3: exact dedup ------------------------------------------
-    # exact_dedup returns (doc_id, n_dups) representatives.  The
-    # restore is a plain shuffle equi-join on doc_id — NOT broadcast:
-    # a mostly-unique corpus leaves `reps` nearly corpus-sized, so it
-    # never fits under the broadcast threshold at scale.  doc_id is the
-    # stored sort key, so both sides shuffle-partition the same way
-    # (or co-locate for free under bucketed storage).  Both sides read
-    # the materialized `clean`, so the quality+decontam stages run once.
-    reps = exact_dedup(clean).select("doc_id")
-    unique, n_unique, _ = _stage(clean.join(reps, "doc_id"), "dedup")
+    # exact_dedup returns (doc_id, n_dups) representatives over all of
+    # `clean`.  The restore is a plain shuffle equi-join on doc_id — NOT
+    # broadcast: a mostly-unique corpus leaves the representatives
+    # nearly corpus-sized, so they never fit under the broadcast
+    # threshold at scale.  doc_id is the stored sort key, so both sides
+    # shuffle-partition the same way (or co-locate for free under
+    # bucketed storage).  Both sides read the materialized `clean`, so
+    # the quality+decontam stages run once.
+    unique, n_unique, _ = _stage(clean, "dedup", lambda todo: (
+        todo.join(exact_dedup(clean).select("doc_id"), "doc_id")
+    ))
 
     # ---- stage 3b (optional): exact-substring dedup ---------------------
     n_substring = None
@@ -157,10 +167,10 @@ def run(
     if substring_k:
         from earth_data_kit_spark.operators.substring_dedup import substring_dedup
 
-        # the removed chars are summed by the stage's own job, so the
-        # cut runs once
+        # spans over the whole corpus; the removed chars are summed by
+        # the stage's own job, so the cut runs once
         scrubbed, n_substring, (chars,) = _stage(
-            substring_dedup(unique, k=substring_k), "substring", "n_removed_chars"
+            unique, "substring", lambda _: substring_dedup(unique, k=substring_k), "n_removed_chars"
         )
         n_removed_chars = int(chars or 0)
         unique = scrubbed.drop("n_removed_chars", "n_spans")
@@ -175,13 +185,10 @@ def run(
             if dsir_target_source
             else unique
         )
-        unique, n_selected, _ = _stage(
-            dsir_resample(
-                unique, target, n=dsir_n, text_col="text", id_col="doc_id",
-                n_buckets=1 << 14,
-            ).drop("dsir_log_w", "dsir_rank"),
-            "select",
-        )
+        # fits and the top-n selection over the whole stage input
+        unique, n_selected, _ = _stage(unique, "select", lambda _: dsir_resample(
+            unique, target, n=dsir_n, text_col="text", id_col="doc_id", n_buckets=1 << 14,
+        ).drop("dsir_log_w", "dsir_rank"))
 
     # ---- stage 4: sequence packing -------------------------------------
     packed = pack_sequences(unique, max_tokens, shards=32)

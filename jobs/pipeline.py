@@ -26,11 +26,13 @@ crash resumes from the last committed partition — north_rule
 Under spark-submit, ``--master`` sets the parallelism; ``--cpus`` sizes
 only a plain-Python run's ``local[cpus]`` and the shuffle partitions.
 
-Every stage is one ``lineage.checkpoint_stage`` call: resume filter,
-then the stage's single write (which also collects the lineage keys),
-then a re-read of the stage directory for the next stage.  Each stage's
-plan executes once; a fully committed stage writes no rows and appends
-no lineage.
+Every stage is one ``lineage.checkpoint_stage`` call, its input plus a
+``build``: resume filter, build, then the stage's single write (which
+also collects the lineage keys), then a re-read of the stage directory
+for the next stage.  Each stage's plan executes once; a stage already
+completed for this job id is only re-read, so a re-run over a fully
+committed base builds nothing, runs no Python and writes nothing.
+``--fail-after-stage`` raises after any named stage has committed.
 
 On a real cluster the parquet writes become Iceberg `writeTo` calls —
 the seam is plans/lineage.py (SURVEY.md §7.4-6).
@@ -82,6 +84,9 @@ def geocode_pages(ingested):
     )
 
 
+STAGES = ("ingest", "geocode", "pip_counts", "knn", "quality")
+
+
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
@@ -89,7 +94,8 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--job-id", default="job1")
     ap.add_argument("--reps", type=int, default=4)
     ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument("--fail-after-stage", default=None, help="test hook: crash after stage N")
+    ap.add_argument("--fail-after-stage", default=None, choices=STAGES,
+                    help="test hook: exit after this stage commits")
     args = ap.parse_args(argv)
 
     from earth_data_kit_spark.functions.columns import cell_id_col
@@ -98,6 +104,7 @@ def main(argv: list[str] | None = None) -> None:
     from earth_data_kit_spark.plans import lineage
     from earth_data_kit_spark.session import get_spark
     from earth_data_kit_spark.sources.pages import synth_pages_df
+    from earth_data_kit_spark.text.textcols import quality_score_col
 
     import __spark_entry__ as em
 
@@ -105,58 +112,50 @@ def main(argv: list[str] | None = None) -> None:
     base, job = args.base_dir, args.job_id
     t_start = time.time()
 
+    def stage(name, df, build, lineage_cols=None):
+        out = lineage.checkpoint_stage(df, base, job, name, "part", lineage_cols, build=build)
+        if args.fail_after_stage == name:
+            raise SystemExit(f"injected failure after {name}")
+        return out
+
     # ---- stage 1: ingest ------------------------------------------------
     # hash-partitioned on part, so each part directory gets one file
     # (round-robin tasks would each write one into every part); that
     # one exchange is the stage's only shuffle
-    pages = (
-        synth_pages_df(spark, args.sf_dir, reps=args.reps)
-        .withColumn("part", cell_id_col(F.col("lon"), F.col("lat"), PART_RES))
-        .repartition("part")
+    pages = synth_pages_df(spark, args.sf_dir, reps=args.reps).withColumn(
+        "part", cell_id_col(F.col("lon"), F.col("lat"), PART_RES)
     )
-    ingested = lineage.checkpoint_stage(
-        pages, base, job, "ingest", "part", lineage_cols=["page_id", "url"]
-    )
-    if args.fail_after_stage == "ingest":
-        raise SystemExit("injected failure after ingest")
+    ingested = stage("ingest", pages, lambda todo: todo.repartition("part"), ["page_id", "url"])
 
     # ---- stage 2: geocode ----------------------------------------------
     # the resume filter runs on the ingested pages, before the (non-
     # deterministic, so never pushed past) geocode UDF: a resumed job
     # sends only uncommitted partitions through Python
-    geocoded = lineage.checkpoint_stage(
-        ingested, base, job, "geocode", "part", lineage_cols=["page_id", "cell"],
-        build=geocode_pages,
-    )
-    if args.fail_after_stage == "geocode":
-        raise SystemExit("injected failure after geocode")
+    geocoded = stage("geocode", ingested, geocode_pages, ["page_id", "cell"])
 
     # ---- stage 3: PIP join ----------------------------------------------
+    # pip counts and kNN read all of geocoded (one part_key 0, one per
+    # query id); the runner trims their output to uncommitted keys
     polys = [
         sj.Polygon(code=c, name=n, bbox=(a, b, x, y)) for c, n, a, b, x, y in em.COUNTRIES
     ]
-    joined = sj.pip_join(geocoded, polys, res=CELL_RES)
-    counts = joined.groupBy("code").agg(F.count("*").alias("n_pages")).withColumn(
-        "part", F.lit(0)
-    )
-    lineage.checkpoint_stage(counts, base, job, "pip_counts", "part")
-    if args.fail_after_stage == "pip_counts":
-        raise SystemExit("injected failure after pip_counts")
+    stage("pip_counts", geocoded, lambda _: (
+        sj.pip_join(geocoded, polys, res=CELL_RES)
+        .groupBy("code").agg(F.count("*").alias("n_pages"))
+        .withColumn("part", F.lit(0))
+    ))
 
     # ---- stage 4: kNN ----------------------------------------------------
     # the (|queries|×k row) result is read once, by the committed write,
     # so it is not cached (knn_join releases its own cell index)
-    knn = knn_join(
+    stage("knn", geocoded, lambda _: knn_join(
         geocoded, em.KNN_QUERIES, k=5, res=5, ring=4, id_col="page_id",
         auto_grow=True, max_ring=64,
-    ).withColumn("part", F.col("query_id"))
-    lineage.checkpoint_stage(knn, base, job, "knn", "part")
+    ).withColumn("part", F.col("query_id")))
 
     # ---- stage 5: training-data pass (quality + dedup stats) -------------
-    from earth_data_kit_spark.text.textcols import quality_score_col
-
-    quality = (
-        ingested.select("part", "text")
+    stage("quality", ingested, lambda todo: (
+        todo.select("part", "text")
         .withColumn("q", quality_score_col(F.col("text")))
         .withColumn("text_md5", F.md5("text"))
         .groupBy("part")
@@ -165,8 +164,7 @@ def main(argv: list[str] | None = None) -> None:
             F.round(F.avg("q"), 6).alias("avg_quality"),
             F.countDistinct("text_md5").alias("n_unique_texts"),
         )
-    )
-    lineage.checkpoint_stage(quality, base, job, "quality", "part")
+    ))
 
     # ---- report ----------------------------------------------------------
     lin = spark.read.parquet(f"{base}/lineage").where(F.col("job_id") == job)

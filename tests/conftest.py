@@ -114,3 +114,32 @@ def final_plan_nodes(plan: str) -> list[tuple[str, str]]:
         ran = {int(i) for i in re.findall(r"\((\d+)\)", tree)}
         return [node for i, node in nodes.items() if i in ran]
     return list(nodes.values())
+
+
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow")
+
+
+def crash_after_even_keys(monkeypatch, target: str) -> None:
+    """Replace ``lineage.commit_stage`` (a module attribute, called
+    positionally by the stage runner) with a wrapper under which stage
+    ``target`` commits only its even keys and then raises: a crash in
+    the middle of a stage's write."""
+    from pyspark.sql import functions as F
+
+    from earth_data_kit_spark.plans import lineage
+
+    commit = lineage.commit_stage
+
+    def crashing(df, base_dir, job_id, stage, part_key, lineage_cols=None):
+        if stage != target:
+            return commit(df, base_dir, job_id, stage, part_key, lineage_cols)
+        commit(df.where(F.col(part_key) % 2 == 0), base_dir, job_id, stage, part_key, lineage_cols)
+        raise RuntimeError(f"crash in {stage}")
+
+    monkeypatch.setattr(lineage, "commit_stage", crashing)
+
+
+def latest_lineage(spark, base: str) -> dict:
+    """(stage, part_key) → (row_count, checksum) of its latest commit."""
+    rows = sorted(spark.read.parquet(f"{base}/lineage").collect(), key=lambda r: r.committed_at)
+    return {(r.stage, r.part_key): (r.row_count, r.checksum) for r in rows}

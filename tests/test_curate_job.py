@@ -2,7 +2,17 @@
 planted leakage removed, deterministic output, each stage
 materialized once."""
 
-from conftest import final_plan_nodes, last_execution_id, sql_executions
+import shutil
+
+import pytest
+from conftest import (
+    PYTHON_NODES,
+    crash_after_even_keys,
+    final_plan_nodes,
+    last_execution_id,
+    latest_lineage,
+    sql_executions,
+)
 from jobs.curate import eval_fixture, run
 
 SF = "/root/testdata/sf0.001"
@@ -36,8 +46,8 @@ def test_funnel_resumable_with_lineage(spark, tmp_path):
     stages = {r.stage for r in lin.select("stage").distinct().collect()}
     assert stages == {"quality", "decontam", "dedup"}
 
-    # re-run: all partitions committed → resume_filter leaves nothing,
-    # no new lineage rows are appended, counts identical
+    # re-run: every stage is complete → each is only re-read, no new
+    # lineage rows are appended, counts identical
     n_lineage_rows = lin.count()
     out2 = run(spark, SF, max_tokens=512, work_dir=wd)
     assert out2 == out1
@@ -168,3 +178,54 @@ def test_in_memory_run_has_no_count_only_executions(spark):
         assert not (ops <= agg_only and any("ExistingRDD" in b for op, b in nodes if op == "Scan")), nodes
         assert not ops <= {"Scan", "ColumnarToRow", "TakeOrderedAndProject"}, nodes
     assert len(plans) == 9
+
+
+CURATE_STAGES = ("quality", "decontam", "dedup", "substring", "select")
+
+
+@pytest.fixture(scope="module")
+def committed(spark, tmp_path_factory):
+    """(funnel, work_dir) of one clean committed run with substring and
+    DSIR on."""
+    wd = str(tmp_path_factory.mktemp("curate") / "funnel")
+    return run(spark, SF, max_tokens=512, work_dir=wd, **OPTIONAL), wd
+
+
+def test_rerun_over_committed_base_builds_nothing(spark, committed, tmp_path):
+    """A re-run over a fully committed work_dir builds no stage: no SQL
+    execution runs the repetition, shingle, cut or DSIR UDFs or the
+    substring window, and the only execution with Python is the
+    (uncommitted) pack step's."""
+    out, clean_wd = committed
+    wd = str(tmp_path / "funnel")
+    shutil.copytree(clean_wd, wd)
+    before = last_execution_id(spark)
+    assert run(spark, SF, max_tokens=512, work_dir=wd, **OPTIONAL) == out
+    plans = [final_plan_nodes(e.physicalPlanDescription()) for e in sql_executions(spark, before)]
+    for nodes in plans:
+        for op, block in nodes:
+            assert op != "MapInArrow", block
+            assert not any(f in block for f in ("_rep(", "_sh(", "_cut(", "_counts(", "_w(")), block
+    python = [nodes for nodes in plans if {op for op, _ in nodes} & set(PYTHON_NODES)]
+    assert len(python) == 1, python
+    assert latest_lineage(spark, wd) == latest_lineage(spark, clean_wd)
+
+
+@pytest.mark.parametrize("stage", CURATE_STAGES)
+def test_crash_mid_write_resumes_to_clean_run(spark, committed, tmp_path, monkeypatch, stage):
+    """A crash after ``stage`` committed only its even keys, then a
+    resume, gives the clean run's funnel and the clean run's latest
+    (row_count, checksum) for every (stage, part_key).  The global
+    steps (dedup representatives, substring spans, DSIR fits) read the
+    whole stage input on the resume, not only the uncommitted rows."""
+    out, clean_wd = committed
+    wd = str(tmp_path / "funnel")
+    with monkeypatch.context() as m:
+        crash_after_even_keys(m, stage)
+        with pytest.raises(RuntimeError, match=f"crash in {stage}"):
+            run(spark, SF, max_tokens=512, work_dir=wd, **OPTIONAL)
+    keys = [k for st, k in latest_lineage(spark, wd) if st == stage]
+    assert keys and all(k % 2 == 0 for k in keys)
+
+    assert run(spark, SF, max_tokens=512, work_dir=wd, **OPTIONAL) == out
+    assert latest_lineage(spark, wd) == latest_lineage(spark, clean_wd)

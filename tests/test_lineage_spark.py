@@ -131,7 +131,8 @@ def test_int_and_bigint_keyed_stages_share_lineage(spark, tmp_path):
 
 def test_checkpoint_stage_filters_before_build(spark, tmp_path):
     """checkpoint_stage resume-filters its input before ``build`` and
-    returns the whole stage output, earlier commits included."""
+    returns the whole stage output, earlier commits included; once the
+    stage is complete, it never calls ``build`` again."""
     base = str(tmp_path / "ckpt")
     pages = pages_meta_df(spark, SF).withColumn("part", F.col("page_id") % 4)
     total = pages.count()
@@ -148,6 +149,12 @@ def test_checkpoint_stage_filters_before_build(spark, tmp_path):
     assert out.count() == total
     lin = spark.read.parquet(f"{base}/lineage")
     assert sorted(r.part_key for r in lin.collect()) == [0, 1, 2, 3]
+
+    # the stage is now complete for job1: a second call only re-reads
+    def never(todo):
+        raise AssertionError("built a completed stage")
+
+    assert lineage.checkpoint_stage(pages, base, "job1", "s", "part", build=never).count() == total
 
 
 def test_commit_returns_and_writes_lineage_schema_types(spark, tmp_path):
@@ -166,3 +173,25 @@ def test_commit_returns_and_writes_lineage_schema_types(spark, tmp_path):
     assert [(f.name, f.dataType) for f in lin.schema] == want
     read = spark.read.parquet(f"{base}/lineage")
     assert [(f.name, f.dataType) for f in read.schema] == want
+
+
+def test_resume_filter_keeps_null_and_uncommitted_keys(spark, tmp_path):
+    """The committed keys are one driver-side list without NULL (in an
+    ``isin`` list a NULL turns the filter NULL for every uncommitted
+    row): with a NULL ``part_key`` among the committed lineage rows,
+    ``resume_filter`` drops only the committed keys and keeps the
+    uncommitted and the NULL-keyed rows."""
+    base = str(tmp_path / "ckpt")
+    df = spark.createDataFrame(
+        [(1, 0), (2, 1), (3, None), (4, 2), (5, 3), (6, None)], "id long, part long"
+    )
+    lineage.commit_stage(df.where(F.col("part") < 2), base, "job1", "s", "part")
+    spark.createDataFrame(
+        [("job1", "s", None, 1, 0, 0, None)], lineage.LINEAGE_SCHEMA
+    ).write.mode("append").parquet(f"{base}/lineage")
+    keys = [r.part_key for r in spark.read.parquet(f"{base}/lineage").collect()]
+    assert sorted(keys, key=lambda k: (k is None, k)) == [0, 1, None]
+
+    assert lineage.completed_partitions(spark, base, "job1", "s") == [0, 1]
+    left = lineage.resume_filter(df, base, "job1", "s", "part")
+    assert sorted(r.id for r in left.collect()) == [3, 4, 5, 6]

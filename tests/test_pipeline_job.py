@@ -3,15 +3,24 @@ whole-job re-run that resumes over a fully committed base."""
 
 import hashlib
 import os
+import shutil
 import subprocess
 import sys
 
 import pandas as pd
 import pytest
-from conftest import REPO, SF_SMALL, final_plan_nodes, last_execution_id, sql_executions
+from conftest import (
+    PYTHON_NODES,
+    REPO,
+    SF_SMALL,
+    crash_after_even_keys,
+    final_plan_nodes,
+    last_execution_id,
+    latest_lineage,
+    sql_executions,
+)
+from jobs.pipeline import STAGES
 from pyspark.sql import functions as F
-
-STAGES = ("ingest", "geocode", "pip_counts", "knn", "quality")
 
 
 def test_geocode_stage_one_python_pass_matches_oracles(spark, tmp_path):
@@ -100,9 +109,6 @@ def test_pipeline_rerun_resumes_without_rewriting(spark, tmp_path):
     assert [_digest(d) for d in dirs] == digests
 
 
-PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow")
-
-
 def test_ingest_runs_no_python_and_writes_one_file_per_part(spark, tmp_path):
     """The ingest stage's executions run no Python; no lineage
     execution scans a Python-list DataFrame (``Scan ExistingRDD``),
@@ -141,3 +147,78 @@ def test_ingest_runs_no_python_and_writes_one_file_per_part(spark, tmp_path):
     assert lin.count() == 0
     assert lin.schema == spark.createDataFrame([], lineage.LINEAGE_SCHEMA).schema
     assert all("ExistingRDD" not in e.physicalPlanDescription() for e in sql_executions(spark, before))
+
+
+def _main(base: str, stop_after: str, job_id: str = "crash") -> None:
+    """One in-process pipeline run that exits after ``stop_after``."""
+    from jobs import pipeline
+
+    argv = ["--sf-dir", SF_SMALL, "--base-dir", base, "--job-id", job_id, "--reps", "2",
+            "--cpus", "4", "--fail-after-stage", stop_after]
+    with pytest.raises(SystemExit, match=f"injected failure after {stop_after}"):
+        pipeline.main(argv)
+
+
+@pytest.fixture(scope="module")
+def clean_base(spark, tmp_path_factory):
+    """A base every stage of one clean run committed to."""
+    base = str(tmp_path_factory.mktemp("clean") / "job")
+    _main(base, "quality")
+    return base
+
+
+def test_fail_hook_fires_after_any_stage(spark, tmp_path):
+    """``--fail-after-stage knn`` exits once knn's lineage is committed
+    (and before quality runs); an unknown stage name is an argparse
+    error, exit 2, before any stage runs."""
+    from jobs import pipeline
+
+    base = str(tmp_path / "job")
+    _main(base, "knn")
+    lin = spark.read.parquet(f"{base}/lineage")
+    assert {r.stage for r in lin.select("stage").distinct().collect()} == set(STAGES) - {"quality"}
+
+    with pytest.raises(SystemExit) as e:
+        pipeline.main(["--base-dir", str(tmp_path / "other"), "--fail-after-stage", "knnn"])
+    assert e.value.code == 2
+    assert not (tmp_path / "other").exists()
+
+
+def test_rerun_over_committed_base_builds_nothing(spark, clean_base, tmp_path, capsys):
+    """A re-run over a fully committed base calls no stage's build:
+    every stage says so, and no SQL execution of the re-run runs Python
+    or writes."""
+    base = str(tmp_path / "job")
+    shutil.copytree(clean_base, base)
+    capsys.readouterr()
+    before = last_execution_id(spark)
+    _main(base, "quality")
+    out = capsys.readouterr().out
+    for st in STAGES:
+        assert f"[crash] {st}: all partitions committed, nothing written" in out, out
+    for e in sql_executions(spark, before):
+        plan = e.physicalPlanDescription()
+        assert not {op for op, _ in final_plan_nodes(plan)} & set(PYTHON_NODES), plan
+        assert "InsertIntoHadoopFsRelation" not in plan, plan
+    assert latest_lineage(spark, base) == latest_lineage(spark, clean_base)
+    assert spark.read.parquet(f"{base}/lineage").count() == spark.read.parquet(f"{clean_base}/lineage").count()
+
+
+@pytest.mark.parametrize("stage", ["geocode", "knn"])
+def test_crash_mid_write_resumes_to_clean_lineage(spark, clean_base, tmp_path, monkeypatch, stage):
+    """A crash after ``stage`` committed only its even keys, then a
+    resume, leaves the latest (row_count, checksum) of every
+    (stage, part_key) equal to a clean run's."""
+    base = str(tmp_path / "job")
+    with monkeypatch.context() as m:
+        crash_after_even_keys(m, stage)
+        with pytest.raises(RuntimeError, match=f"crash in {stage}"):
+            _main(base, "quality")
+    crashed = latest_lineage(spark, base)
+    clean = latest_lineage(spark, clean_base)
+    keys = [k for st, k in crashed if st == stage]
+    assert keys and all(k % 2 == 0 for k in keys)
+    assert any(k % 2 for st, k in clean if st == stage)
+
+    _main(base, "quality")
+    assert latest_lineage(spark, base) == clean
